@@ -591,36 +591,6 @@ object SimilarityOps {
   // Persisted ANN index lifecycle: train once, store, serve many.
   // ------------------------------------------------------------------
 
-  /** Build and PERSIST an IVF+PQ index under `root` — the difference
-    * between "has ANN operators" and "is an ANN system" at 100 TB: a
-    * real pipeline trains the quantizers once, stores the index, and
-    * serves many query batches from it instead of re-running Lloyd per
-    * query. Layout (all parquet):
-    *
-    *   root/centroids  (cid, dim, value)            — K x d rows,
-    *     the trained-Lloyd coarse quantizer ([[trainIvf]], quantized
-    *     to qdec decimals so reload is value-identical by construction)
-    *   root/codebooks  (subspace, code, dim, value) — m x ksub x dsub
-    *     rows, the PQ codebooks ([[pqCodebooks]] seeding rule)
-    *   root/vectors    (vec_id, codes) PARTITIONED BY list_id — the
-    *     only corpus-sized table, m bytes of codes per row (32x
-    *     smaller than raw vectors), laid out so a probe's nProbe lists
-    *     are PARTITION PRUNING at the scan — search I/O rides probed-
-    *     list volume, never corpus size
-    *   root/meta       one row: the build parameters + corpus census
-    *     (n_vectors, id checksum) for the staleness check
-    *
-    * Doubles round-trip bit-exactly through parquet, so a search
-    * through the stored index is row-identical to the in-memory
-    * [[ivfPqTopKWith]] on the same trained structures (the
-    * `ann_index_persist` gate shares `ann_ivfpq`'s oracle).
-    */
-  /** Order-free corpus census for the staleness gate: (row count,
-    * Σ pmod(hash(id), p) mod p). The sum accumulates in decimal(38,0)
-    * so it cannot overflow long at any corpus size before the final
-    * mod, and the mod makes the checksum ADDITIVE across disjoint
-    * parts — [[indexAppend]] merges it without rescanning the base.
-    */
   /** Packed vec-id Bloom bitmap for the append dup-guard — same
     * sizing/layout as TextOps' doc-id guard: bits/64 rows max (~2 MB),
     * bounded by BITS regardless of corpus size. Advisory only: a HIT
@@ -646,48 +616,16 @@ object SimilarityOps {
       hash(col(idCol)).cast("long"), words, DupBloomBits,
       DupBloomHashes)
 
-  // Versioned-snapshot plumbing (IndexCommits): the subdirectories the
-  // snapshot manages (served data + the compact staging dir) and the
-  // tree listings mutations diff to learn what they just wrote.
+  // The subdirectories the commit snapshot (IndexCommits) manages:
+  // served data + the compact staging dir.
   private val AnnSubs = Seq("vectors", "applog", "deletes", ".compact")
-  private def listVectors(spark: org.apache.spark.sql.SparkSession,
-                          root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "vectors",
-      "vectors", Some("list_id"))
-  private def listApplog(spark: org.apache.spark.sql.SparkSession,
-                         root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "applog",
-      "applog", None)
-  private def listDeletes(spark: org.apache.spark.sql.SparkSession,
-                          root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "deletes",
-      "deletes", None)
 
-  /** Data files of ONLY the given `list_id=` partitions — the bounded
-    * write-discovery listing. A mutation can only add files under the
-    * lists its rows assign to, so diffing THESE dirs around the write
-    * replaces the full-tree walk (which at K=1600 cost more than the
-    * write itself — r18 rehearsal: direct append 19 s -> 34 s, flush
-    * 18 s -> 35 s from two tree walks each) while still excluding any
-    * pre-existing crash debris from the diff.
+  /** Order-free corpus census for the staleness gate: (row count,
+    * Σ pmod(hash(id), p) mod p). The sum accumulates in decimal(38,0)
+    * so it cannot overflow long at any corpus size before the final
+    * mod, and the mod makes the checksum ADDITIVE across disjoint
+    * parts — [[indexAppend]] merges it without rescanning the base.
     */
-  private def listVectorLists(spark: org.apache.spark.sql.SparkSession,
-                              root: String, lists: Seq[Long])
-    : Seq[graft.sources.IndexCommits.Entry] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lists.flatMap { l =>
-      val dir = new org.apache.hadoop.fs.Path(s"$root/vectors/list_id=$l")
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq.collect {
-        case st if !st.isDirectory &&
-            st.getPath.getName.startsWith("part-") =>
-          graft.sources.IndexCommits.Entry("vectors", Some(l),
-            st.getPath.toUri.getPath)
-      }
-    }
-  }
-
   private val CensusMod = 1000000007L
   private def censusCountExpr: Column =
     count(lit(1)).cast("long").as("_census_n")
@@ -711,10 +649,9 @@ object SimilarityOps {
   }
 
   // Driver-side IO for the bounded sidecars (TinyParquet): the meta
-  // census row, the packed dup-guard bloom (bits/64 rows), and — at
-  // the call sites — quantizer tables and commit snapshots. Format
-  // unchanged (plain parquet, same columns/types); only the fixed
-  // per-file Spark-job + committer cost is gone.
+  // census row, the packed dup-guard bloom (bits/64 rows; IoOps, shared
+  // with the BM25 suite), and — at the call sites — quantizer tables
+  // and commit snapshots. Plain parquet, no Spark job or committer.
   private def writeAnnMeta(hconf: org.apache.hadoop.conf.Configuration,
                            root: String, k: Int, iters: Int, m: Int,
                            dsub: Int, ksub: Int, qdec: Int,
@@ -731,20 +668,39 @@ object SimilarityOps {
       s"missing index meta at $root/meta — not an ANN index store?")
     rows.head
   }
-  // bloom sidecar IO shared with the BM25 suite: IoOps.*BloomSidecar
-  private def writeBloomSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      words: DataFrame): Unit =
-    graft.sources.IoOps.writeBloomSidecar(spark, path, words)
-  private def readBloomWordsLocal(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-    : Seq[(Long, Long)] =
-    graft.sources.IoOps.readBloomWordsLocal(spark, path)
-  private def localWordsDf(spark: org.apache.spark.sql.SparkSession,
-                           rows: Seq[(Long, Long)]): DataFrame =
-    graft.sources.IoOps.localWordsDf(spark, rows)
 
-  /** @param pqIters 0 (default) = seeded PQ codebooks; > 0 = train
+  /** Build and PERSIST an IVF+PQ index under `root` — the difference
+    * between "has ANN operators" and "is an ANN system" at 100 TB: a
+    * real pipeline trains the quantizers once, stores the index, and
+    * serves many query batches from it instead of re-running Lloyd per
+    * query. Layout (all parquet):
+    *
+    *   root/centroids  (cid, dim, value)            — K x d rows,
+    *     the trained-Lloyd coarse quantizer ([[trainIvf]], quantized
+    *     to qdec decimals so reload is value-identical by construction)
+    *   root/codebooks  (subspace, code, dim, value) — m x ksub x dsub
+    *     rows, the PQ codebooks ([[pqCodebooks]] seeding rule)
+    *   root/vectors    (vec_id, codes) PARTITIONED BY list_id — the
+    *     only corpus-sized table, m bytes of codes per row (32x
+    *     smaller than raw vectors), laid out so a probe's nProbe lists
+    *     are PARTITION PRUNING at the scan — search I/O rides probed-
+    *     list volume, never corpus size
+    *   root/applog     (vec_id, list_id, codes) flat append-log
+    *     segments ([[indexAppend]]), folded by [[indexFlush]]
+    *   root/deletes    (vec_id, list_id) merge-on-read delete sidecar
+    *     ([[indexDelete]]), retired by [[indexCompact]]
+    *   root/bloomidx   the packed vec-id Bloom of the append dup-guard
+    *   root/meta       one row: the build parameters + corpus census
+    *     (n_vectors, id checksum) for the staleness check
+    *   root/commits    the snapshot naming every live vectors / applog
+    *     / deletes file (graft.sources.IndexCommits)
+    *
+    * Doubles round-trip bit-exactly through parquet, so a search
+    * through the stored index is row-identical to the in-memory
+    * [[ivfPqTopKWith]] on the same trained structures (the
+    * `ann_index_persist` gate shares `ann_ivfpq`'s oracle).
+    *
+    * @param pqIters 0 (default) = seeded PQ codebooks; > 0 = train
     *   them too ([[trainPqCodebooks]]) — the fully-trained production
     *   index (both quantizers k-means).
     */
@@ -801,7 +757,7 @@ object SimilarityOps {
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$root/vectors")
     val (n, c) = censusOf(obs)
-    writeBloomSidecar(spark, s"$root/bloomidx",
+    graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
       dupBloomWords(corpus.select(col(idCol)), idCol))
     writeAnnMeta(hconf, root, k, iters, m, dsub, ksub, qdec, n, c)
     // Commit the initial snapshot: from here on every read plans its
@@ -810,7 +766,8 @@ object SimilarityOps {
     // whatever a previous lifecycle on a reused root left behind
     // (old applog segments, delete sidecars, superseded snapshots).
     graft.sources.IndexCommits.commit(spark, root,
-      listVectors(spark, root))
+      graft.sources.IndexCommits.listKind(spark, root, "vectors",
+        Some("list_id")))
     graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
   }
 
@@ -831,8 +788,8 @@ object SimilarityOps {
     * row-identical to the in-memory [[ivfPqTopKWith]] over ALL of C
     * under B-trained quantizers — per-row assignment is independent,
     * so append order and batching never matter.
-    */
-  /** @param buffered Both paths land the delta as SEGMENT file(s) in
+    *
+    * @param buffered Both paths land the delta as SEGMENT file(s) in
     *   `root/applog` with list_id as a plain column (round-19 opt,
     *   guide §6 — snapshot-addressed flat segments): a direct append
     *   previously wrote into up-to-K `list_id=` partition directories,
@@ -851,22 +808,21 @@ object SimilarityOps {
     *   same census/bloom, and both serve row-identically (the
     *   `ann_index_append_buffered` / `ann_index_flush` gates share
     *   `ann_index_append`'s oracle).
-    */
-  /** @param autoFlushSegments LSM flush policy for the buffered path:
+    * @param autoFlushSegments LSM flush policy for BOTH append paths:
     *   when > 0 and the append log holds at least this many segment
     *   files after the append, [[indexFlush]] runs inline — bounding
     *   the log (whose union scan every search pays) without a manual
     *   maintenance trigger. 0 disables (flush stays a manual/cadence
-    *   decision). Ignored for direct appends.
+    *   decision, e.g. [[indexMaintain]]).
     */
   def indexAppend(delta: DataFrame, idCol: String, vecCol: String,
                   root: String, buffered: Boolean = false,
                   autoFlushSegments: Int = 0): Unit = {
     val spark = delta.sparkSession
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
     val cents = readIndexCentroids(spark, root)
     val cb = readIndexCodebooks(spark, root)
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val versioned = snap.nonEmpty
     // Append idempotence, ENFORCED (mirroring the BM25 index's guard):
     // delta ids check against the packed id-bloom (delta-sized work);
     // ids that miss are provably new; HITS arbitrate exactly against
@@ -874,66 +830,47 @@ object SimilarityOps {
     // list is recomputable from the stored centroids, so even the
     // exact check is partition-pruned. A deleted-but-not-compacted id
     // is still physically present and correctly rejected until
-    // indexCompact removes it. Legacy indexes without a bloom skip
-    // the guard (the census still catches drift post-hoc).
-    val bloomPath = new org.apache.hadoop.fs.Path(s"$root/bloomidx")
-    val bloomFs = bloomPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hasBloom = bloomFs.exists(bloomPath)
-    // the packed bloom is bits/64-bounded: read it ONCE on the driver;
+    // indexCompact removes it.
+    // The packed bloom is bits/64-bounded: read it ONCE on the driver;
     // the suspects join broadcasts it as a local relation (no scan
-    // job), and the post-append fold reuses the same words
+    // job), and the post-append fold reuses the same words.
     val bloomWords =
-      if (hasBloom) readBloomWordsLocal(spark, s"$root/bloomidx")
-      else Seq.empty[(Long, Long)]
-    if (hasBloom) {
-      val suspects = bloomSuspects(
-        delta.select(col(idCol)).distinct(), idCol,
-        localWordsDf(spark, bloomWords))
-      if (!suspects.limit(1).isEmpty) {
-        val sv = delta.join(broadcast(suspects), Seq(idCol), "left_semi")
-          .select(col(idCol).cast("long").as("vec_id"),
-            graft.functions.NearestCentroidId(
-              toDouble(col(vecCol)), cents).cast("long").as("list_id"))
-        val lists = sv.select("list_id").distinct()
-          .collect().map(_.getLong(0))
-        // versioned store: the suspects' lists' files come straight
-        // from the snapshot (no per-list existence probes)
-        val paths =
-          if (versioned)
-            graft.sources.IndexCommits.filesOfParts(snap, "vectors",
-              lists.toSet)
-          else lists.toSeq.map(l => s"$root/vectors/list_id=$l")
-            .filter(p => bloomFs.exists(new org.apache.hadoop.fs.Path(p)))
-        val partDup =
-          if (paths.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else spark.read.option("basePath", s"$root/vectors")
-            .parquet(paths: _*)
-            .select(col("vec_id").cast("long").as("vec_id"))
-            .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
-              "left_semi")
-            .limit(1).collect()
-        // a suspect may also live in the unflushed append log
-        val logFiles =
-          if (versioned)
-            graft.sources.IndexCommits.filesOf(snap, "applog")
-          else {
-            val logP = new org.apache.hadoop.fs.Path(s"$root/applog")
-            if (bloomFs.exists(logP)) Seq(s"$root/applog") else Seq.empty
-          }
-        val dup =
-          if (partDup.nonEmpty || logFiles.isEmpty) partDup
-          else spark.read.parquet(logFiles: _*)
-            .select(col("vec_id").cast("long").as("vec_id"))
-            .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
-              "left_semi")
-            .limit(1).collect()
-        require(dup.isEmpty,
-          s"indexAppend: vec_id ${dup.headOption.map(_.get(0))
-            .getOrElse("")} is already indexed — appends must carry " +
-            "NEW vectors only (use indexDelete + indexCompact, or " +
-            "rebuild)")
-      }
+      graft.sources.IoOps.readBloomWordsLocal(spark, s"$root/bloomidx")
+    val suspects = bloomSuspects(
+      delta.select(col(idCol)).distinct(), idCol,
+      graft.sources.IoOps.localWordsDf(spark, bloomWords))
+    if (!suspects.limit(1).isEmpty) {
+      val sv = delta.join(broadcast(suspects), Seq(idCol), "left_semi")
+        .select(col(idCol).cast("long").as("vec_id"),
+          graft.functions.NearestCentroidId(
+            toDouble(col(vecCol)), cents).cast("long").as("list_id"))
+      val lists = sv.select("list_id").distinct()
+        .collect().map(_.getLong(0))
+      // the suspects' lists' files come straight from the snapshot (no
+      // per-list existence probes)
+      val paths = IC.filesOfParts(snap, "vectors", lists.toSet)
+      val partDup =
+        if (paths.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else spark.read.option("basePath", s"$root/vectors")
+          .parquet(paths: _*)
+          .select(col("vec_id").cast("long").as("vec_id"))
+          .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
+            "left_semi")
+          .limit(1).collect()
+      // a suspect may also live in the unflushed append log
+      val logFiles = IC.filesOf(snap, "applog")
+      val dup =
+        if (partDup.nonEmpty || logFiles.isEmpty) partDup
+        else spark.read.parquet(logFiles: _*)
+          .select(col("vec_id").cast("long").as("vec_id"))
+          .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
+            "left_semi")
+          .limit(1).collect()
+      require(dup.isEmpty,
+        s"indexAppend: vec_id ${dup.headOption.map(_.get(0))
+          .getOrElse("")} is already indexed — appends must carry " +
+          "NEW vectors only (use indexDelete + indexCompact, or " +
+          "rebuild)")
     }
     val coded = delta
       .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v"))
@@ -942,61 +879,46 @@ object SimilarityOps {
           .cast("long").as("list_id"),
         graft.functions.PqCodes(col("_v"), cb).as("codes"))
     // both paths write flat applog segment(s) (see the buffered param
-    // doc): discover what the write adds by diffing the applog listing
-    // (flush-cadence bounded), and let the delta census (count +
-    // order-free id checksum) ride the segment write as observed
-    // metrics — one delta pass total, no per-list directory commits.
-    val before =
-      if (!versioned) Set.empty[String]
-      else listApplog(spark, root).map(_.file).toSet
+    // doc), discovered by diffing the applog listing, and the delta
+    // census (count + order-free id checksum) rides the segment write
+    // as observed metrics — one delta pass total, no per-list
+    // directory commits.
     val obs = new org.apache.spark.sql.Observation()
     val observed =
       coded.observe(obs, censusCountExpr, censusChecksumExpr("vec_id"))
-    (if (buffered)
-       observed.coalesce(1) // one segment file per buffered append
-     else
-       // batched deltas can be large: spread on list_id (AQE coalesces
-       // a small delta back to one partition/file) and sort within
-       // files so parquet row-group stats prune the probe filter
-       observed.repartition(col("list_id"))
-         .sortWithinPartitions("list_id"))
-      .write.mode("append").parquet(s"$root/applog")
-    val (dn, dc) = censusOf(obs)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val old = readAnnMeta(hconf, root)
-    writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
-      old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
-      old.getInt("qdec"), old.getLong("n_vectors") + dn,
-      (old.getLong("id_checksum") + dc) % CensusMod)
-    // fold the delta into the dup-guard bloom (bit_or: commutative and
-    // idempotent, so the streaming twin's batching/order still cannot
-    // matter); legacy indexes stay bloom-less — a PARTIAL bloom would
-    // wrongly clear pre-bloom ids as "provably new". The delta words
-    // are one bounded aggregate; the merge with the already-read base
-    // words is a driver-side OR over bits/64 entries.
-    if (hasBloom) {
+    val next = IC.commitWritten(spark, root, snap,
+        IC.listKind(spark, root, "applog")) {
+      (if (buffered)
+         observed.coalesce(1) // one segment file per buffered append
+       else
+         // batched deltas can be large: spread on list_id (AQE
+         // coalesces a small delta back to one partition/file) and sort
+         // within files so parquet row-group stats prune the probe
+         // filter
+         observed.repartition(col("list_id"))
+           .sortWithinPartitions("list_id"))
+        .write.mode("append").parquet(s"$root/applog")
+      val (dn, dc) = censusOf(obs)
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val old = readAnnMeta(hconf, root)
+      writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
+        old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
+        old.getInt("qdec"), old.getLong("n_vectors") + dn,
+        (old.getLong("id_checksum") + dc) % CensusMod)
+      // fold the delta into the dup-guard bloom (bit_or: commutative
+      // and idempotent, so the streaming twin's batching/order still
+      // cannot matter). The delta words are one bounded aggregate; the
+      // merge with the already-read base words is a driver-side OR over
+      // bits/64 entries.
       val deltaWords = dupBloomWords(delta.select(col(idCol)), idCol)
         .select(col("widx").cast("long"), col("word").cast("long"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
       graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
         graft.sources.IoOps.mergeBloomWords(bloomWords, deltaWords))
     }
-    if (versioned) {
-      // pointer swap: the appended files become visible atomically;
-      // a crash before this line leaves them invisible orphans (the
-      // next maintenance vacuum heals), never a half-applied append
-      val added = listApplog(spark, root).filterNot(e => before(e.file))
-      graft.sources.IndexCommits.commit(spark, root, snap ++ added)
-    }
-    if (buffered && autoFlushSegments > 0) {
-      val segs =
-        if (versioned)
-          graft.sources.IndexCommits.filesOf(
-            graft.sources.IndexCommits.readEntries(spark, root),
-            "applog").size
-        else listApplog(spark, root).size
-      if (segs >= autoFlushSegments) indexFlush(spark, root)
-    }
+    if (autoFlushSegments > 0 &&
+        IC.filesOf(next, "applog").size >= autoFlushSegments)
+      indexFlush(spark, root)
   }
 
   /** Fold the buffered append log into the `list_id=` partitions and
@@ -1011,31 +933,9 @@ object SimilarityOps {
     * physical layout and nothing else.
     */
   def indexFlush(spark: org.apache.spark.sql.SparkSession,
-                 root: String): Unit = {
-    if (graft.sources.IndexCommits.enabled(spark, root)) {
-      // crash-safe protocol: heal any debris a crashed maintenance op
-      // left (staged files are invisible until their pointer swap),
-      // stage the fold as NEW files, swap the pointer, retire the log
-      graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
-      prepareFlush(spark, root).foreach { next =>
-        graft.sources.IndexCommits.commit(spark, root, next)
-        graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
-      }
-    } else {
-      // legacy (pre-commit-protocol) store: the original swap, with
-      // its documented crash window between append and delete
-      val logPath = new org.apache.hadoop.fs.Path(s"$root/applog")
-      val fs = logPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(logPath)) return // nothing buffered: no-op
-      spark.read.parquet(s"$root/applog")
-        .localCheckpoint(true) // the log dir is deleted below
-        .repartition(col("list_id")) // one new file per touched list
-        .write.mode("append").partitionBy("list_id")
-        .parquet(s"$root/vectors")
-      fs.delete(logPath, true)
-    }
-  }
+                 root: String): Unit =
+    graft.sources.IndexCommits.maintain(spark, root, AnnSubs)(
+      prepareFlush(spark, root))
 
   /** One-call self-maintenance for a persisted index — the policy
     * layer over [[indexFlush]] and [[indexCompact]], so a store stays
@@ -1060,23 +960,10 @@ object SimilarityOps {
     : (Boolean, Boolean) = {
     val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
-    val versioned = snap.nonEmpty
-    val segs =
-      if (versioned) IC.filesOf(snap, "applog").size
-      else listApplog(spark, root).size
-    val doFlush = flushSegments > 0 && segs >= flushSegments
+    val doFlush = flushSegments > 0 &&
+      IC.filesOf(snap, "applog").size >= flushSegments
     if (doFlush) indexFlush(spark, root)
-    val delFiles =
-      if (versioned) IC.filesOf(snap, "deletes")
-      else {
-        val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Seq(s"$root/deletes") else Seq.empty
-      }
-    val delRows =
-      if (delFiles.isEmpty) 0L
-      else graft.sources.TinyParquet.rowCount(
-        spark.sparkContext.hadoopConfiguration, delFiles)
+    val delRows = IC.pendingDeletes(spark, snap)
     // meta's n_vectors is the post-delete census, so the pre-delete
     // corpus is live + doomed — the denominator the fraction means
     val doCompact = delRows > 0 && {
@@ -1098,21 +985,22 @@ object SimilarityOps {
   private[graft] def prepareFlush(
       spark: org.apache.spark.sql.SparkSession, root: String)
     : Option[Seq[graft.sources.IndexCommits.Entry]] = {
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val logFiles = graft.sources.IndexCommits.filesOf(snap, "applog")
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
+    val logFiles = IC.filesOf(snap, "applog")
     if (logFiles.isEmpty) return None
     val log = spark.read.parquet(logFiles: _*)
     // the fold can only add files under the lists the log contains —
     // list those dirs alone (flush-cadence bounded), never the tree
     val touched = log.select("list_id").distinct().collect()
       .map(_.getLong(0)).toSeq
-    val before = listVectorLists(spark, root, touched).map(_.file).toSet
-    log
-      .repartition(col("list_id")) // one new file per touched list
-      .write.mode("append").partitionBy("list_id")
-      .parquet(s"$root/vectors")
-    val added = listVectorLists(spark, root, touched)
-      .filterNot(e => before(e.file))
+    val added = IC.written(
+        IC.listParts(spark, root, "vectors", "list_id", touched)) {
+      log
+        .repartition(col("list_id")) // one new file per touched list
+        .write.mode("append").partitionBy("list_id")
+        .parquet(s"$root/vectors")
+    }
     Some(snap.filterNot(_.kind == "applog") ++ added)
   }
 
@@ -1132,20 +1020,14 @@ object SimilarityOps {
   def indexDelete(doomed: DataFrame, idCol: String, root: String,
                   vecCol: String = null): Unit = {
     val spark = doomed.sparkSession
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val versioned = snap.nonEmpty
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
     // Idempotence: a re-deleted id must not subtract the census twice
     // (that would permanently corrupt n_vectors/checksum and with them
     // the staleness gate). Dedup within the batch, then anti-join the
     // ids already in the sidecar — sidecar-sized broadcast, never
     // corpus-sized.
-    val delFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "deletes")
-      else {
-        val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Seq(s"$root/deletes") else Seq.empty
-      }
+    val delFiles = IC.filesOf(snap, "deletes")
     val batch = doomed.dropDuplicates(Seq(idCol))
     val fresh =
       if (delFiles.isEmpty) batch
@@ -1177,21 +1059,17 @@ object SimilarityOps {
       } else
         freshObs.select(col(idCol).cast("long").as("vec_id"),
           lit(null).cast("long").as("list_id"))
-    val before =
-      if (versioned) listDeletes(spark, root).map(_.file).toSet
-      else Set.empty[String]
-    withList.write.mode("append").parquet(s"$root/deletes")
-    val (dn, dc) = censusOf(obs)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val old = readAnnMeta(hconf, root)
-    writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
-      old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
-      old.getInt("qdec"), old.getLong("n_vectors") - dn,
-      java.lang.Math.floorMod(old.getLong("id_checksum") - dc,
-        CensusMod))
-    if (versioned) {
-      val added = listDeletes(spark, root).filterNot(e => before(e.file))
-      graft.sources.IndexCommits.commit(spark, root, snap ++ added)
+    IC.commitWritten(spark, root, snap,
+        IC.listKind(spark, root, "deletes")) {
+      withList.write.mode("append").parquet(s"$root/deletes")
+      val (dn, dc) = censusOf(obs)
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val old = readAnnMeta(hconf, root)
+      writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
+        old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
+        old.getInt("qdec"), old.getLong("n_vectors") - dn,
+        java.lang.Math.floorMod(old.getLong("id_checksum") - dc,
+          CensusMod))
     }
   }
 
@@ -1200,21 +1078,21 @@ object SimilarityOps {
     * maintenance rhythm: physically remove doomed rows and drop the
     * sidecar, restoring delete-free serving. Surgical by partition,
     * like purgeDeletes for tables: ONLY the `list_id=` partitions that
-    * actually contain doomed rows are rewritten (read partition-pruned
+    * actually contain doomed rows are rewritten (read snapshot-pruned
     * to those lists, one broadcastable anti-join against the doomed
-    * ids, atomic-per-partition directory swap); every other
-    * partition's files are left byte-untouched on disk — at 100 TB a
-    * handful of doomed lists cost a handful of list rewrites, never a
-    * corpus rewrite. Quantizers and meta are untouched (the census
-    * already went subtractive at [[indexDelete]] time, so
-    * [[indexIsStale]] agrees before and after). Searches through the
-    * compacted index are row-identical to the merge-on-read searches
-    * before it (the `ann_index_compact` gate shares
-    * `ann_index_delete`'s oracle).
+    * ids, survivors staged as NEW files and committed by one pointer
+    * swap); every other partition's files are left byte-untouched on
+    * disk — at 100 TB a handful of doomed lists cost a handful of list
+    * rewrites, never a corpus rewrite. Quantizers and meta are
+    * untouched (the census already went subtractive at
+    * [[indexDelete]] time, so [[indexIsStale]] agrees before and
+    * after). Searches through the compacted index are row-identical
+    * to the merge-on-read searches before it (the `ann_index_compact`
+    * gate shares `ann_index_delete`'s oracle).
     *
     * Touched lists come straight from the sidecar when every delete
     * recorded its `list_id` (deletes-sidecar-sized driver list, K-
-    * bounded after distinct); legacy id-only rows fall back to ONE
+    * bounded after distinct); id-only deletes fall back to ONE
     * column-pruned discovery join against the code table — documented
     * cost, avoided entirely by passing `vecCol` to [[indexDelete]].
     *
@@ -1225,70 +1103,9 @@ object SimilarityOps {
     * correctly finds them gone post-compact, so re-appends work.
     */
   def indexCompact(spark: org.apache.spark.sql.SparkSession,
-                   root: String): Unit = {
-    if (graft.sources.IndexCommits.enabled(spark, root)) {
-      // crash-safe protocol: heal debris, stage survivors as NEW
-      // files, swap the pointer, retire the replaced files + sidecar.
-      // A crash at any point leaves the CURRENT snapshot serving the
-      // same merge-on-read results it served before compact started.
-      graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
-      prepareCompact(spark, root).foreach { next =>
-        graft.sources.IndexCommits.commit(spark, root, next)
-        graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
-      }
-      return
-    }
-    // legacy (pre-commit-protocol) store: delete-then-rename swap,
-    // with its documented lost-partition crash window
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val delPath = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    val fs = delPath.getFileSystem(hconf)
-    if (!fs.exists(delPath)) return // nothing accrued: no-op
-    val del = spark.read.parquet(s"$root/deletes")
-    val delIds = del.select("vec_id").distinct()
-    val haveAllLists = del.columns.contains("list_id") &&
-      del.where(col("list_id").isNull).limit(1).isEmpty
-    // driver list bounded by K (distinct list ids), never corpus size
-    val touched: Array[Long] =
-      (if (haveAllLists)
-         del.select(col("list_id").cast("long"))
-       else
-         spark.read.parquet(s"$root/vectors")
-           .join(broadcast(delIds), Seq("vec_id"))
-           .select(col("list_id").cast("long")))
-        .distinct().collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val tmp = s"$root/.compact"
-      // survivors of the touched lists ONLY: partition-pruned scan
-      spark.read.parquet(s"$root/vectors")
-        .where(col("list_id").isin(touched: _*))
-        .join(broadcast(delIds), Seq("vec_id"), "left_anti")
-        .repartition(col("list_id")) // one file per rewritten list
-        .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-      // swap rewritten partitions into place; a list whose every row
-      // was doomed has no tmp dir and is simply dropped
-      touched.foreach { l =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$root/vectors/list_id=$l"), true)
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/list_id=$l")
-        if (fs.exists(src))
-          fs.rename(src,
-            new org.apache.hadoop.fs.Path(s"$root/vectors/list_id=$l"))
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-    // doomed rows may also sit in unflushed LSM segments: rewrite the
-    // (flush-cadence-bounded, never corpus-sized) append log minus them
-    val logPath = new org.apache.hadoop.fs.Path(s"$root/applog")
-    if (fs.exists(logPath)) {
-      val survivors = spark.read.parquet(s"$root/applog")
-        .join(broadcast(delIds), Seq("vec_id"), "left_anti")
-        .localCheckpoint(true) // break lineage: overwrites its input
-      survivors.coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/applog")
-    }
-    fs.delete(delPath, true)
-  }
+                   root: String): Unit =
+    graft.sources.IndexCommits.maintain(spark, root, AnnSubs)(
+      prepareCompact(spark, root))
 
   /** Stage a compaction WITHOUT committing it: write the touched
     * lists' survivors as NEW files (job-unique names moved into the
@@ -1307,72 +1124,39 @@ object SimilarityOps {
     val snap = IC.readEntries(spark, root)
     val delFiles = IC.filesOf(snap, "deletes")
     if (delFiles.isEmpty) return None // nothing accrued: no-op
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val del = spark.read.parquet(delFiles: _*)
     val delIds = del.select("vec_id").distinct()
-    val haveAllLists = del.columns.contains("list_id") &&
-      del.where(col("list_id").isNull).limit(1).isEmpty
+    val haveAllLists = del.where(col("list_id").isNull).limit(1).isEmpty
     val allVecFiles = IC.filesOf(snap, "vectors")
     // driver list bounded by K (distinct list ids), never corpus size
-    val touched: Array[Long] =
+    val touched: Set[Long] =
       if (haveAllLists)
         del.select(col("list_id").cast("long"))
-          .distinct().collect().map(_.getLong(0))
-      else if (allVecFiles.isEmpty) Array.empty[Long]
-      else // legacy id-only rows: ONE discovery join, column-pruned
+          .distinct().collect().map(_.getLong(0)).toSet
+      else if (allVecFiles.isEmpty) Set.empty
+      else // id-only deletes (no vecCol): ONE column-pruned discovery join
         spark.read.option("basePath", s"$root/vectors")
           .parquet(allVecFiles: _*)
           .join(broadcast(delIds), Seq("vec_id"))
           .select(col("list_id").cast("long"))
-          .distinct().collect().map(_.getLong(0))
-    var entries = snap.filterNot(e =>
-      e.kind == "deletes" || e.kind == "applog")
-    if (touched.nonEmpty) {
-      val touchedSet = touched.toSet
-      val touchedFiles = IC.filesOfParts(snap, "vectors", touchedSet)
-      val tmp = s"$root/.compact"
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // stale stage
-      if (touchedFiles.nonEmpty)
-        // survivors of the touched lists ONLY: snapshot-pruned scan
-        spark.read.option("basePath", s"$root/vectors")
-          .parquet(touchedFiles: _*)
-          .join(broadcast(delIds), Seq("vec_id"), "left_anti")
-          .repartition(col("list_id")) // one file per rewritten list
-          .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-      val staged = IC.listDataFiles(spark, root, "vectors", ".compact",
-        Some("list_id"))
-      val moved = staged.map { e =>
-        val dstDir = new org.apache.hadoop.fs.Path(
-          s"$root/vectors/list_id=${e.partId.get}")
-        if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
-        val dst = new org.apache.hadoop.fs.Path(dstDir,
-          new org.apache.hadoop.fs.Path(e.file).getName)
-        require(fs.rename(new org.apache.hadoop.fs.Path(e.file), dst),
-          s"indexCompact: staging move failed for ${e.file}")
-        e.copy(file = dst.toUri.getPath)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      // a list whose every row was doomed gets no staged file and is
-      // simply dropped from the snapshot
-      entries = entries.filterNot(e =>
-        e.kind == "vectors" && e.partId.exists(touchedSet.contains)) ++
-        moved
-    }
+          .distinct().collect().map(_.getLong(0)).toSet
+    val entries = IC.rewriteParts(spark, root,
+        snap.filterNot(e => e.kind == "deletes" || e.kind == "applog"),
+        "vectors", "list_id", touched)(
+      _.join(broadcast(delIds), Seq("vec_id"), "left_anti"))
     // doomed rows may also sit in unflushed LSM segments: fold the
     // log's survivors into ONE new segment (bounded by flush cadence)
     val logFiles = IC.filesOf(snap, "applog")
-    if (logFiles.nonEmpty) {
-      val before = listApplog(spark, root).map(_.file).toSet
-      val survivors = spark.read.parquet(logFiles: _*)
-        .join(broadcast(delIds), Seq("vec_id"), "left_anti")
-      if (!survivors.limit(1).isEmpty)
-        survivors.coalesce(1).write.mode("append")
-          .parquet(s"$root/applog")
-      entries = entries ++
-        listApplog(spark, root).filterNot(e => before(e.file))
-    }
-    Some(entries)
+    val logSurvivors =
+      if (logFiles.isEmpty) Seq.empty
+      else IC.written(IC.listKind(spark, root, "applog")) {
+        val survivors = spark.read.parquet(logFiles: _*)
+          .join(broadcast(delIds), Seq("vec_id"), "left_anti")
+        if (!survivors.limit(1).isEmpty)
+          survivors.coalesce(1).write.mode("append")
+            .parquet(s"$root/applog")
+      }
+    Some(entries ++ logSurvivors)
   }
 
   /** Reload the trained coarse quantizer from a persisted index —
@@ -1428,36 +1212,22 @@ object SimilarityOps {
                   vecCol: String, k: Int, nProbe: Int,
                   qdec: Int = 6): DataFrame = {
     val spark = queries.sparkSession
+    val IC = graft.sources.IndexCommits
+    // Plan the probed read from the current SNAPSHOT: one bounded
+    // commit read names every live file — no per-list existence
+    // probes, and staged/orphaned files from an interrupted
+    // maintenance op are invisible by construction. A probed list with
+    // no vectors has no snapshot entry; skipping it is exactly the
+    // empty-list semantics of the isin scan.
+    val snap = IC.readEntries(spark, root)
     val cents = readIndexCentroids(spark, root)
     val cb = readIndexCodebooks(spark, root)
     val probed = queries
       .select(explode(graft.functions.ProbeListIds(
         toDouble(col(vecCol)), cents, nProbe)).as("list_id"))
       .distinct().collect().map(_.getLong(0))
-    // Plan the probed read from the current SNAPSHOT when the store is
-    // commit-versioned (one bounded commit read names every live file
-    // — no per-list existence probes, and staged/orphaned files from
-    // an interrupted maintenance op are invisible by construction).
-    // Legacy stores list ONLY the probed partition directories
-    // (basePath recovers the list_id column): planning cost rides
-    // |probed lists|, never K — with K=1600 lists the full-store
-    // InMemoryFileIndex listing cost more than the data read (100x
-    // rehearsal). A probed list with no vectors has no directory /
-    // no snapshot entry; skipping it is exactly the empty-list
-    // semantics of the isin scan.
     val vecBase = s"$root/vectors"
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val versioned = snap.nonEmpty
-    val probedPaths =
-      if (versioned)
-        graft.sources.IndexCommits.filesOfParts(snap, "vectors",
-          probed.toSet)
-      else {
-        val fsV = new org.apache.hadoop.fs.Path(vecBase).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        probed.toSeq.map(l => s"$vecBase/list_id=$l")
-          .filter(p => fsV.exists(new org.apache.hadoop.fs.Path(p)))
-      }
+    val probedPaths = IC.filesOfParts(snap, "vectors", probed.toSet)
     val codedMain =
       (if (probedPaths.isEmpty)
          spark.read.parquet(vecBase).where(lit(false))
@@ -1466,17 +1236,11 @@ object SimilarityOps {
         .select(col("vec_id").as("neighbor_id"),
           col("list_id").cast("long").as("list_id"), col("codes"))
     // unflushed LSM segments: same probe filter as a plain column —
-    // parquet min/max row-group stats prune it; the log is bounded by
-    // the flush cadence, never corpus-sized
-    val logFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "applog")
-      else {
-        val logPath = new org.apache.hadoop.fs.Path(s"$root/applog")
-        if (logPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(logPath))
-          Seq(s"$root/applog")
-        else Seq.empty
-      }
+    // parquet min/max row-group stats prune it. Both append paths feed
+    // the log; it is bounded by autoFlushSegments (the buffered sink's
+    // default) or, for direct ingest, by indexMaintain's flush cadence
+    // or an explicit autoFlushSegments — never corpus-sized by design
+    val logFiles = IC.filesOf(snap, "applog")
     val coded0 =
       if (logFiles.nonEmpty)
         codedMain.unionByName(
@@ -1487,15 +1251,7 @@ object SimilarityOps {
       else codedMain
     // serve base minus deletes: one anti-join against the (small)
     // delete sidecar when one exists — the index's merge-on-read
-    val delFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "deletes")
-      else {
-        val delPath = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        if (delPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(delPath))
-          Seq(s"$root/deletes")
-        else Seq.empty
-      }
+    val delFiles = IC.filesOf(snap, "deletes")
     val coded =
       if (delFiles.nonEmpty)
         coded0.join(

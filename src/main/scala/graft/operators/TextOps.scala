@@ -1605,38 +1605,6 @@ object TextOps {
       .orderBy(col("bm25").desc, col(idCol))
       .limit(k)
 
-  /** Persist a BM25 inverted index — the sparse-retrieval sibling of
-    * the ANN index lifecycle (SimilarityOps.indexWrite): a 100 TB
-    * corpus is indexed ONCE and serves many query batches from the
-    * stored postings instead of rescanning text per query. Layout:
-    *
-    *   root/postings  (doc_id, term, tf, dl) PARTITIONED BY bucket =
-    *     pmod(polyHash(term), nBuckets) — a query's terms resolve to
-    *     their buckets driver-side, so the search scans only those
-    *     `bucket=` partitions (partition pruning as the posting-list
-    *     lookup); within a bucket the term IN-list pushes to parquet.
-    *     The doc length rides ON the posting row (the norm-inlined
-    *     postings layout of a production IR engine), so SERVING never
-    *     joins a corpus-sized side table — search cost is probed
-    *     posting volume, full stop
-    *   root/doclens   (doc_id, dl) — the census/maintenance table
-    *     (delete census, exact dup arbitration); not on the serving
-    *     path
-    *   root/bloomidx  (widx, word) — a PACKED doc-id Bloom bitmap
-    *     (bits/64 rows max, ~2 MB at the 1<<24 default — bounded by
-    *     BITS, never by corpus size), the append dup-guard's fast
-    *     path: a delta whose ids all miss the bloom is provably new
-    *     with NO corpus-sized read at all; only bloom HITS (dups or
-    *     false positives) pay the exact doclens check
-    *   root/meta      (n_docs, sum_dl, n_buckets, doc_checksum) —
-    *     corpus census; the checksum is order-free and additive mod p
-    *     (mirroring SimilarityOps.indexWrite's), so append/delete
-    *     maintain it incrementally and [[invertedIndexIsStale]] can
-    *     gate serving without rescanning text
-    *
-    * One corpus scan builds everything; the postings shuffle is
-    * bounded by distinct (doc, term) pairs, never token count.
-    */
   /** Bloom sizing for the doc-id dup-guard: 1<<24 bits / 3 hashes give
     * ~6e-4 false-positive rate at 500k docs (positions from
     * IoOps.bloomPositions — the same hash family as the file-skipping
@@ -1672,22 +1640,54 @@ object TextOps {
   private def docBucket(id: Column, n: Int): Column =
     pmod(hash(id), lit(n))
 
-  // Versioned-snapshot plumbing (IndexCommits): the subdirectories the
-  // snapshot manages and the tree listings mutations diff.
+  // The subdirectories the commit snapshot (IndexCommits) manages, and
+  // the listing the append diffs around its postings + doclens write.
   private val BmSubs = Seq("postings", "doclens", "deletes", ".compact")
-  private def listPostings(spark: org.apache.spark.sql.SparkSession,
-                           root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "postings",
-      "postings", Some("bucket"))
-  private def listDoclens(spark: org.apache.spark.sql.SparkSession,
-                          root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "doclens",
-      "doclens", Some("docbucket"))
-  private def listBmDeletes(spark: org.apache.spark.sql.SparkSession,
-                            root: String) =
-    graft.sources.IndexCommits.listDataFiles(spark, root, "deletes",
-      "deletes", None)
+  private def listBmData(spark: org.apache.spark.sql.SparkSession,
+                         root: String) =
+    graft.sources.IndexCommits.listKind(spark, root, "postings",
+      Some("bucket")) ++
+      graft.sources.IndexCommits.listKind(spark, root, "doclens",
+        Some("docbucket"))
 
+  /** Persist a BM25 inverted index — the sparse-retrieval sibling of
+    * the ANN index lifecycle (SimilarityOps.indexWrite): a 100 TB
+    * corpus is indexed ONCE and serves many query batches from the
+    * stored postings instead of rescanning text per query. Layout:
+    *
+    *   root/postings  (doc_id, term, tf, dl) PARTITIONED BY bucket =
+    *     pmod(polyHash(term), nBuckets) — a query's terms resolve to
+    *     their buckets driver-side, so the search scans only those
+    *     `bucket=` partitions (partition pruning as the posting-list
+    *     lookup); within a bucket the term IN-list pushes to parquet.
+    *     The doc length rides ON the posting row (the norm-inlined
+    *     postings layout of a production IR engine), so SERVING never
+    *     joins a corpus-sized side table — search cost is probed
+    *     posting volume, full stop
+    *   root/doclens   (doc_id, dl) PARTITIONED BY docbucket =
+    *     pmod(hash(doc_id), n_docbuckets) — the census/maintenance
+    *     table (delete census, exact dup arbitration, both pruned to
+    *     the ids' docbuckets); not on the serving path
+    *   root/bloomidx  (widx, word) — a PACKED doc-id Bloom bitmap
+    *     (bits/64 rows max, ~2 MB at the 1<<24 default — bounded by
+    *     BITS, never by corpus size), the append dup-guard's fast
+    *     path: a delta whose ids all miss the bloom is provably new
+    *     with NO corpus-sized read at all; only bloom HITS (dups or
+    *     false positives) pay the exact doclens check
+    *   root/meta      (n_docs, sum_dl, n_buckets, doc_checksum,
+    *     n_docbuckets) — corpus census; the checksum is order-free and
+    *     additive mod p (mirroring SimilarityOps.indexWrite's), so
+    *     append/delete maintain it incrementally and
+    *     [[invertedIndexIsStale]] can gate serving without rescanning
+    *     text
+    *   root/deletes   (doc_id) merge-on-read delete sidecar
+    *     ([[invertedIndexDelete]]), retired by [[invertedIndexCompact]]
+    *   root/commits   the snapshot naming every live postings /
+    *     doclens / deletes file (graft.sources.IndexCommits)
+    *
+    * One corpus scan builds everything; the postings shuffle is
+    * bounded by distinct (doc, term) pairs, never token count.
+    */
   def invertedIndexWrite(df: DataFrame, idCol: String, textCol: String,
                          root: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
@@ -1737,8 +1737,7 @@ object TextOps {
     // read plans its file list from the current commit and every
     // maintenance op is an atomic pointer swap. The vacuum retires
     // whatever a previous lifecycle on a reused root left behind.
-    graft.sources.IndexCommits.commit(spark, root,
-      listPostings(spark, root) ++ listDoclens(spark, root))
+    graft.sources.IndexCommits.commit(spark, root, listBmData(spark, root))
     graft.sources.IndexCommits.vacuumConf(spark, root, BmSubs)
   }
 
@@ -1757,20 +1756,16 @@ object TextOps {
   // Driver-side IO for the one-row meta census (TinyParquet: same
   // parquet layout, no Spark job / committer per read/write — the
   // round-18 lifecycle profiling showed these tiny jobs dominated the
-  // maintenance ops' wall). Legacy stores may lack n_docbuckets /
-  // doc_checksum; TRow.has mirrors the old schema.fieldNames checks.
+  // maintenance ops' wall).
   private def writeBmMeta(spark: org.apache.spark.sql.SparkSession,
                           root: String, nDocs: Long, sumDl: Long,
                           nBuckets: Int, checksum: Long,
-                          nDocBuckets: Int): Unit = {
-    val base = Seq("n_docs" -> "long", "sum_dl" -> "long",
-      "n_buckets" -> "int", "doc_checksum" -> "long")
-    val row = Seq[Any](nDocs, sumDl, nBuckets, checksum)
+                          nDocBuckets: Int): Unit =
     graft.sources.TinyParquet.write(
       spark.sparkContext.hadoopConfiguration, s"$root/meta",
-      if (nDocBuckets > 0) base :+ ("n_docbuckets" -> "int") else base,
-      Seq(if (nDocBuckets > 0) row :+ nDocBuckets else row))
-  }
+      Seq("n_docs" -> "long", "sum_dl" -> "long", "n_buckets" -> "int",
+        "doc_checksum" -> "long", "n_docbuckets" -> "int"),
+      Seq(Seq(nDocs, sumDl, nBuckets, checksum, nDocBuckets)))
   private def readBmMeta(spark: org.apache.spark.sql.SparkSession,
                          root: String): graft.sources.TinyParquet.TRow = {
     val rows = graft.sources.TinyParquet.read(
@@ -1822,133 +1817,80 @@ object TextOps {
   def invertedIndexAppend(df: DataFrame, idCol: String, textCol: String,
                           root: String): Unit = {
     val spark = df.sparkSession
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
     val oldMeta = readBmMeta(spark, root)
     val nBuckets = oldMeta.getInt("n_buckets")
-    // legacy stores (pre-docbucket layout) keep unpartitioned doclens
-    val nDocBuckets =
-      if (oldMeta.has("n_docbuckets")) oldMeta.getInt("n_docbuckets")
-      else 0
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val versioned = snap.nonEmpty
+    val nDocBuckets = oldMeta.getInt("n_docbuckets")
     val deltaIds = df.select(col(idCol).as("doc_id")).distinct()
-    val bloomPath = new org.apache.hadoop.fs.Path(s"$root/bloomidx")
-    val bloomFs = bloomPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hasBloom = bloomFs.exists(bloomPath)
     // bits/64-bounded: one driver read serves both the suspects join
     // (as a broadcast local relation — no scan job) and the post-
     // append fold
     val bloomWords =
-      if (hasBloom)
-        graft.sources.IoOps.readBloomWordsLocal(spark, s"$root/bloomidx")
-      else Seq.empty[(Long, Long)]
-    val suspects =
-      if (hasBloom)
-        // all-hashes-hit test against the packed words: one delta-sized
-        // explode + one broadcast join — nothing corpus-sized
-        bloomSuspects(deltaIds, "doc_id",
-          graft.sources.IoOps.localWordsDf(spark, bloomWords))
-      else deltaIds // legacy index without a bloom: arbitrate all
+      graft.sources.IoOps.readBloomWordsLocal(spark, s"$root/bloomidx")
+    // all-hashes-hit test against the packed words: one delta-sized
+    // explode + one broadcast join — nothing corpus-sized
+    val suspects = bloomSuspects(deltaIds, "doc_id",
+      graft.sources.IoOps.localWordsDf(spark, bloomWords))
     val dup =
       if (suspects.limit(1).isEmpty) Array.empty[org.apache.spark.sql.Row]
       else {
         // exact arbitration pruned to the SUSPECTS' own `docbucket=`
-        // partitions when the layout carries them (the ANN side's
-        // list-pruned discipline) — suspect-bounded work, never the
-        // corpus-sized doclens scan the pre-round-18 path paid
-        val lens =
-          if (nDocBuckets > 0) {
-            val bkts = suspects
-              .select(docBucket(col("doc_id"), nDocBuckets)
-                .cast("long").as("b"))
-              .distinct().collect().map(_.getLong(0)).toSet
-            val files =
-              if (versioned)
-                graft.sources.IndexCommits.filesOfParts(snap, "doclens",
-                  bkts)
-              else {
-                val fs = bloomFs
-                bkts.toSeq.map(b => s"$root/doclens/docbucket=$b")
-                  .filter(p =>
-                    fs.exists(new org.apache.hadoop.fs.Path(p)))
-              }
-            if (files.isEmpty) None
-            else Some(spark.read.option("basePath", s"$root/doclens")
-              .parquet(files: _*))
-          } else Some(spark.read.parquet(s"$root/doclens"))
-        lens match {
-          case None => Array.empty[org.apache.spark.sql.Row]
-          case Some(l) => l.select(col("doc_id"))
-            .join(broadcast(suspects), Seq("doc_id"), "left_semi")
-            .limit(1).collect()
-        }
+        // partitions (the ANN side's list-pruned discipline) —
+        // suspect-bounded work, never a corpus-sized doclens scan
+        val bkts = suspects
+          .select(docBucket(col("doc_id"), nDocBuckets)
+            .cast("long").as("b"))
+          .distinct().collect().map(_.getLong(0)).toSet
+        val files = IC.filesOfParts(snap, "doclens", bkts)
+        if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else spark.read.option("basePath", s"$root/doclens")
+          .parquet(files: _*).select(col("doc_id"))
+          .join(broadcast(suspects), Seq("doc_id"), "left_semi")
+          .limit(1).collect()
       }
     require(dup.isEmpty,
       s"invertedIndexAppend: doc_id ${dup.headOption.map(_.get(0))
         .getOrElse("")} is already indexed — appends must carry NEW " +
         "documents only (use invertedIndexDelete + compact, or rebuild)")
-    val beforePost =
-      if (versioned) listPostings(spark, root).map(_.file).toSet
-      else Set.empty[String]
-    val beforeLens =
-      if (versioned) listDoclens(spark, root).map(_.file).toSet
-      else Set.empty[String]
-    // two tokenize passes by measurement — see invertedIndexWrite's
-    // rejection note (the fused single-tokenize build measured slower
-    // at every scale this sandbox can drive)
-    df.select(col(idCol).as("doc_id"),
-        size(words(col(textCol))).as("dl"),
-        explode(words(col(textCol))).as("term"))
-      .where(length(col("term")) > 0)
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("int").as("tf"),
-        max(col("dl")).as("dl"))
-      .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
-      .repartition(col("bucket")) // one new file per touched bucket
-      .write.mode("append").option("compression", "zstd")
-      .partitionBy("bucket").parquet(s"$root/postings")
-    // the delta census rides the doclens write as observed metrics —
-    // no separate tokenizing pass over the delta
-    val obs = new org.apache.spark.sql.Observation()
-    val lensDelta = df.select(col(idCol).as("doc_id"),
-        size(words(col(textCol))).as("dl"))
-      .observe(obs, bmCensusExprs.head, bmCensusExprs.tail: _*)
-    if (nDocBuckets > 0)
-      lensDelta
+    IC.commitWritten(spark, root, snap, listBmData(spark, root)) {
+      // two tokenize passes by measurement — see invertedIndexWrite's
+      // rejection note (the fused single-tokenize build measured slower
+      // at sf0.1 and at the 100x rehearsal)
+      df.select(col(idCol).as("doc_id"),
+          size(words(col(textCol))).as("dl"),
+          explode(words(col(textCol))).as("term"))
+        .where(length(col("term")) > 0)
+        .groupBy("doc_id", "term")
+        .agg(count(lit(1)).cast("int").as("tf"),
+          max(col("dl")).as("dl"))
+        .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
+        .repartition(col("bucket")) // one new file per touched bucket
+        .write.mode("append").option("compression", "zstd")
+        .partitionBy("bucket").parquet(s"$root/postings")
+      // the delta census rides the doclens write as observed metrics —
+      // no separate tokenizing pass over the delta
+      val obs = new org.apache.spark.sql.Observation()
+      df.select(col(idCol).as("doc_id"),
+          size(words(col(textCol))).as("dl"))
+        .observe(obs, bmCensusExprs.head, bmCensusExprs.tail: _*)
         .withColumn("docbucket", docBucket(col("doc_id"), nDocBuckets))
         .repartition(col("docbucket"))
         .write.mode("append").option("compression", "zstd")
         .partitionBy("docbucket").parquet(s"$root/doclens")
-    else
-      lensDelta.write.mode("append").option("compression", "zstd")
-        .parquet(s"$root/doclens")
-    val (dn, ds, dc) = bmCensusOf(obs)
-    writeBmMeta(spark, root, oldMeta.getLong("n_docs") + dn,
-      oldMeta.getLong("sum_dl") + ds, nBuckets,
-      (oldMeta.getLong("doc_checksum") + dc) % DocCensusMod,
-      nDocBuckets)
-    // fold the delta into the dup-guard bloom (bit_or merge is
-    // commutative/idempotent; bounded at bits/64 rows either way).
-    // ONLY when the bloom already existed: folding a delta-only bloom
-    // onto a legacy (bloom-less) index would wrongly clear every
-    // pre-bloom doc_id as "provably new" on the NEXT append — legacy
-    // indexes stay bloom-less, exactly as the ANN side does. The merge
-    // is a driver OR over the already-read base words.
-    if (hasBloom) {
+      val (dn, ds, dc) = bmCensusOf(obs)
+      writeBmMeta(spark, root, oldMeta.getLong("n_docs") + dn,
+        oldMeta.getLong("sum_dl") + ds, nBuckets,
+        (oldMeta.getLong("doc_checksum") + dc) % DocCensusMod,
+        nDocBuckets)
+      // fold the delta into the dup-guard bloom (bit_or merge is
+      // commutative/idempotent; bounded at bits/64 rows either way) —
+      // a driver OR over the already-read base words
       val deltaWords = dupBloomWords(deltaIds, "doc_id")
         .select(col("widx").cast("long"), col("word").cast("long"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
       graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
         graft.sources.IoOps.mergeBloomWords(bloomWords, deltaWords))
-    }
-    if (versioned) {
-      // pointer swap: the appended postings/doclens files become
-      // visible atomically; a crash before this line leaves invisible
-      // orphans for the next maintenance vacuum, never a half-append
-      val added =
-        listPostings(spark, root).filterNot(e => beforePost(e.file)) ++
-          listDoclens(spark, root).filterNot(e => beforeLens(e.file))
-      graft.sources.IndexCommits.commit(spark, root, snap ++ added)
     }
   }
 
@@ -1967,24 +1909,16 @@ object TextOps {
   def invertedIndexDelete(doomed: DataFrame, idCol: String,
                           root: String): Unit = {
     val spark = doomed.sparkSession
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val versioned = snap.nonEmpty
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
     val old = readBmMeta(spark, root)
-    val nDocBuckets =
-      if (old.has("n_docbuckets")) old.getInt("n_docbuckets")
-      else 0
+    val nDocBuckets = old.getInt("n_docbuckets")
     // Idempotence: a re-deleted doc_id must not subtract the census
     // twice (that would permanently corrupt the n_docs/sum_dl/checksum
     // feeding idf/avgdl in every subsequent indexed search and the
     // staleness gate). Anti-join the incoming ids against the existing
     // sidecar — sidecar-sized broadcast, never corpus-sized.
-    val delFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "deletes")
-      else {
-        val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Seq(s"$root/deletes") else Seq.empty
-      }
+    val delFiles = IC.filesOf(snap, "deletes")
     val batch = doomed.select(col(idCol).as("doc_id")).distinct()
     val ids =
       if (delFiles.isEmpty) batch
@@ -1994,45 +1928,28 @@ object TextOps {
     if (ids.limit(1).isEmpty) return // every id already recorded
     // census from the STORED doclens of the doomed ids (inner join:
     // never-indexed ids are ignored, not subtracted) — read pruned to
-    // the doomed ids' `docbucket=` partitions when the layout has them
-    val lensFiles =
-      if (nDocBuckets > 0) {
-        val bkts = ids.select(docBucket(col("doc_id"), nDocBuckets)
-            .cast("long").as("b"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        if (versioned)
-          graft.sources.IndexCommits.filesOfParts(snap, "doclens", bkts)
-        else {
-          val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          bkts.toSeq.map(b => s"$root/doclens/docbucket=$b")
-            .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-        }
-      } else Seq(s"$root/doclens")
+    // the doomed ids' `docbucket=` partitions
+    val bkts = ids.select(docBucket(col("doc_id"), nDocBuckets)
+        .cast("long").as("b"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    val lensFiles = IC.filesOfParts(snap, "doclens", bkts)
     val m =
       (if (lensFiles.isEmpty) // nothing indexed in those buckets
          ids.select(col("doc_id"), lit(0).as("dl")).where(lit(false))
-       else if (nDocBuckets > 0)
-         spark.read.option("basePath", s"$root/doclens")
-           .parquet(lensFiles: _*)
-       else spark.read.parquet(lensFiles: _*))
+       else spark.read.option("basePath", s"$root/doclens")
+         .parquet(lensFiles: _*))
         .join(broadcast(ids), Seq("doc_id"))
         .agg(count(lit(1)).cast("long").as("n"),
           coalesce(sum(col("dl").cast("long")), lit(0L)).as("s"),
           docChecksumAgg(col("doc_id")).as("c")).head()
-    val before =
-      if (versioned) listBmDeletes(spark, root).map(_.file).toSet
-      else Set.empty[String]
-    ids.write.mode("append").parquet(s"$root/deletes")
-    writeBmMeta(spark, root, old.getLong("n_docs") - m.getLong(0),
-      old.getLong("sum_dl") - m.getLong(1), old.getInt("n_buckets"),
-      java.lang.Math.floorMod(
-        old.getLong("doc_checksum") - m.getLong(2), DocCensusMod),
-      nDocBuckets)
-    if (versioned) {
-      val added =
-        listBmDeletes(spark, root).filterNot(e => before(e.file))
-      graft.sources.IndexCommits.commit(spark, root, snap ++ added)
+    IC.commitWritten(spark, root, snap,
+        IC.listKind(spark, root, "deletes")) {
+      ids.write.mode("append").parquet(s"$root/deletes")
+      writeBmMeta(spark, root, old.getLong("n_docs") - m.getLong(0),
+        old.getLong("sum_dl") - m.getLong(1), old.getInt("n_buckets"),
+        java.lang.Math.floorMod(
+          old.getLong("doc_checksum") - m.getLong(2), DocCensusMod),
+        nDocBuckets)
     }
   }
 
@@ -2045,12 +1962,35 @@ object TextOps {
   def invertedIndexIsStale(corpus: DataFrame, idCol: String,
                            root: String): Boolean = {
     val meta = readBmMeta(corpus.sparkSession, root)
-    // a pre-checksum legacy index cannot prove freshness: always stale
-    if (!meta.has("doc_checksum")) return true
     val live = corpus.agg(count(lit(1)).cast("long").as("n"),
       docChecksumAgg(col(idCol)).as("c")).head()
     meta.getLong("n_docs") != live.getLong(0) ||
       meta.getLong("doc_checksum") != live.getLong(1)
+  }
+
+  /** One-call self-maintenance for a persisted inverted index — the
+    * policy layer over [[invertedIndexCompact]], the sparse twin of
+    * SimilarityOps.indexMaintain: COMPACT once recorded deletes reach
+    * `compactDeletedFraction` of the pre-delete corpus (merge-on-read
+    * serving is row-identical at any fraction, but every search pays
+    * the anti-join and the doomed postings' scan volume — and doc
+    * deletes are non-local in a term-partitioned store, so the rewrite
+    * is worth batching until material). Below the threshold this is a
+    * cheap no-op (one snapshot read + one sidecar count), safe on
+    * every maintenance tick. Returns whether a compact ran.
+    */
+  def invertedIndexMaintain(spark: org.apache.spark.sql.SparkSession,
+                            root: String,
+                            compactDeletedFraction: Double = 0.1)
+    : Boolean = {
+    val IC = graft.sources.IndexCommits
+    val delRows = IC.pendingDeletes(spark, IC.readEntries(spark, root))
+    val doCompact = delRows > 0 && {
+      val live = readBmMeta(spark, root).getLong("n_docs")
+      delRows.toDouble / (live + delRows) >= compactDeletedFraction
+    }
+    if (doCompact) invertedIndexCompact(spark, root)
+    doCompact
   }
 
   /** Compact the inverted index's delete sidecar: physically drop the
@@ -2068,113 +2008,25 @@ object TextOps {
     * to the pre-compact merge-on-read (the `bm25_index_compact` gate
     * shares `bm25_index_delete`'s oracle).
     */
-  /** One-call self-maintenance for a persisted inverted index — the
-    * policy layer over [[invertedIndexCompact]], the sparse twin of
-    * SimilarityOps.indexMaintain: COMPACT once recorded deletes reach
-    * `compactDeletedFraction` of the pre-delete corpus (merge-on-read
-    * serving is row-identical at any fraction, but every search pays
-    * the anti-join and the doomed postings' scan volume — and doc
-    * deletes are non-local in a term-partitioned store, so the rewrite
-    * is worth batching until material). Below the threshold this is a
-    * cheap no-op (one snapshot read + one sidecar count), safe on
-    * every maintenance tick. Returns whether a compact ran.
-    */
-  def invertedIndexMaintain(spark: org.apache.spark.sql.SparkSession,
-                            root: String,
-                            compactDeletedFraction: Double = 0.1)
-    : Boolean = {
-    val IC = graft.sources.IndexCommits
-    val snap = IC.readEntries(spark, root)
-    val delFiles =
-      if (snap.nonEmpty) IC.filesOf(snap, "deletes")
-      else {
-        val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Seq(s"$root/deletes") else Seq.empty
-      }
-    val delRows =
-      if (delFiles.isEmpty) 0L
-      else graft.sources.TinyParquet.rowCount(
-        spark.sparkContext.hadoopConfiguration, delFiles)
-    val doCompact = delRows > 0 && {
-      val live = readBmMeta(spark, root).getLong("n_docs")
-      delRows.toDouble / (live + delRows) >= compactDeletedFraction
-    }
-    if (doCompact) invertedIndexCompact(spark, root)
-    doCompact
-  }
-
   def invertedIndexCompact(spark: org.apache.spark.sql.SparkSession,
                            root: String): Unit = {
-    if (graft.sources.IndexCommits.enabled(spark, root)) {
-      // crash-safe protocol (the ANN side's, applied to the term-
-      // partitioned store): heal debris, stage survivors as NEW files,
-      // swap the pointer, retire replaced files + sidecar. A crash at
-      // any point leaves the current snapshot serving the same
-      // merge-on-read results it served before compact started.
-      graft.sources.IndexCommits.vacuumConf(spark, root, BmSubs)
-      prepareInvertedCompact(spark, root).foreach { next =>
-        graft.sources.IndexCommits.commit(spark, root, next)
-        // rebuild the dup-guard bloom over the SURVIVORS, strictly
-        // AFTER the pointer swap (compact is the moment a deleted
-        // doc_id becomes legally re-appendable; a crash between swap
-        // and rebuild leaves the bloom over-approximate — the safe
-        // direction, since suspects arbitrate exactly)
-        val lensFiles =
-          graft.sources.IndexCommits.filesOf(next, "doclens")
-        val survivors =
-          if (lensFiles.isEmpty)
-            spark.read.parquet(s"$root/doclens").where(lit(false))
-          else spark.read.option("basePath", s"$root/doclens")
-            .parquet(lensFiles: _*)
-        graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-          dupBloomWords(survivors.select("doc_id"), "doc_id"))
-        graft.sources.IndexCommits.vacuumConf(spark, root, BmSubs)
-      }
-      return
-    }
-    // legacy (pre-commit-protocol) store: delete-then-rename swap,
-    // with its documented lost-partition crash window
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val delPath = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    val fs = delPath.getFileSystem(hconf)
-    if (!fs.exists(delPath)) return // nothing accrued: no-op
-    val ids = spark.read.parquet(s"$root/deletes")
-      .select("doc_id").distinct()
-    val touched: Array[Long] = spark.read.parquet(s"$root/postings")
-      .join(broadcast(ids), Seq("doc_id"))
-      .select(col("bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val tmp = s"$root/.compact"
-      spark.read.parquet(s"$root/postings")
-        .where(col("bucket").isin(touched: _*))
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .repartition(col("bucket")) // one file per rewritten bucket
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("bucket").parquet(tmp)
-      touched.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$root/postings/bucket=$b"), true)
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/bucket=$b")
-        if (fs.exists(src))
-          fs.rename(src,
-            new org.apache.hadoop.fs.Path(s"$root/postings/bucket=$b"))
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-    val lens = spark.read.parquet(s"$root/doclens")
-      .join(broadcast(ids), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // break lineage: overwrite its own input
-    lens.write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$root/doclens")
-    // rebuild the dup-guard bloom over the SURVIVORS (a bloom cannot
-    // unset bits, and compact is the moment a deleted doc_id becomes
-    // legally re-appendable) — bounded by the doclens column scan this
-    // op already pays
-    graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-      dupBloomWords(lens, "doc_id"))
-    fs.delete(delPath, true)
+    val IC = graft.sources.IndexCommits
+    // the ANN side's crash-safe protocol, applied to the term-
+    // partitioned store; the dup-guard bloom is rebuilt over the
+    // SURVIVORS strictly AFTER the pointer swap (compact is the moment
+    // a deleted doc_id becomes legally re-appendable; a crash between
+    // swap and rebuild leaves the bloom over-approximate — the safe
+    // direction, since suspects arbitrate exactly)
+    IC.maintain(spark, root, BmSubs, afterCommit = next => {
+      val lensFiles = IC.filesOf(next, "doclens")
+      val survivors =
+        if (lensFiles.isEmpty)
+          spark.read.parquet(s"$root/doclens").where(lit(false))
+        else spark.read.option("basePath", s"$root/doclens")
+          .parquet(lensFiles: _*)
+      graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
+        dupBloomWords(survivors.select("doc_id"), "doc_id"))
+    })(prepareInvertedCompact(spark, root))
   }
 
   /** Stage an inverted-index compaction WITHOUT committing it: write
@@ -2197,43 +2049,17 @@ object TextOps {
     val snap = IC.readEntries(spark, root)
     val delFiles = IC.filesOf(snap, "deletes")
     if (delFiles.isEmpty) return None // nothing accrued: no-op
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = spark.read.parquet(delFiles: _*)
       .select("doc_id").distinct()
-    val tmp = s"$root/.compact"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // stale stage
-    var entries = snap.filterNot(_.kind == "deletes")
-    // stage survivors of `kind` partitions touched by the doomed rows:
-    // one column-pruned discovery of the touched partition ids, one
-    // pruned scan + broadcast anti-join, files moved under job-unique
-    // names — the shared surgical-rewrite shape of both tables
-    def stageSurvivors(kind: String, partKey: String,
-                       touched: Set[Long]): Unit = {
-      if (touched.isEmpty) return
-      val files = IC.filesOfParts(snap, kind, touched)
-      if (files.nonEmpty)
-        spark.read.option("basePath", s"$root/$kind")
-          .parquet(files: _*)
-          .join(broadcast(ids), Seq("doc_id"), "left_anti")
-          .repartition(col(partKey)) // one file per rewritten part
-          .write.mode("overwrite").option("compression", "zstd")
-          .partitionBy(partKey).parquet(s"$tmp/$kind")
-      val staged = IC.listDataFiles(spark, root, kind,
-        s".compact/$kind", Some(partKey))
-      val moved = staged.map { e =>
-        val dstDir = new org.apache.hadoop.fs.Path(
-          s"$root/$kind/$partKey=${e.partId.get}")
-        if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
-        val dst = new org.apache.hadoop.fs.Path(dstDir,
-          new org.apache.hadoop.fs.Path(e.file).getName)
-        require(fs.rename(new org.apache.hadoop.fs.Path(e.file), dst),
-          s"invertedIndexCompact: staging move failed for ${e.file}")
-        e.copy(file = dst.toUri.getPath)
-      }
-      entries = entries.filterNot(e =>
-        e.kind == kind && e.partId.exists(touched.contains)) ++ moved
-    }
+    // both tables' surgical rewrite: one pruned scan of the touched
+    // parts + broadcast anti-join, staged and moved (IndexCommits)
+    def rewrite(entries: Seq[graft.sources.IndexCommits.Entry],
+                kind: String, partKey: String, touched: Set[Long]) =
+      IC.rewriteParts(spark, root, entries, kind, partKey, touched,
+          Map("compression" -> "zstd"))(
+        _.join(broadcast(ids), Seq("doc_id"), "left_anti"))
+    // doc deletes are non-local in the term-partitioned postings: one
+    // column-pruned (doc_id, bucket) discovery of the touched buckets
     val postFiles = IC.filesOf(snap, "postings")
     val touchedBuckets: Set[Long] =
       if (postFiles.isEmpty) Set.empty
@@ -2242,7 +2068,8 @@ object TextOps {
         .join(broadcast(ids), Seq("doc_id"))
         .select(col("bucket").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
-    stageSurvivors("postings", "bucket", touchedBuckets)
+    val staged = rewrite(snap.filterNot(_.kind == "deletes"),
+      "postings", "bucket", touchedBuckets)
     // doclens deletes ARE local (keyed and partitioned by doc_id
     // hash): only the doomed ids' docbuckets rewrite
     val nDocBuckets = readBmMeta(spark, root).getInt("n_docbuckets")
@@ -2250,9 +2077,38 @@ object TextOps {
       .select(docBucket(col("doc_id"), nDocBuckets)
         .cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
-    stageSurvivors("doclens", "docbucket", touchedLens)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    Some(entries)
+    Some(rewrite(staged, "doclens", "docbucket", touchedLens))
+  }
+
+  /** The probed postings read both indexed searches serve from,
+    * planned from the snapshot `snap` (the probed buckets' files come
+    * from the current commit — staged/orphaned files from an
+    * interrupted maintenance op are invisible by construction), with
+    * the merge-on-read delete sidecar applied whenever one exists.
+    */
+  private def servePostings(spark: org.apache.spark.sql.SparkSession,
+                            root: String,
+                            snap: Seq[graft.sources.IndexCommits.Entry],
+                            buckets: Seq[Long],
+                            terms: Seq[String]): DataFrame = {
+    val IC = graft.sources.IndexCommits
+    val files = IC.filesOfParts(snap, "postings", buckets.toSet)
+    val base =
+      if (files.isEmpty)
+        spark.read.parquet(s"$root/postings").where(lit(false))
+      else spark.read.option("basePath", s"$root/postings")
+        .parquet(files: _*)
+    val probed = base.where(col("bucket").isin(buckets: _*) &&
+      col("term").isin(terms: _*))
+    val delFiles = IC.filesOf(snap, "deletes")
+    // merge-on-read: drop doomed docs BEFORE the df aggregate — idf
+    // then reflects the surviving corpus exactly (the delete list is
+    // small and broadcasts)
+    if (delFiles.nonEmpty)
+      probed.join(
+        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
+        Seq("doc_id"), "left_anti")
+    else probed
   }
 
   /** BM25 top-k served from a PERSISTED inverted index — results
@@ -2267,63 +2123,17 @@ object TextOps {
     * serving path touches NOTHING corpus-sized — cost is probed
     * posting volume alone.
     */
-  /** The probed postings read both indexed searches serve from:
-    * snapshot-planned when the store is commit-versioned (the probed
-    * buckets' files come from the current commit — staged/orphaned
-    * files from an interrupted maintenance op are invisible by
-    * construction), directory-planned with partition pruning on
-    * legacy stores. Handles the two legacy-format fallbacks: postings
-    * that predate the norm-inlined layout join doclens for dl, and
-    * the merge-on-read delete sidecar applies whenever one exists.
-    */
-  private def servePostings(spark: org.apache.spark.sql.SparkSession,
-                            root: String, buckets: Seq[Long],
-                            terms: Seq[String]): DataFrame = {
-    val IC = graft.sources.IndexCommits
-    val snap = IC.readEntries(spark, root)
-    val versioned = snap.nonEmpty
-    val base =
-      if (versioned) {
-        val files = IC.filesOfParts(snap, "postings", buckets.toSet)
-        if (files.isEmpty)
-          spark.read.parquet(s"$root/postings").where(lit(false))
-        else spark.read.option("basePath", s"$root/postings")
-          .parquet(files: _*)
-      } else spark.read.parquet(s"$root/postings")
-    val probed = base.where(col("bucket").isin(buckets: _*) &&
-      col("term").isin(terms: _*))
-    val withDl =
-      if (probed.columns.contains("dl")) probed
-      else probed.join( // pre-norm-inline legacy store: dl via doclens
-        spark.read.parquet(s"$root/doclens").select("doc_id", "dl"),
-        Seq("doc_id"))
-    val delFiles =
-      if (versioned) IC.filesOf(snap, "deletes")
-      else {
-        val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Seq(s"$root/deletes") else Seq.empty
-      }
-    // merge-on-read: drop doomed docs BEFORE the df aggregate — idf
-    // then reflects the surviving corpus exactly (the delete list is
-    // small and broadcasts)
-    if (delFiles.nonEmpty)
-      withDl.join(
-        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    else withDl
-  }
-
   def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
                         root: String, terms: Seq[String], k: Int,
                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val snap = graft.sources.IndexCommits.readEntries(spark, root)
     val meta = readBmMeta(spark, root)
     val nDocs = meta.getLong("n_docs").toDouble
     val avgdl = meta.getLong("sum_dl").toDouble / nDocs
     val nBuckets = meta.getInt("n_buckets")
     val buckets = terms.map(t =>
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
-    val post = servePostings(spark, root, buckets, terms)
+    val post = servePostings(spark, root, snap, buckets, terms)
     // per-term document frequency: |terms|-bounded collect
     val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2370,6 +2180,7 @@ object TextOps {
                              queries: Seq[(Long, Seq[String])], k: Int,
                              k1: Double = 1.2, b: Double = 0.75)
     : DataFrame = {
+    val snap = graft.sources.IndexCommits.readEntries(spark, root)
     val meta = readBmMeta(spark, root)
     val nDocs = meta.getLong("n_docs").toDouble
     val avgdl = meta.getLong("sum_dl").toDouble / nDocs
@@ -2377,7 +2188,7 @@ object TextOps {
     val unionTerms = queries.flatMap(_._2).distinct
     val buckets = unionTerms.map(t =>
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
-    val post = servePostings(spark, root, buckets, unionTerms)
+    val post = servePostings(spark, root, snap, buckets, unionTerms)
     val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val pivots = unionTerms.zipWithIndex.map { case (t, i) =>

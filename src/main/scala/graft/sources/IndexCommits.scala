@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Versioned commit protocol for the persisted retrieval indexes —
   * the same snapshot-pointer discipline the lakehouse ops already
@@ -30,12 +31,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      next vacuum (run at the head of every maintenance op) heals
   *      the debris.
   *
-  * Compared at 100 TB to the pre-round-18 bare-filesystem swaps
-  * (delete-dir-then-rename in compact, append-then-delete-log in
-  * flush), this closes the lost-partition / duplicated-log crash
-  * windows, and REPLACES per-partition existence probes at serve time
-  * with one bounded snapshot read (#files rows — the same
-  * manifest-sized planning collect every lakehouse reader does).
+  * The snapshot is the ONLY store layout: a root without a committed
+  * version fails by name ([[readEntries]]) and must be rebuilt. The
+  * protocol steps both stores share live here — [[commitWritten]]
+  * (append / delete), [[maintain]] (flush / compact), [[rewriteParts]]
+  * (compaction staging), [[pendingDeletes]] (maintain policies) — and
+  * the operator files keep training, encoding, scoring and their own
+  * thresholds. One bounded snapshot read (#files rows — the same
+  * manifest-sized planning collect every lakehouse reader does)
+  * replaces per-partition existence probes at serve time.
   *
   * Single-writer by design (one maintenance job per index store, the
   * standard lakehouse assumption); readers are never blocked. The
@@ -74,30 +78,28 @@ object IndexCommits {
   def currentVersion(spark: SparkSession, root: String): Option[Long] =
     versions(hfs(spark, root), root).lastOption
 
-  /** Is this store commit-versioned? Legacy stores (no commits dir)
-    * keep their original directory-planned behavior end to end.
-    */
-  def enabled(spark: SparkSession, root: String): Boolean =
-    currentVersion(spark, root).isDefined
-
   /** The current snapshot's entries — a #files-bounded driver list,
     * the planning collect of every read AND the base every mutation
-    * derives its next snapshot from. Empty when no commit exists.
+    * derives its next snapshot from. The snapshot is the only store
+    * layout: every store entry point reads it first, and a root with
+    * no committed version fails here, by name, before any other step.
     */
-  def readEntries(spark: SparkSession, root: String): Seq[Entry] =
-    currentVersion(spark, root) match {
-      case None => Seq.empty
-      case Some(v) =>
-        // snapshot files are kilobyte-bounded (#files rows): read them
-        // on the driver — no Spark job for the planning collect every
-        // read and mutation pays (round-18 opt: the lifecycle gates
-        // spent most of their wall on exactly these tiny jobs)
-        TinyParquet.read(spark.sparkContext.hadoopConfiguration,
-            s"$root/commits/v=$v")
-          .map(r => Entry(r.getString("kind"),
-            if (r.isNullAt("part_id")) None else Some(r.getLong("part_id")),
-            r.getString("file")))
-    }
+  def readEntries(spark: SparkSession, root: String): Seq[Entry] = {
+    val v = currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(
+        s"no committed snapshot under $root/commits — not an index " +
+          "store, or one without a commit snapshot: rebuild it with " +
+          "indexWrite / invertedIndexWrite"))
+    // snapshot files are kilobyte-bounded (#files rows): read them on
+    // the driver — no Spark job for the planning collect every read
+    // and mutation pays (round-18 opt: the lifecycle gates spent most
+    // of their wall on exactly these tiny jobs)
+    TinyParquet.read(spark.sparkContext.hadoopConfiguration,
+        s"$root/commits/v=$v")
+      .map(r => Entry(r.getString("kind"),
+        if (r.isNullAt("part_id")) None else Some(r.getLong("part_id")),
+        r.getString("file")))
+  }
 
   /** Commit the next snapshot: ONE atomic rename makes it current.
     * Returns the committed version. The staging dir name is unique per
@@ -135,16 +137,39 @@ object IndexCommits {
     entries.filter(e => e.kind == kind &&
       e.partId.exists(parts.contains)).map(_.file)
 
-  def partIdsOf(entries: Seq[Entry], kind: String): Set[Long] =
-    entries.filter(_.kind == kind).flatMap(_.partId).toSet
+  /** Data files of `kind` under root/<kind>, partId parsed from its
+    * `partKey=value` dirs — the listing a mutation diffs around its
+    * write ([[written]]).
+    */
+  private[graft] def listKind(spark: SparkSession, root: String,
+                               kind: String,
+                               partKey: Option[String] = None)
+    : Seq[Entry] =
+    listDataFiles(spark, root, kind, kind, partKey)
+
+  /** Data files of ONLY the given `partKey=` partitions of
+    * root/<kind> — the bounded write-discovery listing. A mutation can
+    * only add files under the parts its rows route to, so diffing
+    * THESE dirs around the write replaces the full-tree walk (which at
+    * K=1600 cost more than the write itself — r18 rehearsal: direct
+    * append 19 s -> 34 s, flush 18 s -> 35 s from two tree walks each)
+    * while still excluding any pre-existing crash debris from the diff.
+    */
+  private[graft] def listParts(spark: SparkSession, root: String,
+                                kind: String, partKey: String,
+                                parts: Seq[Long]): Seq[Entry] =
+    parts.flatMap(p =>
+      listDataFiles(spark, root, kind, s"$kind/$partKey=$p", None)
+        .map(_.copy(partId = Some(p))))
 
   /** Recursively list the DATA files (part-*) under root/<sub>,
     * parsing partId from a `partKey=value` path segment when given.
     * Used to discover what a write just produced (diffed against a
     * before-listing) and to snapshot a fresh build.
     */
-  def listDataFiles(spark: SparkSession, root: String, kind: String,
-                    sub: String, partKey: Option[String]): Seq[Entry] = {
+  private def listDataFiles(spark: SparkSession, root: String,
+                            kind: String, sub: String,
+                            partKey: Option[String]): Seq[Entry] = {
     val fs = hfs(spark, root)
     val dir = new Path(s"$root/$sub")
     if (!fs.exists(dir)) return Seq.empty
@@ -164,6 +189,104 @@ object IndexCommits {
         else Seq.empty
       }
     walk(dir, None)
+  }
+
+  /** The files `write` adds to `listing`: list before, write, list
+    * after, diff. `listing` must cover where the write lands and
+    * nothing that changes meanwhile, so pre-existing debris stays out.
+    */
+  private[graft] def written(listing: => Seq[Entry])(write: => Unit)
+    : Seq[Entry] = {
+    val before = listing.map(_.file).toSet
+    write
+    listing.filterNot(e => before(e.file))
+  }
+
+  /** The append/delete mutation: `write` lands NEW files (and updates
+    * the store's sidecars), then ONE pointer swap commits `snap` plus
+    * what the write added to `listing`. A crash before the swap leaves
+    * invisible orphans for the next maintenance vacuum, never a
+    * half-applied mutation. Returns the committed entries.
+    */
+  private[graft] def commitWritten(spark: SparkSession, root: String,
+                                    snap: Seq[Entry],
+                                    listing: => Seq[Entry])
+                                   (write: => Unit): Seq[Entry] = {
+    val next = snap ++ written(listing)(write)
+    commit(spark, root, next)
+    next
+  }
+
+  /** The maintenance wrapper (flush, compact): heal any debris a
+    * crashed op left ([[vacuumConf]]), stage the change as NEW files
+    * (`prepare` returns the snapshot that would serve them, None for a
+    * no-op), swap the pointer, run `afterCommit` on the committed
+    * entries, and retire what the new snapshot replaced. A crash at
+    * any point leaves the current snapshot serving the results it
+    * served before the op started.
+    */
+  private[graft] def maintain(spark: SparkSession, root: String,
+                               subs: Seq[String],
+                               afterCommit: Seq[Entry] => Unit = _ => ())
+                              (prepare: => Option[Seq[Entry]]): Unit = {
+    vacuumConf(spark, root, subs)
+    prepare.foreach { next =>
+      commit(spark, root, next)
+      afterCommit(next)
+      vacuumConf(spark, root, subs)
+    }
+  }
+
+  /** Surgical partition rewrite, the staging half of both stores'
+    * compaction: read ONLY the live files of `kind`'s `touched` parts,
+    * let `keep` drop the doomed rows, write the survivors under
+    * root/.compact/<kind> (one file per part) and move them into the
+    * live `partKey=value` dirs under their job-unique names — nothing
+    * referenced is overwritten. Returns `entries` with the touched
+    * parts' files replaced by the moved ones; a part whose every row
+    * was dropped gets no file and leaves the snapshot. The moved files
+    * stay invisible to reads until the caller commits.
+    */
+  private[graft] def rewriteParts(spark: SparkSession, root: String,
+                                   entries: Seq[Entry], kind: String,
+                                   partKey: String, touched: Set[Long],
+                                   writeOptions: Map[String, String] =
+                                     Map.empty)
+                                  (keep: DataFrame => DataFrame)
+    : Seq[Entry] = {
+    if (touched.isEmpty) return entries
+    val fs = hfs(spark, root)
+    val stage = new Path(s"$root/.compact")
+    fs.delete(stage, true) // a crashed attempt's leftovers
+    val files = filesOfParts(entries, kind, touched)
+    if (files.nonEmpty)
+      keep(spark.read.option("basePath", s"$root/$kind").parquet(files: _*))
+        .repartition(col(partKey)) // one file per rewritten part
+        .write.mode("overwrite").options(writeOptions)
+        .partitionBy(partKey).parquet(s"$stage/$kind")
+    val moved = listDataFiles(spark, root, kind, s".compact/$kind",
+        Some(partKey)).map { e =>
+      val dstDir = new Path(s"$root/$kind/$partKey=${e.partId.get}")
+      if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
+      val dst = new Path(dstDir, new Path(e.file).getName)
+      require(fs.rename(new Path(e.file), dst),
+        s"compact: staging move failed for ${e.file} under $root")
+      e.copy(file = dst.toUri.getPath)
+    }
+    fs.delete(stage, true)
+    entries.filterNot(e =>
+      e.kind == kind && e.partId.exists(touched.contains)) ++ moved
+  }
+
+  /** Rows recorded in the snapshot's delete sidecar files, from their
+    * parquet footers (no job) — what both stores' maintain policies
+    * weigh against the live census.
+    */
+  private[graft] def pendingDeletes(spark: SparkSession,
+                                     snap: Seq[Entry]): Long = {
+    val files = filesOf(snap, "deletes")
+    if (files.isEmpty) 0L
+    else TinyParquet.rowCount(spark.sparkContext.hadoopConfiguration, files)
   }
 
   /** Garbage-collect every data file under the managed subdirectories

@@ -23,10 +23,9 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * the lakehouse discipline: MANIFEST work belongs on the
   * driver/metadata plane, cluster jobs are for data.
   *
-  * The on-disk format is UNCHANGED plain parquet (same column names,
-  * same physical types Spark wrote: int32/int64/double/binary-UTF8),
-  * so Spark reads — tests, tools, mixed old/new stores — keep working,
-  * and files this writes interleave freely with files Spark wrote.
+  * The on-disk format is plain parquet (same column names, same
+  * physical types Spark writes: int32/int64/double/binary-UTF8), so
+  * Spark reads of these files — tests, tools — keep working.
   */
 object TinyParquet {
   /** Field kinds: "int" (int32), "long" (int64), "double",
@@ -50,25 +49,38 @@ object TinyParquet {
   }
 
   /** Write `rows` as ONE parquet data file under `dir` (created if
-    * needed; prior part files replaced when `overwrite`). The file is
-    * named part-* so the index stores' data-file discovery and vacuum
-    * conventions apply unchanged.
+    * needed), superseding the part files already there. The file is
+    * named part-g<N>-<uuid>.parquet — N one above the newest
+    * generation in the dir, taken from the listing that finds the
+    * superseded files — so the part-* discovery and vacuum conventions
+    * apply unchanged and [[read]] can tell generations apart.
     *
     * Rename discipline (not delete-dir-then-write): the file is built
     * under a dot-prefixed temp name (invisible to the part-* read
     * filter), renamed into place fully formed, and only THEN are the
     * superseded part files removed — so a concurrent reader or a crash
     * mid-write can never observe a missing dir or a torn (footerless)
-    * parquet file, mirroring IndexCommits.commit's staging rename.
+    * parquet file, mirroring IndexCommits.commit's staging rename. A
+    * crash between the rename and those deletes leaves two generations
+    * on disk; [[read]] serves only the newest, and the next write
+    * removes the older.
     */
   def write(conf: Configuration, dir: String,
-            fields: Seq[(String, String)], rows: Seq[Seq[Any]],
-            overwrite: Boolean = true): Unit = {
+            fields: Seq[(String, String)], rows: Seq[Seq[Any]]): Unit = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
     fs.mkdirs(dirPath)
+    // superseded part files, plus any stale .tmp a crashed writer left
+    // (both invisible to readers once the rename lands)
+    val old = fs.listStatus(dirPath).toSeq.collect {
+      case st if !st.isDirectory &&
+          (st.getPath.getName.startsWith("part-") ||
+            (st.getPath.getName.startsWith(".part-") &&
+              st.getPath.getName.endsWith(".tmp"))) => st.getPath
+    }
+    val gen = old.map(p => generation(p.getName)).foldLeft(0L)(math.max) + 1
     val schema = schemaOf(fields)
-    val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
+    val name = s"part-g$gen-${java.util.UUID.randomUUID()}.parquet"
     val tmp = new Path(dirPath, s".$name.tmp")
     val writer = ExampleParquetWriter.builder(tmp)
       .withType(schema).withConf(conf).build()
@@ -86,25 +98,40 @@ object TinyParquet {
       }
       writer.write(g)
     } finally writer.close()
-    val old =
-      if (!overwrite) Array.empty[Path]
-      else fs.listStatus(dirPath).collect {
-        // superseded part files, plus any stale .tmp a crashed writer
-        // left (both invisible to readers once the rename lands)
-        case st if !st.isDirectory && st.getPath != tmp &&
-            (st.getPath.getName.startsWith("part-") ||
-              (st.getPath.getName.startsWith(".part-") &&
-                st.getPath.getName.endsWith(".tmp"))) => st.getPath
-      }
     require(fs.rename(tmp, new Path(dirPath, name)),
       s"TinyParquet: publish rename failed for $tmp")
     old.foreach(p => fs.delete(p, false))
   }
 
+  private val Stamped = "part-g(\\d+)-.*".r
+
+  /** The generation stamped in a part-file name by [[write]]; 0 for an
+    * unstamped part file (one Spark wrote).
+    */
+  private def generation(name: String): Long = name match {
+    case Stamped(g) => g.toLong
+    case _          => 0L
+  }
+
+  /** The non-empty part-* files a read serves under `p` (or `p` itself
+    * when it is a file), newest generation only: Spark-written dirs
+    * carry generation 0 throughout and are read whole.
+    */
+  private def liveParts(fs: FileSystem, p: Path): Seq[Path] =
+    if (!fs.getFileStatus(p).isDirectory) Seq(p)
+    else {
+      val parts = fs.listStatus(p).toSeq
+        .filter(st => !st.isDirectory &&
+          st.getPath.getName.startsWith("part-") && st.getLen > 0)
+        .map(_.getPath)
+      val newest = parts.map(f => generation(f.getName))
+        .foldLeft(0L)(math.max)
+      parts.filter(f => generation(f.getName) == newest)
+    }
+
   /** One row of a tiny sidecar, with Row-like typed getters. */
   final class TRow(idx: Map[String, Int], vals: Array[Any]) {
     def isNullAt(name: String): Boolean = vals(idx(name)) == null
-    def has(name: String): Boolean = idx.contains(name)
     def getInt(name: String): Int =
       vals(idx(name)).asInstanceOf[Number].intValue()
     def getLong(name: String): Long =
@@ -115,25 +142,17 @@ object TinyParquet {
       vals(idx(name)).asInstanceOf[String]
   }
 
-  /** Read every part-* data file under `dir` (or `dir` itself when it
-    * is a file). Column set is taken from the first file's schema;
-    * physical int32/int64/double/binary-UTF8/boolean map to
-    * Int/Long/Double/String/Boolean. Returns empty when the directory
-    * does not exist.
+  /** Read the newest generation of part-* data files under `dir` (or
+    * `dir` itself when it is a file). Column set is taken from the
+    * first file's schema; physical int32/int64/double/binary-UTF8/
+    * boolean map to Int/Long/Double/String/Boolean. Returns empty when
+    * the directory does not exist.
     */
   def read(conf: Configuration, dir: String): Seq[TRow] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Seq.empty
-    val files: Seq[Path] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(st => !st.isDirectory &&
-            st.getPath.getName.startsWith("part-") &&
-            st.getLen > 0)
-          .map(_.getPath)
-      else Seq(p)
-    files.flatMap(f => readFile(conf, f))
+    liveParts(fs, p).flatMap(f => readFile(conf, f))
   }
 
   /** Total row count of the given parquet files/dirs from FOOTER
@@ -145,21 +164,11 @@ object TinyParquet {
       val p = new Path(s)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) 0L
-      else {
-        val files: Seq[Path] =
-          if (fs.getFileStatus(p).isDirectory)
-            fs.listStatus(p).toSeq
-              .filter(st => !st.isDirectory &&
-                st.getPath.getName.startsWith("part-") && st.getLen > 0)
-              .map(_.getPath)
-          else Seq(p)
-        files.map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              f, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-      }
+      else liveParts(fs, p).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
     }.sum
 
   private def readFile(conf: Configuration, file: Path): Seq[TRow] = {

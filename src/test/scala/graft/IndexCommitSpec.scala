@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.sources.IndexCommits
+import graft.sources.{IndexCommits, TinyParquet}
 
 /** The round-18 crash-safety surface: both persisted index stores
   * (ANN — SimilarityOps, BM25 — TextOps) mutate through versioned
@@ -16,7 +16,11 @@ import graft.sources.IndexCommits
   *     on-disk data-file set equals the snapshot exactly;
   *   - commit history is bounded (one live version after vacuum, no
   *     half-written .tmp attempts survive);
-  *   - the LSM auto-flush sawtooth bounds the append log;
+  *   - the LSM auto-flush sawtooth bounds the append log, on the
+  *     buffered and the direct append path alike;
+  *   - the snapshot is the only store layout: a root without one fails
+  *     every entry point by name;
+  *   - a sidecar read serves only the newest TinyParquet generation;
   *   - BM25 append dup-arbitration reads ONLY the suspects'
   *     `docbucket=` doclens partitions (plan-captured) — the sparse
   *     twin of the ANN side's list-pruned arbitration.
@@ -189,6 +193,111 @@ class IndexCommitSpec extends SparkSpec {
     sink(vecs.select((col("vec_id") + 100L).as("vec_id"),
       col("embedding")), 2L)
     assert(logSegs() === 1)
+    // direct appends feed the same log, and the policy bounds it too
+    val direct2 = java.nio.file.Files.createTempDirectory("graft_icdf")
+      .toString + "/idx"
+    SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20),
+      "vec_id", "embedding", direct2, k = 2, iters = 2, m = 8, dsub = 8,
+      ksub = 4)
+    def directSegs(): Int = IndexCommits.filesOf(
+      IndexCommits.readEntries(spark, direct2), "applog").size
+    SimilarityOps.indexAppend(vecs.where(col("vec_id") >= 30),
+      "vec_id", "embedding", direct2, buffered = false,
+      autoFlushSegments = 2)
+    assert(directSegs() < 2)
+    SimilarityOps.indexAppend(
+      vecs.where(col("vec_id") >= 20 && col("vec_id") < 30),
+      "vec_id", "embedding", direct2, buffered = false,
+      autoFlushSegments = 2)
+    assert(directSegs() < 2) // threshold reached: folded inline
+    assert(SimilarityOps.indexSearch(queries, direct2,
+      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
+  }
+
+  test("a root with no commit snapshot fails every store entry point" +
+      " with an error naming the root, before any other step") {
+    val base = java.nio.file.Files.createTempDirectory("graft_icn")
+      .toString
+    val ann = s"$base/ann"
+    val bm = s"$base/bm"
+    val vecs = annVecs
+    SimilarityOps.indexWrite(vecs, "vec_id", "embedding", ann,
+      k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", bm,
+      nBuckets = 16)
+    // strip both stores down to their meta sidecar
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    Seq(ann, bm).foreach(r => new java.io.File(r).listFiles()
+      .filter(_.getName != "meta").foreach(rm))
+    def failsNamingRoot(root: String)(op: => Any): Unit = {
+      val e = intercept[Exception](op)
+      assert(!e.isInstanceOf[NullPointerException], e.toString)
+      val msg = String.valueOf(e.getMessage)
+      assert(msg.contains(root) && msg.contains("commit"), msg)
+    }
+    failsNamingRoot(ann)(SimilarityOps.indexAppend(vecs, "vec_id",
+      "embedding", ann))
+    failsNamingRoot(ann)(SimilarityOps.indexDelete(vecs, "vec_id", ann))
+    failsNamingRoot(ann)(SimilarityOps.indexFlush(spark, ann))
+    failsNamingRoot(ann)(SimilarityOps.indexMaintain(spark, ann))
+    failsNamingRoot(ann)(SimilarityOps.indexCompact(spark, ann))
+    failsNamingRoot(ann)(SimilarityOps.indexSearch(vecs, ann, "vec_id",
+      "embedding", k = 3, nProbe = 2))
+    failsNamingRoot(bm)(TextOps.invertedIndexAppend(bmCorpus, "doc_id",
+      "text", bm))
+    failsNamingRoot(bm)(TextOps.invertedIndexDelete(bmCorpus, "doc_id",
+      bm))
+    failsNamingRoot(bm)(TextOps.invertedIndexCompact(spark, bm))
+    failsNamingRoot(bm)(TextOps.invertedIndexMaintain(spark, bm))
+    failsNamingRoot(bm)(TextOps.bm25SearchIndexed(spark, bm,
+      Seq("spark"), k = 3))
+    failsNamingRoot(bm)(TextOps.bm25SearchIndexedBatch(spark, bm,
+      Seq(1L -> Seq("spark")), k = 3))
+  }
+
+  test("TinyParquet serves only the newest sidecar generation: an older" +
+      " part a crash left beside a newer one is never read") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val base = java.nio.file.Files.createTempDirectory("graft_ictp")
+    def parts(dir: String): Seq[java.nio.file.Path] =
+      new java.io.File(dir).listFiles().toSeq
+        .filter(_.getName.startsWith("part-")).map(_.toPath)
+    // plant: stash the current part, supersede it, put it back — the
+    // on-disk state a crash between publish rename and delete leaves
+    def withOlderPlanted(dir: String)(rewrite: => Unit): Unit = {
+      val older = parts(dir)
+      assert(older.size === 1)
+      val stash = base.resolve(older.head.getFileName)
+      java.nio.file.Files.copy(older.head, stash)
+      rewrite
+      java.nio.file.Files.copy(stash, older.head)
+      assert(parts(dir).size === 2)
+    }
+    val side = s"$base/side"
+    val fields = Seq("k" -> "long")
+    TinyParquet.write(hconf, side, fields, Seq(Seq(1L), Seq(2L)))
+    withOlderPlanted(side)(
+      TinyParquet.write(hconf, side, fields, Seq(Seq(3L))))
+    assert(TinyParquet.read(hconf, side).map(_.getLong("k")) === Seq(3L))
+    // the store's own sidecar: a superseded centroid table beside the
+    // current one must not double every centroid's dimensions
+    val root = s"$base/idx"
+    SimilarityOps.indexWrite(annVecs, "vec_id", "embedding", root,
+      k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    val shifted = SimilarityOps.readIndexCentroids(spark, root)
+      .map { case (cid, v) => (cid, v.map(_ + 1.0)) }
+    withOlderPlanted(s"$root/centroids")(
+      TinyParquet.write(hconf, s"$root/centroids",
+        Seq("cid" -> "long", "dim" -> "int", "value" -> "double"),
+        shifted.flatMap { case (cid, v) =>
+          v.toSeq.zipWithIndex.map { case (x, d) => Seq(cid, d, x) }
+        }))
+    val got = SimilarityOps.readIndexCentroids(spark, root)
+    assert(got.map(_._1) === shifted.map(_._1))
+    assert(got.map(_._2.toSeq) === shifted.map(_._2.toSeq))
   }
 
   test("maintenance policies are threshold-gated: below both" +
