@@ -29,7 +29,7 @@ import graft.operators.{SimilarityOps, TextOps}
   *         3 sparse queries, one pruned scan per leg)
   *
   * `sbt "runMain graft.IndexScaleBench"` -> one JSON line +
-  * BENCH_sf10_r18.json in the CWD. Run on a QUIET machine (the r14/r15
+  * BENCH_sf10_r19.json in the CWD. Run on a QUIET machine (the r14/r15
   * lesson: overlapping sbt builds inflate walls 2-4x).
   */
 object IndexScaleBench {

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.{IndexCommits => IC, IndexStore => IS}
 
 /** Similarity search over embedding columns (Array[Float]) — the
   * builder brief's ANN requirement: brute-force cosine top-k as the
@@ -591,83 +592,17 @@ object SimilarityOps {
   // Persisted ANN index lifecycle: train once, store, serve many.
   // ------------------------------------------------------------------
 
-  /** Packed vec-id Bloom bitmap for the append dup-guard — same
-    * sizing/layout as TextOps' doc-id guard: bits/64 rows max (~2 MB),
-    * bounded by BITS regardless of corpus size. Advisory only: a HIT
-    * arbitrates exactly against the probed `list_id=` partitions (the
-    * suspect's list is recomputable from the stored centroids, so
-    * arbitration is partition-pruned too — nothing corpus-sized on
-    * the append path, ever).
+  /** The ANN store's sidecars (graft.sources.IndexStore): the
+    * subdirectories its snapshot manages (served data + the compact
+    * staging dir) and its meta row — the build parameters plus the
+    * (n_vectors, id checksum) census of the staleness check.
     */
-  private val DupBloomBits = 1 << 24
-  private val DupBloomHashes = 3
-  /** Shared implementation lives in IoOps beside bloomPositions (one
-    * guard, both index suites). Keyed on hash(id) cast long — NOT a
-    * raw numeric cast — so ids of any type hash to real positions
-    * instead of casting to null and silently disarming the guard.
-    */
-  private def dupBloomWords(ids: DataFrame, idCol: String): DataFrame =
-    graft.sources.IoOps.dupBloomWords(ids,
-      hash(col(idCol)).cast("long"), DupBloomBits, DupBloomHashes)
-
-  private def bloomSuspects(ids: DataFrame, idCol: String,
-                            words: DataFrame): DataFrame =
-    graft.sources.IoOps.dupBloomSuspects(ids, idCol,
-      hash(col(idCol)).cast("long"), words, DupBloomBits,
-      DupBloomHashes)
-
-  // The subdirectories the commit snapshot (IndexCommits) manages:
-  // served data + the compact staging dir.
-  private val AnnSubs = Seq("vectors", "applog", "deletes", ".compact")
-
-  /** Order-free corpus census for the staleness gate: (row count,
-    * Σ pmod(hash(id), p) mod p). The sum accumulates in decimal(38,0)
-    * so it cannot overflow long at any corpus size before the final
-    * mod, and the mod makes the checksum ADDITIVE across disjoint
-    * parts — [[indexAppend]] merges it without rescanning the base.
-    */
-  private val CensusMod = 1000000007L
-  private def censusCountExpr: Column =
-    count(lit(1)).cast("long").as("_census_n")
-  private def censusChecksumExpr(idCol: String): Column =
-    coalesce(pmod(sum(pmod(hash(col(idCol)).cast("long"),
-        lit(CensusMod)).cast("decimal(38,0)")), lit(CensusMod)),
-      lit(0).cast("decimal(38,0)")).cast("long").as("_census_c")
-  private def corpusCensus(corpus: DataFrame, idCol: String): (Long, Long) = {
-    val r = corpus
-      .agg(censusCountExpr, censusChecksumExpr(idCol)).head()
-    (r.getLong(0), r.getLong(1))
-  }
-  /** The (count, checksum) census observed on a WRITE job — the same
-    * aggregates as [[corpusCensus]], riding the write's own pass over
-    * the delta instead of a second scan (guide §1.2: fewer passes).
-    */
-  private def censusOf(obs: org.apache.spark.sql.Observation)
-    : (Long, Long) = {
-    val m = obs.get
-    (m("_census_n").asInstanceOf[Long], m("_census_c").asInstanceOf[Long])
-  }
-
-  // Driver-side IO for the bounded sidecars (TinyParquet): the meta
-  // census row, the packed dup-guard bloom (bits/64 rows; IoOps, shared
-  // with the BM25 suite), and — at the call sites — quantizer tables
-  // and commit snapshots. Plain parquet, no Spark job or committer.
-  private def writeAnnMeta(hconf: org.apache.hadoop.conf.Configuration,
-                           root: String, k: Int, iters: Int, m: Int,
-                           dsub: Int, ksub: Int, qdec: Int,
-                           n: Long, c: Long): Unit =
-    graft.sources.TinyParquet.write(hconf, s"$root/meta",
-      Seq("k" -> "int", "iters" -> "int", "m" -> "int", "dsub" -> "int",
-        "ksub" -> "int", "qdec" -> "int", "n_vectors" -> "long",
-        "id_checksum" -> "long"),
-      Seq(Seq(k, iters, m, dsub, ksub, qdec, n, c)))
-  private def readAnnMeta(hconf: org.apache.hadoop.conf.Configuration,
-                          root: String): graft.sources.TinyParquet.TRow = {
-    val rows = graft.sources.TinyParquet.read(hconf, s"$root/meta")
-    require(rows.nonEmpty,
-      s"missing index meta at $root/meta — not an ANN index store?")
-    rows.head
-  }
+  private val AnnStore = IS.Layout(id = "vec_id",
+    subs = Seq("vectors", "applog", "deletes", ".compact"),
+    meta = Seq("k" -> "int", "iters" -> "int", "m" -> "int",
+      "dsub" -> "int", "ksub" -> "int", "qdec" -> "int",
+      "n_vectors" -> "long", "id_checksum" -> "long"),
+    count = "n_vectors", checksum = "id_checksum")
 
   /** Build and PERSIST an IVF+PQ index under `root` — the difference
     * between "has ANN operators" and "is an ANN system" at 100 TB: a
@@ -747,28 +682,26 @@ object SimilarityOps {
     // cannot skew. The census rides the SAME write job as observed
     // metrics — no second corpus pass (guide §1.2: fewer passes).
     val obs = new org.apache.spark.sql.Observation()
-    corpus
-      .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v"))
-      .observe(obs, censusCountExpr, censusChecksumExpr("vec_id"))
+    IS.observeCensus(corpus
+        .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v")),
+        obs, AnnStore, col("vec_id"))
       .select(col("vec_id"),
         graft.functions.NearestCentroidId(col("_v"), cents).as("list_id"),
         graft.functions.PqCodes(col("_v"), cb).as("codes"))
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$root/vectors")
-    val (n, c) = censusOf(obs)
-    graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-      dupBloomWords(corpus.select(col(idCol)), idCol))
-    writeAnnMeta(hconf, root, k, iters, m, dsub, ksub, qdec, n, c)
+    IS.buildBloom(root, corpus.select(col(idCol)), idCol)
+    IS.writeMeta(spark, root, AnnStore, IS.observed(obs) ++ Map(
+      "k" -> k, "iters" -> iters, "m" -> m, "dsub" -> dsub,
+      "ksub" -> ksub, "qdec" -> qdec))
     // Commit the initial snapshot: from here on every read plans its
     // file list from the current commit and every maintenance op is
     // an atomic pointer swap (IndexCommits). The vacuum retires
     // whatever a previous lifecycle on a reused root left behind
     // (old applog segments, delete sidecars, superseded snapshots).
-    graft.sources.IndexCommits.commit(spark, root,
-      graft.sources.IndexCommits.listKind(spark, root, "vectors",
-        Some("list_id")))
-    graft.sources.IndexCommits.vacuumConf(spark, root, AnnSubs)
+    IC.commit(spark, root, IC.listKind(spark, root, "vectors", Some("list_id")))
+    IC.vacuumConf(spark, root, AnnStore.subs)
   }
 
   /** Append NEW vectors to a persisted index WITHOUT retraining — the
@@ -819,111 +752,66 @@ object SimilarityOps {
                   root: String, buffered: Boolean = false,
                   autoFlushSegments: Int = 0): Unit = {
     val spark = delta.sparkSession
-    val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
     val cents = readIndexCentroids(spark, root)
     val cb = readIndexCodebooks(spark, root)
-    // Append idempotence, ENFORCED (mirroring the BM25 index's guard):
-    // delta ids check against the packed id-bloom (delta-sized work);
-    // ids that miss are provably new; HITS arbitrate exactly against
-    // ONLY the suspects' own `list_id=` partitions — the suspect's
-    // list is recomputable from the stored centroids, so even the
-    // exact check is partition-pruned. A deleted-but-not-compacted id
-    // is still physically present and correctly rejected until
-    // indexCompact removes it.
-    // The packed bloom is bits/64-bounded: read it ONCE on the driver;
-    // the suspects join broadcasts it as a local relation (no scan
-    // job), and the post-append fold reuses the same words.
-    val bloomWords =
-      graft.sources.IoOps.readBloomWordsLocal(spark, s"$root/bloomidx")
-    val suspects = bloomSuspects(
-      delta.select(col(idCol)).distinct(), idCol,
-      graft.sources.IoOps.localWordsDf(spark, bloomWords))
-    if (!suspects.limit(1).isEmpty) {
-      val sv = delta.join(broadcast(suspects), Seq(idCol), "left_semi")
-        .select(col(idCol).cast("long").as("vec_id"),
-          graft.functions.NearestCentroidId(
-            toDouble(col(vecCol)), cents).cast("long").as("list_id"))
-      val lists = sv.select("list_id").distinct()
-        .collect().map(_.getLong(0))
-      // the suspects' lists' files come straight from the snapshot (no
-      // per-list existence probes)
-      val paths = IC.filesOfParts(snap, "vectors", lists.toSet)
-      val partDup =
-        if (paths.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else spark.read.option("basePath", s"$root/vectors")
-          .parquet(paths: _*)
-          .select(col("vec_id").cast("long").as("vec_id"))
-          .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
-            "left_semi")
-          .limit(1).collect()
-      // a suspect may also live in the unflushed append log
-      val logFiles = IC.filesOf(snap, "applog")
-      val dup =
-        if (partDup.nonEmpty || logFiles.isEmpty) partDup
-        else spark.read.parquet(logFiles: _*)
-          .select(col("vec_id").cast("long").as("vec_id"))
-          .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
-            "left_semi")
-          .limit(1).collect()
-      require(dup.isEmpty,
-        s"indexAppend: vec_id ${dup.headOption.map(_.get(0))
-          .getOrElse("")} is already indexed — appends must carry " +
-          "NEW vectors only (use indexDelete + indexCompact, or " +
-          "rebuild)")
-    }
-    val coded = delta
-      .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v"))
-      .select(col("vec_id"),
-        graft.functions.NearestCentroidId(col("_v"), cents)
-          .cast("long").as("list_id"),
-        graft.functions.PqCodes(col("_v"), cb).as("codes"))
     // both paths write flat applog segment(s) (see the buffered param
     // doc), discovered by diffing the applog listing, and the delta
     // census (count + order-free id checksum) rides the segment write
     // as observed metrics — one delta pass total, no per-list
     // directory commits.
     val obs = new org.apache.spark.sql.Observation()
-    val observed =
-      coded.observe(obs, censusCountExpr, censusChecksumExpr("vec_id"))
-    val next = IC.commitWritten(spark, root, snap,
-        IC.listKind(spark, root, "applog")) {
+    val coded = IS.observeCensus(delta
+        .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v"))
+        .select(col("vec_id"),
+          graft.functions.NearestCentroidId(col("_v"), cents)
+            .cast("long").as("list_id"),
+          graft.functions.PqCodes(col("_v"), cb).as("codes")),
+      obs, AnnStore, col("vec_id"))
+    val next = IS.appendGuarded(root, snap, AnnStore,
+        IS.readMeta(spark, root), delta, idCol, "indexAppend: vec_id",
+        "NEW vectors only (use indexDelete + indexCompact, or rebuild)",
+        IC.listKind(spark, root, "applog")) { suspects =>
+      // exact arbitration, pruned: a suspect's list is recomputable
+      // from the stored centroids, so only the suspects' own lists'
+      // files (straight from the snapshot) are read, then the
+      // unflushed append log
+      val sv = delta.join(broadcast(suspects), Seq(idCol), "left_semi")
+        .select(col(idCol).cast("long").as("vec_id"),
+          graft.functions.NearestCentroidId(
+            toDouble(col(vecCol)), cents).cast("long").as("list_id"))
+      val lists = IS.routeKeys(sv, col("list_id"))
+      def dupIn(ids: DataFrame) =
+        ids.select(col("vec_id").cast("long").as("vec_id"))
+          .join(broadcast(sv.select("vec_id")), Seq("vec_id"), "left_semi")
+          .limit(1).collect()
+      val partDup = IS.readFiles(spark, root, "vectors",
+          IC.filesOfParts(snap, "vectors", lists))
+        .map(dupIn).getOrElse(Array.empty)
+      val logFiles = IC.filesOf(snap, "applog")
+      if (partDup.nonEmpty || logFiles.isEmpty) partDup
+      else dupIn(spark.read.parquet(logFiles: _*))
+    } {
       (if (buffered)
-         observed.coalesce(1) // one segment file per buffered append
+         coded.coalesce(1) // one segment file per buffered append
        else
          // batched deltas can be large: spread on list_id (AQE
          // coalesces a small delta back to one partition/file) and sort
          // within files so parquet row-group stats prune the probe
          // filter
-         observed.repartition(col("list_id"))
+         coded.repartition(col("list_id"))
            .sortWithinPartitions("list_id"))
         .write.mode("append").parquet(s"$root/applog")
-      val (dn, dc) = censusOf(obs)
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val old = readAnnMeta(hconf, root)
-      writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
-        old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
-        old.getInt("qdec"), old.getLong("n_vectors") + dn,
-        (old.getLong("id_checksum") + dc) % CensusMod)
-      // fold the delta into the dup-guard bloom (bit_or: commutative
-      // and idempotent, so the streaming twin's batching/order still
-      // cannot matter). The delta words are one bounded aggregate; the
-      // merge with the already-read base words is a driver-side OR over
-      // bits/64 entries.
-      val deltaWords = dupBloomWords(delta.select(col(idCol)), idCol)
-        .select(col("widx").cast("long"), col("word").cast("long"))
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-      graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-        graft.sources.IoOps.mergeBloomWords(bloomWords, deltaWords))
+      IS.observed(obs)
     }
     if (autoFlushSegments > 0 &&
         IC.filesOf(next, "applog").size >= autoFlushSegments)
       indexFlush(spark, root)
   }
 
-  /** Fold the buffered append log into the `list_id=` partitions and
-    * drop it — the background-merge half of the LSM ingest path
-    * ([[indexAppend]] with buffered=true): many small appends each
+  /** Fold the append log into the `list_id=` partitions and drop it —
+    * the background-merge half of the LSM ingest path (both
+    * [[indexAppend]] paths feed the log): many small appends each
     * paid ONE segment-file write; the flush pays the per-directory
     * commit cost ONCE for all of them, touching only the lists the
     * log actually contains. Census, bloom and quantizers are already
@@ -934,7 +822,7 @@ object SimilarityOps {
     */
   def indexFlush(spark: org.apache.spark.sql.SparkSession,
                  root: String): Unit =
-    graft.sources.IndexCommits.maintain(spark, root, AnnSubs)(
+    IC.maintain(spark, root, AnnStore.subs)(
       prepareFlush(spark, root))
 
   /** One-call self-maintenance for a persisted index — the policy
@@ -958,19 +846,12 @@ object SimilarityOps {
                     root: String, flushSegments: Int = 16,
                     compactDeletedFraction: Double = 0.1)
     : (Boolean, Boolean) = {
-    val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
     val doFlush = flushSegments > 0 &&
       IC.filesOf(snap, "applog").size >= flushSegments
     if (doFlush) indexFlush(spark, root)
-    val delRows = IC.pendingDeletes(spark, snap)
-    // meta's n_vectors is the post-delete census, so the pre-delete
-    // corpus is live + doomed — the denominator the fraction means
-    val doCompact = delRows > 0 && {
-      val live = readAnnMeta(spark.sparkContext.hadoopConfiguration,
-        root).getLong("n_vectors")
-      delRows.toDouble / (live + delRows) >= compactDeletedFraction
-    }
+    val doCompact = IS.compactDue(spark, root, snap,
+      AnnStore, compactDeletedFraction)
     if (doCompact) indexCompact(spark, root)
     (doFlush, doCompact)
   }
@@ -984,16 +865,14 @@ object SimilarityOps {
     */
   private[graft] def prepareFlush(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[graft.sources.IndexCommits.Entry]] = {
-    val IC = graft.sources.IndexCommits
+    : Option[Seq[IC.Entry]] = {
     val snap = IC.readEntries(spark, root)
     val logFiles = IC.filesOf(snap, "applog")
     if (logFiles.isEmpty) return None
     val log = spark.read.parquet(logFiles: _*)
     // the fold can only add files under the lists the log contains —
     // list those dirs alone (flush-cadence bounded), never the tree
-    val touched = log.select("list_id").distinct().collect()
-      .map(_.getLong(0)).toSeq
+    val touched = IS.routeKeys(log, col("list_id")).toSeq
     val added = IC.written(
         IC.listParts(spark, root, "vectors", "list_id", touched)) {
       log
@@ -1020,57 +899,35 @@ object SimilarityOps {
   def indexDelete(doomed: DataFrame, idCol: String, root: String,
                   vecCol: String = null): Unit = {
     val spark = doomed.sparkSession
-    val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
-    // Idempotence: a re-deleted id must not subtract the census twice
-    // (that would permanently corrupt n_vectors/checksum and with them
-    // the staleness gate). Dedup within the batch, then anti-join the
-    // ids already in the sidecar — sidecar-sized broadcast, never
-    // corpus-sized.
-    val delFiles = IC.filesOf(snap, "deletes")
-    val batch = doomed.dropDuplicates(Seq(idCol))
-    val fresh =
-      if (delFiles.isEmpty) batch
-      else batch.join(
-        broadcast(spark.read.parquet(delFiles: _*)
-          .select(col("vec_id").as("_exid"))),
-        col(idCol).cast("long") === col("_exid"), "left_anti")
-    if (fresh.limit(1).isEmpty) return // every id already recorded
-    // When the doomed rows carry their vectors, record the list_id too
-    // (same NearestCentroidId over the same stored centroids that
-    // placed the row at write/append time — deterministic, so it names
-    // the exact partition holding the row). [[indexCompact]] then
-    // rewrites ONLY those partitions with no discovery scan; id-only
-    // deletes store null and compact falls back to one discovery join.
-    // the (count, checksum) census of the fresh doomed ids rides the
+    // Idempotence (IndexStore.freshDeletes): ids the sidecar already
+    // records are dropped, and a batch of only those commits nothing.
+    // The (count, checksum) census of the fresh doomed ids rides the
     // sidecar write itself as observed metrics — no second pass. The
     // checksum hashes the ORIGINAL-typed idCol (observed BEFORE the
     // cast-to-long select), exactly as write/append census it (a hash
     // over a cast value would not cancel against theirs).
-    val obs = new org.apache.spark.sql.Observation()
-    val freshObs =
-      fresh.observe(obs, censusCountExpr, censusChecksumExpr(idCol))
-    val withList =
-      if (vecCol != null) {
-        val cents = readIndexCentroids(spark, root)
-        freshObs.select(col(idCol).cast("long").as("vec_id"),
-          graft.functions.NearestCentroidId(
-            toDouble(col(vecCol)), cents).cast("long").as("list_id"))
-      } else
-        freshObs.select(col(idCol).cast("long").as("vec_id"),
-          lit(null).cast("long").as("list_id"))
-    IC.commitWritten(spark, root, snap,
-        IC.listKind(spark, root, "deletes")) {
-      withList.write.mode("append").parquet(s"$root/deletes")
-      val (dn, dc) = censusOf(obs)
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val old = readAnnMeta(hconf, root)
-      writeAnnMeta(hconf, root, old.getInt("k"), old.getInt("iters"),
-        old.getInt("m"), old.getInt("dsub"), old.getInt("ksub"),
-        old.getInt("qdec"), old.getLong("n_vectors") - dn,
-        java.lang.Math.floorMod(old.getLong("id_checksum") - dc,
-          CensusMod))
-    }
+    IS.freshDeletes(snap, AnnStore, doomed, idCol, col(idCol).cast("long"))
+      .foreach { fresh =>
+        // When the doomed rows carry their vectors, record the list_id
+        // too (same NearestCentroidId over the same stored centroids
+        // that placed the row at write/append time — deterministic, so
+        // it names the exact partition holding the row). [[indexCompact]]
+        // then rewrites ONLY those partitions with no discovery scan;
+        // id-only deletes store null and compact falls back to one
+        // discovery join.
+        val obs = new org.apache.spark.sql.Observation()
+        val listId =
+          if (vecCol != null)
+            graft.functions.NearestCentroidId(toDouble(col(vecCol)),
+              readIndexCentroids(spark, root)).cast("long")
+          else lit(null).cast("long")
+        IS.commitDeletes(root, snap, AnnStore, IS.readMeta(spark, root),
+            IS.observeCensus(fresh, obs, AnnStore, col(idCol))
+              .select(col(idCol).cast("long").as("vec_id"),
+                listId.as("list_id")))(
+          IS.observed(obs))
+      }
   }
 
   /** Compact a persisted index's delete sidecar — the fourth leg of
@@ -1099,12 +956,13 @@ object SimilarityOps {
     * The append dup-guard bloom is NOT rebuilt here (unsetting bits
     * would need a corpus scan, defeating the surgical contract):
     * deleted ids stay "possibly present", and [[indexAppend]]'s exact
-    * arbitration — which reads only the suspect's own partition —
-    * correctly finds them gone post-compact, so re-appends work.
+    * arbitration — which reads only the suspects' own lists and the
+    * append log — correctly finds them gone post-compact, so
+    * re-appends work.
     */
   def indexCompact(spark: org.apache.spark.sql.SparkSession,
                    root: String): Unit =
-    graft.sources.IndexCommits.maintain(spark, root, AnnSubs)(
+    IC.maintain(spark, root, AnnStore.subs)(
       prepareCompact(spark, root))
 
   /** Stage a compaction WITHOUT committing it: write the touched
@@ -1119,27 +977,20 @@ object SimilarityOps {
     */
   private[graft] def prepareCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[graft.sources.IndexCommits.Entry]] = {
-    val IC = graft.sources.IndexCommits
+    : Option[Seq[IC.Entry]] = {
     val snap = IC.readEntries(spark, root)
     val delFiles = IC.filesOf(snap, "deletes")
     if (delFiles.isEmpty) return None // nothing accrued: no-op
     val del = spark.read.parquet(delFiles: _*)
     val delIds = del.select("vec_id").distinct()
     val haveAllLists = del.where(col("list_id").isNull).limit(1).isEmpty
-    val allVecFiles = IC.filesOf(snap, "vectors")
-    // driver list bounded by K (distinct list ids), never corpus size
+    // driver list bounded by K (distinct list ids), never corpus size;
+    // id-only deletes (no vecCol) pay ONE column-pruned discovery join
     val touched: Set[Long] =
-      if (haveAllLists)
-        del.select(col("list_id").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
-      else if (allVecFiles.isEmpty) Set.empty
-      else // id-only deletes (no vecCol): ONE column-pruned discovery join
-        spark.read.option("basePath", s"$root/vectors")
-          .parquet(allVecFiles: _*)
-          .join(broadcast(delIds), Seq("vec_id"))
-          .select(col("list_id").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
+      (if (haveAllLists) Some(del)
+       else IS.readFiles(spark, root, "vectors", IC.filesOf(snap, "vectors"))
+         .map(_.join(broadcast(delIds), Seq("vec_id"))))
+        .map(IS.routeKeys(_, col("list_id"))).getOrElse(Set.empty)
     val entries = IC.rewriteParts(spark, root,
         snap.filterNot(e => e.kind == "deletes" || e.kind == "applog"),
         "vectors", "list_id", touched)(
@@ -1192,12 +1043,8 @@ object SimilarityOps {
     * corpus — one hash aggregate, the cheap gate a serving path runs
     * before trusting a stored index. True = rebuild needed.
     */
-  def indexIsStale(corpus: DataFrame, idCol: String, root: String): Boolean = {
-    val meta = readAnnMeta(
-      corpus.sparkSession.sparkContext.hadoopConfiguration, root)
-    val (n, c) = corpusCensus(corpus, idCol)
-    meta.getLong("n_vectors") != n || meta.getLong("id_checksum") != c
-  }
+  def indexIsStale(corpus: DataFrame, idCol: String, root: String): Boolean =
+    IS.isStale(corpus, idCol, root, AnnStore)
 
   /** Serve a query batch from a PERSISTED index: reload the bounded
     * quantizer tables, compute each query's nProbe lists, and scan
@@ -1212,7 +1059,6 @@ object SimilarityOps {
                   vecCol: String, k: Int, nProbe: Int,
                   qdec: Int = 6): DataFrame = {
     val spark = queries.sparkSession
-    val IC = graft.sources.IndexCommits
     // Plan the probed read from the current SNAPSHOT: one bounded
     // commit read names every live file — no per-list existence
     // probes, and staged/orphaned files from an interrupted
@@ -1226,15 +1072,10 @@ object SimilarityOps {
       .select(explode(graft.functions.ProbeListIds(
         toDouble(col(vecCol)), cents, nProbe)).as("list_id"))
       .distinct().collect().map(_.getLong(0))
-    val vecBase = s"$root/vectors"
-    val probedPaths = IC.filesOfParts(snap, "vectors", probed.toSet)
-    val codedMain =
-      (if (probedPaths.isEmpty)
-         spark.read.parquet(vecBase).where(lit(false))
-       else
-         spark.read.option("basePath", vecBase).parquet(probedPaths: _*))
-        .select(col("vec_id").as("neighbor_id"),
-          col("list_id").cast("long").as("list_id"), col("codes"))
+    val codedMain = IS.readKind(spark, root, "vectors",
+        IC.filesOfParts(snap, "vectors", probed.toSet))
+      .select(col("vec_id").as("neighbor_id"),
+        col("list_id").cast("long").as("list_id"), col("codes"))
     // unflushed LSM segments: same probe filter as a plain column —
     // parquet min/max row-group stats prune it. Both append paths feed
     // the log; it is bounded by autoFlushSegments (the buffered sink's
@@ -1249,16 +1090,8 @@ object SimilarityOps {
             .select(col("vec_id").as("neighbor_id"),
               col("list_id").cast("long").as("list_id"), col("codes")))
       else codedMain
-    // serve base minus deletes: one anti-join against the (small)
-    // delete sidecar when one exists — the index's merge-on-read
-    val delFiles = IC.filesOf(snap, "deletes")
-    val coded =
-      if (delFiles.nonEmpty)
-        coded0.join(
-          spark.read.parquet(delFiles: _*)
-            .select(col("vec_id").as("neighbor_id")),
-          Seq("neighbor_id"), "left_anti")
-      else coded0
+    // serve base minus deletes — the index's merge-on-read
+    val coded = IS.withoutDeleted(coded0, snap, AnnStore, "neighbor_id")
     ivfPqScore(queries, coded, qId, vecCol, k, cents, cb, nProbe, qdec)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.{IndexCommits => IC, IndexStore => IS}
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (builder brief: language-ID, quality scoring, token counting,
@@ -1605,31 +1606,6 @@ object TextOps {
       .orderBy(col("bm25").desc, col(idCol))
       .limit(k)
 
-  /** Bloom sizing for the doc-id dup-guard: 1<<24 bits / 3 hashes give
-    * ~6e-4 false-positive rate at 500k docs (positions from
-    * IoOps.bloomPositions — the same hash family as the file-skipping
-    * index). The bitmap is stored PACKED (64 positions per word), so
-    * its size is bounded by BITS/64 rows regardless of corpus size.
-    */
-  private val DupBloomBits = 1 << 24
-  private val DupBloomHashes = 3
-
-  /** Shared implementation lives in IoOps beside bloomPositions (one
-    * guard, both index suites). Keyed on hash(id) cast long — NOT a
-    * raw numeric cast — so string/UUID doc ids hash to real positions
-    * instead of casting to null and silently disarming the dup-guard
-    * (the rest of the index already supports arbitrary id types).
-    */
-  private def dupBloomWords(ids: DataFrame, idCol: String): DataFrame =
-    graft.sources.IoOps.dupBloomWords(ids,
-      hash(col(idCol)).cast("long"), DupBloomBits, DupBloomHashes)
-
-  private def bloomSuspects(ids: DataFrame, idCol: String,
-                            bloomWords: DataFrame): DataFrame =
-    graft.sources.IoOps.dupBloomSuspects(ids, idCol,
-      hash(col(idCol)).cast("long"), bloomWords, DupBloomBits,
-      DupBloomHashes)
-
   /** doc-id hash bucket count for the doclens layout: append-time dup
     * ARBITRATION (the exact check a Bloom hit pays) prunes to the
     * suspects' `docbucket=` partitions only — the BM25 mirror of the
@@ -1640,15 +1616,44 @@ object TextOps {
   private def docBucket(id: Column, n: Int): Column =
     pmod(hash(id), lit(n))
 
-  // The subdirectories the commit snapshot (IndexCommits) manages, and
-  // the listing the append diffs around its postings + doclens write.
-  private val BmSubs = Seq("postings", "doclens", "deletes", ".compact")
+  /** The BM25 store's sidecars (graft.sources.IndexStore): the
+    * subdirectories its snapshot manages and its meta row — the corpus
+    * census (n_docs, sum_dl of the doc lengths, doc checksum) plus the
+    * bucket counts the layout routes by.
+    */
+  private val BmStore = IS.Layout(id = "doc_id",
+    subs = Seq("postings", "doclens", "deletes", ".compact"),
+    meta = Seq("n_docs" -> "long", "sum_dl" -> "long",
+      "n_buckets" -> "int", "doc_checksum" -> "long",
+      "n_docbuckets" -> "int"),
+    count = "n_docs", checksum = "doc_checksum",
+    sums = Seq("sum_dl" -> "dl"))
+  // the listing the append diffs around its postings + doclens write
   private def listBmData(spark: org.apache.spark.sql.SparkSession,
                          root: String) =
-    graft.sources.IndexCommits.listKind(spark, root, "postings",
-      Some("bucket")) ++
-      graft.sources.IndexCommits.listKind(spark, root, "doclens",
-        Some("docbucket"))
+    IC.listKind(spark, root, "postings", Some("bucket")) ++
+      IC.listKind(spark, root, "doclens", Some("docbucket"))
+
+  /** Write the postings (doc_id, term, tf, dl) of `df` under
+    * root/postings by term `bucket=` in `mode`, one file per touched
+    * bucket, not one per writing task: term-hash buckets are ~uniform
+    * by construction, and a probed search pays file-listing + footer
+    * reads per file in the pruned dirs. dl is constant per doc: the
+    * norm rides the posting row.
+    */
+  private def writePostings(df: DataFrame, idCol: String, textCol: String,
+                            root: String, nBuckets: Int,
+                            mode: String): Unit =
+    df.select(col(idCol).as("doc_id"),
+        size(words(col(textCol))).as("dl"),
+        explode(words(col(textCol))).as("term"))
+      .where(length(col("term")) > 0)
+      .groupBy("doc_id", "term")
+      .agg(count(lit(1)).cast("int").as("tf"), max(col("dl")).as("dl"))
+      .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
+      .repartition(col("bucket"))
+      .write.mode(mode).option("compression", "zstd")
+      .partitionBy("bucket").parquet(s"$root/postings")
 
   /** Persist a BM25 inverted index — the sparse-retrieval sibling of
     * the ANN index lifecycle (SimilarityOps.indexWrite): a 100 TB
@@ -1692,8 +1697,7 @@ object TextOps {
                          root: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val spark = df.sparkSession
-    graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-      dupBloomWords(df, idCol))
+    IS.buildBloom(root, df, idCol)
     // Two tokenize passes BY MEASUREMENT (round-19, guide §1.3): the
     // verdict-ordered single-tokenize fusion (explode_outer keeping a
     // null-term row per empty doc + persist of the distinct-(doc,term)
@@ -1705,89 +1709,27 @@ object TextOps {
     // a split+size projection with no explode/shuffle; its cost is the
     // text re-read, which page cache absorbs at any scale this sandbox
     // can measure.
-    df.select(col(idCol).as("doc_id"),
-        size(words(col(textCol))).as("dl"),
-        explode(words(col(textCol))).as("term"))
-      .where(length(col("term")) > 0)
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("int").as("tf"),
-        max(col("dl")).as("dl")) // constant per doc: norm rides the row
-      .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
-      // one file per bucket, not one per writing task: term-hash
-      // buckets are ~uniform by construction, and a probed search
-      // pays file-listing + footer reads per file in the pruned dirs
-      .repartition(col("bucket"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("bucket").parquet(s"$root/postings")
+    writePostings(df, idCol, textCol, root, nBuckets, "overwrite")
     // doclens bucketed by doc-id hash: the maintenance table's reads
     // (dup arbitration, delete census) prune to the relevant buckets.
     // The meta census (n_docs, sum_dl, checksum) rides this write as
     // observed metrics — no separate tokenizing pass over the corpus.
     val obs = new org.apache.spark.sql.Observation()
-    df.select(col(idCol).as("doc_id"),
+    IS.observeCensus(df.select(col(idCol).as("doc_id"),
         size(words(col(textCol))).as("dl"),
-        docBucket(col(idCol), DocLenBuckets).as("docbucket"))
-      .observe(obs, bmCensusExprs.head, bmCensusExprs.tail: _*)
+        docBucket(col(idCol), DocLenBuckets).as("docbucket")),
+        obs, BmStore, col("doc_id"))
       .repartition(col("docbucket"))
       .write.mode("overwrite").option("compression", "zstd")
       .partitionBy("docbucket").parquet(s"$root/doclens")
-    val (n, s, c) = bmCensusOf(obs)
-    writeBmMeta(spark, root, n, s, nBuckets, c, DocLenBuckets)
+    IS.writeMeta(spark, root, BmStore, IS.observed(obs) ++
+      Map("n_buckets" -> nBuckets, "n_docbuckets" -> DocLenBuckets))
     // Commit the initial snapshot (IndexCommits): from here on every
     // read plans its file list from the current commit and every
     // maintenance op is an atomic pointer swap. The vacuum retires
     // whatever a previous lifecycle on a reused root left behind.
-    graft.sources.IndexCommits.commit(spark, root, listBmData(spark, root))
-    graft.sources.IndexCommits.vacuumConf(spark, root, BmSubs)
-  }
-
-  /** Order-free doc-id checksum aggregate: Σ pmod(hash(id), p) mod p,
-    * accumulated in decimal(38,0) so it never overflows before the
-    * final mod — additive across disjoint parts (append merges by +,
-    * delete by -, both mod p), the same census discipline as
-    * SimilarityOps.indexWrite's.
-    */
-  private val DocCensusMod = 1000000007L
-  private def docChecksumAgg(id: Column): Column =
-    coalesce(pmod(sum(pmod(hash(id).cast("long"),
-        lit(DocCensusMod)).cast("decimal(38,0)")), lit(DocCensusMod)),
-      lit(0).cast("decimal(38,0)")).cast("long")
-
-  // Driver-side IO for the one-row meta census (TinyParquet: same
-  // parquet layout, no Spark job / committer per read/write — the
-  // round-18 lifecycle profiling showed these tiny jobs dominated the
-  // maintenance ops' wall).
-  private def writeBmMeta(spark: org.apache.spark.sql.SparkSession,
-                          root: String, nDocs: Long, sumDl: Long,
-                          nBuckets: Int, checksum: Long,
-                          nDocBuckets: Int): Unit =
-    graft.sources.TinyParquet.write(
-      spark.sparkContext.hadoopConfiguration, s"$root/meta",
-      Seq("n_docs" -> "long", "sum_dl" -> "long", "n_buckets" -> "int",
-        "doc_checksum" -> "long", "n_docbuckets" -> "int"),
-      Seq(Seq(nDocs, sumDl, nBuckets, checksum, nDocBuckets)))
-  private def readBmMeta(spark: org.apache.spark.sql.SparkSession,
-                         root: String): graft.sources.TinyParquet.TRow = {
-    val rows = graft.sources.TinyParquet.read(
-      spark.sparkContext.hadoopConfiguration, s"$root/meta")
-    require(rows.nonEmpty,
-      s"missing index meta at $root/meta — not a BM25 index store?")
-    rows.head
-  }
-
-  /** The (n_docs, sum_dl, checksum) census as observed metrics riding
-    * a write over (doc_id, dl, ...) rows — the same aggregates as the
-    * standalone census pass, with no second scan of the delta.
-    */
-  private def bmCensusExprs: Seq[Column] = Seq(
-    count(lit(1)).cast("long").as("_census_n"),
-    coalesce(sum(col("dl").cast("long")), lit(0L)).as("_census_s"),
-    docChecksumAgg(col("doc_id")).as("_census_c"))
-  private def bmCensusOf(obs: org.apache.spark.sql.Observation)
-    : (Long, Long, Long) = {
-    val m = obs.get
-    (m("_census_n").asInstanceOf[Long], m("_census_s").asInstanceOf[Long],
-      m("_census_c").asInstanceOf[Long])
+    IC.commit(spark, root, listBmData(spark, root))
+    IC.vacuumConf(spark, root, BmStore.subs)
   }
 
   /** Append NEW documents to a persisted BM25 index — the ingest leg
@@ -1817,80 +1759,41 @@ object TextOps {
   def invertedIndexAppend(df: DataFrame, idCol: String, textCol: String,
                           root: String): Unit = {
     val spark = df.sparkSession
-    val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
-    val oldMeta = readBmMeta(spark, root)
+    val oldMeta = IS.readMeta(spark, root)
     val nBuckets = oldMeta.getInt("n_buckets")
     val nDocBuckets = oldMeta.getInt("n_docbuckets")
-    val deltaIds = df.select(col(idCol).as("doc_id")).distinct()
-    // bits/64-bounded: one driver read serves both the suspects join
-    // (as a broadcast local relation — no scan job) and the post-
-    // append fold
-    val bloomWords =
-      graft.sources.IoOps.readBloomWordsLocal(spark, s"$root/bloomidx")
-    // all-hashes-hit test against the packed words: one delta-sized
-    // explode + one broadcast join — nothing corpus-sized
-    val suspects = bloomSuspects(deltaIds, "doc_id",
-      graft.sources.IoOps.localWordsDf(spark, bloomWords))
-    val dup =
-      if (suspects.limit(1).isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else {
-        // exact arbitration pruned to the SUSPECTS' own `docbucket=`
-        // partitions (the ANN side's list-pruned discipline) —
-        // suspect-bounded work, never a corpus-sized doclens scan
-        val bkts = suspects
-          .select(docBucket(col("doc_id"), nDocBuckets)
-            .cast("long").as("b"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        val files = IC.filesOfParts(snap, "doclens", bkts)
-        if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else spark.read.option("basePath", s"$root/doclens")
-          .parquet(files: _*).select(col("doc_id"))
-          .join(broadcast(suspects), Seq("doc_id"), "left_semi")
-          .limit(1).collect()
-      }
-    require(dup.isEmpty,
-      s"invertedIndexAppend: doc_id ${dup.headOption.map(_.get(0))
-        .getOrElse("")} is already indexed — appends must carry NEW " +
-        "documents only (use invertedIndexDelete + compact, or rebuild)")
-    IC.commitWritten(spark, root, snap, listBmData(spark, root)) {
+    IS.appendGuarded(root, snap, BmStore, oldMeta, df, idCol,
+        "invertedIndexAppend: doc_id",
+        "NEW documents only (use invertedIndexDelete + compact, or rebuild)",
+        listBmData(spark, root)) { suspects =>
+      // exact arbitration pruned to the SUSPECTS' own `docbucket=`
+      // partitions (the ANN side's list-pruned discipline) —
+      // suspect-bounded work, never a corpus-sized doclens scan
+      val bkts = IS.routeKeys(suspects, docBucket(col(idCol), nDocBuckets))
+      IS.readFiles(spark, root, "doclens",
+          IC.filesOfParts(snap, "doclens", bkts))
+        .map(_.select(col("doc_id"))
+          .join(broadcast(suspects.select(col(idCol).as("doc_id"))),
+            Seq("doc_id"), "left_semi")
+          .limit(1).collect())
+        .getOrElse(Array.empty)
+    } {
       // two tokenize passes by measurement — see invertedIndexWrite's
       // rejection note (the fused single-tokenize build measured slower
       // at sf0.1 and at the 100x rehearsal)
-      df.select(col(idCol).as("doc_id"),
-          size(words(col(textCol))).as("dl"),
-          explode(words(col(textCol))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).cast("int").as("tf"),
-          max(col("dl")).as("dl"))
-        .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
-        .repartition(col("bucket")) // one new file per touched bucket
-        .write.mode("append").option("compression", "zstd")
-        .partitionBy("bucket").parquet(s"$root/postings")
+      writePostings(df, idCol, textCol, root, nBuckets, "append")
       // the delta census rides the doclens write as observed metrics —
       // no separate tokenizing pass over the delta
       val obs = new org.apache.spark.sql.Observation()
-      df.select(col(idCol).as("doc_id"),
-          size(words(col(textCol))).as("dl"))
-        .observe(obs, bmCensusExprs.head, bmCensusExprs.tail: _*)
+      IS.observeCensus(df.select(
+          col(idCol).as("doc_id"), size(words(col(textCol))).as("dl")),
+          obs, BmStore, col("doc_id"))
         .withColumn("docbucket", docBucket(col("doc_id"), nDocBuckets))
         .repartition(col("docbucket"))
         .write.mode("append").option("compression", "zstd")
         .partitionBy("docbucket").parquet(s"$root/doclens")
-      val (dn, ds, dc) = bmCensusOf(obs)
-      writeBmMeta(spark, root, oldMeta.getLong("n_docs") + dn,
-        oldMeta.getLong("sum_dl") + ds, nBuckets,
-        (oldMeta.getLong("doc_checksum") + dc) % DocCensusMod,
-        nDocBuckets)
-      // fold the delta into the dup-guard bloom (bit_or merge is
-      // commutative/idempotent; bounded at bits/64 rows either way) —
-      // a driver OR over the already-read base words
-      val deltaWords = dupBloomWords(deltaIds, "doc_id")
-        .select(col("widx").cast("long"), col("word").cast("long"))
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-      graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-        graft.sources.IoOps.mergeBloomWords(bloomWords, deltaWords))
+      IS.observed(obs)
     }
   }
 
@@ -1909,47 +1812,26 @@ object TextOps {
   def invertedIndexDelete(doomed: DataFrame, idCol: String,
                           root: String): Unit = {
     val spark = doomed.sparkSession
-    val IC = graft.sources.IndexCommits
     val snap = IC.readEntries(spark, root)
-    val old = readBmMeta(spark, root)
+    val old = IS.readMeta(spark, root)
     val nDocBuckets = old.getInt("n_docbuckets")
-    // Idempotence: a re-deleted doc_id must not subtract the census
-    // twice (that would permanently corrupt the n_docs/sum_dl/checksum
-    // feeding idf/avgdl in every subsequent indexed search and the
-    // staleness gate). Anti-join the incoming ids against the existing
-    // sidecar — sidecar-sized broadcast, never corpus-sized.
-    val delFiles = IC.filesOf(snap, "deletes")
-    val batch = doomed.select(col(idCol).as("doc_id")).distinct()
-    val ids =
-      if (delFiles.isEmpty) batch
-      else batch.join(
-        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    if (ids.limit(1).isEmpty) return // every id already recorded
-    // census from the STORED doclens of the doomed ids (inner join:
-    // never-indexed ids are ignored, not subtracted) — read pruned to
-    // the doomed ids' `docbucket=` partitions
-    val bkts = ids.select(docBucket(col("doc_id"), nDocBuckets)
-        .cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val lensFiles = IC.filesOfParts(snap, "doclens", bkts)
-    val m =
-      (if (lensFiles.isEmpty) // nothing indexed in those buckets
-         ids.select(col("doc_id"), lit(0).as("dl")).where(lit(false))
-       else spark.read.option("basePath", s"$root/doclens")
-         .parquet(lensFiles: _*))
-        .join(broadcast(ids), Seq("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          coalesce(sum(col("dl").cast("long")), lit(0L)).as("s"),
-          docChecksumAgg(col("doc_id")).as("c")).head()
-    IC.commitWritten(spark, root, snap,
-        IC.listKind(spark, root, "deletes")) {
-      ids.write.mode("append").parquet(s"$root/deletes")
-      writeBmMeta(spark, root, old.getLong("n_docs") - m.getLong(0),
-        old.getLong("sum_dl") - m.getLong(1), old.getInt("n_buckets"),
-        java.lang.Math.floorMod(
-          old.getLong("doc_checksum") - m.getLong(2), DocCensusMod),
-        nDocBuckets)
+    // Idempotence (IndexStore.freshDeletes): a re-deleted doc_id must
+    // not subtract the census twice (that would permanently corrupt the
+    // n_docs/sum_dl/checksum feeding idf/avgdl in every subsequent
+    // indexed search and the staleness gate)
+    IS.freshDeletes(snap, BmStore, doomed.select(col(idCol).as("doc_id")),
+        "doc_id", col("doc_id")).foreach { ids =>
+      // census from the STORED doclens of the doomed ids (inner join:
+      // never-indexed ids are ignored, not subtracted) — read pruned to
+      // the doomed ids' `docbucket=` partitions
+      val bkts = IS.routeKeys(ids, docBucket(col("doc_id"), nDocBuckets))
+      val lens = IS.readFiles(spark, root, "doclens",
+          IC.filesOfParts(snap, "doclens", bkts))
+        .getOrElse( // nothing indexed in those buckets
+          ids.select(col("doc_id"), lit(0).as("dl")).where(lit(false)))
+      val census = IS.census(lens.join(broadcast(ids), Seq("doc_id")),
+        BmStore, col("doc_id"))
+      IS.commitDeletes(root, snap, BmStore, old, ids)(census)
     }
   }
 
@@ -1960,13 +1842,8 @@ object TextOps {
     * of SimilarityOps.indexIsStale). True = rebuild needed.
     */
   def invertedIndexIsStale(corpus: DataFrame, idCol: String,
-                           root: String): Boolean = {
-    val meta = readBmMeta(corpus.sparkSession, root)
-    val live = corpus.agg(count(lit(1)).cast("long").as("n"),
-      docChecksumAgg(col(idCol)).as("c")).head()
-    meta.getLong("n_docs") != live.getLong(0) ||
-      meta.getLong("doc_checksum") != live.getLong(1)
-  }
+                           root: String): Boolean =
+    IS.isStale(corpus, idCol, root, BmStore)
 
   /** One-call self-maintenance for a persisted inverted index — the
     * policy layer over [[invertedIndexCompact]], the sparse twin of
@@ -1983,12 +1860,8 @@ object TextOps {
                             root: String,
                             compactDeletedFraction: Double = 0.1)
     : Boolean = {
-    val IC = graft.sources.IndexCommits
-    val delRows = IC.pendingDeletes(spark, IC.readEntries(spark, root))
-    val doCompact = delRows > 0 && {
-      val live = readBmMeta(spark, root).getLong("n_docs")
-      delRows.toDouble / (live + delRows) >= compactDeletedFraction
-    }
+    val doCompact = IS.compactDue(spark, root, IC.readEntries(spark, root),
+      BmStore, compactDeletedFraction)
     if (doCompact) invertedIndexCompact(spark, root)
     doCompact
   }
@@ -2010,23 +1883,16 @@ object TextOps {
     */
   def invertedIndexCompact(spark: org.apache.spark.sql.SparkSession,
                            root: String): Unit = {
-    val IC = graft.sources.IndexCommits
     // the ANN side's crash-safe protocol, applied to the term-
     // partitioned store; the dup-guard bloom is rebuilt over the
     // SURVIVORS strictly AFTER the pointer swap (compact is the moment
     // a deleted doc_id becomes legally re-appendable; a crash between
     // swap and rebuild leaves the bloom over-approximate — the safe
     // direction, since suspects arbitrate exactly)
-    IC.maintain(spark, root, BmSubs, afterCommit = next => {
-      val lensFiles = IC.filesOf(next, "doclens")
-      val survivors =
-        if (lensFiles.isEmpty)
-          spark.read.parquet(s"$root/doclens").where(lit(false))
-        else spark.read.option("basePath", s"$root/doclens")
-          .parquet(lensFiles: _*)
-      graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-        dupBloomWords(survivors.select("doc_id"), "doc_id"))
-    })(prepareInvertedCompact(spark, root))
+    IC.maintain(spark, root, BmStore.subs, afterCommit = next =>
+      IS.buildBloom(root, IS.readKind(spark, root, "doclens",
+        IC.filesOf(next, "doclens")).select("doc_id"), "doc_id")
+    )(prepareInvertedCompact(spark, root))
   }
 
   /** Stage an inverted-index compaction WITHOUT committing it: write
@@ -2044,8 +1910,7 @@ object TextOps {
     */
   private[graft] def prepareInvertedCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[graft.sources.IndexCommits.Entry]] = {
-    val IC = graft.sources.IndexCommits
+    : Option[Seq[IC.Entry]] = {
     val snap = IC.readEntries(spark, root)
     val delFiles = IC.filesOf(snap, "deletes")
     if (delFiles.isEmpty) return None // nothing accrued: no-op
@@ -2053,108 +1918,100 @@ object TextOps {
       .select("doc_id").distinct()
     // both tables' surgical rewrite: one pruned scan of the touched
     // parts + broadcast anti-join, staged and moved (IndexCommits)
-    def rewrite(entries: Seq[graft.sources.IndexCommits.Entry],
-                kind: String, partKey: String, touched: Set[Long]) =
+    def rewrite(entries: Seq[IC.Entry], kind: String, partKey: String,
+                touched: Set[Long]) =
       IC.rewriteParts(spark, root, entries, kind, partKey, touched,
           Map("compression" -> "zstd"))(
         _.join(broadcast(ids), Seq("doc_id"), "left_anti"))
     // doc deletes are non-local in the term-partitioned postings: one
     // column-pruned (doc_id, bucket) discovery of the touched buckets
-    val postFiles = IC.filesOf(snap, "postings")
     val touchedBuckets: Set[Long] =
-      if (postFiles.isEmpty) Set.empty
-      else spark.read.option("basePath", s"$root/postings")
-        .parquet(postFiles: _*)
-        .join(broadcast(ids), Seq("doc_id"))
-        .select(col("bucket").cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSet
+      IS.readFiles(spark, root, "postings", IC.filesOf(snap, "postings"))
+        .map(p => IS.routeKeys(p.join(broadcast(ids), Seq("doc_id")),
+          col("bucket")))
+        .getOrElse(Set.empty)
     val staged = rewrite(snap.filterNot(_.kind == "deletes"),
       "postings", "bucket", touchedBuckets)
     // doclens deletes ARE local (keyed and partitioned by doc_id
     // hash): only the doomed ids' docbuckets rewrite
-    val nDocBuckets = readBmMeta(spark, root).getInt("n_docbuckets")
-    val touchedLens: Set[Long] = ids
-      .select(docBucket(col("doc_id"), nDocBuckets)
-        .cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    Some(rewrite(staged, "doclens", "docbucket", touchedLens))
+    val nDocBuckets = IS.readMeta(spark, root).getInt("n_docbuckets")
+    Some(rewrite(staged, "doclens", "docbucket",
+      IS.routeKeys(ids, docBucket(col("doc_id"), nDocBuckets))))
   }
 
-  /** The probed postings read both indexed searches serve from,
-    * planned from the snapshot `snap` (the probed buckets' files come
-    * from the current commit — staged/orphaned files from an
-    * interrupted maintenance op are invisible by construction), with
-    * the merge-on-read delete sidecar applied whenever one exists.
+  /** The indexed BM25 scoring both searches share: one snapshot and
+    * meta read; the probed postings of the UNION of the queries' terms
+    * (only their `bucket=` files, planned from the snapshot, so
+    * staged/orphaned files of an interrupted maintenance op are
+    * invisible; the term IN-list pushes to parquet), minus the
+    * merge-on-read deletes BEFORE the df aggregate so idf reflects the
+    * surviving corpus exactly; the |terms|-bounded df collect; and the
+    * per-doc pivot over the union vocabulary (doc lengths ride the
+    * posting rows). Returns the pivoted frame (doc_id, dl, _tf_i...)
+    * and, for one query's terms, its (n_terms_matched, bm25) columns:
+    * [[bm25Score]]'s fixed-order fold with the same expression shapes
+    * (df as double, StrictMath log, same division order), so scores
+    * are float-identical to it.
     */
-  private def servePostings(spark: org.apache.spark.sql.SparkSession,
-                            root: String,
-                            snap: Seq[graft.sources.IndexCommits.Entry],
-                            buckets: Seq[Long],
-                            terms: Seq[String]): DataFrame = {
-    val IC = graft.sources.IndexCommits
-    val files = IC.filesOfParts(snap, "postings", buckets.toSet)
-    val base =
-      if (files.isEmpty)
-        spark.read.parquet(s"$root/postings").where(lit(false))
-      else spark.read.option("basePath", s"$root/postings")
-        .parquet(files: _*)
-    val probed = base.where(col("bucket").isin(buckets: _*) &&
-      col("term").isin(terms: _*))
-    val delFiles = IC.filesOf(snap, "deletes")
-    // merge-on-read: drop doomed docs BEFORE the df aggregate — idf
-    // then reflects the surviving corpus exactly (the delete list is
-    // small and broadcasts)
-    if (delFiles.nonEmpty)
-      probed.join(
-        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
-        Seq("doc_id"), "left_anti")
-    else probed
-  }
-
-  /** BM25 top-k served from a PERSISTED inverted index — results
-    * FLOAT-IDENTICAL to [[bm25TopK]] over the same corpus (the
-    * `bm25_index_search` gate shares `bm25_topk`'s oracle): the score
-    * replays bm25Score's fixed-order per-term fold with the same
-    * expression shapes (df as double, StrictMath log, same division
-    * order), with per-doc term frequencies pivoted from the postings
-    * instead of recomputed from text. Only the probed `bucket=`
-    * partitions are scanned; the per-term df collect is |terms|-
-    * bounded; doc lengths ride the posting rows themselves, so the
-    * serving path touches NOTHING corpus-sized — cost is probed
-    * posting volume alone.
-    */
-  def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
-                        root: String, terms: Seq[String], k: Int,
-                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val meta = readBmMeta(spark, root)
+  private def scoreIndexed(spark: org.apache.spark.sql.SparkSession,
+                           root: String, termLists: Seq[Seq[String]],
+                           k1: Double, b: Double)
+    : (DataFrame, Seq[String] => (Column, Column)) = {
+    val snap = IC.readEntries(spark, root)
+    val meta = IS.readMeta(spark, root)
     val nDocs = meta.getLong("n_docs").toDouble
     val avgdl = meta.getLong("sum_dl").toDouble / nDocs
     val nBuckets = meta.getInt("n_buckets")
-    val buckets = terms.map(t =>
+    val unionTerms = termLists.flatten.distinct
+    val buckets = unionTerms.map(t =>
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
-    val post = servePostings(spark, root, snap, buckets, terms)
-    // per-term document frequency: |terms|-bounded collect
+    val post = IS.withoutDeleted(
+      IS.readKind(spark, root, "postings",
+          IC.filesOfParts(snap, "postings", buckets.toSet))
+        .where(col("bucket").isin(buckets: _*) &&
+          col("term").isin(unionTerms: _*)),
+      snap, BmStore, "doc_id")
     val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val pivots = terms.zipWithIndex.map { case (t, i) =>
+    val pivots = unionTerms.zipWithIndex.map { case (t, i) =>
       max(when(col("term") === t, col("tf"))).as(s"_tf_$i")
     } :+ max(col("dl")).as("dl") // norm inlined on the posting rows
     val perDoc = post.groupBy("doc_id")
       .agg(pivots.head, pivots.tail: _*)
-    // the SAME fixed-order fold as bm25Score — float-identical
-    val score = terms.indices.foldLeft(lit(0.0)) { (acc, i) =>
-      val tf = coalesce(col(s"_tf_$i"), lit(0)).cast("double")
-      val dfi = lit(dfMap.getOrElse(terms(i), 0L).toDouble)
-      val idf = log(lit(1.0) + (lit(nDocs) - dfi + 0.5) / (dfi + 0.5))
-      acc + idf * tf * (k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
-    }
-    val nMatched = terms.indices.foldLeft(lit(0)) { (acc, i) =>
-      acc + when(coalesce(col(s"_tf_$i"), lit(0)) > 0, 1).otherwise(0)
-    }
+    def tfOf(t: String): Column =
+      coalesce(col(s"_tf_${unionTerms.indexOf(t)}"), lit(0))
+    (perDoc, terms => {
+      val nMatched = terms.foldLeft(lit(0)) { (acc, t) =>
+        acc + when(tfOf(t) > 0, 1).otherwise(0)
+      }
+      val score = terms.foldLeft(lit(0.0)) { (acc, t) =>
+        val tf = tfOf(t).cast("double")
+        val dfi = lit(dfMap.getOrElse(t, 0L).toDouble)
+        val idf = log(lit(1.0) + (lit(nDocs) - dfi + 0.5) / (dfi + 0.5))
+        acc + idf * tf * (k1 + 1.0) /
+          (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
+      }
+      (nMatched, score)
+    })
+  }
+
+  /** BM25 top-k served from a PERSISTED inverted index — results
+    * FLOAT-IDENTICAL to [[bm25TopK]] over the same corpus (the
+    * `bm25_index_search` gate shares `bm25_topk`'s oracle): the
+    * one-query case of [[bm25SearchIndexedBatch]]'s scoring, with per-doc
+    * term frequencies pivoted from the postings instead of recomputed
+    * from text. Only the probed `bucket=` partitions are scanned; the
+    * per-term df collect is |terms|-bounded; doc lengths ride the
+    * posting rows themselves, so the serving path touches NOTHING
+    * corpus-sized — cost is probed posting volume alone.
+    */
+  def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
+                        root: String, terms: Seq[String], k: Int,
+                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val (perDoc, score) = scoreIndexed(spark, root, Seq(terms), k1, b)
+    val (nMatched, bm25) = score(terms)
     perDoc.select(col("doc_id"), col("dl"),
-        nMatched.as("n_terms_matched"), score.as("bm25"))
+        nMatched.as("n_terms_matched"), bm25.as("bm25"))
       .where(col("n_terms_matched") > 0)
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(k)
@@ -2166,13 +2023,14 @@ object TextOps {
     * The probed buckets / term IN-list are the UNION of all queries'
     * terms (still partition pruning + pushdown), the per-doc pivot is
     * over the union vocabulary, and each query's score is its OWN
-    * fixed-order fold over its own term list — same expression shapes
-    * as [[bm25SearchIndexed]], so every query's rows are FLOAT-
-    * IDENTICAL to its single-query search (the `hybrid_retrieval_batch`
-    * gate pins this). Per-query candidates fan out via one generated
-    * struct array (|queries| entries per MATCHED doc, never per
-    * posting); ranks are a query-partitioned window, k rows per query
-    * survive. Deletes are honored exactly as in the single-query path.
+    * fixed-order fold over its own term list — the scoring
+    * [[bm25SearchIndexed]] runs for one query, so every query's rows
+    * are FLOAT-IDENTICAL to its single-query search (the
+    * `hybrid_retrieval_batch` gate pins this). Per-query candidates
+    * fan out via one generated struct array (|queries| entries per
+    * MATCHED doc, never per posting); ranks are a query-partitioned
+    * window, k rows per query survive. Deletes are honored exactly as
+    * in the single-query path.
     * Output: (query_id, doc_id, dl, n_terms_matched, bm25, bm_rank).
     */
   def bm25SearchIndexedBatch(spark: org.apache.spark.sql.SparkSession,
@@ -2180,42 +2038,12 @@ object TextOps {
                              queries: Seq[(Long, Seq[String])], k: Int,
                              k1: Double = 1.2, b: Double = 0.75)
     : DataFrame = {
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
-    val meta = readBmMeta(spark, root)
-    val nDocs = meta.getLong("n_docs").toDouble
-    val avgdl = meta.getLong("sum_dl").toDouble / nDocs
-    val nBuckets = meta.getInt("n_buckets")
-    val unionTerms = queries.flatMap(_._2).distinct
-    val buckets = unionTerms.map(t =>
-      java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
-    val post = servePostings(spark, root, snap, buckets, unionTerms)
-    val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val pivots = unionTerms.zipWithIndex.map { case (t, i) =>
-      max(when(col("term") === t, col("tf"))).as(s"_tf_$i")
-    } :+ max(col("dl")).as("dl") // norm inlined on the posting rows
-    val perDoc = post.groupBy("doc_id")
-      .agg(pivots.head, pivots.tail: _*)
-    def tfOf(t: String): Column = {
-      val i = unionTerms.indexOf(t)
-      coalesce(col(s"_tf_$i"), lit(0))
-    }
-    // one struct per query per matched doc: each query's score is its
-    // own fixed-order fold — identical float sequence to the
-    // single-query search over the same stored values
+    val (perDoc, score) = scoreIndexed(spark, root, queries.map(_._2), k1, b)
+    // one struct per query per matched doc
     val qStructs = queries.map { case (qid, terms) =>
-      val score = terms.foldLeft(lit(0.0)) { (acc, t) =>
-        val tf = tfOf(t).cast("double")
-        val dfi = lit(dfMap.getOrElse(t, 0L).toDouble)
-        val idf = log(lit(1.0) + (lit(nDocs) - dfi + 0.5) / (dfi + 0.5))
-        acc + idf * tf * (k1 + 1.0) /
-          (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
-      }
-      val nMatched = terms.foldLeft(lit(0)) { (acc, t) =>
-        acc + when(tfOf(t) > 0, 1).otherwise(0)
-      }
+      val (nMatched, bm25) = score(terms)
       struct(lit(qid).as("query_id"),
-        nMatched.as("n_terms_matched"), score.as("bm25"))
+        nMatched.as("n_terms_matched"), bm25.as("bm25"))
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")

@@ -46,7 +46,9 @@ import org.apache.spark.sql.functions.col
   * census/quantizer sidecars (meta, bloomidx, centroids, codebooks)
   * stay plain directories: they are advisory/bounded and their
   * in-place overwrite windows are guarded by the staleness census,
-  * never by served data.
+  * never by served data. What both stores do AROUND a commit — the
+  * meta census, the append dup-guard bloom and the delete-sidecar
+  * protocol — lives in [[IndexStore]].
   */
 object IndexCommits {
   /** One live data file of a snapshot. partId = the value of the

@@ -1,0 +1,342 @@
+package graft.sources
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import IndexCommits.Entry
+
+/** The store-side formats and protocols the persisted ANN
+  * (SimilarityOps.indexWrite) and BM25 (TextOps.invertedIndexWrite)
+  * stores share, one implementation each, parameterised by a store's
+  * [[Layout]] and never by which store calls:
+  *
+  *   root/meta      one census row: the store's build parameters plus
+  *     (count, order-free id checksum) and any additive sums —
+  *     maintained + on append and - on delete (the checksum mod p), so
+  *     [[isStale]] gates serving with one aggregate over the corpus;
+  *   root/bloomidx  the packed id Bloom of the append dup-guard
+  *     ([[appendGuarded]]);
+  *   root/deletes   the merge-on-read delete sidecar: the idempotent
+  *     record ([[freshDeletes]], [[commitDeletes]]), the serving
+  *     anti-join ([[withoutDeleted]]) and the compact policy
+  *     ([[compactDue]]).
+  *
+  * meta and bloomidx are kilobyte-bounded and read and written on the
+  * driver ([[TinyParquet]]); the delete sidecar is small append-mode
+  * parquet registered in the snapshot. [[IndexCommits]] stays the
+  * snapshot / commit protocol underneath; the operator files keep
+  * training, encoding, scoring and routing (`list_id`, `bucket`,
+  * `docbucket`) and their own thresholds.
+  */
+private[graft] object IndexStore {
+  /** What one store's sidecars hold.
+    *
+    * @param id       the id column of its data and delete files
+    * @param subs     the subdirectories its snapshot manages (the
+    *                 vacuum set, compact staging included)
+    * @param meta     its meta fields in column order (name ->
+    *                 TinyParquet kind)
+    * @param count    the meta field holding the corpus count
+    * @param checksum the meta field holding the id checksum
+    * @param sums     additive meta fields -> the column a census sums
+    */
+  final case class Layout(id: String, subs: Seq[String],
+                          meta: Seq[(String, String)], count: String,
+                          checksum: String,
+                          sums: Seq[(String, String)] = Nil)
+
+  private def hconf(spark: SparkSession): Configuration =
+    spark.sparkContext.hadoopConfiguration
+
+  // ------------------------------------------------------------------
+  // Census and meta
+  // ------------------------------------------------------------------
+
+  /** Census modulus: Σ pmod(hash(id), p) mod p is order-free and
+    * ADDITIVE across disjoint parts, so appends merge it with + and
+    * deletes with - (both mod p) without rescanning the base.
+    */
+  private val CensusMod = 1000000007L
+
+  /** The census aggregates over rows carrying `id` (and the layout's
+    * summed columns), each named after the meta field it updates. The
+    * checksum sum accumulates in decimal(38,0), so it cannot overflow
+    * long at any corpus size before the final mod.
+    */
+  private def censusAggs(layout: Layout, id: Column): Seq[Column] =
+    count(lit(1)).cast("long").as(layout.count) +:
+      layout.sums.map { case (field, c) =>
+        coalesce(sum(col(c).cast("long")), lit(0L)).as(field)
+      } :+
+      coalesce(pmod(sum(pmod(hash(id).cast("long"),
+          lit(CensusMod)).cast("decimal(38,0)")), lit(CensusMod)),
+        lit(0).cast("decimal(38,0)")).cast("long").as(layout.checksum)
+
+  /** `df` with its census observed on whatever write runs it — the
+    * census rides the write's own pass, no second scan. Read it with
+    * [[observed]] after the write.
+    */
+  def observeCensus(df: DataFrame, obs: Observation, layout: Layout,
+                    id: Column): DataFrame = {
+    val aggs = censusAggs(layout, id)
+    df.observe(obs, aggs.head, aggs.tail: _*)
+  }
+
+  /** An observed census, keyed by meta field. */
+  def observed(obs: Observation): Map[String, Long] =
+    obs.get.map { case (field, v) => field -> v.asInstanceOf[Long] }
+
+  /** The census of `df`, keyed by meta field: one aggregate job. */
+  def census(df: DataFrame, layout: Layout, id: Column): Map[String, Long] = {
+    val aggs = censusAggs(layout, id)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    r.schema.fieldNames.zipWithIndex.map { case (f, i) => f -> r.getLong(i) }
+      .toMap
+  }
+
+  /** The store's one-row meta sidecar; fails naming `root/meta` when
+    * there is none.
+    */
+  def readMeta(spark: SparkSession, root: String): TinyParquet.TRow = {
+    val rows = TinyParquet.read(hconf(spark), s"$root/meta")
+    require(rows.nonEmpty,
+      s"missing index meta at $root/meta — not an index store?")
+    rows.head
+  }
+
+  /** Write the meta row: `values` must name every field of the layout. */
+  def writeMeta(spark: SparkSession, root: String, layout: Layout,
+                values: Map[String, Any]): Unit =
+    TinyParquet.write(hconf(spark), s"$root/meta", layout.meta,
+      Seq(layout.meta.map { case (field, _) => values(field) }))
+
+  /** Rewrite meta from `old` with a census `delta` added (sign 1) or
+    * subtracted (sign -1); the checksum stays mod p. Commutative, so
+    * the result equals the census recomputed over the new corpus.
+    */
+  private def updateMeta(spark: SparkSession, root: String, layout: Layout,
+                         old: TinyParquet.TRow, delta: Map[String, Long],
+                         sign: Int): Unit =
+    writeMeta(spark, root, layout, layout.meta.map { case (field, _) =>
+      val v = old.getLong(field) + sign * delta.getOrElse(field, 0L)
+      field ->
+        (if (field == layout.checksum) java.lang.Math.floorMod(v, CensusMod)
+         else v)
+    }.toMap)
+
+  /** Has the corpus drifted since the store was built? Compares meta's
+    * (count, checksum) against the live corpus — one hash aggregate,
+    * the cheap gate a serving path runs before trusting a stored
+    * index. True = rebuild needed.
+    */
+  def isStale(corpus: DataFrame, idCol: String, root: String,
+              layout: Layout): Boolean = {
+    val meta = readMeta(corpus.sparkSession, root)
+    val live = census(corpus, layout.copy(sums = Nil), col(idCol))
+    meta.getLong(layout.count) != live(layout.count) ||
+      meta.getLong(layout.checksum) != live(layout.checksum)
+  }
+
+  // ------------------------------------------------------------------
+  // Dup-guard Bloom
+  // ------------------------------------------------------------------
+
+  /** Bloom sizing: 1<<24 bits / 3 hashes give ~6e-4 false positives
+    * at 500k ids (positions from IoOps.bloomPositions, the hash family
+    * of the file-skipping index). Stored PACKED, 64 positions per
+    * word, so root/bloomidx holds at most bits/64 rows (~2 MB) at any
+    * corpus size, and its bit_or merge is commutative and idempotent.
+    */
+  private val BloomBits = 1 << 24
+  private val BloomHashes = 3
+
+  /** Keyed on hash(id) cast long — NOT a raw numeric cast — so ids of
+    * any type (string, UUID, numeric) hash to real positions instead
+    * of casting to null and silently disarming the guard.
+    */
+  private def bloomPositions(idCol: String): Column =
+    IoOps.bloomPositions(hash(col(idCol)).cast("long"), BloomBits,
+      BloomHashes)
+
+  /** Packed bitmap words (widx, word) over the ids of `ids`. */
+  private def bloomWords(ids: DataFrame, idCol: String): Seq[(Long, Long)] =
+    ids.select(explode(bloomPositions(idCol)).as("pos"))
+      .select(expr("pos DIV 64").as("widx"),
+        expr("shiftleft(1L, CAST(pmod(pos, 64) AS INT))").as("w"))
+      .groupBy("widx").agg(expr("bit_or(w)").as("word"))
+      .select(col("widx").cast("long"), col("word").cast("long"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+
+  private def readBloom(spark: SparkSession,
+                        root: String): Seq[(Long, Long)] =
+    TinyParquet.read(hconf(spark), s"$root/bloomidx")
+      .map(r => (r.getLong("widx"), r.getLong("word")))
+
+  private def writeBloom(spark: SparkSession, root: String,
+                         words: Seq[(Long, Long)]): Unit =
+    TinyParquet.write(hconf(spark), s"$root/bloomidx",
+      Seq("widx" -> "long", "word" -> "long"),
+      words.map { case (w, v) => Seq(w, v) })
+
+  /** (Re)build root/bloomidx over the ids of `ids` — at build time and
+    * after a compaction retires ids.
+    */
+  def buildBloom(root: String, ids: DataFrame, idCol: String): Unit =
+    writeBloom(ids.sparkSession, root, bloomWords(ids, idCol))
+
+  /** Ids of `ids` whose EVERY hash position is set in `words` — the
+    * dup SUSPECTS (real dups plus the bounded false-positive tail); an
+    * id that misses any position is provably new. Delta-sized work:
+    * one explode and one join the bitmap broadcasts through as a local
+    * relation (no scan job).
+    */
+  private def bloomSuspects(ids: DataFrame, idCol: String,
+                            words: Seq[(Long, Long)]): DataFrame =
+    ids.select(col(idCol), explode(bloomPositions(idCol)).as("pos"))
+      .select(col(idCol), expr("pos DIV 64").as("widx"),
+        expr("shiftleft(1L, CAST(pmod(pos, 64) AS INT))").as("m"))
+      .join(broadcast(ids.sparkSession.createDataFrame(words)
+        .toDF("widx", "word")), Seq("widx"), "left")
+      .withColumn("_hit",
+        coalesce(col("word").bitwiseAND(col("m")) =!= 0L, lit(false)))
+      .groupBy(idCol)
+      .agg(sum(when(col("_hit"), 0).otherwise(1)).as("_miss"))
+      .where(col("_miss") === 0).select(idCol)
+
+  /** The guarded append, both stores' ingest skeleton. The delta's
+    * distinct `idCol` values check against the Bloom, read ONCE on the
+    * driver; only the suspects reach `arbitrate`, the store's exact
+    * check over snapshot-pruned files, which returns any confirmed
+    * duplicate rows (the ANN store reads the suspects' own `list_id=`
+    * files — their lists recomputed from the stored centroids — and
+    * then the unflushed applog; the BM25 store reads the suspects'
+    * `docbucket=` doclens files). A deleted but not yet compacted id
+    * is still physically present and rejected until compaction
+    * removes it. Then ONE commit over `listing`
+    * ([[IndexCommits.commitWritten]]): `write` lands the delta and
+    * returns its observed census, meta goes additive from `old`, and
+    * the delta's ids fold into the Bloom (a driver OR with the words
+    * already read). Returns the committed entries.
+    *
+    * @param who    names the rejected id in the error ("op: id_col")
+    * @param remedy what appends must carry instead, and how to fix it
+    */
+  def appendGuarded(root: String, snap: Seq[Entry], layout: Layout,
+                    old: TinyParquet.TRow, delta: DataFrame,
+                    idCol: String, who: String, remedy: String,
+                    listing: => Seq[Entry])
+                   (arbitrate: DataFrame => Array[Row])
+                   (write: => Map[String, Long]): Seq[Entry] = {
+    val spark = delta.sparkSession
+    val words = readBloom(spark, root)
+    val suspects =
+      bloomSuspects(delta.select(col(idCol)).distinct(), idCol, words)
+    val dup =
+      if (suspects.limit(1).isEmpty) Array.empty[Row] else arbitrate(suspects)
+    require(dup.isEmpty,
+      s"$who ${dup.headOption.map(_.get(0)).getOrElse("")} is already " +
+        s"indexed — appends must carry $remedy")
+    IndexCommits.commitWritten(spark, root, snap, listing) {
+      val census = write
+      updateMeta(spark, root, layout, old, census, 1)
+      val merged = scala.collection.mutable.LongMap.from(words)
+      bloomWords(delta.select(col(idCol)), idCol).foreach { case (w, v) =>
+        merged(w) = merged.getOrElse(w, 0L) | v
+      }
+      writeBloom(spark, root, merged.toSeq.sortBy(_._1))
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // Delete sidecar
+  // ------------------------------------------------------------------
+
+  /** The rows of `doomed`, deduplicated on `idCol`, whose `key` the
+    * snapshot's delete sidecar does not record yet — None when every
+    * id is already recorded, and the caller then returns with no
+    * commit: a re-deleted id must not subtract the census twice. The
+    * recorded ids broadcast (sidecar-sized, never corpus-sized).
+    */
+  def freshDeletes(snap: Seq[Entry], layout: Layout, doomed: DataFrame,
+                   idCol: String, key: Column): Option[DataFrame] = {
+    val files = IndexCommits.filesOf(snap, "deletes")
+    val batch = doomed.dropDuplicates(Seq(idCol))
+    val fresh =
+      if (files.isEmpty) batch
+      else batch.join(
+        broadcast(doomed.sparkSession.read.parquet(files: _*)
+          .select(col(layout.id).as("_exid"))),
+        key === col("_exid"), "left_anti")
+    if (fresh.limit(1).isEmpty) None else Some(fresh)
+  }
+
+  /** Append `rows` to the delete sidecar and commit, with meta going
+    * subtractive from `old` by `census` — the census of the ids the
+    * rows retire, evaluated after the write so a census observed on
+    * it is complete.
+    */
+  def commitDeletes(root: String, snap: Seq[Entry], layout: Layout,
+                    old: TinyParquet.TRow, rows: DataFrame)
+                   (census: => Map[String, Long]): Unit = {
+    val spark = rows.sparkSession
+    IndexCommits.commitWritten(spark, root, snap,
+        IndexCommits.listKind(spark, root, "deletes")) {
+      rows.write.mode("append").parquet(s"$root/deletes")
+      updateMeta(spark, root, layout, old, census, -1)
+    }
+  }
+
+  /** Merge-on-read: `df` minus the ids the snapshot's delete sidecar
+    * records, by ONE anti-join on `idCol` the small sidecar broadcasts
+    * through; `df` itself when nothing is recorded.
+    */
+  def withoutDeleted(df: DataFrame, snap: Seq[Entry], layout: Layout,
+                     idCol: String): DataFrame = {
+    val files = IndexCommits.filesOf(snap, "deletes")
+    if (files.isEmpty) df
+    else df.join(
+      broadcast(df.sparkSession.read.parquet(files: _*)
+        .select(col(layout.id).as(idCol))),
+      Seq(idCol), "left_anti")
+  }
+
+  /** The compact policy of both maintain paths: recorded deletes reach
+    * `fraction` of the pre-delete corpus. Meta's count is the
+    * post-delete census, so the denominator is live + pending. One
+    * footer count; meta is read only when deletes are pending.
+    */
+  def compactDue(spark: SparkSession, root: String, snap: Seq[Entry],
+                 layout: Layout, fraction: Double): Boolean = {
+    val pending = IndexCommits.pendingDeletes(spark, snap)
+    pending > 0 && {
+      val live = readMeta(spark, root).getLong(layout.count)
+      pending.toDouble / (live + pending) >= fraction
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // Snapshot-planned reads
+  // ------------------------------------------------------------------
+
+  /** The distinct values of `key` over `df` as a driver set — the
+    * route keys (list ids, term buckets, doc buckets) a read or a
+    * mutation touches, bounded by the key space, never by `df`.
+    */
+  def routeKeys(df: DataFrame, key: Column): Set[Long] =
+    df.select(key.cast("long")).distinct().collect().map(_.getLong(0)).toSet
+
+  /** The snapshot files `files` of `kind`, read with root/<kind> as the
+    * partition base path; None when there are none.
+    */
+  def readFiles(spark: SparkSession, root: String, kind: String,
+                files: Seq[String]): Option[DataFrame] =
+    if (files.isEmpty) None
+    else Some(spark.read.option("basePath", s"$root/$kind")
+      .parquet(files: _*))
+
+  /** [[readFiles]], or an empty frame of the kind's schema. */
+  def readKind(spark: SparkSession, root: String, kind: String,
+               files: Seq[String]): DataFrame =
+    readFiles(spark, root, kind, files).getOrElse(
+      spark.read.parquet(s"$root/$kind").where(lit(false)))
+}

@@ -444,92 +444,15 @@ object IoOps {
       lit(BloomMod)) % lit(bits.toLong)
 
   /** All `hashes` Bloom positions of a key as an array Column — shared
-    * by [[bloomIndex]]'s one-scan build and the streaming incremental
-    * maintenance twin (graft.streaming.StreamingOps.BloomIndexState).
+    * by [[bloomIndex]]'s one-scan build, the streaming incremental
+    * maintenance twin (graft.streaming.StreamingOps.BloomIndexState)
+    * and the index stores' append dup-guard (IndexStore).
     */
   private[graft] def bloomPositions(key: Column, bits: Int,
                                     hashes: Int): Column = {
     require(hashes >= 1 && hashes <= BloomMults.size,
       s"hashes must be in [1, ${BloomMults.size}]")
     array((0 until hashes).map(bloomPos(key, _, bits)): _*)
-  }
-
-  /** Packed-bitmap rows (widx, word) of a Bloom filter over `key` —
-    * the shared dup-guard build for the persisted index appends
-    * (SimilarityOps.indexAppend / TextOps.invertedIndexAppend). The
-    * bitmap is PACKED 64 positions per word, so its row count is
-    * bounded by bits/64 regardless of corpus size, and the bit_or
-    * merge is commutative AND idempotent — append batching/order can
-    * never change it. `key` must be the same expression at build and
-    * probe time (the index ops key on hash(id) cast long, so ids of
-    * ANY type — string/UUID/numeric — hash to real positions instead
-    * of casting to null and silently disarming the guard).
-    */
-  private[graft] def dupBloomWords(ids: DataFrame, key: Column,
-                                   bits: Int, hashes: Int): DataFrame =
-    ids.select(explode(bloomPositions(key, bits, hashes)).as("pos"))
-      .select(expr("pos DIV 64").as("widx"),
-        expr("shiftleft(1L, CAST(pmod(pos, 64) AS INT))").as("w"))
-      .groupBy("widx").agg(expr("bit_or(w)").as("word"))
-
-  /** Ids from `ids` whose EVERY hash position is set in the packed
-    * bitmap `words` — the dup SUSPECTS (real dups plus the bounded
-    * false-positive tail); an id that misses any position is provably
-    * new. Delta-sized work: one explode + one broadcast join against
-    * the bits/64-row bitmap, nothing corpus-sized.
-    */
-  private[graft] def dupBloomSuspects(ids: DataFrame, idCol: String,
-                                      key: Column, words: DataFrame,
-                                      bits: Int, hashes: Int): DataFrame =
-    ids.select(col(idCol),
-        explode(bloomPositions(key, bits, hashes)).as("pos"))
-      .select(col(idCol), expr("pos DIV 64").as("widx"),
-        expr("shiftleft(1L, CAST(pmod(pos, 64) AS INT))").as("m"))
-      .join(broadcast(words), Seq("widx"), "left")
-      .withColumn("_hit",
-        coalesce(col("word").bitwiseAND(col("m")) =!= 0L, lit(false)))
-      .groupBy(idCol)
-      .agg(sum(when(col("_hit"), 0).otherwise(1)).as("_miss"))
-      .where(col("_miss") === 0).select(idCol)
-
-  /** Driver-side IO for the packed dup-guard bloom sidecar (bits/64
-    * rows by construction — kilobytes): read once per mutation, merge
-    * deltas with a driver OR, write without a Spark job. Shared by
-    * both index suites (SimilarityOps / TextOps).
-    */
-  private[graft] def readBloomWordsLocal(spark: SparkSession,
-                                         path: String): Seq[(Long, Long)] =
-    TinyParquet.read(spark.sparkContext.hadoopConfiguration, path)
-      .map(r => (r.getLong("widx"), r.getLong("word")))
-
-  private[graft] def writeBloomSidecar(spark: SparkSession, path: String,
-                                       rows: Seq[(Long, Long)]): Unit =
-    TinyParquet.write(spark.sparkContext.hadoopConfiguration, path,
-      Seq("widx" -> "long", "word" -> "long"),
-      rows.map { case (w, v) => Seq(w, v) })
-
-  private[graft] def writeBloomSidecar(spark: SparkSession, path: String,
-                                       words: DataFrame): Unit =
-    writeBloomSidecar(spark, path,
-      words.select(col("widx").cast("long"), col("word").cast("long"))
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-
-  /** The packed bloom as a LOCAL-relation DataFrame: the suspects join
-    * broadcasts it with no parquet scan job.
-    */
-  private[graft] def localWordsDf(spark: SparkSession,
-                                  rows: Seq[(Long, Long)]): DataFrame =
-    spark.createDataFrame(rows).toDF("widx", "word")
-
-  /** Driver-side OR-merge of delta bloom words into the base words. */
-  private[graft] def mergeBloomWords(base: Seq[(Long, Long)],
-                                     delta: Seq[(Long, Long)])
-    : Seq[(Long, Long)] = {
-    val merged = scala.collection.mutable.LongMap.from(base)
-    delta.foreach { case (w, v) =>
-      merged(w) = merged.getOrElse(w, 0L) | v
-    }
-    merged.toSeq.sortBy(_._1)
   }
 
   private def bloomPosFn(key: Long, i: Int, bits: Int): Long = {

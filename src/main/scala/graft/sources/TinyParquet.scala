@@ -116,6 +116,13 @@ object TinyParquet {
   /** The non-empty part-* files a read serves under `p` (or `p` itself
     * when it is a file), newest generation only: Spark-written dirs
     * carry generation 0 throughout and are read whole.
+    *
+    * A stamped generation is ONE file by construction ([[write]]); two
+    * files of the newest one mean two writers raced — both took the
+    * same generation from their listings — and which census is
+    * current is unknowable, so the read fails naming the dir and the
+    * generation instead of serving an arbitrary row. Single-writer per
+    * store is the design assumption ([[IndexCommits]]).
     */
   private def liveParts(fs: FileSystem, p: Path): Seq[Path] =
     if (!fs.getFileStatus(p).isDirectory) Seq(p)
@@ -126,7 +133,14 @@ object TinyParquet {
         .map(_.getPath)
       val newest = parts.map(f => generation(f.getName))
         .foldLeft(0L)(math.max)
-      parts.filter(f => generation(f.getName) == newest)
+      val live = parts.filter(f => generation(f.getName) == newest)
+      if (newest > 0 && live.size > 1)
+        throw new IllegalStateException(
+          s"TinyParquet: $p holds ${live.size} part files of generation " +
+            s"$newest (${live.map(_.getName).sorted.mkString(", ")}) — " +
+            "concurrent writers published the same generation; keep one " +
+            "writer per store and rewrite the sidecar")
+      live
     }
 
   /** One row of a tiny sidecar, with Row-like typed getters. */

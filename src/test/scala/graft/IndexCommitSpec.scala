@@ -20,7 +20,9 @@ import graft.sources.{IndexCommits, TinyParquet}
   *     buffered and the direct append path alike;
   *   - the snapshot is the only store layout: a root without one fails
   *     every entry point by name;
-  *   - a sidecar read serves only the newest TinyParquet generation;
+  *   - a sidecar read serves only the newest TinyParquet generation,
+  *     and fails by name when racing writers stamped one generation
+  *     twice;
   *   - BM25 append dup-arbitration reads ONLY the suspects'
   *     `docbucket=` doclens partitions (plan-captured) — the sparse
   *     twin of the ANN side's list-pruned arbitration.
@@ -298,6 +300,36 @@ class IndexCommitSpec extends SparkSpec {
     val got = SimilarityOps.readIndexCentroids(spark, root)
     assert(got.map(_._1) === shifted.map(_._1))
     assert(got.map(_._2.toSeq) === shifted.map(_._2.toSeq))
+  }
+
+  test("TinyParquet fails by name when one stamped generation holds" +
+      " two part files (racing writers) instead of serving either") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val base = java.nio.file.Files.createTempDirectory("graft_ictr")
+    val side = s"$base/side"
+    val fields = Seq("k" -> "long")
+    TinyParquet.write(hconf, side, fields, Seq(Seq(1L)))
+    TinyParquet.write(hconf, side, fields, Seq(Seq(2L)))
+    // plant the race: a second writer took the same generation from
+    // its listing and published its own part-g2-* beside the first
+    val g2 = new java.io.File(side).listFiles().toSeq
+      .filter(_.getName.startsWith("part-"))
+    assert(g2.map(_.getName.take(8)) === Seq("part-g2-"))
+    java.nio.file.Files.copy(g2.head.toPath, java.nio.file.Paths.get(side,
+      s"part-g2-${java.util.UUID.randomUUID()}.parquet"))
+    def failsNamingRace(op: => Any): Unit = {
+      val msg = intercept[IllegalStateException](op).getMessage
+      assert(msg.contains(side) && msg.contains("generation 2") &&
+        msg.contains("concurrent writers"), msg)
+    }
+    failsNamingRace(TinyParquet.read(hconf, side))
+    failsNamingRace(TinyParquet.rowCount(hconf, Seq(side)))
+    // generation 0 (a dir Spark wrote) stays multi-file
+    val sparkDir = s"$base/spark"
+    spark.range(4).repartition(2).write.parquet(sparkDir)
+    assert(TinyParquet.read(hconf, sparkDir).map(_.getLong("id")).sorted ===
+      Seq(0L, 1L, 2L, 3L))
+    assert(TinyParquet.rowCount(hconf, Seq(sparkDir)) === 4L)
   }
 
   test("maintenance policies are threshold-gated: below both" +

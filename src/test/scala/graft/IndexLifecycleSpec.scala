@@ -5,8 +5,8 @@ import graft.operators._
 
 /** The round-17 lifecycle-symmetry surface: partition-surgical ANN
   * index compaction, the BM25 index's delete / census / compaction
-  * legs, the batched indexed-BM25 search, and the persisted BPE merge
-  * table. The file-list assertions here are the physical-evidence half
+  * legs, both stores' idempotent delete, the batched indexed-BM25
+  * search, and the persisted BPE merge table. The file-list assertions here are the physical-evidence half
   * of the gate queries' row-identity oracles: compaction must change
   * ONLY the partitions it claims to.
   */
@@ -230,6 +230,43 @@ class IndexLifecycleSpec extends SparkSpec {
       "vec_id", "embedding", root2, buffered = true)
   }
 
+  test("indexDelete is idempotent: duplicate ids in a batch, a" +
+      " re-deleted subset and an overlapping batch retire each id once;" +
+      " a fully repeated batch commits nothing; searches equal the" +
+      " in-memory IVFPQ over the survivors") {
+    val root = java.nio.file.Files.createTempDirectory("graft_annidem")
+      .toString + "/idx"
+    val vecs = annVecs
+    SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
+      k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    def del(ids: Long*): Unit = SimilarityOps.indexDelete(
+      vecs.join(ids.toDF("vec_id"), "vec_id"), "vec_id", root,
+      vecCol = "embedding")
+    def version = graft.sources.IndexCommits.currentVersion(spark, root)
+    del(4, 6, 6, 8) // duplicates inside one batch
+    val v = version
+    del(6, 8) // every id already recorded: no commit
+    assert(version === v)
+    del(8, 10, 10, 12) // overlaps the recorded ids
+    assert(version === v.map(_ + 1))
+    val doomed = Seq(4L, 6L, 8L, 10L, 12L)
+    val survivors = vecs.where(!col("vec_id").isin(doomed: _*))
+    assert(!SimilarityOps.indexIsStale(survivors, "vec_id", root))
+    assert(SimilarityOps.indexIsStale(vecs, "vec_id", root))
+    assert(graft.sources.IndexCommits.pendingDeletes(spark,
+      graft.sources.IndexCommits.readEntries(spark, root)) === doomed.size)
+    val queries = vecs.where(col("vec_id") < 2)
+    val stored = SimilarityOps.indexSearch(queries, root,
+      "vec_id", "embedding", k = 4, nProbe = 2)
+    val mem = SimilarityOps.ivfPqTopKWith(queries, survivors,
+      "vec_id", "vec_id", "embedding", k = 4,
+      SimilarityOps.readIndexCentroids(spark, root),
+      SimilarityOps.readIndexCodebooks(spark, root), nProbe = 2)
+    assert(stored.count() === 8)
+    assert(stored.exceptAll(mem).count() === 0)
+    assert(mem.exceptAll(stored).count() === 0)
+  }
+
   private def bmCorpus = Seq(
     (0L, "spark joins data with hash joins"),
     (1L, "hash tables back the join"),
@@ -284,6 +321,46 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
         r.getDouble(3))).toSeq === want)
+  }
+
+  test("invertedIndexDelete is idempotent: duplicate ids in a batch, a" +
+      " re-deleted subset, an overlapping batch and a never-indexed id" +
+      " retire each indexed doc once; a fully repeated batch commits" +
+      " nothing; searches equal a fresh build over the survivors") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmidem")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+      nBuckets = 16)
+    def del(ids: Long*): Unit =
+      TextOps.invertedIndexDelete(ids.toDF("doc_id"), "doc_id", root)
+    def version = graft.sources.IndexCommits.currentVersion(spark, root)
+    del(0, 3, 3) // duplicates inside one batch
+    val v = version
+    del(3) // every id already recorded: no commit
+    assert(version === v)
+    del(3, 5, 5) // overlaps the recorded ids
+    assert(version === v.map(_ + 1))
+    val doomed = Seq(0L, 3L, 5L)
+    assert(graft.sources.IndexCommits.pendingDeletes(spark,
+      graft.sources.IndexCommits.readEntries(spark, root)) === doomed.size)
+    // a never-indexed id beside a recorded one leaves the census alone
+    del(5, 99)
+    val survivors = bmCorpus.where(!col("doc_id").isin(doomed: _*))
+    assert(!TextOps.invertedIndexIsStale(survivors, "doc_id", root))
+    assert(TextOps.invertedIndexIsStale(bmCorpus, "doc_id", root))
+    val fresh = java.nio.file.Files.createTempDirectory("graft_bmidem2")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(survivors, "doc_id", "text", fresh,
+      nBuckets = 16)
+    val terms = Seq("spark", "join", "hash")
+    def search(r: String) = TextOps.bm25SearchIndexed(spark, r, terms,
+      k = 10).collect().toSeq
+    assert(search(root).nonEmpty)
+    assert(search(root) === search(fresh))
+    def batch(r: String) = TextOps.bm25SearchIndexedBatch(spark, r,
+      Seq(1L -> terms, 2L -> Seq("quick", "hash")), k = 10)
+      .collect().map(_.toString).toSeq.sorted
+    assert(batch(root) === batch(fresh))
   }
 
   test("invertedIndexCompact rewrites only doomed-posting buckets") {
