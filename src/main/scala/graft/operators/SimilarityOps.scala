@@ -843,7 +843,7 @@ object SimilarityOps {
     * on every maintenance tick. Returns (flushed, compacted).
     */
   def indexMaintain(spark: org.apache.spark.sql.SparkSession,
-                    root: String, flushSegments: Int = 16,
+                    root: String, flushSegments: Int = IS.FlushSegments,
                     compactDeletedFraction: Double = 0.1)
     : (Boolean, Boolean) = {
     val snap = IC.readEntries(spark, root)

@@ -1622,28 +1622,25 @@ object TextOps {
     * bucket counts the layout routes by.
     */
   private val BmStore = IS.Layout(id = "doc_id",
-    subs = Seq("postings", "doclens", "deletes", ".compact"),
+    subs = Seq("postings", "doclens", "applog", "deletes", ".compact"),
     meta = Seq("n_docs" -> "long", "sum_dl" -> "long",
       "n_buckets" -> "int", "doc_checksum" -> "long",
       "n_docbuckets" -> "int"),
     count = "n_docs", checksum = "doc_checksum",
     sums = Seq("sum_dl" -> "dl"))
-  // the listing the append diffs around its postings + doclens write
-  private def listBmData(spark: org.apache.spark.sql.SparkSession,
-                         root: String) =
-    IC.listKind(spark, root, "postings", Some("bucket")) ++
-      IC.listKind(spark, root, "doclens", Some("docbucket"))
-
-  /** Write the postings (doc_id, term, tf, dl) of `df` under
-    * root/postings by term `bucket=` in `mode`, one file per touched
-    * bucket, not one per writing task: term-hash buckets are ~uniform
-    * by construction, and a probed search pays file-listing + footer
-    * reads per file in the pruned dirs. dl is constant per doc: the
-    * norm rides the posting row.
+  /** The partitioned kinds and their route keys; an append lands one
+    * log segment of each (root/applog/<kind>), the fold and compaction
+    * move them into the `key=` partitions.
     */
-  private def writePostings(df: DataFrame, idCol: String, textCol: String,
-                            root: String, nBuckets: Int,
-                            mode: String): Unit =
+  private val BmKinds = Seq("postings" -> "bucket", "doclens" -> "docbucket")
+  private val Zstd = Map("compression" -> "zstd")
+
+  /** The postings (doc_id, term, tf, dl, bucket) of `df`: one row per
+    * distinct (doc, term), routed to its term-hash bucket. dl is
+    * constant per doc: the norm rides the posting row.
+    */
+  private def postingsOf(df: DataFrame, idCol: String, textCol: String,
+                         nBuckets: Int): DataFrame =
     df.select(col(idCol).as("doc_id"),
         size(words(col(textCol))).as("dl"),
         explode(words(col(textCol))).as("term"))
@@ -1651,9 +1648,22 @@ object TextOps {
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).cast("int").as("tf"), max(col("dl")).as("dl"))
       .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode(mode).option("compression", "zstd")
-      .partitionBy("bucket").parquet(s"$root/postings")
+
+  /** The rows of `kind` that route to `parts` on its key: those parts'
+    * `key=` files plus the unfolded log segments under the same key
+    * filter (segments are sorted by the key, so parquet row-group
+    * stats prune them), each read as its own frame and unioned by
+    * name. None when no file qualifies.
+    */
+  private def readRouted(spark: org.apache.spark.sql.SparkSession,
+                         root: String, snap: Seq[IC.Entry], kind: String,
+                         parts: Set[Long]): Option[DataFrame] = {
+    val log = IC.logOf(snap, kind)
+    (IS.readFiles(spark, root, kind, IC.filesOfParts(snap, kind, parts)) ++
+      (if (log.isEmpty) None else Some(spark.read.parquet(log: _*))))
+      .map(_.where(col(BmKinds.toMap.apply(kind)).isin(parts.toSeq: _*)))
+      .reduceOption(_ unionByName _)
+  }
 
   /** Persist a BM25 inverted index — the sparse-retrieval sibling of
     * the ANN index lifecycle (SimilarityOps.indexWrite): a 100 TB
@@ -1673,6 +1683,14 @@ object TextOps {
     *     pmod(hash(doc_id), n_docbuckets) — the census/maintenance
     *     table (delete census, exact dup arbitration, both pruned to
     *     the ids' docbuckets); not on the serving path
+    *   root/applog/postings, root/applog/doclens  the append log:
+    *     [[invertedIndexAppend]] lands ONE flat zstd segment per kind,
+    *     the route key (bucket / docbucket) a plain column the rows are
+    *     sorted by, registered under the kind with no part id; every
+    *     read unions the segments behind its bucket / docbucket filter,
+    *     and the fold ([[invertedIndexMaintain]], the append's own log
+    *     bound) and [[invertedIndexCompact]] move them into the
+    *     partitions
     *   root/bloomidx  (widx, word) — a PACKED doc-id Bloom bitmap
     *     (bits/64 rows max, ~2 MB at the 1<<24 default — bounded by
     *     BITS, never by corpus size), the append dup-guard's fast
@@ -1688,7 +1706,8 @@ object TextOps {
     *   root/deletes   (doc_id) merge-on-read delete sidecar
     *     ([[invertedIndexDelete]]), retired by [[invertedIndexCompact]]
     *   root/commits   the snapshot naming every live postings /
-    *     doclens / deletes file (graft.sources.IndexCommits)
+    *     doclens (partition files and log segments) / deletes file
+    *     (graft.sources.IndexCommits)
     *
     * One corpus scan builds everything; the postings shuffle is
     * bounded by distinct (doc, term) pairs, never token count.
@@ -1709,7 +1728,14 @@ object TextOps {
     // a split+size projection with no explode/shuffle; its cost is the
     // text re-read, which page cache absorbs at any scale this sandbox
     // can measure.
-    writePostings(df, idCol, textCol, root, nBuckets, "overwrite")
+    // one file per touched bucket, not one per writing task:
+    // term-hash buckets are ~uniform by construction, and a probed
+    // search pays file-listing + footer reads per file in the pruned
+    // dirs
+    postingsOf(df, idCol, textCol, nBuckets)
+      .repartition(col("bucket"))
+      .write.mode("overwrite").options(Zstd)
+      .partitionBy("bucket").parquet(s"$root/postings")
     // doclens bucketed by doc-id hash: the maintenance table's reads
     // (dup arbitration, delete census) prune to the relevant buckets.
     // The meta census (n_docs, sum_dl, checksum) rides this write as
@@ -1720,7 +1746,7 @@ object TextOps {
         docBucket(col(idCol), DocLenBuckets).as("docbucket")),
         obs, BmStore, col("doc_id"))
       .repartition(col("docbucket"))
-      .write.mode("overwrite").option("compression", "zstd")
+      .write.mode("overwrite").options(Zstd)
       .partitionBy("docbucket").parquet(s"$root/doclens")
     IS.writeMeta(spark, root, BmStore, IS.observed(obs) ++
       Map("n_buckets" -> nBuckets, "n_docbuckets" -> DocLenBuckets))
@@ -1728,7 +1754,8 @@ object TextOps {
     // read plans its file list from the current commit and every
     // maintenance op is an atomic pointer swap. The vacuum retires
     // whatever a previous lifecycle on a reused root left behind.
-    IC.commit(spark, root, listBmData(spark, root))
+    IC.commit(spark, root, BmKinds.flatMap { case (kind, key) =>
+      IC.listKind(spark, root, kind, Some(key)) })
     IC.vacuumConf(spark, root, BmStore.subs)
   }
 
@@ -1736,11 +1763,18 @@ object TextOps {
     * of the retrieval lifecycle, mirroring the ANN index's
     * train-once/append-forever discipline: a new document's postings
     * are DISJOINT from every existing doc's (doc_id is the key), so
-    * they land as new files in the same `bucket=` partitions with no
-    * merge at all; doc lengths append likewise; the census updates
-    * additively. Searches through the appended index are identical to
-    * a one-shot build over the union — postings of disjoint docs just
-    * concatenate (spec-pinned). Delta doc_ids must be NEW, and that is
+    * the delta lands with no merge at all, as ONE postings segment
+    * (sorted by (bucket, term)) and ONE doclens segment (sorted by
+    * docbucket) in the append log — two flat zstd files and one
+    * commit, never a write into the `bucket=` / `docbucket=`
+    * directories; the census updates additively. Searches through the
+    * appended index are identical to a one-shot build over the union —
+    * postings of disjoint docs just concatenate (spec-pinned). Once the
+    * log holds [[graft.sources.IndexStore.FlushSegments]] segments per
+    * kind, the append folds it inline (one partitioned append of the
+    * log's rows into the partitions, once per that many appends), so
+    * the log every read unions stays bounded with no maintenance call.
+    * Delta doc_ids must be NEW, and that is
     * ENFORCED, not just documented: a re-appended doc would silently
     * double-count (duplicate postings rows fanning out through the
     * search pivot, df/n_docs/sum_dl inflated), so the append validates
@@ -1748,7 +1782,8 @@ object TextOps {
     * (bits/64 rows, broadcast; cost rides the DELTA, never the
     * corpus): ids that miss the bloom are provably new, and only
     * bloom HITS (actual dups or ~6e-4 false positives) arbitrate
-    * exactly against doclens. Fails fast on the first confirmed
+    * exactly against doclens (the suspects' `docbucket=` files and the
+    * log's doclens segments). Fails fast on the first confirmed
     * duplicate. A DELETED doc_id counts as still indexed until
     * [[invertedIndexCompact]] physically removes it — re-appending it
     * earlier would be anti-joined invisible by the delete sidecar, so
@@ -1763,16 +1798,17 @@ object TextOps {
     val oldMeta = IS.readMeta(spark, root)
     val nBuckets = oldMeta.getInt("n_buckets")
     val nDocBuckets = oldMeta.getInt("n_docbuckets")
-    IS.appendGuarded(root, snap, BmStore, oldMeta, df, idCol,
+    val next = IS.appendGuarded(root, snap, BmStore, oldMeta, df, idCol,
         "invertedIndexAppend: doc_id",
         "NEW documents only (use invertedIndexDelete + compact, or rebuild)",
-        listBmData(spark, root)) { suspects =>
+        BmKinds.flatMap { case (kind, _) => IC.listLog(spark, root, kind) }
+      ) { suspects =>
       // exact arbitration pruned to the SUSPECTS' own `docbucket=`
-      // partitions (the ANN side's list-pruned discipline) —
-      // suspect-bounded work, never a corpus-sized doclens scan
+      // partitions (the ANN side's list-pruned discipline) plus the
+      // log's doclens segments — suspect-bounded work, never a
+      // corpus-sized doclens scan
       val bkts = IS.routeKeys(suspects, docBucket(col(idCol), nDocBuckets))
-      IS.readFiles(spark, root, "doclens",
-          IC.filesOfParts(snap, "doclens", bkts))
+      readRouted(spark, root, snap, "doclens", bkts)
         .map(_.select(col("doc_id"))
           .join(broadcast(suspects.select(col(idCol).as("doc_id"))),
             Seq("doc_id"), "left_semi")
@@ -1782,7 +1818,10 @@ object TextOps {
       // two tokenize passes by measurement — see invertedIndexWrite's
       // rejection note (the fused single-tokenize build measured slower
       // at sf0.1 and at the 100x rehearsal)
-      writePostings(df, idCol, textCol, root, nBuckets, "append")
+      postingsOf(df, idCol, textCol, nBuckets)
+        .coalesce(1).sortWithinPartitions("bucket", "term")
+        .write.mode("append").options(Zstd)
+        .parquet(s"$root/applog/postings")
       // the delta census rides the doclens write as observed metrics —
       // no separate tokenizing pass over the delta
       val obs = new org.apache.spark.sql.Observation()
@@ -1790,11 +1829,13 @@ object TextOps {
           col(idCol).as("doc_id"), size(words(col(textCol))).as("dl")),
           obs, BmStore, col("doc_id"))
         .withColumn("docbucket", docBucket(col("doc_id"), nDocBuckets))
-        .repartition(col("docbucket"))
-        .write.mode("append").option("compression", "zstd")
-        .partitionBy("docbucket").parquet(s"$root/doclens")
+        .coalesce(1).sortWithinPartitions("docbucket")
+        .write.mode("append").options(Zstd)
+        .parquet(s"$root/applog/doclens")
       IS.observed(obs)
     }
+    if (IC.logOf(next, "postings").size >= IS.FlushSegments)
+      invertedIndexFold(spark, root)
   }
 
   /** Record document deletions against a persisted inverted index —
@@ -1803,36 +1844,39 @@ object TextOps {
     * the postings), [[bm25SearchIndexed]] serves base-minus-deletes
     * through ONE broadcastable anti-join applied BEFORE the df
     * aggregate (so idf reflects the surviving corpus exactly), and
-    * the meta census updates subtractively — n_docs/checksum by
-    * count/-mod-p, sum_dl from the STORED doclens of the doomed ids
-    * (an inner join, so ids never indexed are ignored rather than
-    * corrupting the census). [[invertedIndexCompact]] physically
-    * removes the doomed postings and drops the sidecar.
+    * the meta census updates subtractively. Only INDEXED ids are
+    * recorded: the sidecar rows are the stored doclens rows of the
+    * doomed ids (the doomed ids' `docbucket=` files and the log's
+    * doclens segments), so a never-indexed id is neither recorded nor
+    * subtracted, and a later append of it serves normally. The census
+    * (n_docs, sum_dl, checksum) is observed on that one write.
+    * [[invertedIndexCompact]] physically removes the doomed postings
+    * and drops the sidecar.
     */
   def invertedIndexDelete(doomed: DataFrame, idCol: String,
                           root: String): Unit = {
     val spark = doomed.sparkSession
     val snap = IC.readEntries(spark, root)
     val old = IS.readMeta(spark, root)
-    val nDocBuckets = old.getInt("n_docbuckets")
+    val ids = doomed.select(col(idCol).as("doc_id"))
+    val bkts = IS.routeKeys(ids,
+      docBucket(col("doc_id"), old.getInt("n_docbuckets")))
     // Idempotence (IndexStore.freshDeletes): a re-deleted doc_id must
     // not subtract the census twice (that would permanently corrupt the
     // n_docs/sum_dl/checksum feeding idf/avgdl in every subsequent
     // indexed search and the staleness gate)
-    IS.freshDeletes(snap, BmStore, doomed.select(col(idCol).as("doc_id")),
-        "doc_id", col("doc_id")).foreach { ids =>
-      // census from the STORED doclens of the doomed ids (inner join:
-      // never-indexed ids are ignored, not subtracted) — read pruned to
-      // the doomed ids' `docbucket=` partitions
-      val bkts = IS.routeKeys(ids, docBucket(col("doc_id"), nDocBuckets))
-      val lens = IS.readFiles(spark, root, "doclens",
-          IC.filesOfParts(snap, "doclens", bkts))
-        .getOrElse( // nothing indexed in those buckets
-          ids.select(col("doc_id"), lit(0).as("dl")).where(lit(false)))
-      val census = IS.census(lens.join(broadcast(ids), Seq("doc_id")),
-        BmStore, col("doc_id"))
-      IS.commitDeletes(root, snap, BmStore, old, ids)(census)
-    }
+    readRouted(spark, root, snap, "doclens", bkts)
+      .flatMap(lens => IS.freshDeletes(snap, BmStore,
+        lens.select("doc_id", "dl")
+          .join(broadcast(ids.distinct()), Seq("doc_id"), "left_semi"),
+        "doc_id", col("doc_id")))
+      .foreach { rows =>
+        val obs = new org.apache.spark.sql.Observation()
+        IS.commitDeletes(root, snap, BmStore, old,
+            IS.observeCensus(rows, obs, BmStore, col("doc_id"))
+              .select("doc_id"))(
+          IS.observed(obs))
+      }
   }
 
   /** Has the document corpus drifted since the index was built?
@@ -1846,40 +1890,76 @@ object TextOps {
     IS.isStale(corpus, idCol, root, BmStore)
 
   /** One-call self-maintenance for a persisted inverted index — the
-    * policy layer over [[invertedIndexCompact]], the sparse twin of
-    * SimilarityOps.indexMaintain: COMPACT once recorded deletes reach
-    * `compactDeletedFraction` of the pre-delete corpus (merge-on-read
-    * serving is row-identical at any fraction, but every search pays
-    * the anti-join and the doomed postings' scan volume — and doc
-    * deletes are non-local in a term-partitioned store, so the rewrite
-    * is worth batching until material). Below the threshold this is a
-    * cheap no-op (one snapshot read + one sidecar count), safe on
-    * every maintenance tick. Returns whether a compact ran.
+    * policy layer over [[invertedIndexCompact]] and the log fold, the
+    * sparse twin of SimilarityOps.indexMaintain:
+    *
+    *   - COMPACT once recorded deletes reach `compactDeletedFraction`
+    *     of the pre-delete corpus (merge-on-read serving is
+    *     row-identical at any fraction, but every search pays the
+    *     anti-join and the doomed postings' scan volume — and doc
+    *     deletes are non-local in a term-partitioned store, so the
+    *     rewrite is worth batching until material); the compaction
+    *     folds the append log too;
+    *   - otherwise FOLD the append log once it holds
+    *     [[graft.sources.IndexStore.FlushSegments]] segments per kind
+    *     (the bound the append itself enforces inline): one
+    *     partitioned append of the log's rows into the `bucket=` /
+    *     `docbucket=` partitions.
+    *
+    * Below both thresholds this is a cheap no-op (one snapshot read +
+    * one sidecar count), safe on every maintenance tick. Returns
+    * whether it compacted or folded.
     */
   def invertedIndexMaintain(spark: org.apache.spark.sql.SparkSession,
                             root: String,
                             compactDeletedFraction: Double = 0.1)
     : Boolean = {
-    val doCompact = IS.compactDue(spark, root, IC.readEntries(spark, root),
-      BmStore, compactDeletedFraction)
+    val snap = IC.readEntries(spark, root)
+    val doCompact = IS.compactDue(spark, root, snap, BmStore,
+      compactDeletedFraction)
+    val doFold = !doCompact &&
+      IC.logOf(snap, "postings").size >= IS.FlushSegments
     if (doCompact) invertedIndexCompact(spark, root)
-    doCompact
+    else if (doFold) invertedIndexFold(spark, root)
+    doCompact || doFold
   }
 
-  /** Compact the inverted index's delete sidecar: physically drop the
-    * doomed docs' postings and doclens rows, then remove the sidecar —
-    * meta stays (the census went subtractive at delete time). Unlike
-    * the ANN index, a doc's postings spread across MANY term-hash
-    * `bucket=` partitions (the partition key is the TERM, deletes key
-    * on the DOC), so doc deletes are non-local by construction: the
-    * touched buckets are discovered with one column-pruned
-    * (doc_id, bucket) scan, and only those partitions rewrite — few
-    * doomed docs touch few buckets; bulk deletes degrade gracefully
-    * toward the full rewrite a term-partitioned store fundamentally
-    * requires, which is why this runs on the OPTIMIZE maintenance
-    * cadence, not per delete. Post-compact searches are row-identical
-    * to the pre-compact merge-on-read (the `bm25_index_compact` gate
-    * shares `bm25_index_delete`'s oracle).
+  /** Fold the append log into the partitions: each kind's segment rows
+    * are staged one file per touched `bucket=` / `docbucket=`
+    * partition, moved in beside the partition's own files and
+    * committed by one pointer swap (IndexCommits.maintain) — the
+    * partitioned write an append used to pay per call, paid once per
+    * log. Searches are row-identical before and after.
+    */
+  private def invertedIndexFold(spark: org.apache.spark.sql.SparkSession,
+                                root: String): Unit =
+    IC.maintain(spark, root, BmStore.subs) {
+      val snap = IC.readEntries(spark, root)
+      if (BmKinds.forall { case (kind, _) => IC.logOf(snap, kind).isEmpty })
+        None
+      else Some(BmKinds.foldLeft(snap) { case (es, (kind, key)) =>
+        IC.rewriteParts(spark, root, es, kind, key, Set.empty, Zstd,
+          IC.logOf(snap, kind))(identity)
+      })
+    }
+
+  /** Compact the inverted index's delete sidecar and fold its append
+    * log: physically drop the doomed docs' postings and doclens rows,
+    * move the log segments' rows into the partitions, then remove the
+    * sidecar — meta stays (the census went subtractive at delete time).
+    * Unlike the ANN index, a doc's postings spread across MANY
+    * term-hash `bucket=` partitions (the partition key is the TERM,
+    * deletes key on the DOC), so doc deletes are non-local by
+    * construction: the touched buckets are discovered with one
+    * column-pruned (doc_id, bucket) scan, and only those partitions
+    * and the ones the log segments route to rewrite — few doomed docs
+    * and a short log touch few buckets; bulk deletes degrade
+    * gracefully toward the full rewrite a term-partitioned store
+    * fundamentally requires, which is why this runs on the OPTIMIZE
+    * maintenance cadence, not per delete. Afterwards no log segment
+    * remains. Post-compact searches are row-identical to the
+    * pre-compact merge-on-read (the `bm25_index_compact` gate shares
+    * `bm25_index_delete`'s oracle).
     */
   def invertedIndexCompact(spark: org.apache.spark.sql.SparkSession,
                            root: String): Unit = {
@@ -1896,54 +1976,65 @@ object TextOps {
   }
 
   /** Stage an inverted-index compaction WITHOUT committing it: write
-    * the doomed-touched postings buckets' AND doclens docbuckets'
-    * survivors as NEW files (job-unique names moved into the live
-    * partition dirs) and return the snapshot that would serve the
-    * compacted store — deletes and replaced files excluded. Staged
-    * files are invisible to every read until the pointer swap (the
-    * crash window the lifecycle spec pins). The bloom rebuild happens
-    * AFTER the swap in [[invertedIndexCompact]]: a stale
-    * possibly-present bloom is the safe over-approximation (suspects
-    * arbitrate exactly), while a survivors-only bloom ahead of the
-    * swap would clear still-indexed deleted ids as provably new.
-    * None when no deletes are recorded.
+    * the survivors of every postings bucket and doclens docbucket that
+    * the doomed ids or the log segments touch — the part's files plus
+    * the segment rows routed to it, minus the doomed ids — as NEW
+    * files (job-unique names moved into the live partition dirs) and
+    * return the snapshot that would serve the compacted store —
+    * deletes, log segments and replaced files excluded. Staged files
+    * are invisible to every read until the pointer swap (the crash
+    * window the lifecycle spec pins). The bloom rebuild happens AFTER
+    * the swap in [[invertedIndexCompact]]: a stale possibly-present
+    * bloom is the safe over-approximation (suspects arbitrate
+    * exactly), while a survivors-only bloom ahead of the swap would
+    * clear still-indexed deleted ids as provably new. None when no
+    * deletes are recorded and the log is empty.
     */
   private[graft] def prepareInvertedCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
     : Option[Seq[IC.Entry]] = {
     val snap = IC.readEntries(spark, root)
     val delFiles = IC.filesOf(snap, "deletes")
-    if (delFiles.isEmpty) return None // nothing accrued: no-op
-    val ids = spark.read.parquet(delFiles: _*)
-      .select("doc_id").distinct()
-    // both tables' surgical rewrite: one pruned scan of the touched
-    // parts + broadcast anti-join, staged and moved (IndexCommits)
-    def rewrite(entries: Seq[IC.Entry], kind: String, partKey: String,
-                touched: Set[Long]) =
-      IC.rewriteParts(spark, root, entries, kind, partKey, touched,
-          Map("compression" -> "zstd"))(
-        _.join(broadcast(ids), Seq("doc_id"), "left_anti"))
-    // doc deletes are non-local in the term-partitioned postings: one
-    // column-pruned (doc_id, bucket) discovery of the touched buckets
-    val touchedBuckets: Set[Long] =
-      IS.readFiles(spark, root, "postings", IC.filesOf(snap, "postings"))
-        .map(p => IS.routeKeys(p.join(broadcast(ids), Seq("doc_id")),
-          col("bucket")))
-        .getOrElse(Set.empty)
-    val staged = rewrite(snap.filterNot(_.kind == "deletes"),
-      "postings", "bucket", touchedBuckets)
-    // doclens deletes ARE local (keyed and partitioned by doc_id
-    // hash): only the doomed ids' docbuckets rewrite
+    val logs = BmKinds.map { case (kind, _) => IC.logOf(snap, kind) }
+    if (delFiles.isEmpty && logs.forall(_.isEmpty)) return None
+    val ids =
+      if (delFiles.isEmpty) None
+      else Some(spark.read.parquet(delFiles: _*).select("doc_id").distinct())
+    def keep(df: DataFrame) = ids.fold(df)(i =>
+      df.join(broadcast(i), Seq("doc_id"), "left_anti"))
+    // the route keys the doomed ids touch: doc deletes are non-local in
+    // the term-partitioned postings (one column-pruned (doc_id, bucket)
+    // discovery over the partition files), local in doclens (keyed and
+    // partitioned by doc_id hash)
     val nDocBuckets = IS.readMeta(spark, root).getInt("n_docbuckets")
-    Some(rewrite(staged, "doclens", "docbucket",
-      IS.routeKeys(ids, docBucket(col("doc_id"), nDocBuckets))))
+    val doomedKeys = Map(
+      "postings" -> ids.flatMap(i => IS.readFiles(spark, root,
+          "postings", snap.collect {
+            case e if e.kind == "postings" && e.partId.isDefined => e.file
+          })
+        .map(_.join(broadcast(i), Seq("doc_id")).select(col("bucket")))),
+      "doclens" -> ids.map(_.select(
+        docBucket(col("doc_id"), nDocBuckets).as("docbucket"))))
+    // each kind's surgical rewrite: ONE route-key job over the doomed
+    // keys and the log's, one pruned scan of the touched parts plus the
+    // log + broadcast anti-join, staged and moved (IndexCommits)
+    Some(BmKinds.zip(logs).foldLeft(snap.filterNot(_.kind == "deletes")) {
+      case (es, ((kind, key), log)) =>
+        val keys = doomedKeys(kind).toSeq ++
+          (if (log.isEmpty) Nil
+           else Seq(spark.read.parquet(log: _*).select(col(key))))
+        val touched = keys.reduceOption(_ union _)
+          .map(IS.routeKeys(_, col(key))).getOrElse(Set.empty)
+        IC.rewriteParts(spark, root, es, kind, key, touched, Zstd, log)(keep)
+    })
   }
 
   /** The indexed BM25 scoring both searches share: one snapshot and
     * meta read; the probed postings of the UNION of the queries' terms
-    * (only their `bucket=` files, planned from the snapshot, so
-    * staged/orphaned files of an interrupted maintenance op are
-    * invisible; the term IN-list pushes to parquet), minus the
+    * (only their `bucket=` files plus the log segments under the same
+    * bucket filter, planned from the snapshot, so staged/orphaned
+    * files of an interrupted append or maintenance op are invisible;
+    * the term IN-list pushes to parquet), minus the
     * merge-on-read deletes BEFORE the df aggregate so idf reflects the
     * surviving corpus exactly; the |terms|-bounded df collect; and the
     * per-doc pivot over the union vocabulary (doc lengths ride the
@@ -1966,10 +2057,9 @@ object TextOps {
     val buckets = unionTerms.map(t =>
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
     val post = IS.withoutDeleted(
-      IS.readKind(spark, root, "postings",
-          IC.filesOfParts(snap, "postings", buckets.toSet))
-        .where(col("bucket").isin(buckets: _*) &&
-          col("term").isin(unionTerms: _*)),
+      readRouted(spark, root, snap, "postings", buckets.toSet)
+        .getOrElse(IS.readKind(spark, root, "postings", Nil))
+        .where(col("term").isin(unionTerms: _*)),
       snap, BmStore, "doc_id")
     val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2000,7 +2090,8 @@ object TextOps {
     * `bm25_index_search` gate shares `bm25_topk`'s oracle): the
     * one-query case of [[bm25SearchIndexedBatch]]'s scoring, with per-doc
     * term frequencies pivoted from the postings instead of recomputed
-    * from text. Only the probed `bucket=` partitions are scanned; the
+    * from text. Only the probed `bucket=` partitions (and the log
+    * segments' row groups of those buckets) are scanned; the
     * per-term df collect is |terms|-bounded; doc lengths ride the
     * posting rows themselves, so the serving path touches NOTHING
     * corpus-sized — cost is probed posting volume alone.

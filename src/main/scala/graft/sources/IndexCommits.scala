@@ -54,8 +54,10 @@ object IndexCommits {
   /** One live data file of a snapshot. partId = the value of the
     * store's partition key for files under a `key=value` directory
     * (list_id for ANN vectors, bucket for BM25 postings, docbucket
-    * for doclens), None for unpartitioned kinds (applog segments,
-    * delete sidecars).
+    * for doclens). None marks either an unfolded log segment of a
+    * partitioned kind (BM25 postings / doclens segments under
+    * root/applog/<kind>, carrying the key as a plain column) or an
+    * unpartitioned kind (ANN applog segments, delete sidecars).
     */
   final case class Entry(kind: String, partId: Option[Long], file: String)
 
@@ -139,6 +141,12 @@ object IndexCommits {
     entries.filter(e => e.kind == kind &&
       e.partId.exists(parts.contains)).map(_.file)
 
+  /** The unfolded log segments of a partitioned `kind`: its entries
+    * without a part id ([[Entry]]).
+    */
+  def logOf(entries: Seq[Entry], kind: String): Seq[String] =
+    entries.filter(e => e.kind == kind && e.partId.isEmpty).map(_.file)
+
   /** Data files of `kind` under root/<kind>, partId parsed from its
     * `partKey=value` dirs — the listing a mutation diffs around its
     * write ([[written]]).
@@ -148,6 +156,13 @@ object IndexCommits {
                                partKey: Option[String] = None)
     : Seq[Entry] =
     listDataFiles(spark, root, kind, kind, partKey)
+
+  /** The log segments of `kind` under root/applog/<kind> (no part
+    * id) — the listing a segment append diffs around its write.
+    */
+  private[graft] def listLog(spark: SparkSession, root: String,
+                              kind: String): Seq[Entry] =
+    listDataFiles(spark, root, kind, s"applog/$kind", None)
 
   /** Data files of ONLY the given `partKey=` partitions of
     * root/<kind> — the bounded write-discovery listing. A mutation can
@@ -240,32 +255,43 @@ object IndexCommits {
   }
 
   /** Surgical partition rewrite, the staging half of both stores'
-    * compaction: read ONLY the live files of `kind`'s `touched` parts,
-    * let `keep` drop the doomed rows, write the survivors under
-    * root/.compact/<kind> (one file per part) and move them into the
-    * live `partKey=value` dirs under their job-unique names — nothing
-    * referenced is overwritten. Returns `entries` with the touched
-    * parts' files replaced by the moved ones; a part whose every row
-    * was dropped gets no file and leaves the snapshot. The moved files
-    * stay invisible to reads until the caller commits.
+    * compaction and of the BM25 log fold: read ONLY the live files of
+    * `kind`'s `touched` parts plus the `log` segments of `kind` (their
+    * rows carry `partKey` as a plain column), let `keep` drop the
+    * doomed rows, write the survivors under root/.compact/<kind> (one
+    * file per part) and move them into the live `partKey=value` dirs
+    * under their job-unique names — nothing referenced is overwritten.
+    * Returns `entries` with the touched parts' files and the `log`
+    * segments replaced by the moved ones; a touched part whose every
+    * row was dropped gets no file and leaves the snapshot, and an
+    * untouched part a segment routes to gains one file beside its
+    * own. The moved files stay invisible to reads until the caller
+    * commits.
     */
   private[graft] def rewriteParts(spark: SparkSession, root: String,
                                    entries: Seq[Entry], kind: String,
                                    partKey: String, touched: Set[Long],
                                    writeOptions: Map[String, String] =
-                                     Map.empty)
+                                     Map.empty,
+                                   log: Seq[String] = Nil)
                                   (keep: DataFrame => DataFrame)
     : Seq[Entry] = {
-    if (touched.isEmpty) return entries
+    if (touched.isEmpty && log.isEmpty) return entries
     val fs = hfs(spark, root)
     val stage = new Path(s"$root/.compact")
     fs.delete(stage, true) // a crashed attempt's leftovers
     val files = filesOfParts(entries, kind, touched)
-    if (files.nonEmpty)
-      keep(spark.read.option("basePath", s"$root/$kind").parquet(files: _*))
+    val parts =
+      if (files.isEmpty) None
+      else Some(spark.read.option("basePath", s"$root/$kind")
+        .parquet(files: _*))
+    val segments =
+      if (log.isEmpty) None else Some(spark.read.parquet(log: _*))
+    (parts ++ segments).reduceOption(_ unionByName _).foreach(rows =>
+      keep(rows)
         .repartition(col(partKey)) // one file per rewritten part
         .write.mode("overwrite").options(writeOptions)
-        .partitionBy(partKey).parquet(s"$stage/$kind")
+        .partitionBy(partKey).parquet(s"$stage/$kind"))
     val moved = listDataFiles(spark, root, kind, s".compact/$kind",
         Some(partKey)).map { e =>
       val dstDir = new Path(s"$root/$kind/$partKey=${e.partId.get}")
@@ -276,8 +302,9 @@ object IndexCommits {
       e.copy(file = dst.toUri.getPath)
     }
     fs.delete(stage, true)
-    entries.filterNot(e =>
-      e.kind == kind && e.partId.exists(touched.contains)) ++ moved
+    val folded = log.toSet
+    entries.filterNot(e => e.kind == kind &&
+      (e.partId.exists(touched.contains) || folded(e.file))) ++ moved
   }
 
   /** Rows recorded in the snapshot's delete sidecar files, from their

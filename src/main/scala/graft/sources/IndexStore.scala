@@ -45,6 +45,13 @@ private[graft] object IndexStore {
                           checksum: String,
                           sums: Seq[(String, String)] = Nil)
 
+  /** The log bound both stores' maintain policies default to: fold
+    * the append log once it holds this many segments per kind (the
+    * measured search-wall-vs-log-size curve is flat to ~16 segments,
+    * BENCH_logsens_r18). The BM25 append folds inline at it.
+    */
+  val FlushSegments = 16
+
   private def hconf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
 
@@ -210,13 +217,13 @@ private[graft] object IndexStore {
     * duplicate rows (the ANN store reads the suspects' own `list_id=`
     * files — their lists recomputed from the stored centroids — and
     * then the unflushed applog; the BM25 store reads the suspects'
-    * `docbucket=` doclens files). A deleted but not yet compacted id
-    * is still physically present and rejected until compaction
-    * removes it. Then ONE commit over `listing`
-    * ([[IndexCommits.commitWritten]]): `write` lands the delta and
-    * returns its observed census, meta goes additive from `old`, and
-    * the delta's ids fold into the Bloom (a driver OR with the words
-    * already read). Returns the committed entries.
+    * `docbucket=` doclens files and the doclens log segments). A
+    * deleted but not yet compacted id is still physically present
+    * and rejected until compaction removes it. Then ONE commit over
+    * `listing` ([[IndexCommits.commitWritten]]): `write` lands the
+    * delta and returns its observed census, meta goes additive from
+    * `old`, and the delta's ids fold into the Bloom (a driver OR with
+    * the words already read). Returns the committed entries.
     *
     * @param who    names the rejected id in the error ("op: id_col")
     * @param remedy what appends must carry instead, and how to fix it

@@ -1431,7 +1431,8 @@ object StreamingOps {
     */
   def indexAppendBufferedSink(idCol: String, vecCol: String,
                               root: String,
-                              autoFlushSegments: Int = 16)
+                              autoFlushSegments: Int =
+                                graft.sources.IndexStore.FlushSegments)
     : (DataFrame, Long) => Unit =
     (df, _) => graft.operators.SimilarityOps.indexAppend(
       df, idCol, vecCol, root, buffered = true,
@@ -1441,11 +1442,12 @@ object StreamingOps {
     * persisted inverted index (TextOps.invertedIndexAppend) — the
     * SPARSE twin of [[indexAppendSink]], completing streaming ingest
     * symmetry across both retrieval stores. No memory state: the
-    * on-disk index IS the state. Per-batch cost is bounded by the
-    * store's FIXED bucket count (postings concatenate into nBuckets
-    * `bucket=` partitions — unlike the ANN side there is no K-scaled
-    * directory-commit storm, so no LSM log is needed; measured flat
-    * across 1x/10x/100x corpora, BENCH_sf10_r18). The census merge is
+    * on-disk index IS the state. Each micro-batch lands as one postings
+    * and one doclens log segment (two flat files, one commit, never a
+    * write into the `bucket=` / `docbucket=` partitions), and the
+    * append folds the log inline once it holds
+    * graft.sources.IndexStore.FlushSegments segments per kind — the
+    * bound the ANN buffered sink defaults to. The census merge is
     * additive/commutative and the Bloom dup-guard rejects replays of
     * an already-indexed doc_id, so trigger batching/order cannot
     * change the served index (the `stream_bm25_index_append` gate

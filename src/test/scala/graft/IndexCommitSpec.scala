@@ -24,8 +24,10 @@ import graft.sources.{IndexCommits, TinyParquet}
   *     and fails by name when racing writers stamped one generation
   *     twice;
   *   - BM25 append dup-arbitration reads ONLY the suspects'
-  *     `docbucket=` doclens partitions (plan-captured) — the sparse
-  *     twin of the ANN side's list-pruned arbitration.
+  *     `docbucket=` doclens partitions plus the unfolded doclens log
+  *     segments (plan-captured) — the sparse twin of the ANN side's
+  *     list-pruned arbitration — and rejects a duplicate that lives
+  *     only in a segment.
   */
 class IndexCommitSpec extends SparkSpec {
   import spark.implicits._
@@ -461,6 +463,55 @@ class IndexCommitSpec extends SparkSpec {
       assert(lens.forall(_.contains("docbucket=")),
         s"arbitration scanned doclens outside the suspect buckets: " +
           lens.mkString(", "))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("BM25 append dup-arbitration over log segments: a duplicate of a" +
+      " doc that lives only in an unfolded segment is rejected by name;" +
+      " the doclens scans are exactly the suspect's docbucket= files" +
+      " plus the segment files (plan-captured)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_icps")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus.where(col("doc_id") < 5),
+      "doc_id", "text", root, nBuckets = 16)
+    TextOps.invertedIndexAppend(bmCorpus.where(col("doc_id") >= 5),
+      "doc_id", "text", root)
+    val snap = IndexCommits.readEntries(spark, root)
+    val segs = IndexCommits.logOf(snap, "doclens")
+    assert(segs.nonEmpty)
+    // doc 6 is in the segment only; its docbucket rides the segment row
+    val bucket = spark.read.parquet(segs: _*).where(col("doc_id") === 6)
+      .select(col("docbucket").cast("long")).head().getLong(0)
+    val want = (IndexCommits.filesOfParts(snap, "doclens", Set(bucket)) ++
+      segs).toSet
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.sparkPlan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.foreach(p =>
+              seen.add(p.toUri.getPath))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        TextOps.invertedIndexAppend(bmCorpus.where(col("doc_id") === 6),
+          "doc_id", "text", root)
+      }
+      assert(e.getMessage.contains("doc_id 6 is already indexed"),
+        e.getMessage)
+      import scala.jdk.CollectionConverters._
+      def lens = seen.asScala.toSet.filter(_.contains("/doclens"))
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (lens.size < want.size && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(lens === want)
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -534,6 +534,116 @@ class IndexLifecycleSpec extends SparkSpec {
       s"vectors read lists the whole store, not the probed dirs: $ann")
   }
 
+  /** Both indexed searches of `root`, rows as collected (raw doubles). */
+  private def bmServed(root: String): (Seq[org.apache.spark.sql.Row],
+                                       Seq[org.apache.spark.sql.Row]) = {
+    val terms = Seq("spark", "join", "hash")
+    (TextOps.bm25SearchIndexed(spark, root, terms, k = 10).collect().toSeq,
+      TextOps.bm25SearchIndexedBatch(spark, root,
+          Seq(1L -> terms, 2L -> Seq("quick", "hash", "fox")), k = 10)
+        .orderBy("query_id", "bm_rank").collect().toSeq)
+  }
+
+  /** A fresh one-shot build over `docs`, and its searches. */
+  private def bmFresh(docs: org.apache.spark.sql.DataFrame) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmfresh")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(docs, "doc_id", "text", root, nBuckets = 16)
+    bmServed(root)
+  }
+
+  test("BM25 appends land as log segments: after each of 17 direct and" +
+      " sink appends both searches are float-identical to a fresh build" +
+      " over the union; the log never holds more than 16 segments per" +
+      " kind; compact folds it and equals a fresh build over the" +
+      " survivors") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmlog")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+      nBuckets = 16)
+    val words = Seq("spark", "join", "hash", "quick", "fox", "data")
+    val extra = (0 until 17).map { i =>
+      (100L + i, Seq.tabulate(1 + i % 4)(j => words((i + 2 * j) % 6))
+        .mkString(" "))
+    }
+    val IC = graft.sources.IndexCommits
+    def log(kind: String) = IC.logOf(IC.readEntries(spark, root), kind)
+    for (((id, text), i) <- extra.zipWithIndex) {
+      val df = Seq((id, text)).toDF("doc_id", "text")
+      if (i % 2 == 0) TextOps.invertedIndexAppend(df, "doc_id", "text", root)
+      else graft.streaming.StreamingOps.invertedIndexAppendSink(
+        "doc_id", "text", root)(df, i.toLong)
+      val n = i + 1
+      // one segment per kind per append; the 16th folds inline
+      assert(log("postings").size === n % 16, s"after append $n")
+      assert(log("doclens").size === n % 16, s"after append $n")
+      assert(log("postings").forall(_.contains("/applog/postings/")))
+      val union = bmCorpus.union(extra.take(n).toDF("doc_id", "text"))
+      assert(bmServed(root) === bmFresh(union), s"after append $n")
+    }
+    val all = bmCorpus.union(extra.toDF("doc_id", "text"))
+    assert(!TextOps.invertedIndexIsStale(all, "doc_id", root))
+    // doom a base doc, a folded doc and the unfolded one
+    val doomed = Seq(3L, 105L, 116L)
+    TextOps.invertedIndexDelete(doomed.toDF("doc_id"), "doc_id", root)
+    TextOps.invertedIndexCompact(spark, root)
+    val after = IC.readEntries(spark, root)
+    assert(after.forall(_.partId.isDefined), after.mkString(", "))
+    val survivors = all.where(!col("doc_id").isin(doomed: _*))
+    assert(bmServed(root) === bmFresh(survivors))
+    assert(!TextOps.invertedIndexIsStale(survivors, "doc_id", root))
+  }
+
+  test("a BM25 log segment written but never committed stays invisible" +
+      " to both searches and is vacuumed by the next maintain") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmorph")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus.where(col("doc_id") < 5),
+      "doc_id", "text", root, nBuckets = 16)
+    TextOps.invertedIndexAppend(bmCorpus.where(col("doc_id") >= 5),
+      "doc_id", "text", root)
+    val served = bmServed(root)
+    assert(served === bmFresh(bmCorpus))
+    // simulated crash: a second append of the same rows wrote its
+    // segments, then died before the pointer swap — were the copies
+    // visible, docs 5 and 6 would double-count
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
+    val orphans = Seq("postings", "doclens").map { kind =>
+      val seg = java.nio.file.Paths.get(IC.logOf(snap, kind).head)
+      val copy = seg.resolveSibling("part-99999-orphan.c000.zstd.parquet")
+      java.nio.file.Files.copy(seg, copy)
+      copy.toFile
+    }
+    assert(bmServed(root) === served)
+    TextOps.invertedIndexDelete(Seq(1L).toDF("doc_id"), "doc_id", root)
+    assert(TextOps.invertedIndexMaintain(spark, root,
+      compactDeletedFraction = 0.1))
+    assert(orphans.forall(!_.exists()))
+    assert(bmServed(root) ===
+      bmFresh(bmCorpus.where(col("doc_id") =!= 1)))
+  }
+
+  test("invertedIndexDelete records only indexed ids: a never-indexed" +
+      " id is not pending, leaves the census alone, and a later append" +
+      " of it is served, not hidden") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmnever")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+      nBuckets = 16)
+    TextOps.invertedIndexDelete(Seq(1L, 99L).toDF("doc_id"), "doc_id", root)
+    val IC = graft.sources.IndexCommits
+    assert(IC.pendingDeletes(spark, IC.readEntries(spark, root)) === 1)
+    val survivors = bmCorpus.where(col("doc_id") =!= 1)
+    assert(!TextOps.invertedIndexIsStale(survivors, "doc_id", root))
+    val late = Seq((99L, "hash join spark")).toDF("doc_id", "text")
+    TextOps.invertedIndexAppend(late, "doc_id", "text", root)
+    val hit = TextOps.bm25SearchIndexed(spark, root,
+      Seq("spark", "join", "hash"), k = 10)
+    assert(hit.where(col("doc_id") === 99).count() === 1)
+    assert(bmServed(root) === bmFresh(survivors.union(late)))
+  }
+
   test("BPE merge table round-trips storage: bpeApply from mergesRead" +
       " is token-identical to the in-memory table") {
     val docs = Seq(
