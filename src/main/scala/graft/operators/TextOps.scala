@@ -1649,11 +1649,19 @@ object TextOps {
       .agg(count(lit(1)).cast("int").as("tf"), max(col("dl")).as("dl"))
       .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
 
+  /** Has the append log reached its bound: FlushSegments files of
+    * either kind? */
+  private def logFull(snap: Seq[IC.Entry]): Boolean =
+    BmKinds.exists { case (kind, _) =>
+      IC.logOf(snap, kind).size >= IS.FlushSegments }
+
   /** The rows of `kind` that route to `parts` on its key: those parts'
     * `key=` files plus the unfolded log segments under the same key
-    * filter (segments are sorted by the key, so parquet row-group
-    * stats prune them), each read as its own frame and unioned by
-    * name. None when no file qualifies.
+    * filter, each read as its own frame and unioned by name. The
+    * filter drops the segments' other rows but prunes no log file: an
+    * append-sized segment is one file of one row group, so it is
+    * scanned whole (fewer than IndexStore.FlushSegments log files per
+    * kind, the log bound). None when no file qualifies.
     */
   private def readRouted(spark: org.apache.spark.sql.SparkSession,
                          root: String, snap: Seq[IC.Entry], kind: String,
@@ -1684,13 +1692,14 @@ object TextOps {
     *     table (delete census, exact dup arbitration, both pruned to
     *     the ids' docbuckets); not on the serving path
     *   root/applog/postings, root/applog/doclens  the append log:
-    *     [[invertedIndexAppend]] lands ONE flat zstd segment per kind,
-    *     the route key (bucket / docbucket) a plain column the rows are
-    *     sorted by, registered under the kind with no part id; every
-    *     read unions the segments behind its bucket / docbucket filter,
-    *     and the fold ([[invertedIndexMaintain]], the append's own log
-    *     bound) and [[invertedIndexCompact]] move them into the
-    *     partitions
+    *     [[invertedIndexAppend]] lands ONE flat zstd segment per kind
+    *     (one file, except a bulk delta's postings: one per shuffle
+    *     partition), the route key (bucket / docbucket) a plain column
+    *     each file is sorted by, registered under the kind with no
+    *     part id; every read unions the segments behind its bucket /
+    *     docbucket filter, and the fold ([[invertedIndexMaintain]], the
+    *     append's own log bound) and [[invertedIndexCompact]] move them
+    *     into the partitions
     *   root/bloomidx  (widx, word) — a PACKED doc-id Bloom bitmap
     *     (bits/64 rows max, ~2 MB at the 1<<24 default — bounded by
     *     BITS, never by corpus size), the append dup-guard's fast
@@ -1765,15 +1774,19 @@ object TextOps {
     * are DISJOINT from every existing doc's (doc_id is the key), so
     * the delta lands with no merge at all, as ONE postings segment
     * (sorted by (bucket, term)) and ONE doclens segment (sorted by
-    * docbucket) in the append log — two flat zstd files and one
-    * commit, never a write into the `bucket=` / `docbucket=`
-    * directories; the census updates additively. Searches through the
-    * appended index are identical to a one-shot build over the union —
-    * postings of disjoint docs just concatenate (spec-pinned). Once the
-    * log holds [[graft.sources.IndexStore.FlushSegments]] segments per
-    * kind, the append folds it inline (one partitioned append of the
-    * log's rows into the partitions, once per that many appends), so
-    * the log every read unions stays bounded with no maintenance call.
+    * docbucket) in the append log and one commit, never a write into
+    * the `bucket=` / `docbucket=` directories; the census updates
+    * additively. A segment is one flat zstd file, except that the
+    * postings of a bulk delta keep one file per shuffle partition of
+    * their route-key shuffle (AQE coalesces an append-sized delta's to
+    * one), so bulk appends keep their write parallelism. Searches
+    * through the appended index are identical to a one-shot build over
+    * the union — postings of disjoint docs just concatenate
+    * (spec-pinned). Once the log holds
+    * [[graft.sources.IndexStore.FlushSegments]] files of either kind,
+    * the append folds it inline (one partitioned append of the log's
+    * rows into the partitions), so the log every read unions stays
+    * bounded with no maintenance call.
     * Delta doc_ids must be NEW, and that is
     * ENFORCED, not just documented: a re-appended doc would silently
     * double-count (duplicate postings rows fanning out through the
@@ -1817,13 +1830,17 @@ object TextOps {
     } {
       // two tokenize passes by measurement — see invertedIndexWrite's
       // rejection note (the fused single-tokenize build measured slower
-      // at sf0.1 and at the 100x rehearsal)
+      // at sf0.1 and at the 100x rehearsal). The postings segment
+      // shuffles on its route key and sorts every file by it: AQE
+      // coalesces an append-sized delta to ONE file, and a bulk delta
+      // keeps its partitions, written in parallel
       postingsOf(df, idCol, textCol, nBuckets)
-        .coalesce(1).sortWithinPartitions("bucket", "term")
+        .repartition(col("bucket")).sortWithinPartitions("bucket", "term")
         .write.mode("append").options(Zstd)
         .parquet(s"$root/applog/postings")
       // the delta census rides the doclens write as observed metrics —
-      // no separate tokenizing pass over the delta
+      // no separate tokenizing pass over the delta. One row per doc:
+      // ONE file with no shuffle (a shuffle costs a job per append)
       val obs = new org.apache.spark.sql.Observation()
       IS.observeCensus(df.select(
           col(idCol).as("doc_id"), size(words(col(textCol))).as("dl")),
@@ -1834,8 +1851,7 @@ object TextOps {
         .parquet(s"$root/applog/doclens")
       IS.observed(obs)
     }
-    if (IC.logOf(next, "postings").size >= IS.FlushSegments)
-      invertedIndexFold(spark, root)
+    if (logFull(next)) invertedIndexFold(spark, root)
   }
 
   /** Record document deletions against a persisted inverted index —
@@ -1901,10 +1917,11 @@ object TextOps {
     *     rewrite is worth batching until material); the compaction
     *     folds the append log too;
     *   - otherwise FOLD the append log once it holds
-    *     [[graft.sources.IndexStore.FlushSegments]] segments per kind
-    *     (the bound the append itself enforces inline): one
-    *     partitioned append of the log's rows into the `bucket=` /
-    *     `docbucket=` partitions.
+    *     [[graft.sources.IndexStore.FlushSegments]] files of either
+    *     kind (the bound the append itself enforces inline; reached
+    *     here only when an append died between its commit and its
+    *     fold): one partitioned append of the log's rows into the
+    *     `bucket=` / `docbucket=` partitions.
     *
     * Below both thresholds this is a cheap no-op (one snapshot read +
     * one sidecar count), safe on every maintenance tick. Returns
@@ -1917,8 +1934,7 @@ object TextOps {
     val snap = IC.readEntries(spark, root)
     val doCompact = IS.compactDue(spark, root, snap, BmStore,
       compactDeletedFraction)
-    val doFold = !doCompact &&
-      IC.logOf(snap, "postings").size >= IS.FlushSegments
+    val doFold = !doCompact && logFull(snap)
     if (doCompact) invertedIndexCompact(spark, root)
     else if (doFold) invertedIndexFold(spark, root)
     doCompact || doFold
@@ -2031,10 +2047,10 @@ object TextOps {
 
   /** The indexed BM25 scoring both searches share: one snapshot and
     * meta read; the probed postings of the UNION of the queries' terms
-    * (only their `bucket=` files plus the log segments under the same
-    * bucket filter, planned from the snapshot, so staged/orphaned
-    * files of an interrupted append or maintenance op are invisible;
-    * the term IN-list pushes to parquet), minus the
+    * (only their `bucket=` files plus the unfolded log segments, read
+    * whole under the same bucket filter; planned from the snapshot, so
+    * staged/orphaned files of an interrupted append or maintenance op
+    * are invisible; the term IN-list pushes to parquet), minus the
     * merge-on-read deletes BEFORE the df aggregate so idf reflects the
     * surviving corpus exactly; the |terms|-bounded df collect; and the
     * per-doc pivot over the union vocabulary (doc lengths ride the
@@ -2090,11 +2106,11 @@ object TextOps {
     * `bm25_index_search` gate shares `bm25_topk`'s oracle): the
     * one-query case of [[bm25SearchIndexedBatch]]'s scoring, with per-doc
     * term frequencies pivoted from the postings instead of recomputed
-    * from text. Only the probed `bucket=` partitions (and the log
-    * segments' row groups of those buckets) are scanned; the
-    * per-term df collect is |terms|-bounded; doc lengths ride the
+    * from text. Only the probed `bucket=` partitions and the unfolded
+    * log segments (whole, at most the log bound of them) are scanned;
+    * the per-term df collect is |terms|-bounded; doc lengths ride the
     * posting rows themselves, so the serving path touches NOTHING
-    * corpus-sized — cost is probed posting volume alone.
+    * corpus-sized — cost is probed posting volume plus the log.
     */
   def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
                         root: String, terms: Seq[String], k: Int,

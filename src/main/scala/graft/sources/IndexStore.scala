@@ -48,7 +48,8 @@ private[graft] object IndexStore {
   /** The log bound both stores' maintain policies default to: fold
     * the append log once it holds this many segments per kind (the
     * measured search-wall-vs-log-size curve is flat to ~16 segments,
-    * BENCH_logsens_r18). The BM25 append folds inline at it.
+    * BENCH_logsens_r18). The BM25 append folds inline at it,
+    * counting log files.
     */
   val FlushSegments = 16
 

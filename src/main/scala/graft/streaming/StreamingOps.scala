@@ -1443,11 +1443,12 @@ object StreamingOps {
     * SPARSE twin of [[indexAppendSink]], completing streaming ingest
     * symmetry across both retrieval stores. No memory state: the
     * on-disk index IS the state. Each micro-batch lands as one postings
-    * and one doclens log segment (two flat files, one commit, never a
-    * write into the `bucket=` / `docbucket=` partitions), and the
-    * append folds the log inline once it holds
-    * graft.sources.IndexStore.FlushSegments segments per kind — the
-    * bound the ANN buffered sink defaults to. The census merge is
+    * and one doclens log segment (one flat file each for a
+    * micro-batch-sized delta, one commit, never a write into the
+    * `bucket=` / `docbucket=` partitions), and the append folds the
+    * log inline once it holds graft.sources.IndexStore.FlushSegments
+    * files of either kind — the bound the ANN buffered sink defaults
+    * to. The census merge is
     * additive/commutative and the Bloom dup-guard rejects replays of
     * an already-indexed doc_id, so trigger batching/order cannot
     * change the served index (the `stream_bm25_index_append` gate

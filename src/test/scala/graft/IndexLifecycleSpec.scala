@@ -624,6 +624,56 @@ class IndexLifecycleSpec extends SparkSpec {
       bmFresh(bmCorpus.where(col("doc_id") =!= 1)))
   }
 
+  test("invertedIndexMaintain folds a log left at the 16-segment bound" +
+      " by an append that committed and died before its inline fold") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bmfold")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+      nBuckets = 16)
+    val words = Seq("spark", "join", "hash", "quick", "fox", "data")
+    val extra = (0 until 16).map(i =>
+      (100L + i, s"${words(i % 6)} ${words((i + 3) % 6)}"))
+    // 15 appends, the first carrying two docs: 15 segments per kind
+    TextOps.invertedIndexAppend(extra.take(2).toDF("doc_id", "text"),
+      "doc_id", "text", root)
+    extra.drop(2).foreach(d => TextOps.invertedIndexAppend(
+      Seq(d).toDF("doc_id", "text"), "doc_id", "text", root))
+    val IC = graft.sources.IndexCommits
+    val snap = IC.readEntries(spark, root)
+    // split the two-doc segment of each kind into one file per doc: the
+    // same rows in 16 segments, the state an append leaves when it
+    // commits the 16th segment and dies before folding
+    val (olds, splits) = Seq("postings", "doclens").map { kind =>
+      val seg = IC.logOf(snap, kind).find(f =>
+        spark.read.parquet(f).select("doc_id").distinct().count() == 2).get
+      val rows = spark.read.parquet(seg)
+      seg -> Seq(100L, 101L).map { id =>
+        val tmp = java.nio.file.Files.createTempDirectory("graft_split")
+        rows.where(col("doc_id") === id).coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.toFile.listFiles().find(f =>
+          f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+        val file = s"${seg.substring(0, seg.lastIndexOf('/'))}/" +
+          s"part-split-$id.parquet"
+        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(file))
+        IC.Entry(kind, None, file)
+      }
+    }.unzip
+    IC.commit(spark, root,
+      snap.filterNot(e => olds.contains(e.file)) ++ splits.flatten)
+    def log(kind: String) = IC.logOf(IC.readEntries(spark, root), kind)
+    assert(log("postings").size === 16 && log("doclens").size === 16)
+    val union = bmCorpus.union(extra.toDF("doc_id", "text"))
+    val fresh = bmFresh(union)
+    assert(bmServed(root) === fresh)
+    // no deletes pending: the log bound alone makes maintain fold
+    assert(TextOps.invertedIndexMaintain(spark, root))
+    assert(log("postings").isEmpty && log("doclens").isEmpty)
+    assert(bmServed(root) === fresh)
+    assert(!TextOps.invertedIndexIsStale(union, "doc_id", root))
+    assert(!TextOps.invertedIndexMaintain(spark, root))
+  }
+
   test("invertedIndexDelete records only indexed ids: a never-indexed" +
       " id is not pending, leaves the census alone, and a later append" +
       " of it is served, not hidden") {
