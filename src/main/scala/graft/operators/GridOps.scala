@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fft
 
@@ -699,13 +699,38 @@ object GridOps {
 
   // ------------------------------------------- imaging weights (briggs)
 
+  /** Per-partition weight planes, the support-1 sibling of
+    * [[gridPartitionDual]]: each row adds its natural weight to its own
+    * cell and to its Hermitian-conjugate cell (skipped when that falls
+    * outside the grid). A plane is nU x nV cells, row-major, plus one
+    * trailing slot summing the natural weights it took, so partials
+    * merge by plain array addition. Rows are (img_chan, pol, u_cell,
+    * v_cell, u_conj, v_conj, nat_w), in grid and non-null.
+    */
+  private def gridWeightPartition(rows: Iterator[Row], nU: Int, nV: Int)
+      : Iterator[((Int, Int), Array[Double])] = {
+    val planes = mutable.HashMap.empty[(Int, Int), Array[Double]]
+    for (r <- rows) {
+      val w = planes.getOrElseUpdate((r.getInt(0), r.getInt(1)),
+        new Array[Double](nU * nV + 1))
+      val natW = r.getDouble(6)
+      w(r.getInt(2) * nV + r.getInt(3)) += natW
+      val (uc, vc) = (r.getInt(4), r.getInt(5))
+      if (uc >= 0 && uc < nU && vc >= 0 && vc < nV) w(uc * nV + vc) += natW
+      w(nU * nV) += natW
+    }
+    planes.iterator
+  }
+
   /** make_imaging_weight (ngcasa/imaging/make_imaging_weight.py:20-255).
-    * natural: the weight itself. uniform/briggs: grid the weights to
-    * the NEAREST uv cell (support=1 gridder == hash aggregate), compute
-    * the robust factor, then join the gridded weight back to each
-    * visibility ("degrid") and divide:
+    * natural: the weight itself. uniform/briggs: grid the natural
+    * weights to the NEAREST uv cell (the gridder at support 1) into
+    * dense per-(img_chan, pol) planes W, compute each plane's robust
+    * factor, then degrid W at each visibility's cell and divide:
     *   f2 = (5*10^-robust)^2 / (sum_cells W^2 / sum w)
     *   imaging_weight = w / (f2 * W[cell] + f1)        (uniform: f2=1, f1=0)
+    * The weight is kept as is when the row is out of grid, when it is 0
+    * or null, or when its cell sums to 0. Any other `weighting` fails.
     *
     * Faithful to _standard_grid_jit with do_imaging_weight=True
     * (_standard_grid.py:302-368):
@@ -716,100 +741,110 @@ object GridOps {
     *  - with polAverage=true (reference n_pol==2, …:330-335 and
     *    _standard_imaging_weight_degrid_jit:505-512) the natural weight
     *    is replaced by the mean over the row's pol group before both
-    *    gridding and degridding (long form: an avg window over
-    *    `rowKeyCols`, the (time,baseline,chan) identity).
+    *    gridding and degridding (an aggregate over `rowKeyCols`, the
+    *    (time,baseline,chan) identity, joined back).
     *  - divergence: the reference does not bounds-check the conjugate
     *    cell (numpy would wrap a negative index); we keep only in-grid
     *    conjugate contributions.
     *
-    * Fully relational: one hash aggregate onto cells + one broadcast
-    * factor + one equi-join back — no dense grid materialized, scales
-    * to any uv extent with data-sized cost.
+    * Dense, like the reference (_standard_grid.py:302-368 grids the
+    * weights, :467-520 degrids them):
+    *  1. the cell-annotated input (u_cell, v_cell, u_conj, v_conj) is
+    *     materialized ONCE with `localCheckpoint` — its source (scan,
+    *     flagging, averaging) runs one time, where a lazy plan replays
+    *     it for every consumer below; the pol-mean join sits on top;
+    *  2. one job grids per-partition partial planes and merges them
+    *     per (img_chan, pol) (`reduceByKey`); the driver sums each
+    *     merged plane's W^2 and weights, the inputs of its f2;
+    *  3. the merged planes are broadcast and a UDF degrids each row —
+    *     a narrow projection over the materialized frame, no join and
+    *     no shuffle of the visibilities.
+    * Memory bound: the broadcast (and each task's partial planes) holds
+    * planes x nU x nV doubles — 128 KB per 128^2 plane, 32 MB per
+    * 2048^2 plane — the same bound as `makeImageAndPsf`'s partial
+    * planes; partition the input by img_chan when a cube's planes
+    * exceed it.
     */
   def makeImagingWeight(vis: DataFrame, p: GridParams,
                         weighting: String = "natural",
                         robust: Double = 0.5,
                         polAverage: Boolean = false,
                         rowKeyCols: Seq[String] = Nil): DataFrame = {
+    require(Seq("natural", "uniform", "briggs").contains(weighting),
+      s"weighting must be natural, uniform or briggs, got '$weighting'")
     val (nU, nV) = (p.nU, p.nV)
     val uScale = col("freq") * lit(-p.deltaLM._1 * nU / SpeedOfLight)
     val vScale = col("freq") * lit(-p.deltaLM._2 * nV / SpeedOfLight)
     def cellIdx(c: Column, scale: Column, n: Int): Column =
       floor(c * scale + lit(n / 2) + lit(0.5)).cast("int")
-    def inGrid(u: Column, v: Column): Column =
-      u >= 0 && u < nU && v >= 0 && v < nV
     val withCell0 = vis
       .withColumn("u_cell", cellIdx(col("u"), uScale, nU))
       .withColumn("v_cell", cellIdx(col("v"), vScale, nV))
-      .withColumn("_in_grid", inGrid(col("u_cell"), col("v_cell")))
+      .withColumn("_in_grid", col("u_cell") >= 0 && col("u_cell") < nU &&
+        col("v_cell") >= 0 && col("v_cell") < nV)
     if (weighting == "natural")
       return withCell0.withColumn("imaging_weight", col("weight"))
 
-    val withCell = {
-      val c = withCell0
-        .withColumn("u_conj", cellIdx(-col("u"), uScale, nU))
-        .withColumn("v_conj", cellIdx(-col("v"), vScale, nV))
-      if (polAverage) {
-        require(rowKeyCols.nonEmpty,
-          "polAverage needs rowKeyCols identifying the pol group")
-        // Pol-group mean as an aggregate joined back, NOT a window over
-        // the fact frame: the aggregate output is one row per pol group
-        // (a shuffle both sides of a key-partitioned join — scales to
-        // any vis count), where a window + cache of the visibility
-        // stream would pin fact-sized memory on every executor. The
-        // mean over a pol group is order-exact for the 2-pol case
-        // (a+b is commutative in IEEE), so hash parity is unaffected.
-        //
-        // Materialize the cell-annotated fact ONCE before fanning out:
-        // this frame feeds the pol-mean aggregate, its join-back, both
-        // union branches of the cell histogram, the sum-of-weights
-        // aggregate AND the final join — 6 consumers that each
-        // replayed the whole upstream (scan + dedup + stack) in the
-        // lazy plan (measured 12 FileScans / 25 Exchanges, 5.5 s solo
-        // at sf0.1; 1 scan after). Same localCheckpoint pattern as
-        // pageRankIntegers; on a durable cluster point
-        // spark.checkpoint.dir at HDFS/S3 instead.
-        // (measured: checkpointing the JOINED frame as well costs more
-        // than the 4 join replays it saves — the second eager barrier
-        // plus the wider row dominate; one checkpoint is the optimum)
-        val cc = c.localCheckpoint()
-        val polMean = cc.groupBy(rowKeyCols.map(col): _*)
-          .agg(avg(col("weight")).as("nat_w"))
-        cc.join(polMean, rowKeyCols)
-      } else c.withColumn("nat_w", col("weight"))
-    }
-    val primary = withCell.where(col("_in_grid"))
-    val contributions = primary
-      .select(col("img_chan"), col("pol"), col("u_cell"), col("v_cell"),
-        col("nat_w"))
-      .unionByName(primary
-        .where(inGrid(col("u_conj"), col("v_conj")))
-        .select(col("img_chan"), col("pol"), col("u_conj").as("u_cell"),
-          col("v_conj").as("v_cell"), col("nat_w")))
-    val cells = contributions
-      .groupBy("img_chan", "pol", "u_cell", "v_cell")
-      .agg(sum(col("nat_w")).as("cell_w"))
-    val sumW = primary.groupBy("img_chan", "pol")
-      .agg((sum(col("nat_w")) * lit(2.0)).as("sum_w"))
-    val factors = cells.groupBy("img_chan", "pol")
-      .agg(sum(col("cell_w") * col("cell_w")).as("sq_sum"))
-      .join(sumW, Seq("img_chan", "pol"))
-      .select(col("img_chan"), col("pol"),
-        (weighting match {
-          case "briggs" =>
-            lit(math.pow(5.0 * math.pow(10.0, -robust), 2)) /
-              (col("sq_sum") / col("sum_w"))
-          case _ => lit(1.0) // uniform
-        }).as("f2"),
-        lit(if (weighting == "briggs") 1.0 else 0.0).as("f1"))
-    withCell
-      .join(cells, Seq("img_chan", "pol", "u_cell", "v_cell"), "left")
-      .join(broadcast(factors), Seq("img_chan", "pol"), "left")
+    // On a durable cluster point spark.checkpoint.dir at HDFS/S3 and
+    // checkpoint reliably instead.
+    val cells = withCell0
+      .withColumn("u_conj", cellIdx(-col("u"), uScale, nU))
+      .withColumn("v_conj", cellIdx(-col("v"), vScale, nV))
+      .localCheckpoint()
+    val withW = if (polAverage) {
+      require(rowKeyCols.nonEmpty,
+        "polAverage needs rowKeyCols identifying the pol group")
+      // Pol-group mean as an aggregate joined back, NOT a window: the
+      // aggregate output is one row per pol group, where a window would
+      // sort the fact frame. The mean over a pol group is order-exact
+      // for the 2-pol case (a+b is commutative in IEEE).
+      cells.join(cells.groupBy(rowKeyCols.map(col): _*)
+        .agg(avg(col("weight")).as("nat_w")), rowKeyCols)
+    } else cells.withColumn("nat_w", col("weight"))
+
+    val planes: Map[(Int, Int), (Array[Double], Double, Double)] = withW
+      .where(col("_in_grid") && col("nat_w").isNotNull &&
+        col("img_chan").isNotNull && col("pol").isNotNull)
+      .select(col("img_chan").cast("int"), col("pol").cast("int"),
+        col("u_cell"), col("v_cell"), col("u_conj"), col("v_conj"),
+        col("nat_w").cast("double"))
+      .rdd
+      .mapPartitions(rows => gridWeightPartition(rows, nU, nV))
+      .reduceByKey { (a, b) =>
+        var i = 0
+        while (i < a.length) { a(i) += b(i); i += 1 }
+        a
+      }
+      .collect()
+      .map { case (k, w) =>
+        k -> (w, w.iterator.take(nU * nV).map(x => x * x).sum, 2.0 * w(nU * nV))
+      }
+      .toMap
+    val bc = vis.sparkSession.sparkContext.broadcast(planes)
+    // (W[cell], sum_cells W^2, sum_w) of the row's plane; 0s off grid
+    val degrid = udf((chan: Int, pol: Int, u: Int, v: Int) =>
+      bc.value.get((chan, pol)) match {
+        case Some((w, sq, sumW)) if u >= 0 && u < nU && v >= 0 && v < nV =>
+          (w(u * nV + v), sq, sumW)
+        case _ => (0.0, 0.0, 0.0)
+      })
+    val (f2, f1) =
+      if (weighting == "briggs")
+        (lit(math.pow(5.0 * math.pow(10.0, -robust), 2)) /
+          (col("_w._2") / col("_w._3")), lit(1.0))
+      else (lit(1.0), lit(0.0))
+    val front = Seq("img_chan", "pol", "u_cell", "v_cell")
+    val dropped = Set("u_conj", "v_conj", "nat_w")
+    withW
+      .withColumn("_w", degrid(col("img_chan").cast("int"), col("pol").cast("int"),
+        col("u_cell"), col("v_cell")))
       .withColumn("imaging_weight",
         when(col("_in_grid") && col("nat_w") =!= 0.0 &&
-          col("cell_w").isNotNull && col("cell_w") =!= 0.0,
-          col("nat_w") / (col("f2") * col("cell_w") + col("f1")))
+          col("_w._1").isNotNull && col("_w._1") =!= 0.0,
+          col("nat_w") / (f2 * col("_w._1") + f1))
           .otherwise(col("nat_w")))
-      .drop("cell_w", "f2", "f1", "u_conj", "v_conj", "nat_w")
+      .select((front ++ withW.columns.filterNot(c =>
+        front.contains(c) || dropped(c)) :+ "imaging_weight")
+        .map(c => col("`" + c.replace("`", "``") + "`")): _*)
   }
 }

@@ -210,4 +210,156 @@ class GridOpsSpec extends SparkSpec {
     val br = GridOps.makeImagingWeight(vis, p32, "briggs", robust = 0.5)
     assert(br.where(col("imaging_weight").isNull).count() === 0)
   }
+
+  test("makeImagingWeight rejects an unknown weighting, naming it") {
+    val vis = pointSourceVis(1.0)
+    for (bad <- Seq("Briggs", "robust", "")) {
+      val e = intercept[IllegalArgumentException] {
+        GridOps.makeImagingWeight(vis, p32, bad)
+      }
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  // Imaging-weight fixture in grid units: su/sv are the scaled uv the
+  // cell index floors (cell = floor(su + 16.5)); every su/sv sits 0.2+
+  // from a cell edge so the driver reference cannot round differently.
+  // Two img_chans x two pols with differently distributed weights give
+  // four planes with distinct robust factors (two once polAverage
+  // shares each pol group's mean). Row rid is one pol group.
+  private val iwFreq = 1.5e9
+  private val iwScale = iwFreq * (-0.002 * 32 / GridOps.SpeedOfLight)
+  private def iwRows: Seq[(Int, Int, Double, Double, Option[Double], Int)] = {
+    val rng = new scala.util.Random(11)
+    def off() = (rng.nextInt(7) - 3) + (rng.nextDouble() - 0.5) * 0.6
+    val regular = (0 until 60).flatMap { rid =>
+      val (su, sv) = (off(), off())
+      Seq((rid % 2, 0, su, sv, Some(0.5 + rng.nextDouble()), rid),
+        (rid % 2, 1, su, sv, Some(3.0 * math.pow(rng.nextDouble(), 2)), rid))
+    }
+    val edge = Seq(
+      (60, -15.8, 2.1, Some(1.25), Some(0.75)), // conjugate cell u=32: off grid
+      (61, 20.1, 1.2, Some(2.0), Some(1.0)),    // primary cell u=36: off grid
+      (62, 1.1, -2.2, Some(0.0), Some(0.0)),    // zero weights
+      (63, 0.9, 1.1, None, Some(2.0)),          // one null leg
+      (64, -1.2, 0.8, None, None)               // both legs null
+    ).flatMap { case (rid, su, sv, w0, w1) =>
+      Seq((0, 0, su, sv, w0, rid), (0, 1, su, sv, w1, rid))
+    }
+    regular ++ edge
+  }
+  private def iwVis = iwRows.map { case (ch, pol, su, sv, w, rid) =>
+    (ch, pol, su / iwScale, sv / iwScale, iwFreq, w, rid)
+  }.toDF("img_chan", "pol", "u", "v", "freq", "weight", "rid")
+
+  /** The dense weighting replayed on the driver in plain Scala:
+    * (rid, pol) -> (u_cell, v_cell, in grid, imaging weight), the
+    * robust factor f2 per plane, and the in-grid rows whose conjugate
+    * cell is off grid.
+    */
+  private def iwReference(weighting: String, polAverage: Boolean)
+      : (Map[(Int, Int), (Int, Int, Boolean, Option[Double])], Map[(Int, Int), Double],
+        Set[(Int, Int)]) = {
+    val rows = iwVis.collect().map { r =>
+      (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
+        if (r.isNullAt(5)) None else Some(r.getDouble(5)), r.getInt(6))
+    }
+    def cell(x: Double, f: Double) =
+      math.floor(x * (f * (-0.002 * 32 / GridOps.SpeedOfLight)) + 16 + 0.5).toInt
+    def in(c: Int) = c >= 0 && c < 32
+    val polMean = rows.groupBy(_._7).map { case (rid, g) =>
+      val ws = g.flatMap(_._6)
+      rid -> (if (ws.isEmpty) None else Some(ws.sum / ws.length))
+    }
+    val cells = rows.map { case (ch, pol, u, v, f, w, rid) =>
+      (ch, pol, rid, cell(u, f), cell(v, f), cell(-u, f), cell(-v, f),
+        if (polAverage) polMean(rid) else w)
+    }
+    val grid = scala.collection.mutable.Map.empty[(Int, Int), Array[Double]]
+    val sumW = scala.collection.mutable.Map.empty[(Int, Int), Double].withDefaultValue(0.0)
+    for ((ch, pol, _, uc, vc, ucj, vcj, Some(w)) <- cells if in(uc) && in(vc)) {
+      val g = grid.getOrElseUpdate((ch, pol), new Array[Double](32 * 32))
+      g(uc * 32 + vc) += w
+      if (in(ucj) && in(vcj)) g(ucj * 32 + vcj) += w
+      sumW((ch, pol)) += 2 * w
+    }
+    val f2 = grid.map { case (k, g) =>
+      k -> (if (weighting == "briggs")
+        math.pow(5.0 * math.pow(10.0, -0.5), 2) / (g.map(x => x * x).sum / sumW(k))
+      else 1.0)
+    }.toMap
+    val f1 = if (weighting == "briggs") 1.0 else 0.0
+    val out = cells.map { case (ch, pol, rid, uc, vc, _, _, w) =>
+      val inGrid = in(uc) && in(vc)
+      val iw = w.map { nat =>
+        val cw = if (inGrid) grid.get((ch, pol)).map(_(uc * 32 + vc)).getOrElse(0.0) else 0.0
+        if (!inGrid || nat == 0.0 || cw == 0.0) nat else nat / (f2((ch, pol)) * cw + f1)
+      }
+      (rid, pol) -> (uc, vc, inGrid, iw)
+    }.toMap
+    val conjOff = cells.collect {
+      case (_, pol, rid, uc, vc, ucj, vcj, _) if in(uc) && in(vc) && !(in(ucj) && in(vcj)) =>
+        (rid, pol)
+    }.toSet
+    (out, f2, conjOff)
+  }
+
+  for (weighting <- Seq("briggs", "uniform"); polAverage <- Seq(false, true))
+    test(s"dense $weighting weights (polAverage=$polAverage) equal a plain-Scala reference") {
+      val (ref, f2, conjOff) = iwReference(weighting, polAverage)
+      // the fixture holds the cases it claims to
+      if (weighting == "briggs") assert(f2.values.toSet.size >= 2, f2)
+      assert(conjOff === Set((60, 0), (60, 1)))
+      assert(!ref((61, 0))._3)
+      val iw = GridOps.makeImagingWeight(iwVis.repartition(3), p32, weighting,
+        robust = 0.5, polAverage = polAverage, rowKeyCols = Seq("rid"))
+      val expectCols =
+        if (polAverage) Seq("img_chan", "pol", "u_cell", "v_cell", "rid", "u", "v",
+          "freq", "weight", "_in_grid", "imaging_weight")
+        else Seq("img_chan", "pol", "u_cell", "v_cell", "u", "v", "freq",
+          "weight", "rid", "_in_grid", "imaging_weight")
+      val types = Map("u" -> "DoubleType", "v" -> "DoubleType",
+        "freq" -> "DoubleType", "weight" -> "DoubleType",
+        "_in_grid" -> "BooleanType", "imaging_weight" -> "DoubleType")
+      assert(iw.dtypes.toSeq === expectCols.map(c => c -> types.getOrElse(c, "IntegerType")))
+      val got = iw.select("rid", "pol", "u_cell", "v_cell", "_in_grid", "imaging_weight")
+        .collect()
+      assert(got.length === iwRows.length)
+      for (r <- got) {
+        val key = (r.getInt(0), r.getInt(1))
+        val (uc, vc, inGrid, want) = ref(key)
+        assert((r.getInt(2), r.getInt(3), r.getBoolean(4)) === ((uc, vc, inGrid)), key)
+        val have = if (r.isNullAt(5)) None else Some(r.getDouble(5))
+        assert(have.isDefined === want.isDefined, s"$key: $have vs $want")
+        for (h <- have; w <- want)
+          assert(math.abs(h - w) <= 1e-12 * math.max(math.abs(w), 1e-300),
+            s"$key: $h vs reference $w")
+      }
+      // zero and null weights pass through; an off-grid row keeps its weight
+      assert(ref((62, 0))._4 === Some(0.0))
+      assert(ref((64, 0))._4 === None)
+      assert(ref((61, 0))._4 === Some(if (polAverage) 1.5 else 2.0))
+    }
+
+  test("briggs makeImagingWeight scans its parquet source once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_iw").toString + "/vis"
+    iwVis.write.parquet(dir)
+    val vis = spark.read.parquet(dir)
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val n = GridOps.makeImagingWeight(vis, p32, "briggs", robust = 0.5)
+        .collect().length
+      assert(n === iwRows.length)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(scans.get === 1, s"${scans.get} stages scanned the parquet source")
+  }
 }
