@@ -377,7 +377,7 @@ object StreamScaleUp {
       val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       def logState(): (Long, Long) = {
-        val p = new org.apache.hadoop.fs.Path(s"$root/applog")
+        val p = new org.apache.hadoop.fs.Path(s"$root/applog/vectors")
         if (!fs.exists(p)) (0L, 0L)
         else {
           var n = 0L; var b = 0L
@@ -411,8 +411,8 @@ object StreamScaleUp {
       }
       // nothing lost across folds: vectors + surviving log = everything
       val diskRows = spark.read.parquet(s"$root/vectors").count() + {
-        val p = new org.apache.hadoop.fs.Path(s"$root/applog")
-        if (fs.exists(p)) spark.read.parquet(s"$root/applog").count()
+        val p = new org.apache.hadoop.fs.Path(s"$root/applog/vectors")
+        if (fs.exists(p)) spark.read.parquet(s"$root/applog/vectors").count()
         else 0L
       }
       val metaN = spark.read.parquet(s"$root/meta").head()

@@ -592,13 +592,13 @@ object SimilarityOps {
   // Persisted ANN index lifecycle: train once, store, serve many.
   // ------------------------------------------------------------------
 
-  /** The ANN store's sidecars (graft.sources.IndexStore): the
-    * subdirectories its snapshot manages (served data + the compact
-    * staging dir) and its meta row — the build parameters plus the
-    * (n_vectors, id checksum) census of the staleness check.
+  /** The ANN store's layout (graft.sources.IndexStore): one
+    * partitioned kind, `vectors` routed by `list_id`, and its meta row
+    * — the build parameters plus the (n_vectors, id checksum) census
+    * of the staleness check.
     */
   private val AnnStore = IS.Layout(id = "vec_id",
-    subs = Seq("vectors", "applog", "deletes", ".compact"),
+    kinds = Seq("vectors" -> "list_id"),
     meta = Seq("k" -> "int", "iters" -> "int", "m" -> "int",
       "dsub" -> "int", "ksub" -> "int", "qdec" -> "int",
       "n_vectors" -> "long", "id_checksum" -> "long"),
@@ -620,15 +620,20 @@ object SimilarityOps {
     *     smaller than raw vectors), laid out so a probe's nProbe lists
     *     are PARTITION PRUNING at the scan — search I/O rides probed-
     *     list volume, never corpus size
-    *   root/applog     (vec_id, list_id, codes) flat append-log
-    *     segments ([[indexAppend]]), folded by [[indexFlush]]
+    *   root/applog/vectors  (vec_id, list_id, codes) the append log:
+    *     flat segments sorted by list_id ([[indexAppend]]), registered
+    *     under the kind `vectors` with no part id; searches and the
+    *     dup arbitration read them behind the same list filter, and
+    *     [[indexFlush]] / [[indexCompact]] fold them into the
+    *     partitions (graft.sources.IndexStore, the BM25 store's log)
     *   root/deletes    (vec_id, list_id) merge-on-read delete sidecar
     *     ([[indexDelete]]), retired by [[indexCompact]]
     *   root/bloomidx   the packed vec-id Bloom of the append dup-guard
     *   root/meta       one row: the build parameters + corpus census
     *     (n_vectors, id checksum) for the staleness check
-    *   root/commits    the snapshot naming every live vectors / applog
-    *     / deletes file (graft.sources.IndexCommits)
+    *   root/commits    the snapshot naming every live vectors
+    *     (partition files and log segments) / deletes file
+    *     (graft.sources.IndexCommits)
     *
     * Doubles round-trip bit-exactly through parquet, so a search
     * through the stored index is row-identical to the in-memory
@@ -699,9 +704,8 @@ object SimilarityOps {
     // file list from the current commit and every maintenance op is
     // an atomic pointer swap (IndexCommits). The vacuum retires
     // whatever a previous lifecycle on a reused root left behind
-    // (old applog segments, delete sidecars, superseded snapshots).
-    IC.commit(spark, root, IC.listKind(spark, root, "vectors", Some("list_id")))
-    IC.vacuumConf(spark, root, AnnStore.subs)
+    // (old log segments, delete sidecars, superseded snapshots).
+    IS.commitBuild(spark, root, AnnStore)
   }
 
   /** Append NEW vectors to a persisted index WITHOUT retraining — the
@@ -711,7 +715,8 @@ object SimilarityOps {
     * PQ-encoded with the STORED codebooks, and the coded rows APPEND
     * as flat log segments (new parquet files only — existing files
     * untouched; [[indexFlush]] folds them into the `list_id=`
-    * partitions on the maintenance cadence). The meta census
+    * partitions at the log bound or on the maintenance cadence). The
+    * meta census
     * updates additively (count +, checksum + mod p — commutative, so
     * it equals the census recomputed over the union), keeping
     * [[indexIsStale]] honest for the appended corpus.
@@ -723,7 +728,9 @@ object SimilarityOps {
     * so append order and batching never matter.
     *
     * @param buffered Both paths land the delta as SEGMENT file(s) in
-    *   `root/applog` with list_id as a plain column (round-19 opt,
+    *   `root/applog/vectors` with list_id as a plain column, sorted by
+    *   it and registered under the kind `vectors` with no part id
+    *   (the log format of the BM25 store too; round-19 opt,
     *   guide §6 — snapshot-addressed flat segments): a direct append
     *   previously wrote into up-to-K `list_id=` partition directories,
     *   paying one parquet writer open + Hadoop committer rename PER
@@ -745,18 +752,20 @@ object SimilarityOps {
     *   when > 0 and the append log holds at least this many segment
     *   files after the append, [[indexFlush]] runs inline — bounding
     *   the log (whose union scan every search pays) without a manual
-    *   maintenance trigger. 0 disables (flush stays a manual/cadence
-    *   decision, e.g. [[indexMaintain]]).
+    *   maintenance trigger. The default is the bound the BM25 append
+    *   and [[indexMaintain]] share (IndexStore.FlushSegments, 16);
+    *   0 disables (flush stays a manual/cadence decision, e.g.
+    *   [[indexMaintain]]).
     */
   def indexAppend(delta: DataFrame, idCol: String, vecCol: String,
                   root: String, buffered: Boolean = false,
-                  autoFlushSegments: Int = 0): Unit = {
+                  autoFlushSegments: Int = IS.FlushSegments): Unit = {
     val spark = delta.sparkSession
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, AnnStore)
     val cents = readIndexCentroids(spark, root)
     val cb = readIndexCodebooks(spark, root)
-    // both paths write flat applog segment(s) (see the buffered param
-    // doc), discovered by diffing the applog listing, and the delta
+    // both paths write flat log segment(s) (see the buffered param
+    // doc), discovered by diffing the log listing, and the delta
     // census (count + order-free id checksum) rides the segment write
     // as observed metrics — one delta pass total, no per-list
     // directory commits.
@@ -771,26 +780,20 @@ object SimilarityOps {
     val next = IS.appendGuarded(root, snap, AnnStore,
         IS.readMeta(spark, root), delta, idCol, "indexAppend: vec_id",
         "NEW vectors only (use indexDelete + indexCompact, or rebuild)",
-        IC.listKind(spark, root, "applog")) { suspects =>
+        IS.listLog(spark, root, AnnStore)) { suspects =>
       // exact arbitration, pruned: a suspect's list is recomputable
-      // from the stored centroids, so only the suspects' own lists'
-      // files (straight from the snapshot) are read, then the
-      // unflushed append log
+      // from the stored centroids, so only the suspects' own lists are
+      // read — their files straight from the snapshot plus the log
       val sv = delta.join(broadcast(suspects), Seq(idCol), "left_semi")
         .select(col(idCol).cast("long").as("vec_id"),
           graft.functions.NearestCentroidId(
             toDouble(col(vecCol)), cents).cast("long").as("list_id"))
-      val lists = IS.routeKeys(sv, col("list_id"))
-      def dupIn(ids: DataFrame) =
-        ids.select(col("vec_id").cast("long").as("vec_id"))
+      IS.readRouted(spark, root, snap, AnnStore, "vectors",
+          IS.routeKeys(sv, col("list_id")))
+        .map(_.select(col("vec_id").cast("long").as("vec_id"))
           .join(broadcast(sv.select("vec_id")), Seq("vec_id"), "left_semi")
-          .limit(1).collect()
-      val partDup = IS.readFiles(spark, root, "vectors",
-          IC.filesOfParts(snap, "vectors", lists))
-        .map(dupIn).getOrElse(Array.empty)
-      val logFiles = IC.filesOf(snap, "applog")
-      if (partDup.nonEmpty || logFiles.isEmpty) partDup
-      else dupIn(spark.read.parquet(logFiles: _*))
+          .limit(1).collect())
+        .getOrElse(Array.empty)
     } {
       (if (buffered)
          coded.coalesce(1) // one segment file per buffered append
@@ -801,12 +804,10 @@ object SimilarityOps {
          // filter
          coded.repartition(col("list_id"))
            .sortWithinPartitions("list_id"))
-        .write.mode("append").parquet(s"$root/applog")
+        .write.mode("append").parquet(s"$root/applog/vectors")
       IS.observed(obs)
     }
-    if (autoFlushSegments > 0 &&
-        IC.filesOf(next, "applog").size >= autoFlushSegments)
-      indexFlush(spark, root)
+    if (IS.logFull(next, AnnStore, autoFlushSegments)) indexFlush(spark, root)
   }
 
   /** Fold the append log into the `list_id=` partitions and drop it —
@@ -814,74 +815,54 @@ object SimilarityOps {
     * [[indexAppend]] paths feed the log): many small appends each
     * paid ONE segment-file write; the flush pays the per-directory
     * commit cost ONCE for all of them, touching only the lists the
-    * log actually contains. Census, bloom and quantizers are already
-    * up to date (maintained at append time), and searches are
-    * row-identical before and after (the `ann_index_flush` gate
-    * shares `ann_index_append`'s oracle) — flushing changes the
-    * physical layout and nothing else.
+    * log actually contains (graft.sources.IndexStore.fold, the BM25
+    * store's fold). Census, bloom and quantizers are already up to
+    * date (maintained at append time), and searches are row-identical
+    * before and after (the `ann_index_flush` gate shares
+    * `ann_index_append`'s oracle) — flushing changes the physical
+    * layout and nothing else.
     */
   def indexFlush(spark: org.apache.spark.sql.SparkSession,
                  root: String): Unit =
-    IC.maintain(spark, root, AnnStore.subs)(
-      prepareFlush(spark, root))
+    IS.fold(spark, root, AnnStore)
 
   /** One-call self-maintenance for a persisted index — the policy
-    * layer over [[indexFlush]] and [[indexCompact]], so a store stays
+    * layer over [[indexFlush]] and [[indexCompact]] that both stores
+    * share (graft.sources.IndexStore.foldOrCompact), so a store stays
     * healthy on a cron cadence without the operator deciding per-store:
     *
-    *   - FLUSH when the append log holds >= `flushSegments` segment
-    *     files (the measured search-wall-vs-log-size curve is flat to
-    *     ~16 segments, BENCH_logsens_r18 — the same default
-    *     `indexAppendBufferedSink` enforces inline);
     *   - COMPACT when recorded deletes reach `compactDeletedFraction`
     *     of the pre-delete corpus (merge-on-read stays row-identical
     *     at any fraction, but every search pays the anti-join and the
-    *     doomed rows' scan volume — reclaim once it is material).
+    *     doomed rows' scan volume — reclaim once it is material); the
+    *     compaction folds the append log in the same rewrite;
+    *   - otherwise FLUSH when the append log holds >= `flushSegments`
+    *     segment files (the measured search-wall-vs-log-size curve is
+    *     flat to ~16 segments, BENCH_logsens_r18 — the same default
+    *     both append paths enforce inline).
     *
     * Below both thresholds this is a cheap no-op (one snapshot read +
     * one sidecar count — nothing corpus-sized), so it is safe to call
-    * on every maintenance tick. Returns (flushed, compacted).
+    * on every maintenance tick. Returns (log at the flush bound,
+    * compacted).
     */
   def indexMaintain(spark: org.apache.spark.sql.SparkSession,
                     root: String, flushSegments: Int = IS.FlushSegments,
                     compactDeletedFraction: Double = 0.1)
-    : (Boolean, Boolean) = {
-    val snap = IC.readEntries(spark, root)
-    val doFlush = flushSegments > 0 &&
-      IC.filesOf(snap, "applog").size >= flushSegments
-    if (doFlush) indexFlush(spark, root)
-    val doCompact = IS.compactDue(spark, root, snap,
-      AnnStore, compactDeletedFraction)
-    if (doCompact) indexCompact(spark, root)
-    (doFlush, doCompact)
-  }
+    : (Boolean, Boolean) =
+    IS.foldOrCompact(spark, root, AnnStore, flushSegments,
+      compactDeletedFraction)(indexCompact(spark, root))
 
-  /** Stage a flush WITHOUT committing it: fold the log's rows into new
-    * `list_id=` files and return the snapshot that would serve them —
-    * the crash-window half the lifecycle spec exercises (staged files
-    * must be invisible to every read until the pointer swap). None if
-    * no log segments are committed. Package-private: callers use
-    * [[indexFlush]].
+  /** Stage a flush WITHOUT committing it and return the snapshot that
+    * would serve it (None on an empty log) — the crash window the
+    * lifecycle spec and the `ann_index_crash_recovery` gate exercise
+    * (staged files are invisible to every read until the pointer
+    * swap). Package-private: callers use [[indexFlush]].
     */
   private[graft] def prepareFlush(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[IC.Entry]] = {
-    val snap = IC.readEntries(spark, root)
-    val logFiles = IC.filesOf(snap, "applog")
-    if (logFiles.isEmpty) return None
-    val log = spark.read.parquet(logFiles: _*)
-    // the fold can only add files under the lists the log contains —
-    // list those dirs alone (flush-cadence bounded), never the tree
-    val touched = IS.routeKeys(log, col("list_id")).toSeq
-    val added = IC.written(
-        IC.listParts(spark, root, "vectors", "list_id", touched)) {
-      log
-        .repartition(col("list_id")) // one new file per touched list
-        .write.mode("append").partitionBy("list_id")
-        .parquet(s"$root/vectors")
-    }
-    Some(snap.filterNot(_.kind == "applog") ++ added)
-  }
+    : Option[Seq[IC.Entry]] =
+    IS.prepareFold(spark, root, AnnStore)
 
   /** Record deletions against a persisted index — the third leg of the
     * lifecycle (write once / append forever / delete cheaply): doomed
@@ -899,7 +880,7 @@ object SimilarityOps {
   def indexDelete(doomed: DataFrame, idCol: String, root: String,
                   vecCol: String = null): Unit = {
     val spark = doomed.sparkSession
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, AnnStore)
     // Idempotence (IndexStore.freshDeletes): ids the sidecar already
     // records are dropped, and a batch of only those commits nothing.
     // The (count, checksum) census of the fresh doomed ids rides the
@@ -932,13 +913,15 @@ object SimilarityOps {
 
   /** Compact a persisted index's delete sidecar — the fourth leg of
     * the lifecycle (write / append / delete / COMPACT), completing the
-    * maintenance rhythm: physically remove doomed rows and drop the
-    * sidecar, restoring delete-free serving. Surgical by partition,
+    * maintenance rhythm: physically remove doomed rows, fold the
+    * append log and drop the sidecar, restoring delete-free serving
+    * with no log left. Surgical by partition,
     * like purgeDeletes for tables: ONLY the `list_id=` partitions that
     * actually contain doomed rows are rewritten (read snapshot-pruned
     * to those lists, one broadcastable anti-join against the doomed
     * ids, survivors staged as NEW files and committed by one pointer
-    * swap); every other partition's files are left byte-untouched on
+    * swap, the log segments' survivors moved in beside their lists'
+    * files); every other partition's files are left byte-untouched on
     * disk — at 100 TB a handful of doomed lists cost a handful of list
     * rewrites, never a corpus rewrite. Quantizers and meta are
     * untouched (the census already went subtractive at
@@ -956,58 +939,46 @@ object SimilarityOps {
     * The append dup-guard bloom is NOT rebuilt here (unsetting bits
     * would need a corpus scan, defeating the surgical contract):
     * deleted ids stay "possibly present", and [[indexAppend]]'s exact
-    * arbitration — which reads only the suspects' own lists and the
-    * append log — correctly finds them gone post-compact, so
-    * re-appends work.
+    * arbitration — which reads only the suspects' own lists — correctly
+    * finds them gone post-compact, so re-appends work.
     */
   def indexCompact(spark: org.apache.spark.sql.SparkSession,
                    root: String): Unit =
     IC.maintain(spark, root, AnnStore.subs)(
       prepareCompact(spark, root))
 
-  /** Stage a compaction WITHOUT committing it: write the touched
-    * lists' survivors as NEW files (job-unique names moved into the
-    * live `list_id=` dirs), fold the append log's survivors into one
-    * new segment, and return the snapshot that would serve the
-    * compacted store — deletes and replaced files excluded. Staged
-    * files are invisible to every read until the pointer swap, which
-    * is exactly the crash window the lifecycle spec pins. None when no
-    * deletes are recorded. Package-private: callers use
-    * [[indexCompact]].
+  /** Stage a compaction WITHOUT committing it: write the survivors
+    * of the touched lists and of the append log as NEW files
+    * (job-unique names moved into the live `list_id=` dirs,
+    * IndexCommits.rewriteParts) and return the snapshot that would
+    * serve the compacted store — deletes, log segments and replaced
+    * files excluded. Staged files are invisible to every read until
+    * the pointer swap, which is exactly the crash window the
+    * lifecycle spec pins. With no deletes recorded this is the log
+    * fold; None when the log is empty too. Package-private: callers
+    * use [[indexCompact]].
     */
   private[graft] def prepareCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
     : Option[Seq[IC.Entry]] = {
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, AnnStore)
     val delFiles = IC.filesOf(snap, "deletes")
-    if (delFiles.isEmpty) return None // nothing accrued: no-op
+    if (delFiles.isEmpty) return IS.prepareFold(spark, root, AnnStore)
     val del = spark.read.parquet(delFiles: _*)
     val delIds = del.select("vec_id").distinct()
     val haveAllLists = del.where(col("list_id").isNull).limit(1).isEmpty
     // driver list bounded by K (distinct list ids), never corpus size;
     // id-only deletes (no vecCol) pay ONE column-pruned discovery join
+    // over the partition files (doomed log rows need none: the whole
+    // log is rewritten)
     val touched: Set[Long] =
       (if (haveAllLists) Some(del)
-       else IS.readFiles(spark, root, "vectors", IC.filesOf(snap, "vectors"))
+       else IS.readFiles(spark, root, "vectors", IC.partFilesOf(snap, "vectors"))
          .map(_.join(broadcast(delIds), Seq("vec_id"))))
         .map(IS.routeKeys(_, col("list_id"))).getOrElse(Set.empty)
-    val entries = IC.rewriteParts(spark, root,
-        snap.filterNot(e => e.kind == "deletes" || e.kind == "applog"),
-        "vectors", "list_id", touched)(
-      _.join(broadcast(delIds), Seq("vec_id"), "left_anti"))
-    // doomed rows may also sit in unflushed LSM segments: fold the
-    // log's survivors into ONE new segment (bounded by flush cadence)
-    val logFiles = IC.filesOf(snap, "applog")
-    val logSurvivors =
-      if (logFiles.isEmpty) Seq.empty
-      else IC.written(IC.listKind(spark, root, "applog")) {
-        val survivors = spark.read.parquet(logFiles: _*)
-          .join(broadcast(delIds), Seq("vec_id"), "left_anti")
-        if (!survivors.limit(1).isEmpty)
-          survivors.coalesce(1).write.mode("append")
-            .parquet(s"$root/applog")
-      }
-    Some(entries ++ logSurvivors)
+    Some(IC.rewriteParts(spark, root, snap.filterNot(_.kind == "deletes"),
+        "vectors", "list_id", touched, log = IC.logOf(snap, "vectors"))(
+      _.join(broadcast(delIds), Seq("vec_id"), "left_anti")))
   }
 
   /** Reload the trained coarse quantizer from a persisted index —
@@ -1065,31 +1036,22 @@ object SimilarityOps {
     // maintenance op are invisible by construction. A probed list with
     // no vectors has no snapshot entry; skipping it is exactly the
     // empty-list semantics of the isin scan.
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, AnnStore)
     val cents = readIndexCentroids(spark, root)
     val cb = readIndexCodebooks(spark, root)
     val probed = queries
       .select(explode(graft.functions.ProbeListIds(
         toDouble(col(vecCol)), cents, nProbe)).as("list_id"))
       .distinct().collect().map(_.getLong(0))
-    val codedMain = IS.readKind(spark, root, "vectors",
-        IC.filesOfParts(snap, "vectors", probed.toSet))
+    // the probed lists' files plus the unfolded log segments behind
+    // the same list filter (IndexStore.readRouted); the log is bounded
+    // by both append paths' autoFlushSegments and indexMaintain's
+    // flush cadence — never corpus-sized by design
+    val coded0 = IS.readRouted(spark, root, snap, AnnStore, "vectors",
+        probed.toSet)
+      .getOrElse(IS.readKind(spark, root, "vectors", Nil))
       .select(col("vec_id").as("neighbor_id"),
         col("list_id").cast("long").as("list_id"), col("codes"))
-    // unflushed LSM segments: same probe filter as a plain column —
-    // parquet min/max row-group stats prune it. Both append paths feed
-    // the log; it is bounded by autoFlushSegments (the buffered sink's
-    // default) or, for direct ingest, by indexMaintain's flush cadence
-    // or an explicit autoFlushSegments — never corpus-sized by design
-    val logFiles = IC.filesOf(snap, "applog")
-    val coded0 =
-      if (logFiles.nonEmpty)
-        codedMain.unionByName(
-          spark.read.parquet(logFiles: _*)
-            .where(col("list_id").isin(probed: _*))
-            .select(col("vec_id").as("neighbor_id"),
-              col("list_id").cast("long").as("list_id"), col("codes")))
-      else codedMain
     // serve base minus deletes — the index's merge-on-read
     val coded = IS.withoutDeleted(coded0, snap, AnnStore, "neighbor_id")
     ivfPqScore(queries, coded, qId, vecCol, k, cents, cb, nProbe, qdec)

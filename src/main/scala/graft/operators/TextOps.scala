@@ -1616,24 +1616,21 @@ object TextOps {
   private def docBucket(id: Column, n: Int): Column =
     pmod(hash(id), lit(n))
 
-  /** The BM25 store's sidecars (graft.sources.IndexStore): the
-    * subdirectories its snapshot manages and its meta row — the corpus
-    * census (n_docs, sum_dl of the doc lengths, doc checksum) plus the
-    * bucket counts the layout routes by.
+  private val Zstd = Map("compression" -> "zstd")
+  /** The BM25 store's layout (graft.sources.IndexStore): its
+    * partitioned kinds and their route keys — an append lands one log
+    * segment of each (root/applog/<kind>), the fold and compaction
+    * move them into the `key=` partitions, zstd-compressed — and its
+    * meta row: the corpus census (n_docs, sum_dl of the doc lengths,
+    * doc checksum) plus the bucket counts the layout routes by.
     */
   private val BmStore = IS.Layout(id = "doc_id",
-    subs = Seq("postings", "doclens", "applog", "deletes", ".compact"),
+    kinds = Seq("postings" -> "bucket", "doclens" -> "docbucket"),
     meta = Seq("n_docs" -> "long", "sum_dl" -> "long",
       "n_buckets" -> "int", "doc_checksum" -> "long",
       "n_docbuckets" -> "int"),
     count = "n_docs", checksum = "doc_checksum",
-    sums = Seq("sum_dl" -> "dl"))
-  /** The partitioned kinds and their route keys; an append lands one
-    * log segment of each (root/applog/<kind>), the fold and compaction
-    * move them into the `key=` partitions.
-    */
-  private val BmKinds = Seq("postings" -> "bucket", "doclens" -> "docbucket")
-  private val Zstd = Map("compression" -> "zstd")
+    sums = Seq("sum_dl" -> "dl"), options = Zstd)
 
   /** The postings (doc_id, term, tf, dl, bucket) of `df`: one row per
     * distinct (doc, term), routed to its term-hash bucket. dl is
@@ -1648,30 +1645,6 @@ object TextOps {
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).cast("int").as("tf"), max(col("dl")).as("dl"))
       .withColumn("bucket", pmod(polyHash(col("term")), lit(nBuckets)))
-
-  /** Has the append log reached its bound: FlushSegments files of
-    * either kind? */
-  private def logFull(snap: Seq[IC.Entry]): Boolean =
-    BmKinds.exists { case (kind, _) =>
-      IC.logOf(snap, kind).size >= IS.FlushSegments }
-
-  /** The rows of `kind` that route to `parts` on its key: those parts'
-    * `key=` files plus the unfolded log segments under the same key
-    * filter, each read as its own frame and unioned by name. The
-    * filter drops the segments' other rows but prunes no log file: an
-    * append-sized segment is one file of one row group, so it is
-    * scanned whole (fewer than IndexStore.FlushSegments log files per
-    * kind, the log bound). None when no file qualifies.
-    */
-  private def readRouted(spark: org.apache.spark.sql.SparkSession,
-                         root: String, snap: Seq[IC.Entry], kind: String,
-                         parts: Set[Long]): Option[DataFrame] = {
-    val log = IC.logOf(snap, kind)
-    (IS.readFiles(spark, root, kind, IC.filesOfParts(snap, kind, parts)) ++
-      (if (log.isEmpty) None else Some(spark.read.parquet(log: _*))))
-      .map(_.where(col(BmKinds.toMap.apply(kind)).isin(parts.toSeq: _*)))
-      .reduceOption(_ unionByName _)
-  }
 
   /** Persist a BM25 inverted index — the sparse-retrieval sibling of
     * the ANN index lifecycle (SimilarityOps.indexWrite): a 100 TB
@@ -1697,9 +1670,9 @@ object TextOps {
     *     partition), the route key (bucket / docbucket) a plain column
     *     each file is sorted by, registered under the kind with no
     *     part id; every read unions the segments behind its bucket /
-    *     docbucket filter, and the fold ([[invertedIndexMaintain]], the
-    *     append's own log bound) and [[invertedIndexCompact]] move them
-    *     into the partitions
+    *     docbucket filter, and the fold (graft.sources.IndexStore.fold,
+    *     at the append's own log bound or in [[invertedIndexMaintain]])
+    *     and [[invertedIndexCompact]] move them into the partitions
     *   root/bloomidx  (widx, word) — a PACKED doc-id Bloom bitmap
     *     (bits/64 rows max, ~2 MB at the 1<<24 default — bounded by
     *     BITS, never by corpus size), the append dup-guard's fast
@@ -1763,9 +1736,7 @@ object TextOps {
     // read plans its file list from the current commit and every
     // maintenance op is an atomic pointer swap. The vacuum retires
     // whatever a previous lifecycle on a reused root left behind.
-    IC.commit(spark, root, BmKinds.flatMap { case (kind, key) =>
-      IC.listKind(spark, root, kind, Some(key)) })
-    IC.vacuumConf(spark, root, BmStore.subs)
+    IS.commitBuild(spark, root, BmStore)
   }
 
   /** Append NEW documents to a persisted BM25 index — the ingest leg
@@ -1784,8 +1755,8 @@ object TextOps {
     * the union — postings of disjoint docs just concatenate
     * (spec-pinned). Once the log holds
     * [[graft.sources.IndexStore.FlushSegments]] files of either kind,
-    * the append folds it inline (one partitioned append of the log's
-    * rows into the partitions), so the log every read unions stays
+    * the append folds it inline (graft.sources.IndexStore.fold, the
+    * ANN store's fold too), so the log every read unions stays
     * bounded with no maintenance call.
     * Delta doc_ids must be NEW, and that is
     * ENFORCED, not just documented: a re-appended doc would silently
@@ -1807,21 +1778,20 @@ object TextOps {
   def invertedIndexAppend(df: DataFrame, idCol: String, textCol: String,
                           root: String): Unit = {
     val spark = df.sparkSession
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, BmStore)
     val oldMeta = IS.readMeta(spark, root)
     val nBuckets = oldMeta.getInt("n_buckets")
     val nDocBuckets = oldMeta.getInt("n_docbuckets")
     val next = IS.appendGuarded(root, snap, BmStore, oldMeta, df, idCol,
         "invertedIndexAppend: doc_id",
         "NEW documents only (use invertedIndexDelete + compact, or rebuild)",
-        BmKinds.flatMap { case (kind, _) => IC.listLog(spark, root, kind) }
-      ) { suspects =>
+        IS.listLog(spark, root, BmStore)) { suspects =>
       // exact arbitration pruned to the SUSPECTS' own `docbucket=`
       // partitions (the ANN side's list-pruned discipline) plus the
       // log's doclens segments — suspect-bounded work, never a
       // corpus-sized doclens scan
       val bkts = IS.routeKeys(suspects, docBucket(col(idCol), nDocBuckets))
-      readRouted(spark, root, snap, "doclens", bkts)
+      IS.readRouted(spark, root, snap, BmStore, "doclens", bkts)
         .map(_.select(col("doc_id"))
           .join(broadcast(suspects.select(col(idCol).as("doc_id"))),
             Seq("doc_id"), "left_semi")
@@ -1851,7 +1821,7 @@ object TextOps {
         .parquet(s"$root/applog/doclens")
       IS.observed(obs)
     }
-    if (logFull(next)) invertedIndexFold(spark, root)
+    if (IS.logFull(next, BmStore)) IS.fold(spark, root, BmStore)
   }
 
   /** Record document deletions against a persisted inverted index —
@@ -1872,7 +1842,7 @@ object TextOps {
   def invertedIndexDelete(doomed: DataFrame, idCol: String,
                           root: String): Unit = {
     val spark = doomed.sparkSession
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, BmStore)
     val old = IS.readMeta(spark, root)
     val ids = doomed.select(col(idCol).as("doc_id"))
     val bkts = IS.routeKeys(ids,
@@ -1881,7 +1851,7 @@ object TextOps {
     // not subtract the census twice (that would permanently corrupt the
     // n_docs/sum_dl/checksum feeding idf/avgdl in every subsequent
     // indexed search and the staleness gate)
-    readRouted(spark, root, snap, "doclens", bkts)
+    IS.readRouted(spark, root, snap, BmStore, "doclens", bkts)
       .flatMap(lens => IS.freshDeletes(snap, BmStore,
         lens.select("doc_id", "dl")
           .join(broadcast(ids.distinct()), Seq("doc_id"), "left_semi"),
@@ -1906,8 +1876,9 @@ object TextOps {
     IS.isStale(corpus, idCol, root, BmStore)
 
   /** One-call self-maintenance for a persisted inverted index — the
-    * policy layer over [[invertedIndexCompact]] and the log fold, the
-    * sparse twin of SimilarityOps.indexMaintain:
+    * policy layer over [[invertedIndexCompact]] and the log fold that
+    * SimilarityOps.indexMaintain shares
+    * (graft.sources.IndexStore.foldOrCompact):
     *
     *   - COMPACT once recorded deletes reach `compactDeletedFraction`
     *     of the pre-delete corpus (merge-on-read serving is
@@ -1920,8 +1891,9 @@ object TextOps {
     *     [[graft.sources.IndexStore.FlushSegments]] files of either
     *     kind (the bound the append itself enforces inline; reached
     *     here only when an append died between its commit and its
-    *     fold): one partitioned append of the log's rows into the
-    *     `bucket=` / `docbucket=` partitions.
+    *     fold): the log's rows staged one file per `bucket=` /
+    *     `docbucket=` partition they route to, moved in beside its
+    *     files.
     *
     * Below both thresholds this is a cheap no-op (one snapshot read +
     * one sidecar count), safe on every maintenance tick. Returns
@@ -1931,33 +1903,11 @@ object TextOps {
                             root: String,
                             compactDeletedFraction: Double = 0.1)
     : Boolean = {
-    val snap = IC.readEntries(spark, root)
-    val doCompact = IS.compactDue(spark, root, snap, BmStore,
-      compactDeletedFraction)
-    val doFold = !doCompact && logFull(snap)
-    if (doCompact) invertedIndexCompact(spark, root)
-    else if (doFold) invertedIndexFold(spark, root)
-    doCompact || doFold
+    val (full, due) = IS.foldOrCompact(spark, root, BmStore,
+      IS.FlushSegments, compactDeletedFraction)(
+      invertedIndexCompact(spark, root))
+    full || due
   }
-
-  /** Fold the append log into the partitions: each kind's segment rows
-    * are staged one file per touched `bucket=` / `docbucket=`
-    * partition, moved in beside the partition's own files and
-    * committed by one pointer swap (IndexCommits.maintain) — the
-    * partitioned write an append used to pay per call, paid once per
-    * log. Searches are row-identical before and after.
-    */
-  private def invertedIndexFold(spark: org.apache.spark.sql.SparkSession,
-                                root: String): Unit =
-    IC.maintain(spark, root, BmStore.subs) {
-      val snap = IC.readEntries(spark, root)
-      if (BmKinds.forall { case (kind, _) => IC.logOf(snap, kind).isEmpty })
-        None
-      else Some(BmKinds.foldLeft(snap) { case (es, (kind, key)) =>
-        IC.rewriteParts(spark, root, es, kind, key, Set.empty, Zstd,
-          IC.logOf(snap, kind))(identity)
-      })
-    }
 
   /** Compact the inverted index's delete sidecar and fold its append
     * log: physically drop the doomed docs' postings and doclens rows,
@@ -2009,9 +1959,9 @@ object TextOps {
   private[graft] def prepareInvertedCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
     : Option[Seq[IC.Entry]] = {
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, BmStore)
     val delFiles = IC.filesOf(snap, "deletes")
-    val logs = BmKinds.map { case (kind, _) => IC.logOf(snap, kind) }
+    val logs = BmStore.kinds.map { case (kind, _) => IC.logOf(snap, kind) }
     if (delFiles.isEmpty && logs.forall(_.isEmpty)) return None
     val ids =
       if (delFiles.isEmpty) None
@@ -2025,16 +1975,14 @@ object TextOps {
     val nDocBuckets = IS.readMeta(spark, root).getInt("n_docbuckets")
     val doomedKeys = Map(
       "postings" -> ids.flatMap(i => IS.readFiles(spark, root,
-          "postings", snap.collect {
-            case e if e.kind == "postings" && e.partId.isDefined => e.file
-          })
+          "postings", IC.partFilesOf(snap, "postings"))
         .map(_.join(broadcast(i), Seq("doc_id")).select(col("bucket")))),
       "doclens" -> ids.map(_.select(
         docBucket(col("doc_id"), nDocBuckets).as("docbucket"))))
     // each kind's surgical rewrite: ONE route-key job over the doomed
     // keys and the log's, one pruned scan of the touched parts plus the
     // log + broadcast anti-join, staged and moved (IndexCommits)
-    Some(BmKinds.zip(logs).foldLeft(snap.filterNot(_.kind == "deletes")) {
+    Some(BmStore.kinds.zip(logs).foldLeft(snap.filterNot(_.kind == "deletes")) {
       case (es, ((kind, key), log)) =>
         val keys = doomedKeys(kind).toSeq ++
           (if (log.isEmpty) Nil
@@ -2064,7 +2012,7 @@ object TextOps {
                            root: String, termLists: Seq[Seq[String]],
                            k1: Double, b: Double)
     : (DataFrame, Seq[String] => (Column, Column)) = {
-    val snap = IC.readEntries(spark, root)
+    val snap = IS.readEntries(spark, root, BmStore)
     val meta = IS.readMeta(spark, root)
     val nDocs = meta.getLong("n_docs").toDouble
     val avgdl = meta.getLong("sum_dl").toDouble / nDocs
@@ -2073,7 +2021,7 @@ object TextOps {
     val buckets = unionTerms.map(t =>
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
     val post = IS.withoutDeleted(
-      readRouted(spark, root, snap, "postings", buckets.toSet)
+      IS.readRouted(spark, root, snap, BmStore, "postings", buckets.toSet)
         .getOrElse(IS.readKind(spark, root, "postings", Nil))
         .where(col("term").isin(unionTerms: _*)),
       snap, BmStore, "doc_id")

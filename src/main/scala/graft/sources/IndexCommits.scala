@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions.col
   *
   *   root/commits/v=N/   one parquet snapshot per committed version:
   *     rows (kind, part_id, file) naming EVERY live data file of the
-  *     served kinds ("vectors"/"applog"/"deletes" for ANN;
-  *     "postings"/"doclens"/"deletes" for BM25). The CURRENT snapshot
+  *     served kinds ("vectors"/"deletes" for ANN;
+  *     "postings"/"doclens"/"deletes" for BM25) — the `key=value`
+  *     partition files under root/<kind> and the append-log segments
+  *     of both stores under root/applog/<kind>. The CURRENT snapshot
   *     is the max committed N; readers plan their file lists from it
   *     and never trust directory listings.
   *
@@ -34,10 +36,11 @@ import org.apache.spark.sql.functions.col
   * The snapshot is the ONLY store layout: a root without a committed
   * version fails by name ([[readEntries]]) and must be rebuilt. The
   * protocol steps both stores share live here — [[commitWritten]]
-  * (append / delete), [[maintain]] (flush / compact), [[rewriteParts]]
-  * (compaction staging), [[pendingDeletes]] (maintain policies) — and
-  * the operator files keep training, encoding, scoring and their own
-  * thresholds. One bounded snapshot read (#files rows — the same
+  * (append / delete), [[maintain]] (fold / compact), [[rewriteParts]]
+  * (fold and compaction staging), [[pendingDeletes]] (maintain
+  * policies); the log, fold and maintain policy over them live in
+  * [[IndexStore]], and the operator files keep training, encoding and
+  * scoring. One bounded snapshot read (#files rows — the same
   * manifest-sized planning collect every lakehouse reader does)
   * replaces per-partition existence probes at serve time.
   *
@@ -55,9 +58,9 @@ object IndexCommits {
     * store's partition key for files under a `key=value` directory
     * (list_id for ANN vectors, bucket for BM25 postings, docbucket
     * for doclens). None marks either an unfolded log segment of a
-    * partitioned kind (BM25 postings / doclens segments under
-    * root/applog/<kind>, carrying the key as a plain column) or an
-    * unpartitioned kind (ANN applog segments, delete sidecars).
+    * partitioned kind (ANN vectors, BM25 postings / doclens segments
+    * under root/applog/<kind>, carrying the key as a plain column) or
+    * an unpartitioned kind (delete sidecars).
     */
   final case class Entry(kind: String, partId: Option[Long], file: String)
 
@@ -147,6 +150,10 @@ object IndexCommits {
   def logOf(entries: Seq[Entry], kind: String): Seq[String] =
     entries.filter(e => e.kind == kind && e.partId.isEmpty).map(_.file)
 
+  /** The partition files of `kind`: its entries with a part id. */
+  def partFilesOf(entries: Seq[Entry], kind: String): Seq[String] =
+    entries.filter(e => e.kind == kind && e.partId.isDefined).map(_.file)
+
   /** Data files of `kind` under root/<kind>, partId parsed from its
     * `partKey=value` dirs — the listing a mutation diffs around its
     * write ([[written]]).
@@ -163,21 +170,6 @@ object IndexCommits {
   private[graft] def listLog(spark: SparkSession, root: String,
                               kind: String): Seq[Entry] =
     listDataFiles(spark, root, kind, s"applog/$kind", None)
-
-  /** Data files of ONLY the given `partKey=` partitions of
-    * root/<kind> — the bounded write-discovery listing. A mutation can
-    * only add files under the parts its rows route to, so diffing
-    * THESE dirs around the write replaces the full-tree walk (which at
-    * K=1600 cost more than the write itself — r18 rehearsal: direct
-    * append 19 s -> 34 s, flush 18 s -> 35 s from two tree walks each)
-    * while still excluding any pre-existing crash debris from the diff.
-    */
-  private[graft] def listParts(spark: SparkSession, root: String,
-                                kind: String, partKey: String,
-                                parts: Seq[Long]): Seq[Entry] =
-    parts.flatMap(p =>
-      listDataFiles(spark, root, kind, s"$kind/$partKey=$p", None)
-        .map(_.copy(partId = Some(p))))
 
   /** Recursively list the DATA files (part-*) under root/<sub>,
     * parsing partId from a `partKey=value` path segment when given.
@@ -255,7 +247,7 @@ object IndexCommits {
   }
 
   /** Surgical partition rewrite, the staging half of both stores'
-    * compaction and of the BM25 log fold: read ONLY the live files of
+    * compaction and of the log fold (IndexStore.fold): read ONLY the live files of
     * `kind`'s `touched` parts plus the `log` segments of `kind` (their
     * rows carry `partKey` as a plain column), let `keep` drop the
     * doomed rows, write the survivors under root/.compact/<kind> (one

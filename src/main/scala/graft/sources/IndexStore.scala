@@ -10,6 +10,16 @@ import IndexCommits.Entry
   * stores share, one implementation each, parameterised by a store's
   * [[Layout]] and never by which store calls:
   *
+  *   root/<kind>    the partitioned data kinds, one `key=value`
+  *     directory per route key (ANN `vectors` by `list_id`; BM25
+  *     `postings` by `bucket`, `doclens` by `docbucket`), read
+  *     snapshot-pruned to the routed parts ([[readRouted]]);
+  *   root/applog/<kind>  the append log: flat segments of a kind,
+  *     sorted by its route key (a plain column there) and registered
+  *     under the kind with no part id; every routed read unions them,
+  *     and the fold ([[fold]], at [[FlushSegments]] segments of one
+  *     kind) and each store's compaction move them into the parts;
+  *     [[foldOrCompact]] is the maintain policy over both;
   *   root/meta      one census row: the store's build parameters plus
   *     (count, order-free id checksum) and any additive sums —
   *     maintained + on append and - on delete (the checksum mod p), so
@@ -21,35 +31,46 @@ import IndexCommits.Entry
   *     anti-join ([[withoutDeleted]]) and the compact policy
   *     ([[compactDue]]).
   *
-  * meta and bloomidx are kilobyte-bounded and read and written on the
-  * driver ([[TinyParquet]]); the delete sidecar is small append-mode
-  * parquet registered in the snapshot. [[IndexCommits]] stays the
-  * snapshot / commit protocol underneath; the operator files keep
-  * training, encoding, scoring and routing (`list_id`, `bucket`,
-  * `docbucket`) and their own thresholds.
+  * Every entry point reads the snapshot through [[readEntries]], which
+  * fails by name on a kind the layout does not own. meta and bloomidx
+  * are kilobyte-bounded and read and written on the driver
+  * ([[TinyParquet]]); the delete sidecar is small append-mode parquet
+  * registered in the snapshot. [[IndexCommits]] stays the snapshot /
+  * commit protocol underneath; the operator files keep training,
+  * encoding, scoring, route-key computation, arbitration and
+  * compaction's doomed-part discovery.
   */
 private[graft] object IndexStore {
-  /** What one store's sidecars hold.
+  /** What one store's files and sidecars hold.
     *
     * @param id       the id column of its data and delete files
-    * @param subs     the subdirectories its snapshot manages (the
-    *                 vacuum set, compact staging included)
+    * @param kinds    its partitioned data kinds -> route key (the
+    *                 `key=value` directories of root/<kind>, a plain
+    *                 column of its log segments)
     * @param meta     its meta fields in column order (name ->
     *                 TinyParquet kind)
     * @param count    the meta field holding the corpus count
     * @param checksum the meta field holding the id checksum
     * @param sums     additive meta fields -> the column a census sums
+    * @param options  parquet write options of the fold and compaction
     */
-  final case class Layout(id: String, subs: Seq[String],
+  final case class Layout(id: String, kinds: Seq[(String, String)],
                           meta: Seq[(String, String)], count: String,
                           checksum: String,
-                          sums: Seq[(String, String)] = Nil)
+                          sums: Seq[(String, String)] = Nil,
+                          options: Map[String, String] = Map.empty) {
+    /** The subdirectories its snapshot manages: the vacuum set,
+      * compact staging included.
+      */
+    def subs: Seq[String] =
+      kinds.map(_._1) ++ Seq("applog", "deletes", ".compact")
+  }
 
-  /** The log bound both stores' maintain policies default to: fold
-    * the append log once it holds this many segments per kind (the
-    * measured search-wall-vs-log-size curve is flat to ~16 segments,
-    * BENCH_logsens_r18). The BM25 append folds inline at it,
-    * counting log files.
+  /** The log bound both stores' appends and maintain policies default
+    * to: fold the append log once it holds this many segments of one
+    * kind (the measured search-wall-vs-log-size curve is flat to ~16
+    * segments, BENCH_logsens_r18). Both stores' appends fold inline
+    * at it.
     */
   val FlushSegments = 16
 
@@ -215,10 +236,11 @@ private[graft] object IndexStore {
     * distinct `idCol` values check against the Bloom, read ONCE on the
     * driver; only the suspects reach `arbitrate`, the store's exact
     * check over snapshot-pruned files, which returns any confirmed
-    * duplicate rows (the ANN store reads the suspects' own `list_id=`
-    * files — their lists recomputed from the stored centroids — and
-    * then the unflushed applog; the BM25 store reads the suspects'
-    * `docbucket=` doclens files and the doclens log segments). A
+    * duplicate rows (both read their suspects' routed rows,
+    * [[readRouted]]: the ANN store the suspects' `list_id=` files —
+    * their lists recomputed from the stored centroids — and the
+    * vectors log; the BM25 store the suspects' `docbucket=` doclens
+    * files and the doclens log). A
     * deleted but not yet compacted id is still physically present
     * and rejected until compaction removes it. Then ONE commit over
     * `listing` ([[IndexCommits.commitWritten]]): `write` lands the
@@ -323,8 +345,97 @@ private[graft] object IndexStore {
   }
 
   // ------------------------------------------------------------------
-  // Snapshot-planned reads
+  // Snapshot, append log and snapshot-planned reads
   // ------------------------------------------------------------------
+
+  /** The current snapshot of a store of `layout`
+    * ([[IndexCommits.readEntries]], which fails by name on a root
+    * without one): the read every store entry point plans from. Fails
+    * naming the root and the kind when an entry's kind is neither one
+    * of the layout's data kinds nor `deletes` — another store's root,
+    * or a store written with a retired layout, would otherwise serve
+    * without that kind's rows.
+    */
+  def readEntries(spark: SparkSession, root: String,
+                  layout: Layout): Seq[Entry] = {
+    val snap = IndexCommits.readEntries(spark, root)
+    val owned = layout.kinds.map(_._1) :+ "deletes"
+    snap.find(e => !owned.contains(e.kind)).foreach(e =>
+      throw new IllegalStateException(
+        s"the snapshot of $root names kind '${e.kind}', which this store " +
+          s"(kinds ${owned.mkString(", ")}) does not serve — another " +
+          "store's root, or one written with a retired layout: rebuild " +
+          "it with indexWrite / invertedIndexWrite"))
+    snap
+  }
+
+  /** Commit a fresh build's snapshot (every file of the layout's
+    * kinds under root/<kind>) and vacuum what a previous lifecycle on
+    * a reused root left behind.
+    */
+  def commitBuild(spark: SparkSession, root: String, layout: Layout): Unit = {
+    IndexCommits.commit(spark, root, layout.kinds.flatMap { case (kind, key) =>
+      IndexCommits.listKind(spark, root, kind, Some(key)) })
+    IndexCommits.vacuumConf(spark, root, layout.subs)
+  }
+
+  /** The log segments of every kind on disk: the listing an append
+    * diffs around its segment writes.
+    */
+  def listLog(spark: SparkSession, root: String, layout: Layout): Seq[Entry] =
+    layout.kinds.flatMap { case (kind, _) =>
+      IndexCommits.listLog(spark, root, kind) }
+
+  /** Has the append log reached `bound` segment files of any one kind?
+    * Never for `bound` <= 0.
+    */
+  def logFull(snap: Seq[Entry], layout: Layout,
+              bound: Int = FlushSegments): Boolean =
+    bound > 0 && layout.kinds.exists { case (kind, _) =>
+      IndexCommits.logOf(snap, kind).size >= bound }
+
+  /** Fold the append log into the partitions: each kind's segment rows
+    * are staged one file per part they route to, moved in beside the
+    * part's own files and committed by one pointer swap
+    * ([[IndexCommits.maintain]]) — the partitioned write an append
+    * would pay per call, paid once per log. Searches are row-identical
+    * before and after; a no-op on an empty log.
+    */
+  def fold(spark: SparkSession, root: String, layout: Layout): Unit =
+    IndexCommits.maintain(spark, root, layout.subs)(
+      prepareFold(spark, root, layout))
+
+  /** Stage a fold WITHOUT committing it and return the snapshot that
+    * would serve it (None on an empty log): the crash window the
+    * lifecycle spec pins, staged files invisible to every read until
+    * the pointer swap.
+    */
+  def prepareFold(spark: SparkSession, root: String,
+                  layout: Layout): Option[Seq[Entry]] = {
+    val snap = readEntries(spark, root, layout)
+    if (!logFull(snap, layout, bound = 1)) None // an empty log
+    else Some(layout.kinds.foldLeft(snap) { case (es, (kind, key)) =>
+      IndexCommits.rewriteParts(spark, root, es, kind, key, Set.empty,
+        layout.options, IndexCommits.logOf(snap, kind))(identity)
+    })
+  }
+
+  /** The maintain policy of both stores: `compact` (which folds the
+    * log in the same rewrite) once recorded deletes reach `fraction`
+    * of the pre-delete corpus ([[compactDue]]), otherwise [[fold]]
+    * once the log holds `bound` segments of one kind ([[logFull]]).
+    * Below both this is a cheap no-op (one snapshot read and one
+    * sidecar footer count). Returns (log at bound, compacted).
+    */
+  def foldOrCompact(spark: SparkSession, root: String, layout: Layout,
+                    bound: Int, fraction: Double)
+                   (compact: => Unit): (Boolean, Boolean) = {
+    val snap = readEntries(spark, root, layout)
+    val full = logFull(snap, layout, bound)
+    val due = compactDue(spark, root, snap, layout, fraction)
+    if (due) compact else if (full) fold(spark, root, layout)
+    (full, due)
+  }
 
   /** The distinct values of `key` over `df` as a driver set — the
     * route keys (list ids, term buckets, doc buckets) a read or a
@@ -347,4 +458,24 @@ private[graft] object IndexStore {
                files: Seq[String]): DataFrame =
     readFiles(spark, root, kind, files).getOrElse(
       spark.read.parquet(s"$root/$kind").where(lit(false)))
+
+  /** The rows of `kind` that route to `parts` on its key: those parts'
+    * `key=` files plus the unfolded log segments under the same key
+    * filter, each read as its own frame and unioned by name. The
+    * filter drops the segments' other rows but prunes no log file: an
+    * append-sized segment is one file of one row group, so it is
+    * scanned whole (fewer than [[FlushSegments]] log files per kind,
+    * the log bound). None when no file qualifies.
+    */
+  def readRouted(spark: SparkSession, root: String, snap: Seq[Entry],
+                 layout: Layout, kind: String,
+                 parts: Set[Long]): Option[DataFrame] = {
+    val log = IndexCommits.logOf(snap, kind)
+    (readFiles(spark, root, kind,
+        IndexCommits.filesOfParts(snap, kind, parts)) ++
+      (if (log.isEmpty) None else Some(spark.read.parquet(log: _*))))
+      .map(_.where(col(layout.kinds.toMap.apply(kind))
+        .isin(parts.toSeq: _*)))
+      .reduceOption(_ unionByName _)
+  }
 }

@@ -1396,12 +1396,14 @@ object StreamingOps {
     * shares `ann_index_append`'s oracle; the census merge is
     * commutative mod-p addition).
     *
-    * Since round 19 both sinks land micro-batches as flat snapshot-
-    * registered log segments (SimilarityOps.indexAppend writes no
-    * per-list directories on any path — the K-scaled directory-commit
-    * storm is gone); [[indexAppendBufferedSink]] remains the
-    * documented streaming default because it additionally bounds the
-    * log with the auto-flush policy, which this sink does not.
+    * Both sinks land micro-batches as flat snapshot-registered log
+    * segments (SimilarityOps.indexAppend writes no per-list
+    * directories on any path — the K-scaled directory-commit storm is
+    * gone), and both fold the log inline at
+    * graft.sources.IndexStore.FlushSegments segments (indexAppend's
+    * default autoFlushSegments); [[indexAppendBufferedSink]] remains
+    * the documented streaming default because it lands each
+    * micro-batch as ONE file and lets the caller set the bound.
     */
   def indexAppendSink(idCol: String, vecCol: String,
                       root: String): (DataFrame, Long) => Unit =
@@ -1421,7 +1423,8 @@ object StreamingOps {
     *
     * @param autoFlushSegments bounds the log WITHOUT a manual
     *   maintenance trigger: once the append log holds this many
-    *   segment files, the append folds it inline (indexFlush) — so a
+    *   segment files, the append folds it inline (indexFlush, the
+    *   fold both stores share) — so a
     *   search's log-union scan never grows past the threshold while
     *   the amortized per-batch cost stays one segment write plus
     *   1/threshold of a fold. The default (16) sits where the measured
@@ -1447,8 +1450,8 @@ object StreamingOps {
     * micro-batch-sized delta, one commit, never a write into the
     * `bucket=` / `docbucket=` partitions), and the append folds the
     * log inline once it holds graft.sources.IndexStore.FlushSegments
-    * files of either kind — the bound the ANN buffered sink defaults
-    * to. The census merge is
+    * files of either kind — the bound both ANN sinks default to. The
+    * census merge is
     * additive/commutative and the Bloom dup-guard rejects replays of
     * an already-indexed doc_id, so trigger batching/order cannot
     * change the served index (the `stream_bm25_index_append` gate

@@ -27,7 +27,9 @@ import graft.sources.{IndexCommits, TinyParquet}
   *     `docbucket=` doclens partitions plus the unfolded doclens log
   *     segments (plan-captured) — the sparse twin of the ANN side's
   *     list-pruned arbitration — and rejects a duplicate that lives
-  *     only in a segment.
+  *     only in a segment; an ANN search reads ONLY the probed lists'
+  *     files plus the log segments (plan-captured);
+  *   - a snapshot kind the store does not own fails by name.
   */
 class IndexCommitSpec extends SparkSpec {
   import spark.implicits._
@@ -98,7 +100,7 @@ class IndexCommitSpec extends SparkSpec {
     assert(SimilarityOps.indexSearch(queries, root,
       "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
     val after = IndexCommits.readEntries(spark, root)
-    assert(IndexCommits.filesOf(after, "applog").isEmpty)
+    assert(IndexCommits.logOf(after, "vectors").isEmpty)
     // zero orphans: on-disk data files == the snapshot, exactly
     assert(dataFiles(root, Seq("vectors", "applog", "deletes")) ===
       after.map(_.file).toSet)
@@ -111,32 +113,53 @@ class IndexCommitSpec extends SparkSpec {
   test("ANN compact crash window: staged survivors invisible until" +
       " the swap; recovery compacts for real; sidecar retired;" +
       " served rows identical throughout") {
-    val root = java.nio.file.Files.createTempDirectory("graft_icc")
-      .toString + "/idx"
-    val vecs = annVecs
-    SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
-      k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
-    SimilarityOps.indexDelete(
-      vecs.where(col("vec_id") % 2 === 0 && col("vec_id") >= 20),
-      "vec_id", root, vecCol = "embedding")
-    val queries = vecs.where(col("vec_id") < 4)
-    val want = SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq
-    val v0 = IndexCommits.currentVersion(spark, root)
-    // simulated crash inside the old delete-then-rename window
-    assert(SimilarityOps.prepareCompact(spark, root).isDefined)
-    assert(IndexCommits.currentVersion(spark, root) === v0)
-    assert(SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
-    // recovery: heal, stage again, swap — merge-on-read result kept
-    SimilarityOps.indexCompact(spark, root)
-    assert(SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
-    val after = IndexCommits.readEntries(spark, root)
-    assert(IndexCommits.filesOf(after, "deletes").isEmpty)
-    assert(!new java.io.File(s"$root/deletes").exists())
-    assert(dataFiles(root, Seq("vectors", "applog", "deletes")) ===
-      after.map(_.file).toSet)
+    // without and with a pending log append: the compaction folds the
+    // log in the same rewrite, doomed log rows included
+    for (pendingLog <- Seq(false, true)) {
+      val root = java.nio.file.Files.createTempDirectory("graft_icc")
+        .toString + "/idx"
+      val vecs = annVecs
+      if (!pendingLog)
+        SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
+          k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+      else {
+        SimilarityOps.indexWrite(vecs.where(col("vec_id") < 30), "vec_id",
+          "embedding", root, k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+        SimilarityOps.indexAppend(vecs.where(col("vec_id") >= 30),
+          "vec_id", "embedding", root, buffered = true)
+        assert(IndexCommits.logOf(IndexCommits.readEntries(spark, root),
+          "vectors").nonEmpty)
+      }
+      SimilarityOps.indexDelete(
+        vecs.where(col("vec_id") % 2 === 0 && col("vec_id") >= 20),
+        "vec_id", root, vecCol = "embedding")
+      if (pendingLog) // the deletes hit the log as well as the base
+        assert(SimilarityOps.indexSearch(vecs.where(col("vec_id") === 1),
+          root, "vec_id", "embedding", k = 40, nProbe = 2).collect()
+          .map(_.getAs[Long]("neighbor_id")).toSet ===
+          (0L until 40L).filter(i => i != 1 && (i % 2 == 1 || i < 20)).toSet)
+      val queries = vecs.where(col("vec_id") < 4)
+      // with a log, k covers every stored row, log-resident ones too
+      val k = if (pendingLog) 40 else 3
+      val want = SimilarityOps.indexSearch(queries, root,
+        "vec_id", "embedding", k = k, nProbe = 2).collect().toSeq
+      val v0 = IndexCommits.currentVersion(spark, root)
+      // simulated crash inside the old delete-then-rename window
+      assert(SimilarityOps.prepareCompact(spark, root).isDefined)
+      assert(IndexCommits.currentVersion(spark, root) === v0)
+      assert(SimilarityOps.indexSearch(queries, root,
+        "vec_id", "embedding", k = k, nProbe = 2).collect().toSeq === want)
+      // recovery: heal, stage again, swap — merge-on-read result kept
+      SimilarityOps.indexCompact(spark, root)
+      assert(SimilarityOps.indexSearch(queries, root,
+        "vec_id", "embedding", k = k, nProbe = 2).collect().toSeq === want)
+      val after = IndexCommits.readEntries(spark, root)
+      assert(IndexCommits.filesOf(after, "deletes").isEmpty)
+      assert(!new java.io.File(s"$root/deletes").exists())
+      assert(IndexCommits.logOf(after, "vectors").isEmpty)
+      assert(dataFiles(root, Seq("vectors", "applog", "deletes")) ===
+        after.map(_.file).toSet)
+    }
   }
 
   test("BM25 compact crash window: staged survivors invisible until" +
@@ -185,8 +208,8 @@ class IndexCommitSpec extends SparkSpec {
       ksub = 4)
     val sink = graft.streaming.StreamingOps.indexAppendBufferedSink(
       "vec_id", "embedding", root, autoFlushSegments = 2)
-    def logSegs(): Int = IndexCommits.filesOf(
-      IndexCommits.readEntries(spark, root), "applog").size
+    def logSegs(): Int = IndexCommits.logOf(
+      IndexCommits.readEntries(spark, root), "vectors").size
     sink(vecs.where(col("vec_id") >= 30), 0L)
     assert(logSegs() === 1) // below threshold: no fold
     sink(vecs.where(col("vec_id") >= 20 && col("vec_id") < 30), 1L)
@@ -203,8 +226,8 @@ class IndexCommitSpec extends SparkSpec {
     SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20),
       "vec_id", "embedding", direct2, k = 2, iters = 2, m = 8, dsub = 8,
       ksub = 4)
-    def directSegs(): Int = IndexCommits.filesOf(
-      IndexCommits.readEntries(spark, direct2), "applog").size
+    def directSegs(): Int = IndexCommits.logOf(
+      IndexCommits.readEntries(spark, direct2), "vectors").size
     SimilarityOps.indexAppend(vecs.where(col("vec_id") >= 30),
       "vec_id", "embedding", direct2, buffered = false,
       autoFlushSegments = 2)
@@ -215,6 +238,25 @@ class IndexCommitSpec extends SparkSpec {
       autoFlushSegments = 2)
     assert(directSegs() < 2) // threshold reached: folded inline
     assert(SimilarityOps.indexSearch(queries, direct2,
+      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
+    // and by default: a direct append with no autoFlushSegments folds
+    // at IndexStore.FlushSegments (16), so after n appends the log
+    // holds n mod 16 segments
+    val direct3 = java.nio.file.Files.createTempDirectory("graft_icdd")
+      .toString + "/idx"
+    SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20),
+      "vec_id", "embedding", direct3, k = 2, iters = 2, m = 8, dsub = 8,
+      ksub = 4)
+    def defaultSegs(): Int = IndexCommits.logOf(
+      IndexCommits.readEntries(spark, direct3), "vectors").size
+    val batches = (20 until 36).map(i => col("vec_id") === i) :+
+      (col("vec_id") >= 36)
+    for ((batch, i) <- batches.zipWithIndex) {
+      SimilarityOps.indexAppend(vecs.where(batch), "vec_id", "embedding",
+        direct3)
+      assert(defaultSegs() === (i + 1) % 16, s"after append ${i + 1}")
+    }
+    assert(SimilarityOps.indexSearch(queries, direct3,
       "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
   }
 
@@ -356,7 +398,7 @@ class IndexCommitSpec extends SparkSpec {
     assert(SimilarityOps.indexMaintain(spark, root,
       flushSegments = 1, compactDeletedFraction = 0.01) === (true, true))
     val after = IndexCommits.readEntries(spark, root)
-    assert(IndexCommits.filesOf(after, "applog").isEmpty)
+    assert(IndexCommits.logOf(after, "vectors").isEmpty)
     assert(IndexCommits.filesOf(after, "deletes").isEmpty)
     // and a second tick is a clean no-op again
     assert(SimilarityOps.indexMaintain(spark, root,
@@ -512,6 +554,100 @@ class IndexCommitSpec extends SparkSpec {
       while (lens.size < want.size && System.nanoTime() < deadline)
         Thread.sleep(50)
       assert(lens === want)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a snapshot kind the store does not own fails by name: an ANN" +
+      " store naming the retired applog kind, and an ANN read of a BM25" +
+      " root") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ick")
+      .toString
+    val ann = s"$base/ann"
+    val bm = s"$base/bm"
+    val vecs = annVecs
+    SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20), "vec_id",
+      "embedding", ann, k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", bm,
+      nBuckets = 16)
+    // hand-commit what an older ANN writer left: a segment registered
+    // under its own kind, which this store would serve without
+    val seg = s"$base/applog-segment"
+    vecs.where(col("vec_id") >= 20).select(col("vec_id"),
+        lit(0L).as("list_id"), lit(Array[Byte](0)).as("codes"))
+      .coalesce(1).write.parquet(seg)
+    val segFile = new java.io.File(seg).listFiles()
+      .find(_.getName.startsWith("part-")).get.getPath
+    IndexCommits.commit(spark, ann, IndexCommits.readEntries(spark, ann) :+
+      IndexCommits.Entry("applog", None, segFile))
+    def failsNaming(root: String, kind: String)(op: => Any): Unit = {
+      val msg = intercept[IllegalStateException](op).getMessage
+      assert(msg.contains(root) && msg.contains(s"'$kind'"), msg)
+    }
+    val queries = vecs.where(col("vec_id") < 4)
+    failsNaming(ann, "applog")(SimilarityOps.indexSearch(queries, ann,
+      "vec_id", "embedding", k = 3, nProbe = 2))
+    failsNaming(ann, "applog")(SimilarityOps.indexAppend(
+      vecs.where(col("vec_id") === 39), "vec_id", "embedding", ann))
+    failsNaming(ann, "applog")(SimilarityOps.indexMaintain(spark, ann))
+    failsNaming(bm, "postings")(SimilarityOps.indexSearch(queries, bm,
+      "vec_id", "embedding", k = 3, nProbe = 2))
+    failsNaming(bm, "postings")(SimilarityOps.indexDelete(
+      vecs.where(col("vec_id") === 0), "vec_id", bm))
+    failsNaming(ann, "vectors")(TextOps.bm25SearchIndexed(spark, ann,
+      Seq("spark"), k = 3))
+  }
+
+  test("ANN search over an unfolded log scans exactly the probed lists'" +
+      " list_id= files plus the log segments (plan-captured)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_icas")
+      .toString + "/idx"
+    val vecs = annVecs
+    SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20), "vec_id",
+      "embedding", root, k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    SimilarityOps.indexAppend(vecs.where(col("vec_id") >= 30),
+      "vec_id", "embedding", root, buffered = true)
+    SimilarityOps.indexAppend(
+      vecs.where(col("vec_id") >= 20 && col("vec_id") < 30),
+      "vec_id", "embedding", root, buffered = true)
+    val snap = IndexCommits.readEntries(spark, root)
+    val segs = IndexCommits.logOf(snap, "vectors")
+    assert(segs.size === 2)
+    // one probe from vector 0: its own list, one of the two
+    val lists = snap.flatMap(_.partId).toSet
+    assert(lists.size === 2)
+    val probed = lists.filter(l => spark.read.parquet(
+        IndexCommits.filesOfParts(snap, "vectors", Set(l)): _*)
+      .where(col("vec_id") === 0).count() === 1)
+    assert(probed.size === 1)
+    val want = (IndexCommits.filesOfParts(snap, "vectors", probed) ++
+      segs).toSet
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.sparkPlan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.foreach(p =>
+              seen.add(p.toUri.getPath))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // k covers the probed list: every other even id, 20+ from the log
+      val got = SimilarityOps.indexSearch(vecs.where(col("vec_id") === 0),
+        root, "vec_id", "embedding", k = 40, nProbe = 1).collect()
+        .map(_.getAs[Long]("neighbor_id")).toSet
+      assert(got === (2L until 40L by 2).toSet)
+      import scala.jdk.CollectionConverters._
+      def scanned = seen.asScala.toSet.filter(_.contains("/vectors"))
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (scanned.size < want.size && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(scanned === want)
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -212,7 +212,12 @@ class IndexLifecycleSpec extends SparkSpec {
     SimilarityOps.indexDelete(vecs.where(col("vec_id") >= 30),
       "vec_id", root2, vecCol = "embedding")
     SimilarityOps.indexCompact(spark, root2)
-    assert(spark.read.parquet(s"$root2/applog")
+    // the compaction folded the log: no log entry remains, and no
+    // stored vectors row is a doomed one
+    val IC = graft.sources.IndexCommits
+    val compacted = IC.readEntries(spark, root2)
+    assert(IC.logOf(compacted, "vectors").isEmpty)
+    assert(spark.read.parquet(IC.filesOf(compacted, "vectors"): _*)
       .where(col("vec_id") >= 30).count() === 0)
     val cents = SimilarityOps.trainIvf(vecs.where(col("vec_id") < 20),
       "vec_id", "embedding", k = 2, iters = 2)
