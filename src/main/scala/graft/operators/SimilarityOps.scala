@@ -737,17 +737,18 @@ object SimilarityOps {
     *   TOUCHED LIST (~K directory commits — 40 s at K=1600 on the 100x
     *   rehearsal for a 2000-row delta). One flat snapshot-registered
     *   write costs one job regardless of K; searches already union the
-    *   log behind the probe filter (parquet row-group stats prune
-    *   list_id — segments are sorted by it), and [[indexFlush]] /
-    *   [[indexMaintain]] fold segments into the `list_id=` partitions
-    *   on the maintenance cadence — write-ahead segment + background
-    *   merge, the classic LSM trade. `buffered=true` (the streaming
-    *   shape) lands each micro-delta as ONE file; false (batched
-    *   ingest) spreads large deltas across list_id-sorted files (AQE
-    *   coalesces a small delta back to one). Both paths maintain the
-    *   same census/bloom, and both serve row-identically (the
-    *   `ann_index_append_buffered` / `ann_index_flush` gates share
-    *   `ann_index_append`'s oracle).
+    *   log behind the probe filter (an append-sized segment is one row
+    *   group, so the filter prunes no segment file: each is scanned
+    *   whole, and the log bound keeps that scan small), and
+    *   [[indexFlush]] / [[indexMaintain]] fold segments into the
+    *   `list_id=` partitions on the maintenance cadence — write-ahead
+    *   segment + background merge, the classic LSM trade.
+    *   `buffered=true` (the streaming shape) lands each micro-delta as
+    *   ONE file; false (batched ingest) spreads large deltas across
+    *   list_id-sorted files (AQE coalesces a small delta back to one).
+    *   Both paths maintain the same census/bloom, and both serve
+    *   row-identically (the `ann_index_append_buffered` /
+    *   `ann_index_flush` gates share `ann_index_append`'s oracle).
     * @param autoFlushSegments LSM flush policy for BOTH append paths:
     *   when > 0 and the append log holds at least this many segment
     *   files after the append, [[indexFlush]] runs inline — bounding
@@ -800,8 +801,8 @@ object SimilarityOps {
        else
          // batched deltas can be large: spread on list_id (AQE
          // coalesces a small delta back to one partition/file) and sort
-         // within files so parquet row-group stats prune the probe
-         // filter
+         // within files, so a bulk segment's row-group stats can prune
+         // the probe filter
          coded.repartition(col("list_id"))
            .sortWithinPartitions("list_id"))
         .write.mode("append").parquet(s"$root/applog/vectors")
@@ -851,7 +852,7 @@ object SimilarityOps {
                     compactDeletedFraction: Double = 0.1)
     : (Boolean, Boolean) =
     IS.foldOrCompact(spark, root, AnnStore, flushSegments,
-      compactDeletedFraction)(indexCompact(spark, root))
+      compactDeletedFraction)
 
   /** Stage a flush WITHOUT committing it and return the snapshot that
     * would serve it (None on an empty log) — the crash window the
@@ -862,79 +863,59 @@ object SimilarityOps {
   private[graft] def prepareFlush(
       spark: org.apache.spark.sql.SparkSession, root: String)
     : Option[Seq[IC.Entry]] =
-    IS.prepareFold(spark, root, AnnStore)
+    IS.prepareCompact(spark, root, AnnStore, applyDeletes = false)
 
   /** Record deletions against a persisted index — the third leg of the
-    * lifecycle (write once / append forever / delete cheaply): doomed
-    * vec_ids land in an append-mode `deletes` sidecar (megabytes,
-    * never the code table — the deletion-vector discipline of the
-    * lakehouse ops applied to the index), and [[indexSearch]] serves
-    * base-minus-deletes through ONE anti-join the small list
-    * broadcasts through. The meta census updates subtractively
-    * (count -, checksum - mod p), so [[indexIsStale]] stays honest
-    * for the corpus WITHOUT its deleted rows. [[indexCompact]] is the
-    * partition-surgical compaction that resets read amplification —
-    * a full retrain (indexWrite) is only ever needed when the
-    * quantizers themselves have drifted.
+    * lifecycle (write once / append forever / delete cheaply): the
+    * stored (vec_id, list_id) rows of the doomed ids land in an
+    * append-mode `deletes` sidecar (megabytes, never the code table —
+    * the deletion-vector discipline of the lakehouse ops applied to
+    * the index), and [[indexSearch]] serves base-minus-deletes through
+    * ONE anti-join the small list broadcasts through. Only INDEXED ids
+    * are recorded (graft.sources.IndexStore.delete, the BM25 store's
+    * delete too): a never-indexed id is neither recorded nor
+    * subtracted, so a later append of it is served, and a re-deleted
+    * id commits nothing. The meta census updates subtractively (count
+    * -, checksum - mod p), so [[indexIsStale]] stays honest for the
+    * corpus WITHOUT its deleted rows. [[indexCompact]] is the
+    * partition-surgical compaction that resets read amplification — a
+    * full retrain (indexWrite) is only ever needed when the quantizers
+    * themselves have drifted.
+    *
+    * @param vecCol when the doomed rows carry their vectors, only the
+    *   lists NearestCentroidId picks for them (the same stored centroids
+    *   that placed each row) and the log are read for their stored
+    *   rows; without it every list is read.
     */
   def indexDelete(doomed: DataFrame, idCol: String, root: String,
-                  vecCol: String = null): Unit = {
-    val spark = doomed.sparkSession
-    val snap = IS.readEntries(spark, root, AnnStore)
-    // Idempotence (IndexStore.freshDeletes): ids the sidecar already
-    // records are dropped, and a batch of only those commits nothing.
-    // The (count, checksum) census of the fresh doomed ids rides the
-    // sidecar write itself as observed metrics — no second pass. The
-    // checksum hashes the ORIGINAL-typed idCol (observed BEFORE the
-    // cast-to-long select), exactly as write/append census it (a hash
-    // over a cast value would not cancel against theirs).
-    IS.freshDeletes(snap, AnnStore, doomed, idCol, col(idCol).cast("long"))
-      .foreach { fresh =>
-        // When the doomed rows carry their vectors, record the list_id
-        // too (same NearestCentroidId over the same stored centroids
-        // that placed the row at write/append time — deterministic, so
-        // it names the exact partition holding the row). [[indexCompact]]
-        // then rewrites ONLY those partitions with no discovery scan;
-        // id-only deletes store null and compact falls back to one
-        // discovery join.
-        val obs = new org.apache.spark.sql.Observation()
-        val listId =
-          if (vecCol != null)
-            graft.functions.NearestCentroidId(toDouble(col(vecCol)),
-              readIndexCentroids(spark, root)).cast("long")
-          else lit(null).cast("long")
-        IS.commitDeletes(root, snap, AnnStore, IS.readMeta(spark, root),
-            IS.observeCensus(fresh, obs, AnnStore, col(idCol))
-              .select(col(idCol).cast("long").as("vec_id"),
-                listId.as("list_id")))(
-          IS.observed(obs))
-      }
-  }
+                  vecCol: String = null): Unit =
+    IS.delete(root, AnnStore, "vectors", doomed, idCol, {
+      val cents = readIndexCentroids(doomed.sparkSession, root)
+      if (vecCol == null) cents.map(_._1).toSet
+      else IS.routeKeys(doomed, graft.functions.NearestCentroidId(
+        toDouble(col(vecCol)), cents))
+    })
 
   /** Compact a persisted index's delete sidecar — the fourth leg of
     * the lifecycle (write / append / delete / COMPACT), completing the
     * maintenance rhythm: physically remove doomed rows, fold the
     * append log and drop the sidecar, restoring delete-free serving
-    * with no log left. Surgical by partition,
-    * like purgeDeletes for tables: ONLY the `list_id=` partitions that
-    * actually contain doomed rows are rewritten (read snapshot-pruned
-    * to those lists, one broadcastable anti-join against the doomed
-    * ids, survivors staged as NEW files and committed by one pointer
-    * swap, the log segments' survivors moved in beside their lists'
-    * files); every other partition's files are left byte-untouched on
-    * disk — at 100 TB a handful of doomed lists cost a handful of list
+    * with no log left (graft.sources.IndexStore.compact, the BM25
+    * store's compaction too). Surgical by partition, like
+    * purgeDeletes for tables: ONLY the `list_id=` partitions holding
+    * doomed rows — named by the sidecar, which records each row's
+    * stored list_id — are rewritten (read snapshot-pruned to those
+    * lists, one broadcastable anti-join against the doomed ids,
+    * survivors staged as NEW files and committed by one pointer swap,
+    * the log segments' survivors moved in beside their lists' files);
+    * every other partition's files are left byte-untouched on disk —
+    * at 100 TB a handful of doomed lists cost a handful of list
     * rewrites, never a corpus rewrite. Quantizers and meta are
     * untouched (the census already went subtractive at
     * [[indexDelete]] time, so [[indexIsStale]] agrees before and
     * after). Searches through the compacted index are row-identical
     * to the merge-on-read searches before it (the `ann_index_compact`
     * gate shares `ann_index_delete`'s oracle).
-    *
-    * Touched lists come straight from the sidecar when every delete
-    * recorded its `list_id` (deletes-sidecar-sized driver list, K-
-    * bounded after distinct); id-only deletes fall back to ONE
-    * column-pruned discovery join against the code table — documented
-    * cost, avoided entirely by passing `vecCol` to [[indexDelete]].
     *
     * The append dup-guard bloom is NOT rebuilt here (unsetting bits
     * would need a corpus scan, defeating the surgical contract):
@@ -944,42 +925,18 @@ object SimilarityOps {
     */
   def indexCompact(spark: org.apache.spark.sql.SparkSession,
                    root: String): Unit =
-    IC.maintain(spark, root, AnnStore.subs)(
-      prepareCompact(spark, root))
+    IS.compact(spark, root, AnnStore)
 
-  /** Stage a compaction WITHOUT committing it: write the survivors
-    * of the touched lists and of the append log as NEW files
-    * (job-unique names moved into the live `list_id=` dirs,
-    * IndexCommits.rewriteParts) and return the snapshot that would
-    * serve the compacted store — deletes, log segments and replaced
-    * files excluded. Staged files are invisible to every read until
-    * the pointer swap, which is exactly the crash window the
-    * lifecycle spec pins. With no deletes recorded this is the log
-    * fold; None when the log is empty too. Package-private: callers
-    * use [[indexCompact]].
+  /** Stage a compaction WITHOUT committing it and return the snapshot
+    * that would serve the compacted store
+    * (graft.sources.IndexStore.prepareCompact) — the crash window the
+    * lifecycle spec pins. Package-private: callers use
+    * [[indexCompact]].
     */
   private[graft] def prepareCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[IC.Entry]] = {
-    val snap = IS.readEntries(spark, root, AnnStore)
-    val delFiles = IC.filesOf(snap, "deletes")
-    if (delFiles.isEmpty) return IS.prepareFold(spark, root, AnnStore)
-    val del = spark.read.parquet(delFiles: _*)
-    val delIds = del.select("vec_id").distinct()
-    val haveAllLists = del.where(col("list_id").isNull).limit(1).isEmpty
-    // driver list bounded by K (distinct list ids), never corpus size;
-    // id-only deletes (no vecCol) pay ONE column-pruned discovery join
-    // over the partition files (doomed log rows need none: the whole
-    // log is rewritten)
-    val touched: Set[Long] =
-      (if (haveAllLists) Some(del)
-       else IS.readFiles(spark, root, "vectors", IC.partFilesOf(snap, "vectors"))
-         .map(_.join(broadcast(delIds), Seq("vec_id"))))
-        .map(IS.routeKeys(_, col("list_id"))).getOrElse(Set.empty)
-    Some(IC.rewriteParts(spark, root, snap.filterNot(_.kind == "deletes"),
-        "vectors", "list_id", touched, log = IC.logOf(snap, "vectors"))(
-      _.join(broadcast(delIds), Seq("vec_id"), "left_anti")))
-  }
+    : Option[Seq[IC.Entry]] =
+    IS.prepareCompact(spark, root, AnnStore, applyDeletes = true)
 
   /** Reload the trained coarse quantizer from a persisted index —
     * K x d bounded collect, value-identical to the trained centroids

@@ -1685,7 +1685,7 @@ object TextOps {
     *     append/delete maintain it incrementally and
     *     [[invertedIndexIsStale]] can gate serving without rescanning
     *     text
-    *   root/deletes   (doc_id) merge-on-read delete sidecar
+    *   root/deletes   (doc_id, docbucket) merge-on-read delete sidecar
     *     ([[invertedIndexDelete]]), retired by [[invertedIndexCompact]]
     *   root/commits   the snapshot naming every live postings /
     *     doclens (partition files and log segments) / deletes file
@@ -1825,45 +1825,26 @@ object TextOps {
   }
 
   /** Record document deletions against a persisted inverted index —
-    * the merge-on-read leg, mirroring SimilarityOps.indexDelete:
-    * doomed doc_ids land in an append-mode `deletes` sidecar (never
-    * the postings), [[bm25SearchIndexed]] serves base-minus-deletes
-    * through ONE broadcastable anti-join applied BEFORE the df
-    * aggregate (so idf reflects the surviving corpus exactly), and
-    * the meta census updates subtractively. Only INDEXED ids are
-    * recorded: the sidecar rows are the stored doclens rows of the
-    * doomed ids (the doomed ids' `docbucket=` files and the log's
-    * doclens segments), so a never-indexed id is neither recorded nor
-    * subtracted, and a later append of it serves normally. The census
-    * (n_docs, sum_dl, checksum) is observed on that one write.
+    * the merge-on-read leg, mirroring SimilarityOps.indexDelete
+    * (graft.sources.IndexStore.delete, one delete for both stores):
+    * the stored (doc_id, docbucket) doclens rows of the doomed ids —
+    * read from their `docbucket=` files and the log's doclens segments
+    * — land in an append-mode `deletes` sidecar (never the postings),
+    * [[bm25SearchIndexed]] serves base-minus-deletes through ONE
+    * broadcastable anti-join applied BEFORE the df aggregate (so idf
+    * reflects the surviving corpus exactly), and the meta census
+    * (n_docs, sum_dl, checksum), observed on that one write, updates
+    * subtractively. Only INDEXED ids are recorded: a never-indexed id
+    * is neither recorded nor subtracted, so a later append of it
+    * serves normally, and a re-deleted id commits nothing.
     * [[invertedIndexCompact]] physically removes the doomed postings
     * and drops the sidecar.
     */
   def invertedIndexDelete(doomed: DataFrame, idCol: String,
-                          root: String): Unit = {
-    val spark = doomed.sparkSession
-    val snap = IS.readEntries(spark, root, BmStore)
-    val old = IS.readMeta(spark, root)
-    val ids = doomed.select(col(idCol).as("doc_id"))
-    val bkts = IS.routeKeys(ids,
-      docBucket(col("doc_id"), old.getInt("n_docbuckets")))
-    // Idempotence (IndexStore.freshDeletes): a re-deleted doc_id must
-    // not subtract the census twice (that would permanently corrupt the
-    // n_docs/sum_dl/checksum feeding idf/avgdl in every subsequent
-    // indexed search and the staleness gate)
-    IS.readRouted(spark, root, snap, BmStore, "doclens", bkts)
-      .flatMap(lens => IS.freshDeletes(snap, BmStore,
-        lens.select("doc_id", "dl")
-          .join(broadcast(ids.distinct()), Seq("doc_id"), "left_semi"),
-        "doc_id", col("doc_id")))
-      .foreach { rows =>
-        val obs = new org.apache.spark.sql.Observation()
-        IS.commitDeletes(root, snap, BmStore, old,
-            IS.observeCensus(rows, obs, BmStore, col("doc_id"))
-              .select("doc_id"))(
-          IS.observed(obs))
-      }
-  }
+                          root: String): Unit =
+    IS.delete(root, BmStore, "doclens", doomed, idCol,
+      IS.routeKeys(doomed, docBucket(col(idCol),
+        IS.readMeta(doomed.sparkSession, root).getInt("n_docbuckets"))))
 
   /** Has the document corpus drifted since the index was built?
     * Compares the stored (n_docs, order-free doc checksum) census
@@ -1904,94 +1885,45 @@ object TextOps {
                             compactDeletedFraction: Double = 0.1)
     : Boolean = {
     val (full, due) = IS.foldOrCompact(spark, root, BmStore,
-      IS.FlushSegments, compactDeletedFraction)(
-      invertedIndexCompact(spark, root))
+      IS.FlushSegments, compactDeletedFraction)
     full || due
   }
 
   /** Compact the inverted index's delete sidecar and fold its append
-    * log: physically drop the doomed docs' postings and doclens rows,
-    * move the log segments' rows into the partitions, then remove the
-    * sidecar — meta stays (the census went subtractive at delete time).
-    * Unlike the ANN index, a doc's postings spread across MANY
-    * term-hash `bucket=` partitions (the partition key is the TERM,
-    * deletes key on the DOC), so doc deletes are non-local by
-    * construction: the touched buckets are discovered with one
-    * column-pruned (doc_id, bucket) scan, and only those partitions
-    * and the ones the log segments route to rewrite — few doomed docs
-    * and a short log touch few buckets; bulk deletes degrade
-    * gracefully toward the full rewrite a term-partitioned store
-    * fundamentally requires, which is why this runs on the OPTIMIZE
-    * maintenance cadence, not per delete. Afterwards no log segment
-    * remains. Post-compact searches are row-identical to the
-    * pre-compact merge-on-read (the `bm25_index_compact` gate shares
-    * `bm25_index_delete`'s oracle).
+    * log (graft.sources.IndexStore.compact, the ANN store's compaction
+    * too): physically drop the doomed docs' postings and doclens rows,
+    * move the log segments' rows in beside the partition files they
+    * route to, then remove the sidecar — meta stays (the census went
+    * subtractive at delete time), and so does the dup-guard bloom: a
+    * deleted doc_id stays "possibly present", and the append's exact
+    * doclens arbitration lets its re-append through. Unlike the ANN
+    * index, a doc's postings spread across MANY term-hash `bucket=`
+    * partitions (the partition key is the TERM, deletes key on the
+    * DOC), so doc deletes are non-local by construction: the touched
+    * buckets are discovered with one column-pruned (doc_id, bucket)
+    * scan, the touched docbuckets read off the sidecar, and only those
+    * partitions rewrite — few doomed docs touch few buckets; bulk
+    * deletes degrade gracefully toward the full rewrite a
+    * term-partitioned store fundamentally requires, which is why this
+    * runs on the OPTIMIZE maintenance cadence, not per delete.
+    * Afterwards no log segment remains. Post-compact searches are
+    * row-identical to the pre-compact merge-on-read (the
+    * `bm25_index_compact` gate shares `bm25_index_delete`'s oracle).
     */
   def invertedIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                           root: String): Unit = {
-    // the ANN side's crash-safe protocol, applied to the term-
-    // partitioned store; the dup-guard bloom is rebuilt over the
-    // SURVIVORS strictly AFTER the pointer swap (compact is the moment
-    // a deleted doc_id becomes legally re-appendable; a crash between
-    // swap and rebuild leaves the bloom over-approximate — the safe
-    // direction, since suspects arbitrate exactly)
-    IC.maintain(spark, root, BmStore.subs, afterCommit = next =>
-      IS.buildBloom(root, IS.readKind(spark, root, "doclens",
-        IC.filesOf(next, "doclens")).select("doc_id"), "doc_id")
-    )(prepareInvertedCompact(spark, root))
-  }
+                           root: String): Unit =
+    IS.compact(spark, root, BmStore)
 
-  /** Stage an inverted-index compaction WITHOUT committing it: write
-    * the survivors of every postings bucket and doclens docbucket that
-    * the doomed ids or the log segments touch — the part's files plus
-    * the segment rows routed to it, minus the doomed ids — as NEW
-    * files (job-unique names moved into the live partition dirs) and
-    * return the snapshot that would serve the compacted store —
-    * deletes, log segments and replaced files excluded. Staged files
-    * are invisible to every read until the pointer swap (the crash
-    * window the lifecycle spec pins). The bloom rebuild happens AFTER
-    * the swap in [[invertedIndexCompact]]: a stale possibly-present
-    * bloom is the safe over-approximation (suspects arbitrate
-    * exactly), while a survivors-only bloom ahead of the swap would
-    * clear still-indexed deleted ids as provably new. None when no
-    * deletes are recorded and the log is empty.
+  /** Stage an inverted-index compaction WITHOUT committing it and
+    * return the snapshot that would serve the compacted store
+    * (graft.sources.IndexStore.prepareCompact) — the crash window the
+    * lifecycle spec pins. Package-private: callers use
+    * [[invertedIndexCompact]].
     */
   private[graft] def prepareInvertedCompact(
       spark: org.apache.spark.sql.SparkSession, root: String)
-    : Option[Seq[IC.Entry]] = {
-    val snap = IS.readEntries(spark, root, BmStore)
-    val delFiles = IC.filesOf(snap, "deletes")
-    val logs = BmStore.kinds.map { case (kind, _) => IC.logOf(snap, kind) }
-    if (delFiles.isEmpty && logs.forall(_.isEmpty)) return None
-    val ids =
-      if (delFiles.isEmpty) None
-      else Some(spark.read.parquet(delFiles: _*).select("doc_id").distinct())
-    def keep(df: DataFrame) = ids.fold(df)(i =>
-      df.join(broadcast(i), Seq("doc_id"), "left_anti"))
-    // the route keys the doomed ids touch: doc deletes are non-local in
-    // the term-partitioned postings (one column-pruned (doc_id, bucket)
-    // discovery over the partition files), local in doclens (keyed and
-    // partitioned by doc_id hash)
-    val nDocBuckets = IS.readMeta(spark, root).getInt("n_docbuckets")
-    val doomedKeys = Map(
-      "postings" -> ids.flatMap(i => IS.readFiles(spark, root,
-          "postings", IC.partFilesOf(snap, "postings"))
-        .map(_.join(broadcast(i), Seq("doc_id")).select(col("bucket")))),
-      "doclens" -> ids.map(_.select(
-        docBucket(col("doc_id"), nDocBuckets).as("docbucket"))))
-    // each kind's surgical rewrite: ONE route-key job over the doomed
-    // keys and the log's, one pruned scan of the touched parts plus the
-    // log + broadcast anti-join, staged and moved (IndexCommits)
-    Some(BmStore.kinds.zip(logs).foldLeft(snap.filterNot(_.kind == "deletes")) {
-      case (es, ((kind, key), log)) =>
-        val keys = doomedKeys(kind).toSeq ++
-          (if (log.isEmpty) Nil
-           else Seq(spark.read.parquet(log: _*).select(col(key))))
-        val touched = keys.reduceOption(_ union _)
-          .map(IS.routeKeys(_, col(key))).getOrElse(Set.empty)
-        IC.rewriteParts(spark, root, es, kind, key, touched, Zstd, log)(keep)
-    })
-  }
+    : Option[Seq[IC.Entry]] =
+    IS.prepareCompact(spark, root, BmStore, applyDeletes = true)
 
   /** The indexed BM25 scoring both searches share: one snapshot and
     * meta read; the probed postings of the UNION of the queries' terms

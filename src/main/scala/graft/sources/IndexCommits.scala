@@ -38,11 +38,12 @@ import org.apache.spark.sql.functions.col
   * protocol steps both stores share live here — [[commitWritten]]
   * (append / delete), [[maintain]] (fold / compact), [[rewriteParts]]
   * (fold and compaction staging), [[pendingDeletes]] (maintain
-  * policies); the log, fold and maintain policy over them live in
-  * [[IndexStore]], and the operator files keep training, encoding and
-  * scoring. One bounded snapshot read (#files rows — the same
-  * manifest-sized planning collect every lakehouse reader does)
-  * replaces per-partition existence probes at serve time.
+  * policies); the log, delete, fold, compaction and maintain policy
+  * over them live in [[IndexStore]], and the operator files keep
+  * training, encoding and scoring. One bounded snapshot read (#files
+  * rows — the same manifest-sized planning collect every lakehouse
+  * reader does) replaces per-partition existence probes at serve
+  * time.
   *
   * Single-writer by design (one maintenance job per index store, the
   * standard lakehouse assumption); readers are never blocked. The
@@ -226,33 +227,31 @@ object IndexCommits {
     next
   }
 
-  /** The maintenance wrapper (flush, compact): heal any debris a
+  /** The maintenance wrapper (fold, compact): heal any debris a
     * crashed op left ([[vacuumConf]]), stage the change as NEW files
     * (`prepare` returns the snapshot that would serve them, None for a
-    * no-op), swap the pointer, run `afterCommit` on the committed
-    * entries, and retire what the new snapshot replaced. A crash at
-    * any point leaves the current snapshot serving the results it
-    * served before the op started.
+    * no-op), swap the pointer, and retire what the new snapshot
+    * replaced. A crash at any point leaves the current snapshot
+    * serving the results it served before the op started.
     */
   private[graft] def maintain(spark: SparkSession, root: String,
-                               subs: Seq[String],
-                               afterCommit: Seq[Entry] => Unit = _ => ())
+                               subs: Seq[String])
                               (prepare: => Option[Seq[Entry]]): Unit = {
     vacuumConf(spark, root, subs)
     prepare.foreach { next =>
       commit(spark, root, next)
-      afterCommit(next)
       vacuumConf(spark, root, subs)
     }
   }
 
-  /** Surgical partition rewrite, the staging half of both stores'
-    * compaction and of the log fold (IndexStore.fold): read ONLY the live files of
-    * `kind`'s `touched` parts plus the `log` segments of `kind` (their
-    * rows carry `partKey` as a plain column), let `keep` drop the
-    * doomed rows, write the survivors under root/.compact/<kind> (one
-    * file per part) and move them into the live `partKey=value` dirs
-    * under their job-unique names — nothing referenced is overwritten.
+  /** Surgical partition rewrite, the staging half of the compaction
+    * and the log fold (IndexStore.prepareCompact): read ONLY the live
+    * files of `kind`'s `touched` parts plus the `log` segments of
+    * `kind` (their rows carry `partKey` as a plain column), let `keep`
+    * drop the doomed rows, write the survivors under
+    * root/.compact/<kind> (one file per part) and move them into the
+    * live `partKey=value` dirs under their job-unique names — nothing
+    * referenced is overwritten.
     * Returns `entries` with the touched parts' files and the `log`
     * segments replaced by the moved ones; a touched part whose every
     * row was dropped gets no file and leaves the snapshot, and an

@@ -18,17 +18,18 @@ import IndexCommits.Entry
   *     sorted by its route key (a plain column there) and registered
   *     under the kind with no part id; every routed read unions them,
   *     and the fold ([[fold]], at [[FlushSegments]] segments of one
-  *     kind) and each store's compaction move them into the parts;
-  *     [[foldOrCompact]] is the maintain policy over both;
+  *     kind) and the compaction ([[compact]]) move them into the
+  *     parts, one staging function for both ([[prepareCompact]]);
+  *     [[foldOrCompact]] is the maintain policy over them;
   *   root/meta      one census row: the store's build parameters plus
   *     (count, order-free id checksum) and any additive sums —
   *     maintained + on append and - on delete (the checksum mod p), so
   *     [[isStale]] gates serving with one aggregate over the corpus;
   *   root/bloomidx  the packed id Bloom of the append dup-guard
   *     ([[appendGuarded]]);
-  *   root/deletes   the merge-on-read delete sidecar: the idempotent
-  *     record ([[freshDeletes]], [[commitDeletes]]), the serving
-  *     anti-join ([[withoutDeleted]]) and the compact policy
+  *   root/deletes   the merge-on-read delete sidecar: the stored rows
+  *     of the doomed ids, each with its route key ([[delete]]), the
+  *     serving anti-join ([[withoutDeleted]]) and the compact policy
   *     ([[compactDue]]).
   *
   * Every entry point reads the snapshot through [[readEntries]], which
@@ -37,8 +38,7 @@ import IndexCommits.Entry
   * ([[TinyParquet]]); the delete sidecar is small append-mode parquet
   * registered in the snapshot. [[IndexCommits]] stays the snapshot /
   * commit protocol underneath; the operator files keep training,
-  * encoding, scoring, route-key computation, arbitration and
-  * compaction's doomed-part discovery.
+  * encoding, scoring, route-key computation and arbitration.
   */
 private[graft] object IndexStore {
   /** What one store's files and sidecars hold.
@@ -207,8 +207,10 @@ private[graft] object IndexStore {
       Seq("widx" -> "long", "word" -> "long"),
       words.map { case (w, v) => Seq(w, v) })
 
-  /** (Re)build root/bloomidx over the ids of `ids` — at build time and
-    * after a compaction retires ids.
+  /** Build root/bloomidx over the ids of `ids`, at build time. A
+    * compaction leaves it as it is: a retired id stays "possibly
+    * present", and the append's exact arbitration over its routed rows
+    * lets a re-append through.
     */
   def buildBloom(root: String, ids: DataFrame, idCol: String): Unit =
     writeBloom(ids.sparkSession, root, bloomWords(ids, idCol))
@@ -281,38 +283,44 @@ private[graft] object IndexStore {
   // Delete sidecar
   // ------------------------------------------------------------------
 
-  /** The rows of `doomed`, deduplicated on `idCol`, whose `key` the
-    * snapshot's delete sidecar does not record yet — None when every
-    * id is already recorded, and the caller then returns with no
-    * commit: a re-deleted id must not subtract the census twice. The
-    * recorded ids broadcast (sidecar-sized, never corpus-sized).
+  /** Record the ids of `ids` (column `idCol`) as deleted: the sidecar
+    * rows are the stored rows of `kind` routed to `parts`
+    * ([[readRouted]]) whose id is in `ids` and not recorded yet, each
+    * kept with the kind's route key, so [[prepareCompact]] reads the
+    * touched parts off the sidecar. The census of those rows is
+    * observed on the sidecar write, hashing the stored id column
+    * before any cast (as the build and the appends census it), and
+    * meta goes subtractive by it in the same commit. A never-indexed
+    * id is neither recorded nor subtracted, so a later append of it is
+    * served; a re-deleted id is not subtracted twice. No commit when
+    * no row qualifies. The recorded ids broadcast (sidecar-sized,
+    * never corpus-sized); the rows to record are collected (bounded
+    * by the delete batch) and written as one file. `parts` is
+    * evaluated after the snapshot read, so a root without one fails
+    * by name first.
     */
-  def freshDeletes(snap: Seq[Entry], layout: Layout, doomed: DataFrame,
-                   idCol: String, key: Column): Option[DataFrame] = {
-    val files = IndexCommits.filesOf(snap, "deletes")
-    val batch = doomed.dropDuplicates(Seq(idCol))
-    val fresh =
-      if (files.isEmpty) batch
-      else batch.join(
-        broadcast(doomed.sparkSession.read.parquet(files: _*)
-          .select(col(layout.id).as("_exid"))),
-        key === col("_exid"), "left_anti")
-    if (fresh.limit(1).isEmpty) None else Some(fresh)
-  }
-
-  /** Append `rows` to the delete sidecar and commit, with meta going
-    * subtractive from `old` by `census` — the census of the ids the
-    * rows retire, evaluated after the write so a census observed on
-    * it is complete.
-    */
-  def commitDeletes(root: String, snap: Seq[Entry], layout: Layout,
-                    old: TinyParquet.TRow, rows: DataFrame)
-                   (census: => Map[String, Long]): Unit = {
-    val spark = rows.sparkSession
-    IndexCommits.commitWritten(spark, root, snap,
-        IndexCommits.listKind(spark, root, "deletes")) {
-      rows.write.mode("append").parquet(s"$root/deletes")
-      updateMeta(spark, root, layout, old, census, -1)
+  def delete(root: String, layout: Layout, kind: String, ids: DataFrame,
+             idCol: String, parts: => Set[Long]): Unit = {
+    val spark = ids.sparkSession
+    val snap = readEntries(spark, root, layout)
+    val key = layout.kinds.toMap.apply(kind)
+    readRouted(spark, root, snap, layout, kind, parts).foreach { stored =>
+      val fresh = withoutDeleted(stored.join(
+          broadcast(ids.select(col(idCol).as(layout.id))), Seq(layout.id),
+          "left_semi"), snap, layout, layout.id)
+      val obs = new Observation()
+      val rows = observeCensus(fresh, obs, layout, col(layout.id))
+        .select(col(layout.id), col(key).cast("long").as(key))
+      val recorded = rows.collect()
+      if (recorded.nonEmpty)
+        IndexCommits.commitWritten(spark, root, snap,
+            IndexCommits.listKind(spark, root, "deletes")) {
+          spark.createDataFrame(java.util.Arrays.asList(recorded: _*),
+              rows.schema)
+            .coalesce(1).write.mode("append").parquet(s"$root/deletes")
+          updateMeta(spark, root, layout, readMeta(spark, root),
+            observed(obs), -1)
+        }
     }
   }
 
@@ -403,24 +411,78 @@ private[graft] object IndexStore {
     */
   def fold(spark: SparkSession, root: String, layout: Layout): Unit =
     IndexCommits.maintain(spark, root, layout.subs)(
-      prepareFold(spark, root, layout))
+      prepareCompact(spark, root, layout, applyDeletes = false))
 
-  /** Stage a fold WITHOUT committing it and return the snapshot that
-    * would serve it (None on an empty log): the crash window the
-    * lifecycle spec pins, staged files invisible to every read until
-    * the pointer swap.
+  /** Compact: physically drop the recorded deletes' rows, fold the
+    * append log in the same rewrite and retire the sidecar, by one
+    * pointer swap ([[IndexCommits.maintain]]). Meta stays (the census
+    * went subtractive at [[delete]] time), and so does the Bloom
+    * ([[buildBloom]]). Searches are row-identical to the merge-on-read
+    * ones before it.
     */
-  def prepareFold(spark: SparkSession, root: String,
-                  layout: Layout): Option[Seq[Entry]] = {
+  def compact(spark: SparkSession, root: String, layout: Layout): Unit =
+    IndexCommits.maintain(spark, root, layout.subs)(
+      prepareCompact(spark, root, layout, applyDeletes = true))
+
+  /** Stage a compaction (`applyDeletes`) or a fold WITHOUT committing
+    * it and return the snapshot that would serve it: the crash window
+    * the lifecycle spec pins, staged files invisible to every read
+    * until the pointer swap. Per kind of the layout, one
+    * [[IndexCommits.rewriteParts]]: the parts holding a recorded
+    * doomed row ([[doomedParts]]) rewrite minus the doomed ids, and
+    * the log's rows, minus the doomed ids too, move in beside the part
+    * files they route to; every other part's files stay byte-untouched.
+    * The served snapshot has no log entry, and no delete entry after a
+    * compaction. None when there is nothing to do: no log, and no
+    * deletes to apply.
+    */
+  def prepareCompact(spark: SparkSession, root: String, layout: Layout,
+                     applyDeletes: Boolean): Option[Seq[Entry]] = {
     val snap = readEntries(spark, root, layout)
-    if (!logFull(snap, layout, bound = 1)) None // an empty log
-    else Some(layout.kinds.foldLeft(snap) { case (es, (kind, key)) =>
-      IndexCommits.rewriteParts(spark, root, es, kind, key, Set.empty,
-        layout.options, IndexCommits.logOf(snap, kind))(identity)
+    val dels =
+      if (!applyDeletes) Nil else IndexCommits.filesOf(snap, "deletes")
+    if (dels.isEmpty && !logFull(snap, layout, bound = 1)) return None
+    val sidecar =
+      if (dels.isEmpty) None else Some(spark.read.parquet(dels: _*))
+    def keep(df: DataFrame) = sidecar.fold(df)(rows =>
+      df.join(broadcast(rows.select(layout.id).distinct()), Seq(layout.id),
+        "left_anti"))
+    Some(layout.kinds.foldLeft(snap.filterNot(e => dels.contains(e.file))) {
+      case (es, (kind, key)) =>
+        val touched = sidecar.fold(Set.empty[Long])(
+          doomedParts(spark, root, snap, layout, kind, _))
+        IndexCommits.rewriteParts(spark, root, es, kind, key, touched,
+          layout.options, IndexCommits.logOf(snap, kind))(keep)
     })
   }
 
-  /** The maintain policy of both stores: `compact` (which folds the
+  /** The parts of `kind` holding a recorded doomed row (a K-bounded
+    * driver set): straight from the sidecar `rows` when every one
+    * carries the kind's route key, else one column-pruned discovery
+    * join of their ids over the kind's part files — the BM25
+    * postings, whose term-hash route key no sidecar row can carry, and
+    * sidecars written without keys. Doomed log rows need neither: the
+    * whole log is rewritten.
+    */
+  private def doomedParts(spark: SparkSession, root: String,
+                          snap: Seq[Entry], layout: Layout, kind: String,
+                          rows: DataFrame): Set[Long] = {
+    val key = layout.kinds.toMap.apply(kind)
+    val recorded =
+      if (!rows.columns.contains(key)) None
+      else {
+        val keys = rows.select(col(key).cast("long")).distinct().collect()
+        if (keys.exists(_.isNullAt(0))) None
+        else Some(keys.map(_.getLong(0)).toSet)
+      }
+    recorded.getOrElse(readFiles(spark, root, kind,
+        IndexCommits.partFilesOf(snap, kind))
+      .map(f => routeKeys(f.join(broadcast(rows.select(layout.id)),
+        Seq(layout.id)), col(key)))
+      .getOrElse(Set.empty))
+  }
+
+  /** The maintain policy of both stores: [[compact]] (which folds the
     * log in the same rewrite) once recorded deletes reach `fraction`
     * of the pre-delete corpus ([[compactDue]]), otherwise [[fold]]
     * once the log holds `bound` segments of one kind ([[logFull]]).
@@ -428,12 +490,12 @@ private[graft] object IndexStore {
     * sidecar footer count). Returns (log at bound, compacted).
     */
   def foldOrCompact(spark: SparkSession, root: String, layout: Layout,
-                    bound: Int, fraction: Double)
-                   (compact: => Unit): (Boolean, Boolean) = {
+                    bound: Int, fraction: Double): (Boolean, Boolean) = {
     val snap = readEntries(spark, root, layout)
     val full = logFull(snap, layout, bound)
     val due = compactDue(spark, root, snap, layout, fraction)
-    if (due) compact else if (full) fold(spark, root, layout)
+    if (due) compact(spark, root, layout)
+    else if (full) fold(spark, root, layout)
     (full, due)
   }
 

@@ -164,27 +164,45 @@ class IndexCommitSpec extends SparkSpec {
 
   test("BM25 compact crash window: staged survivors invisible until" +
       " the swap; recovery compacts; served rows identical throughout") {
-    val root = java.nio.file.Files.createTempDirectory("graft_icb")
-      .toString + "/idx"
-    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
-      nBuckets = 16)
-    TextOps.invertedIndexDelete(bmCorpus.where(col("doc_id") % 3 === 0),
-      "doc_id", root)
-    val terms = Seq("spark", "join", "hash")
-    val want = TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
-      .collect().toSeq
-    val v0 = IndexCommits.currentVersion(spark, root)
-    assert(TextOps.prepareInvertedCompact(spark, root).isDefined)
-    assert(IndexCommits.currentVersion(spark, root) === v0)
-    assert(TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
-      .collect().toSeq === want)
-    TextOps.invertedIndexCompact(spark, root)
-    assert(TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
-      .collect().toSeq === want)
-    val after = IndexCommits.readEntries(spark, root)
-    assert(IndexCommits.filesOf(after, "deletes").isEmpty)
-    assert(dataFiles(root, Seq("postings", "doclens", "deletes")) ===
-      after.map(_.file).toSet)
+    // without and with a pending log append before the deletes: the
+    // compaction folds the log in the same rewrite, doomed log rows
+    // included; k = 10 covers every doc
+    for (pendingLog <- Seq(false, true)) {
+      val root = java.nio.file.Files.createTempDirectory("graft_icb")
+        .toString + "/idx"
+      if (!pendingLog)
+        TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+          nBuckets = 16)
+      else {
+        TextOps.invertedIndexWrite(bmCorpus.where(col("doc_id") < 5),
+          "doc_id", "text", root, nBuckets = 16)
+        TextOps.invertedIndexAppend(bmCorpus.where(col("doc_id") >= 5),
+          "doc_id", "text", root)
+        assert(IndexCommits.logOf(IndexCommits.readEntries(spark, root),
+          "postings").nonEmpty)
+      }
+      TextOps.invertedIndexDelete(bmCorpus.where(col("doc_id") % 3 === 0),
+        "doc_id", root)
+      val terms = Seq("spark", "join", "hash")
+      val want = TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
+        .collect().toSeq
+      if (pendingLog) // the deletes hit the log (doc 6) as well as the base
+        assert(want.map(_.getLong(0)).toSet === Set(1L, 5L))
+      val v0 = IndexCommits.currentVersion(spark, root)
+      assert(TextOps.prepareInvertedCompact(spark, root).isDefined)
+      assert(IndexCommits.currentVersion(spark, root) === v0)
+      assert(TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
+        .collect().toSeq === want)
+      TextOps.invertedIndexCompact(spark, root)
+      assert(TextOps.bm25SearchIndexed(spark, root, terms, k = 10)
+        .collect().toSeq === want)
+      val after = IndexCommits.readEntries(spark, root)
+      assert(IndexCommits.filesOf(after, "deletes").isEmpty)
+      assert(after.forall(_.partId.isDefined), after.mkString(", "))
+      assert(dataFiles(root,
+        Seq("postings", "doclens", "applog", "deletes")) ===
+        after.map(_.file).toSet)
+    }
   }
 
   test("auto-flush sawtooth: the buffered sink (the streaming-ingest" +

@@ -84,34 +84,67 @@ class IndexLifecycleSpec extends SparkSpec {
 
   test("indexCompact: id-only deletes (no recorded list_id) fall back" +
       " to the discovery join; a fully-doomed list's partition drops") {
-    val root = java.nio.file.Files.createTempDirectory("graft_anncm2")
-      .toString + "/idx"
-    val vecs = annVecs
-    SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
-      k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
-    // id-only delete of EVERY even id: the whole even list is doomed
-    SimilarityOps.indexDelete(vecs.where(col("vec_id") % 2 === 0),
-      "vec_id", root)
-    SimilarityOps.indexCompact(spark, root)
-    val surviving = spark.read.parquet(s"$root/vectors")
-    assert(surviving.select("vec_id").collect().map(_.getLong(0)).toSet ===
-      (0 until 40).map(_.toLong).filter(_ % 2 == 1).toSet)
-    // one of the two list partitions vanished entirely
-    assert(surviving.select("list_id").distinct().count() === 1)
-    assert(!new java.io.File(s"$root/deletes").exists())
-    // post-compact search equals in-memory IVFPQ over the survivors
-    val cents = SimilarityOps.trainIvf(vecs, "vec_id", "embedding",
-      k = 2, iters = 2)
-    val cb = SimilarityOps.pqCodebooks(vecs, "vec_id", "embedding",
-      m = 8, dsub = 8, ksub = 4)
-    val queries = vecs.where(col("vec_id") < 4)
-    val got = SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2)
-    val want = SimilarityOps.ivfPqTopKWith(queries,
-      vecs.where(col("vec_id") % 2 === 1),
-      "vec_id", "vec_id", "embedding", k = 3, cents, cb, nProbe = 2)
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    // legacy = a sidecar written before deletes recorded their list_id
+    // (null keys): the compaction finds the doomed list by the
+    // discovery join instead, and rewrites the same list only
+    for (legacy <- Seq(false, true)) {
+      val root = java.nio.file.Files.createTempDirectory("graft_anncm2")
+        .toString + "/idx"
+      val vecs = annVecs
+      SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
+        k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+      // id-only delete of EVERY even id: the whole even list is doomed
+      SimilarityOps.indexDelete(vecs.where(col("vec_id") % 2 === 0),
+        "vec_id", root)
+      // the id-only delete reads every list, so each sidecar row carries
+      // its stored list_id: the compaction rewrites that list only
+      val stored = spark.read.parquet(s"$root/vectors")
+        .select("vec_id", "list_id")
+      val recorded = spark.read.parquet(s"$root/deletes")
+      assert(recorded.where(col("list_id").isNull).count() === 0)
+      assert(recorded.select("vec_id", "list_id").exceptAll(
+        stored.where(col("vec_id") % 2 === 0)).count() === 0)
+      assert(recorded.count() === 20)
+      val doomedList = recorded.select("list_id").distinct().collect()
+        .map(_.getLong(0)).toSeq
+      assert(doomedList.size === 1)
+      if (legacy) {
+        val IC = graft.sources.IndexCommits
+        val snap = IC.readEntries(spark, root)
+        val old = IC.listKind(spark, root, "deletes").toSet
+        recorded.select(col("vec_id"), lit(null).cast("long").as("list_id"))
+          .coalesce(1).write.mode("append").parquet(s"$root/deletes")
+        IC.commit(spark, root, snap.filterNot(_.kind == "deletes") ++
+          IC.listKind(spark, root, "deletes").filterNot(old))
+        assert(spark.read.parquet(IC.filesOf(IC.readEntries(spark, root),
+          "deletes"): _*).where(col("list_id").isNotNull).count() === 0)
+      }
+      val before = listFiles(s"$root/vectors")
+      SimilarityOps.indexCompact(spark, root)
+      val after = listFiles(s"$root/vectors")
+      val otherList =
+        before.filterNot(_._1.contains(s"list_id=${doomedList.head}"))
+      assert(otherList.nonEmpty && otherList === after)
+      val surviving = spark.read.parquet(s"$root/vectors")
+      assert(surviving.select("vec_id").collect().map(_.getLong(0)).toSet ===
+        (0 until 40).map(_.toLong).filter(_ % 2 == 1).toSet)
+      // one of the two list partitions vanished entirely
+      assert(surviving.select("list_id").distinct().count() === 1)
+      assert(!new java.io.File(s"$root/deletes").exists())
+      // post-compact search equals in-memory IVFPQ over the survivors
+      val cents = SimilarityOps.trainIvf(vecs, "vec_id", "embedding",
+        k = 2, iters = 2)
+      val cb = SimilarityOps.pqCodebooks(vecs, "vec_id", "embedding",
+        m = 8, dsub = 8, ksub = 4)
+      val queries = vecs.where(col("vec_id") < 4)
+      val got = SimilarityOps.indexSearch(queries, root,
+        "vec_id", "embedding", k = 3, nProbe = 2)
+      val want = SimilarityOps.ivfPqTopKWith(queries,
+        vecs.where(col("vec_id") % 2 === 1),
+        "vec_id", "vec_id", "embedding", k = 3, cents, cb, nProbe = 2)
+      assert(got.exceptAll(want).count() === 0)
+      assert(want.exceptAll(got).count() === 0)
+    }
   }
 
   test("ANN append dup-guard: re-appended vec_id rejected (including" +
@@ -170,9 +203,13 @@ class IndexLifecycleSpec extends SparkSpec {
       ksub = 4)
     SimilarityOps.indexAppend(vecs.where(col("vec_id") >= 20),
       "vec_id", "embedding", direct)
+    // the reference serves from its partition files alone
+    SimilarityOps.indexFlush(spark, direct)
     val queries = vecs.where(col("vec_id") < 4)
+    // k covers every stored row: PQ code ties let base ids outrank log
+    // ids at a small k, which would hide whether a search reads the log
     val want = SimilarityOps.indexSearch(queries, direct,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq
+      "vec_id", "embedding", k = 40, nProbe = 2).collect().toSeq
     // buffered twin: two segments, searches served from the log
     val root = java.nio.file.Files.createTempDirectory("graft_lsm1")
       .toString + "/idx"
@@ -186,7 +223,7 @@ class IndexLifecycleSpec extends SparkSpec {
       "vec_id", "embedding", root, buffered = true)
     assert(new java.io.File(s"$root/applog").exists())
     assert(SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
+      "vec_id", "embedding", k = 40, nProbe = 2).collect().toSeq === want)
     assert(!SimilarityOps.indexIsStale(vecs, "vec_id", root))
     // the dup guard must see log-resident ids too
     val e = intercept[IllegalArgumentException] {
@@ -198,7 +235,7 @@ class IndexLifecycleSpec extends SparkSpec {
     SimilarityOps.indexFlush(spark, root)
     assert(!new java.io.File(s"$root/applog").exists())
     assert(SimilarityOps.indexSearch(queries, root,
-      "vec_id", "embedding", k = 3, nProbe = 2).collect().toSeq === want)
+      "vec_id", "embedding", k = 40, nProbe = 2).collect().toSeq === want)
     // flush with no log is a no-op
     SimilarityOps.indexFlush(spark, root)
     // delete + compact with a live log: doomed log rows stripped too
@@ -224,10 +261,10 @@ class IndexLifecycleSpec extends SparkSpec {
     val cb = SimilarityOps.pqCodebooks(vecs.where(col("vec_id") < 20),
       "vec_id", "embedding", m = 8, dsub = 8, ksub = 4)
     val got2 = SimilarityOps.indexSearch(queries, root2,
-      "vec_id", "embedding", k = 3, nProbe = 2)
+      "vec_id", "embedding", k = 40, nProbe = 2)
     val want2 = SimilarityOps.ivfPqTopKWith(queries,
       vecs.where(col("vec_id") < 30),
-      "vec_id", "vec_id", "embedding", k = 3, cents, cb, nProbe = 2)
+      "vec_id", "vec_id", "embedding", k = 40, cents, cb, nProbe = 2)
     assert(got2.exceptAll(want2).count() === 0)
     assert(want2.exceptAll(got2).count() === 0)
     // post-compact the deleted log ids are legally new again
@@ -270,6 +307,35 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(stored.count() === 8)
     assert(stored.exceptAll(mem).count() === 0)
     assert(mem.exceptAll(stored).count() === 0)
+  }
+
+  test("indexDelete records only indexed ids: a never-indexed id is" +
+      " not pending, leaves the census alone, and a later append of it" +
+      " is served, not hidden") {
+    val vecs = annVecs
+    // id 99 rides along with the vector of id 3, so both the id-only
+    // and the routed delete would find a list for it
+    val late = vecs.where(col("vec_id") === 3)
+      .select(lit(99L).as("vec_id"), col("embedding"))
+    val doomed = vecs.where(col("vec_id") === 1).union(late)
+    val IC = graft.sources.IndexCommits
+    for (vecCol <- Seq[String](null, "embedding")) {
+      val r = java.nio.file.Files.createTempDirectory("graft_annnever")
+        .toString + "/idx"
+      SimilarityOps.indexWrite(vecs, "vec_id", "embedding", r,
+        k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+      SimilarityOps.indexDelete(doomed, "vec_id", r, vecCol)
+      assert(IC.pendingDeletes(spark, IC.readEntries(spark, r)) === 1)
+      val survivors = vecs.where(col("vec_id") =!= 1)
+      assert(!SimilarityOps.indexIsStale(survivors, "vec_id", r))
+      SimilarityOps.indexAppend(late, "vec_id", "embedding", r)
+      assert(!SimilarityOps.indexIsStale(survivors.union(late), "vec_id", r))
+      // k covers every stored row: 99 is served, 1 is not
+      val hits = SimilarityOps.indexSearch(vecs.where(col("vec_id") === 0),
+          r, "vec_id", "embedding", k = 41, nProbe = 2).collect()
+        .map(_.getAs[Long]("neighbor_id")).toSet
+      assert(hits === (2L until 40L).toSet + 99L, s"vecCol = $vecCol")
+    }
   }
 
   private def bmCorpus = Seq(
@@ -369,33 +435,62 @@ class IndexLifecycleSpec extends SparkSpec {
   }
 
   test("invertedIndexCompact rewrites only doomed-posting buckets") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bmcmp")
-      .toString + "/idx"
-    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
-      nBuckets = 16)
+    def bucketOf(t: String) =
+      java.lang.Math.floorMod(TextOps.polyHashFn(t), 16L)
     // doc 4 is the only doc with these terms: its buckets are the only
     // buckets any doomed posting lives in
-    val doomedBuckets = Seq("quick", "brown", "fox", "the").map(t =>
-      java.lang.Math.floorMod(TextOps.polyHashFn(t), 16L)).toSet
-    TextOps.invertedIndexDelete(bmCorpus.where(col("doc_id") === 4),
-      "doc_id", root)
-    val before = spark.read.parquet(s"$root/postings")
-      .select(input_file_name().as("f"), col("bucket"))
-      .distinct().collect().map(r => r.getString(0) -> r.getInt(1))
-    TextOps.invertedIndexCompact(spark, root)
-    val after = spark.read.parquet(s"$root/postings")
-      .select(input_file_name().as("f"), col("bucket"))
-      .distinct().collect().map(r => r.getString(0) -> r.getInt(1))
-    val untouchedBefore = before.filterNot {
-      case (_, b) => doomedBuckets.contains(b.toLong) }.toSet
-    val untouchedAfter = after.filterNot {
-      case (_, b) => doomedBuckets.contains(b.toLong) }.toSet
-    assert(untouchedBefore === untouchedAfter)
-    assert(untouchedBefore.nonEmpty)
-    val touchedBefore = before.toSet -- untouchedBefore
-    val touchedAfter = after.toSet -- untouchedAfter
-    assert(touchedBefore.nonEmpty)
-    assert(touchedBefore.map(_._1).intersect(touchedAfter.map(_._1)).isEmpty)
+    val doomedBuckets = Seq("quick", "brown", "fox", "the").map(bucketOf)
+      .toSet
+    // a pending log doc whose postings route to buckets without a
+    // doomed posting: they move in beside those buckets' own files
+    val lateTerms = Seq("spark", "hash", "join", "data", "tables")
+      .filterNot(t => doomedBuckets(bucketOf(t))).take(2)
+    assert(lateTerms.nonEmpty)
+    val late = Seq((7L, lateTerms.mkString(" "))).toDF("doc_id", "text")
+    def bucketFiles(root: String): Set[(String, Long, Long)] =
+      listFiles(s"$root/postings").map { case (p, mtime) =>
+        (p, "bucket=(\\d+)".r.findFirstMatchIn(p).get.group(1).toLong, mtime)
+      }.toSet
+    for (pendingLog <- Seq(false, true)) {
+      val root = java.nio.file.Files.createTempDirectory("graft_bmcmp")
+        .toString + "/idx"
+      TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", root,
+        nBuckets = 16)
+      if (pendingLog)
+        TextOps.invertedIndexAppend(late, "doc_id", "text", root)
+      TextOps.invertedIndexDelete(bmCorpus.where(col("doc_id") === 4),
+        "doc_id", root)
+      val before = bucketFiles(root)
+      TextOps.invertedIndexCompact(spark, root)
+      val after = bucketFiles(root)
+      val untouchedBefore = before.filterNot(f => doomedBuckets(f._2))
+      val untouchedAfter = after.filterNot(f => doomedBuckets(f._2))
+      // untouched buckets keep their files: same paths, same mtimes
+      assert(untouchedBefore.subsetOf(untouchedAfter))
+      assert(untouchedBefore.nonEmpty)
+      val landed = untouchedAfter -- untouchedBefore
+      if (!pendingLog) assert(landed.isEmpty)
+      else {
+        // the log doc's postings landed beside them, one file per
+        // bucket, and nothing else did
+        val lateBuckets = lateTerms.map(bucketOf).toSet
+        assert(untouchedBefore.exists(f => lateBuckets(f._2)))
+        assert(landed.toSeq.map(_._2).sorted === lateBuckets.toSeq.sorted)
+        assert(spark.read.parquet(landed.map(_._1).toSeq: _*)
+          .select("doc_id").distinct().collect().map(_.getLong(0)) ===
+          Array(7L))
+        val IC = graft.sources.IndexCommits
+        val snap = IC.readEntries(spark, root)
+        assert(IC.logOf(snap, "postings").isEmpty &&
+          IC.logOf(snap, "doclens").isEmpty)
+      }
+      // touched buckets: fully rewritten, no pre-compaction file left
+      val touchedBefore = before -- untouchedBefore
+      val touchedAfter = after -- untouchedAfter
+      assert(touchedBefore.nonEmpty)
+      assert(touchedBefore.map(_._1).intersect(touchedAfter.map(_._1))
+        .isEmpty)
+    }
   }
 
   test("invertedIndexAppend rejects an already-indexed doc_id instead" +
