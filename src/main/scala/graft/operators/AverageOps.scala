@@ -30,29 +30,37 @@ object AverageOps {
     * interior bins with missing rows).
     *
     * Scale note: group count = |keys| × nchan/width — uniform by
-    * construction, no skew; one shuffle on the group key. The trim
-    * bound is a 1-row broadcast, free at any scale.
+    * construction, no skew; one shuffle on the group key, which the
+    * trim reuses, so the input is read once. Each bin carries its max
+    * channel; the global max M comes from the aggregated bins (one row,
+    * broadcast), and a bin b is kept iff b < floor((M+1)/width) — the
+    * same rule, since chan < floor((M+1)/width)*width iff
+    * floor(chan/width) < floor((M+1)/width). Two details keep Catalyst
+    * planning ONE bin exchange for both sides of that join: the bin
+    * aggregates travel as one struct (max channel first, so the max
+    * struct carries M) that the bound side reads whole, and the filter
+    * is null-safe (coalesce), so no inferred not-null filter is pushed
+    * under one side only. AverageOpsSpec counts the scans.
     */
   def chanAverage(df: DataFrame, chanCol: String, width: Int,
                   keys: Seq[String], weighted: Seq[Weighted],
                   plain: Seq[String] = Nil, trim: Boolean = true): DataFrame = {
-    val in =
-      if (!trim) df
-      else {
-        val bound = df.agg(
-          (floor((max(col(chanCol)) + 1) / width) * width).as("_chan_bound"))
-        df.crossJoin(broadcast(bound))
-          .where(col(chanCol) < col("_chan_bound"))
-          .drop("_chan_bound")
-      }
-    val bin = floor(col(chanCol) / width).cast("int").as(chanCol)
+    val group = keys.map(col) :+ floor(col(chanCol) / width).cast("int").as(chanCol)
     val aggs =
       weighted.map(wv =>
-        (sum(col(wv.value) * col(wv.weight)) / sum(col(wv.weight))).as(wv.value)) ++
-      weighted.map(wv => sum(col(wv.weight)).as(wv.weight)) ++
-      plain.map(c => avg(col(c)).as(c))
-    in.groupBy((keys.map(col) :+ bin): _*)
-      .agg(aggs.head, aggs.tail: _*)
+        wv.value -> sum(col(wv.value) * col(wv.weight)) / sum(col(wv.weight))) ++
+      weighted.map(wv => wv.weight -> sum(col(wv.weight))) ++
+      plain.map(c => c -> avg(col(c)))
+    val named = aggs.map { case (n, a) => a.as(n) }
+    if (!trim) return df.groupBy(group: _*).agg(named.head, named.tail: _*)
+    val bins = df.groupBy(group: _*)
+      .agg(struct(max(col(chanCol)).as("max") +: named: _*).as("_bin"))
+    val bound = bins.agg(max(col("_bin")).as("_top"))
+      .select(floor((col("_top.max") + 1) / width).as("_bound"))
+    bins.crossJoin(broadcast(bound))
+      .where(coalesce(col(chanCol) < col("_bound"), lit(false)))
+      .select((keys :+ chanCol).map(c => bins(c)) ++
+        aggs.map { case (n, _) => col("_bin").getField(n).as(n) }: _*)
   }
 
   /** time_average, resample flavor (cngi/vis/time_average.py:21,66):

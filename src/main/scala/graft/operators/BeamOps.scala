@@ -89,45 +89,42 @@ object BeamOps {
       exp(-(lit(alpha) * x * x + lit(beta) * x * y + lit(gamma) * y * y)))
   }
 
+  /** Circular convolution of two real row-major nL x nM planes:
+    * fftshift(ifft2(fft2(a) * fft2(b))) with numpy's 1/N inverse
+    * normalization (our inverse is unnormalized), as (re, im). Consumes
+    * both inputs.
+    */
+  private def fftConvolve(a: Array[Double], b: Array[Double], nL: Int, nM: Int)
+      : (Array[Double], Array[Double]) = {
+    val n = nL * nM
+    val aIm = new Array[Double](n); val bIm = new Array[Double](n)
+    Fft.fft2(a, aIm, nL, nM, invert = false)
+    Fft.fft2(b, bIm, nL, nM, invert = false)
+    var i = 0
+    while (i < n) {
+      val re = a(i) * b(i) - aIm(i) * bIm(i)
+      val im = a(i) * bIm(i) + aIm(i) * b(i)
+      a(i) = re; aIm(i) = im
+      i += 1
+    }
+    Fft.fft2(a, aIm, nL, nM, invert = true)
+    (Fft.fftshift2(a, nL, nM).map(_ / n), Fft.fftshift2(aIm, nL, nM).map(_ / n))
+  }
+
   /** smooth (cngi/image/smooth.py:96-108): per-plane FFT convolution of
-    * the image with a kernel plane: ifft2(fft2(image)*fft2(kernel)),
-    * fftshifted. Long-form planes in, long-form smoothed image out —
-    * same per-plane mapGroups infrastructure as make_image.
+    * the image with a kernel plane, |ifft2(fft2(image)*fft2(kernel))|,
+    * fftshifted. Long-form planes in (the one gather,
+    * GridOps.densePlanes), long-form smoothed image out.
     */
   def smooth(spark: SparkSession, image: DataFrame, kernel: DataFrame,
              nL: Int, nM: Int, valueCol: String = "image",
              kernelCol: String = "beam"): DataFrame = {
     import spark.implicits._
-    val tagged = image.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col(valueCol).cast("double"), lit(0).as("kind"))
-      .union(kernel.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col(kernelCol).cast("double"), lit(1).as("kind")))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    tagged.groupByKey(r => (r._1, r._2)).flatMapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-      val imgRe = new Array[Double](nL * nM); val imgIm = new Array[Double](nL * nM)
-      val kerRe = new Array[Double](nL * nM); val kerIm = new Array[Double](nL * nM)
-      for ((_, _, l, m, v, kind) <- it)
-        if (kind == 0) imgRe(l * nM + m) = v else kerRe(l * nM + m) = v
-      Fft.fft2(imgRe, imgIm, nL, nM, invert = false)
-      Fft.fft2(kerRe, kerIm, nL, nM, invert = false)
-      var i = 0
-      while (i < nL * nM) {
-        val re = imgRe(i) * kerRe(i) - imgIm(i) * kerIm(i)
-        val im = imgRe(i) * kerIm(i) + imgIm(i) * kerRe(i)
-        imgRe(i) = re; imgIm(i) = im
-        i += 1
-      }
-      Fft.fft2(imgRe, imgIm, nL, nM, invert = true)
-      // numpy ifft2 normalizes by 1/N; our inverse is unnormalized
-      val n = (nL * nM).toDouble
-      val outRe = Fft.fftshift2(imgRe, nL, nM)
-      val outIm = Fft.fftshift2(imgIm, nL, nM)
+    GridOps.densePlanes(Seq((image, col(valueCol), (nL, nM)),
+        (kernel, col(kernelCol), (nL, nM)))) { (chan, pol, planes) =>
+      val (re, im) = fftConvolve(planes(0), planes(1), nL, nM)
       (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map { m =>
-        val idx = l * nM + m
-        (chan, pol, l, m, math.hypot(outRe(idx) / n, outIm(idx) / n))
+        (chan, pol, l, m, math.hypot(re(l * nM + m), im(l * nM + m)))
       })
     }.toDF("img_chan", "pol", "l_idx", "m_idx", "smoothed")
   }
@@ -141,58 +138,30 @@ object BeamOps {
     * W(0,0) = 1) and s the flux scale — the standard feathering
     * weighting (Stanimirovic et al.). Implemented in image space via
     * the exact identity  comb = int + B (x) (s*sd - int)  with B the
-    * normalized beam and (x) circular convolution — one FFT multiply
-    * per plane inside flatMapGroups, same per-plane parallelism as
-    * smooth: planes are the distribution unit, a 100 TB cube feathers
+    * normalized beam and (x) the circular convolution [[smooth]] uses —
+    * one FFT multiply per plane, same per-plane parallelism as smooth:
+    * planes are the distribution unit, a 100 TB cube feathers
     * plane-parallel with no cross-plane traffic.
     */
   def feather(spark: SparkSession, imgInt: DataFrame, imgSd: DataFrame,
               sdBeam: DataFrame, nL: Int, nM: Int,
               fluxScale: Double = 1.0): DataFrame = {
     import spark.implicits._
-    def tag(df: DataFrame, vCol: String, kind: Int) =
-      df.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col(vCol).cast("double"), lit(kind).as("kind"))
-    val tagged = tag(imgInt, "image", 0)
-      .union(tag(imgSd, "image", 1))
-      .union(tag(sdBeam, "beam", 2))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    tagged.groupByKey(r => (r._1, r._2)).flatMapGroups {
-      (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-        val intI = new Array[Double](nL * nM)
-        val dRe = new Array[Double](nL * nM)
-        val bRe = new Array[Double](nL * nM)
-        for ((_, _, l, m, v, kind) <- it) kind match {
-          case 0 => intI(l * nM + m) = v
-          case 1 => dRe(l * nM + m) = v * fluxScale
-          case _ => bRe(l * nM + m) = v
-        }
-        var bSum = 0.0
-        var i = 0
-        while (i < nL * nM) { bSum += bRe(i); i += 1 }
-        val bn = if (bSum == 0.0) 1.0 else bSum
-        i = 0
-        while (i < nL * nM) { bRe(i) /= bn; dRe(i) -= intI(i); i += 1 }
-        val dIm = new Array[Double](nL * nM)
-        val bIm = new Array[Double](nL * nM)
-        Fft.fft2(dRe, dIm, nL, nM, invert = false)
-        Fft.fft2(bRe, bIm, nL, nM, invert = false)
-        i = 0
-        while (i < nL * nM) {
-          val re = dRe(i) * bRe(i) - dIm(i) * bIm(i)
-          val im = dRe(i) * bIm(i) + dIm(i) * bRe(i)
-          dRe(i) = re; dIm(i) = im
-          i += 1
-        }
-        Fft.fft2(dRe, dIm, nL, nM, invert = true)
-        val n = (nL * nM).toDouble
-        val outRe = Fft.fftshift2(dRe, nL, nM)
-        (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map { m =>
-          val idx = l * nM + m
-          (chan, pol, l, m, intI(idx) + outRe(idx) / n)
-        })
+    GridOps.densePlanes(Seq((imgInt, col("image"), (nL, nM)),
+        (imgSd, col("image").cast("double") * fluxScale, (nL, nM)),
+        (sdBeam, col("beam"), (nL, nM)))) { (chan, pol, planes) =>
+      val Array(intI, dRe, bRe) = planes
+      var bSum = 0.0
+      var i = 0
+      while (i < nL * nM) { bSum += bRe(i); i += 1 }
+      val bn = if (bSum == 0.0) 1.0 else bSum
+      i = 0
+      while (i < nL * nM) { bRe(i) /= bn; dRe(i) -= intI(i); i += 1 }
+      val (outRe, _) = fftConvolve(dRe, bRe, nL, nM)
+      (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map { m =>
+        val idx = l * nM + m
+        (chan, pol, l, m, intI(idx) + outRe(idx))
+      })
     }.toDF("img_chan", "pol", "l_idx", "m_idx", "feathered")
   }
 

@@ -67,7 +67,9 @@ object CleanOps {
   }
 
   /** Distributed CLEAN: long-form image + psf (img_chan, pol, l_idx,
-    * m_idx, value) -> long-form (model, residual).
+    * m_idx, image) -> long-form (model, residual). Both frames pass
+    * through the one gather (GridOps.densePlanes) into dense nL x nM
+    * and psfL x psfM planes; a plane either frame lacks is all zero.
     *
     * NOTE the PSF the reference subtracts is NORMALIZED to unit peak
     * (make_psf output); pass it that way.
@@ -75,26 +77,27 @@ object CleanOps {
   def cleanPlanes(spark: SparkSession, image: DataFrame, psf: DataFrame,
                   nL: Int, nM: Int, psfL: Int, psfM: Int,
                   gain: Double = 0.1, threshold: Double = 0.01,
-                  niter: Int = 1000): DataFrame = {
+                  niter: Int = 1000): DataFrame =
+    cleanEach(spark, image, psf, nL, nM, psfL, psfM) { (res, psfA) =>
+      (hogbom(res, psfA, nL, nM, psfL, psfM, gain, threshold, niter), res)
+    }
+
+  /** The co-grouped per-(chan, pol) shape of every CLEAN here: long-form
+    * image + psf gathered into dense planes (GridOps.densePlanes),
+    * `clean(residual, psf)` -> (model, residual) one plane at a time,
+    * long-form CleanResult rows out.
+    */
+  private def cleanEach(spark: SparkSession, image: DataFrame, psf: DataFrame,
+                        nL: Int, nM: Int, psfL: Int, psfM: Int)(
+      clean: (Array[Double], Array[Double]) => (Array[Double], Array[Double]))
+      : DataFrame = {
     import spark.implicits._
-    val img = image.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(0).as("kind"))
-      .union(psf.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(1).as("kind")))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    img.groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-        val res = new Array[Double](nL * nM)
-        val psfA = new Array[Double](psfL * psfM)
-        for ((_, _, l, m, v, kind) <- it)
-          if (kind == 0) res(l * nM + m) = v else psfA(l * psfM + m) = v
-        val model = hogbom(res, psfA, nL, nM, psfL, psfM, gain, threshold, niter)
-        (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map(m =>
-          CleanResult(chan, pol, l, m, model(l * nM + m), res(l * nM + m))))
-      }.toDF()
+    GridOps.densePlanes(Seq((image, col("image"), (nL, nM)),
+        (psf, col("image"), (psfL, psfM)))) { (chan, pol, planes) =>
+      val (model, res) = clean(planes(0), planes(1))
+      (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map(m =>
+        CleanResult(chan, pol, l, m, model(l * nM + m), res(l * nM + m))))
+    }.toDF()
   }
 
   /** Multi-scale CLEAN scale function (deconvolve_multiterm_clean.py's
@@ -252,28 +255,11 @@ object CleanOps {
                     nL: Int, nM: Int, psfL: Int, psfM: Int,
                     scales: Seq[Int], gain: Double = 0.1,
                     threshold: Double = 0.01, niter: Int = 1000,
-                    smallScaleBias: Double = 0.6): DataFrame = {
-    import spark.implicits._
-    val img = image.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(0).as("kind"))
-      .union(psf.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(1).as("kind")))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    img.groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-        val res = new Array[Double](nL * nM)
-        val psfA = new Array[Double](psfL * psfM)
-        for ((_, _, l, m, v, kind) <- it)
-          if (kind == 0) res(l * nM + m) = v else psfA(l * psfM + m) = v
-        val (model, resOut) = msClean(res, psfA, nL, nM, psfL, psfM,
-          scales, gain, threshold, niter, smallScaleBias)
-        (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map(m =>
-          CleanResult(chan, pol, l, m, model(l * nM + m), resOut(l * nM + m))))
-      }.toDF()
-  }
+                    smallScaleBias: Double = 0.6): DataFrame =
+    cleanEach(spark, image, psf, nL, nM, psfL, psfM) { (res, psfA) =>
+      msClean(res, psfA, nL, nM, psfL, psfM, scales, gain, threshold, niter,
+        smallScaleBias)
+    }
 
   /** deconvolve_fast_resolve (ngcasa/deconvolution/
     * deconvolve_fast_resolve.py — a NotImplementedError stub; docstring:
@@ -294,48 +280,37 @@ object CleanOps {
   def fastResolve(spark: SparkSession, image: DataFrame, psf: DataFrame,
                   nL: Int, nM: Int, lambda: Double): DataFrame = {
     import spark.implicits._
-    val tagged = image.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(0).as("kind"))
-      .union(psf.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(1).as("kind")))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    tagged.groupByKey(r => (r._1, r._2)).flatMapGroups {
-      (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-        val n = nL * nM
-        val imgRe = new Array[Double](n); val imgIm = new Array[Double](n)
-        val psfRe = new Array[Double](n); val psfIm = new Array[Double](n)
-        for ((_, _, l, m, v, kind) <- it)
-          if (kind == 0) imgRe(l * nM + m) = v else psfRe(l * nM + m) = v
-        Fft.fft2(imgRe, imgIm, nL, nM, invert = false)
-        Fft.fft2(psfRe, psfIm, nL, nM, invert = false)
-        var errAcc = 0.0
-        var i = 0
-        while (i < n) {
-          val p2 = psfRe(i) * psfRe(i) + psfIm(i) * psfIm(i)
-          val den = p2 + lambda
-          // conj(P) * I / den
-          val re = (psfRe(i) * imgRe(i) + psfIm(i) * imgIm(i)) / den
-          val im = (psfRe(i) * imgIm(i) - psfIm(i) * imgRe(i)) / den
-          imgRe(i) = re; imgIm(i) = im
-          errAcc += lambda / den
-          i += 1
-        }
-        val error = errAcc / n
-        Fft.fft2(imgRe, imgIm, nL, nM, invert = true)
-        val outRe = Fft.fftshift2(imgRe, nL, nM)
-        val outIm = Fft.fftshift2(imgIm, nL, nM)
-        (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map { m =>
-          val idx = l * nM + m
-          // model = Re(ifft) — for a real image+psf the spectrum is
-          // Hermitian so Im is rounding noise, and a quadratic-prior
-          // MAP estimate legitimately goes negative (sidelobe
-          // ringing); taking a magnitude here would silently fold
-          // those regions positive
-          (chan, pol, l, m, outRe(idx) / n, error)
-        })
+    GridOps.densePlanes(Seq((image, col("image"), (nL, nM)),
+        (psf, col("image"), (nL, nM)))) { (chan, pol, planes) =>
+      val n = nL * nM
+      val Array(imgRe, psfRe) = planes
+      val imgIm = new Array[Double](n); val psfIm = new Array[Double](n)
+      Fft.fft2(imgRe, imgIm, nL, nM, invert = false)
+      Fft.fft2(psfRe, psfIm, nL, nM, invert = false)
+      var errAcc = 0.0
+      var i = 0
+      while (i < n) {
+        val p2 = psfRe(i) * psfRe(i) + psfIm(i) * psfIm(i)
+        val den = p2 + lambda
+        // conj(P) * I / den
+        val re = (psfRe(i) * imgRe(i) + psfIm(i) * imgIm(i)) / den
+        val im = (psfRe(i) * imgIm(i) - psfIm(i) * imgRe(i)) / den
+        imgRe(i) = re; imgIm(i) = im
+        errAcc += lambda / den
+        i += 1
+      }
+      val error = errAcc / n
+      Fft.fft2(imgRe, imgIm, nL, nM, invert = true)
+      val outRe = Fft.fftshift2(imgRe, nL, nM)
+      (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map { m =>
+        val idx = l * nM + m
+        // model = Re(ifft) — for a real image+psf the spectrum is
+        // Hermitian so Im is rounding noise, and a quadratic-prior
+        // MAP estimate legitimately goes negative (sidelobe
+        // ringing); taking a magnitude here would silently fold
+        // those regions positive
+        (chan, pol, l, m, outRe(idx) / n, error)
+      })
     }.toDF("img_chan", "pol", "l_idx", "m_idx", "model", "error")
   }
 
@@ -486,28 +461,11 @@ object CleanOps {
                      nL: Int, nM: Int, psfL: Int, psfM: Int,
                      sigmas: Seq[Double], gain: Double = 0.1,
                      threshold: Double = 0.01, niter: Int = 100,
-                     refineIters: Int = 0): DataFrame = {
-    import spark.implicits._
-    val img = image.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(0).as("kind"))
-      .union(psf.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("l_idx").cast("int"), col("m_idx").cast("int"),
-        col("image").cast("double"), lit(1).as("kind")))
-      .as[(Int, Int, Int, Int, Double, Int)]
-    img.groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
-        val (chan, pol) = key
-        val res = new Array[Double](nL * nM)
-        val psfA = new Array[Double](psfL * psfM)
-        for ((_, _, l, m, v, kind) <- it)
-          if (kind == 0) res(l * nM + m) = v else psfA(l * psfM + m) = v
-        val (model, resOut) = aspClean(res, psfA, nL, nM, psfL, psfM,
-          sigmas, gain, threshold, niter, refineIters)
-        (0 until nL).iterator.flatMap(l => (0 until nM).iterator.map(m =>
-          CleanResult(chan, pol, l, m, model(l * nM + m), resOut(l * nM + m))))
-      }.toDF()
-  }
+                     refineIters: Int = 0): DataFrame =
+    cleanEach(spark, image, psf, nL, nM, psfL, psfM) { (res, psfA) =>
+      aspClean(res, psfA, nL, nM, psfL, psfM, sigmas, gain, threshold, niter,
+        refineIters)
+    }
 
   final case class RmResult(l_idx: Int, m_idx: Int, phi_idx: Int,
                             model_re: Double, model_im: Double,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fft
 
@@ -13,10 +13,15 @@ import graft.functions.Fft
   * (ngcasa/imaging/make_imaging_weight.py:144-255).
   *
   * Spark-first design (replaces the reference's hand-built dask graph
-  * + chunk-index bookkeeping, _standard_grid.py:35-120):
+  * + chunk-index bookkeeping, _standard_grid.py:35-120). Like the
+  * reference's one `_standard_grid_jit`, ONE gridding kernel
+  * (`gridPartition`), one plane type (`PartialPlane`) and one merge
+  * (`mergePlanes`) serve makeGrid, makeImage, makePsf and
+  * makeImageAndPsf; the psf is a flag of the kernel, and
+  * makeImageAndPsf grids both plane kinds in the same pass:
   *
   *  1. `mapPartitions` grids each INPUT partition locally into dense
-  *     per-(img_chan, pol) partial planes — no shuffle of raw
+  *     per-(doPsf, img_chan, pol) partial planes — no shuffle of raw
   *     visibilities, exactly the reference's per-chunk partial grids.
   *  2. `groupByKey(plane).reduceGroups(array add)` merges partials —
   *     Spark's partial+final aggregation replaces `_tree_sum_list`
@@ -27,6 +32,15 @@ import graft.functions.Fft
   *     the buffer-size math of SURVEY.md §7.3 risk 2: a plane is
   *     8B x 2 x nU x nV, e.g. 64 MB at 2048^2 — partition the input
   *     by chan when cube-mode planes x groups exceed executor memory).
+  *     One shifted inverse FFT (`planeIfft`) serves every image
+  *     normalizer here and in MosaicOps; each keeps its own correction
+  *     divide.
+  *
+  * The image-plane operators downstream (CleanOps, BeamOps) take
+  * long-form planes and densify them through one gather,
+  * `densePlanes`. Two kernels stay separate on purpose: the mosaic
+  * gridder's complex taps (MosaicOps) and the support-1 weight gridder
+  * of makeImagingWeight.
   *
   * Numerics follow the reference deliberately (SURVEY.md §7.3 risk 3):
   * fortran-style `int(x+0.5)` center rounding (_standard_grid.py:311),
@@ -117,13 +131,28 @@ object GridOps {
 
   // ---------------------------------------------------------- gridding
 
+  /** The standard gridder over one input partition: dense partial
+    * planes per (doPsf, img_chan, pol), one kind per flag of `psfFlags`.
+    * A data plane grids (re, im) x weight, a psf plane grids the weight
+    * alone; each kind has its own `weighted_data != 0` gate, and a row
+    * that passes any gate opens a plane of every requested kind for its
+    * (img_chan, pol) — so when both kinds are gridded together, an image
+    * plane exists wherever a psf plane does (all zero when only the psf
+    * gate passed, e.g. re = im = 0 and weight != 0).
+    */
   private def gridPartition(rows: Iterator[GridVis], p: GridParams,
-                            doPsf: Boolean): Iterator[PartialPlane] = {
+                            psfFlags: Seq[Boolean])
+      : Iterator[(Boolean, PartialPlane)] = {
     val cgk = cgk1D(p.oversampling, p.support)
     val sc = p.support / 2
     val (nU, nV) = (p.nU, p.nV)
     val (cU, cV) = (nU / 2, nV / 2)
-    val planes = mutable.LinkedHashMap.empty[(Int, Int), PartialPlane]
+    val kinds = psfFlags.toArray
+    val (wRe, wIm) = (new Array[Double](kinds.length), new Array[Double](kinds.length))
+    val pass = new Array[Boolean](kinds.length)
+    val taps = new Array[Double](p.support * p.support)
+    val cells = new Array[Int](taps.length)
+    val planes = mutable.LinkedHashMap.empty[(Boolean, Int, Int), PartialPlane]
     for (r <- rows) {
       // uv_scale per reference: -(freq * delta_lm * n_uv) / c
       val u = r.u * (-(r.freq * p.deltaLM._1 * nU) / SpeedOfLight)
@@ -134,41 +163,58 @@ object GridOps {
         if (uc + sc < nU && vc + sc < nV && uc - sc >= 0 && vc - sc >= 0) {
           val uFrac = math.floor((uc - uPos) * p.oversampling + 0.5).toInt
           val vFrac = math.floor((vc - vPos) * p.oversampling + 0.5).toInt
-          val (wRe, wIm, selW) =
-            if (doPsf) (r.weight, 0.0, r.weight)
-            else (r.re * r.weight, r.im * r.weight, r.weight)
-          if (!(wRe.isNaN || wIm.isNaN) && (wRe != 0.0 || wIm != 0.0)) {
-            val plane = planes.getOrElseUpdate((r.img_chan, r.pol),
-              PartialPlane(r.img_chan, r.pol, new Array[Double](2 * nU * nV),
-                new Array[Boolean](nU * nV), 0.0))
+          var any = false
+          var k = 0
+          while (k < kinds.length) {
+            if (kinds(k)) { wRe(k) = r.weight; wIm(k) = 0.0 }
+            else { wRe(k) = r.re * r.weight; wIm(k) = r.im * r.weight }
+            pass(k) = !(wRe(k).isNaN || wIm(k).isNaN) && (wRe(k) != 0.0 || wIm(k) != 0.0)
+            any ||= pass(k)
+            k += 1
+          }
+          if (any) {
             // tap window [-sc, support-sc) — exactly `support` taps for
             // either parity, matching range(-support//2, support-support//2)
             // (_standard_grid.py:285-287)
             var norm = 0.0
+            var t = 0
             var iv = -sc
             while (iv < p.support - sc) {
               val convV = cgk(math.abs(p.oversampling * iv + vFrac))
               var iu = -sc
               while (iu < p.support - sc) {
-                val conv = cgk(math.abs(p.oversampling * iu + uFrac)) * convV
-                if (conv != 0.0) {
-                  val cell = (uc + iu) * nV + (vc + iv)
-                  plane.grid(2 * cell) += conv * wRe
-                  plane.grid(2 * cell + 1) += conv * wIm
-                  plane.touched(cell) = true
-                }
-                norm += conv
-                iu += 1
+                taps(t) = cgk(math.abs(p.oversampling * iu + uFrac)) * convV
+                cells(t) = (uc + iu) * nV + (vc + iv)
+                norm += taps(t)
+                t += 1; iu += 1
               }
               iv += 1
             }
-            planes((r.img_chan, r.pol)) =
-              plane.copy(sum_weight = plane.sum_weight + selW * norm)
+            k = 0
+            while (k < kinds.length) {
+              val key = (kinds(k), r.img_chan, r.pol)
+              val plane = planes.getOrElseUpdate(key,
+                PartialPlane(r.img_chan, r.pol, new Array[Double](2 * nU * nV),
+                  new Array[Boolean](nU * nV), 0.0))
+              if (pass(k)) {
+                t = 0
+                while (t < taps.length) {
+                  if (taps(t) != 0.0) {
+                    plane.grid(2 * cells(t)) += taps(t) * wRe(k)
+                    plane.grid(2 * cells(t) + 1) += taps(t) * wIm(k)
+                    plane.touched(cells(t)) = true
+                  }
+                  t += 1
+                }
+                planes(key) = plane.copy(sum_weight = plane.sum_weight + r.weight * norm)
+              }
+              k += 1
+            }
           }
         }
       }
     }
-    planes.valuesIterator
+    planes.iterator.map { case ((psf, _, _), pl) => (psf, pl) }
   }
 
   private[operators] def mergePlanes(a: PartialPlane, b: PartialPlane): PartialPlane = {
@@ -181,6 +227,25 @@ object GridOps {
     a.copy(sum_weight = a.sum_weight + b.sum_weight)
   }
 
+  /** The two-stage partial/merge shape described in the object doc,
+    * for the plane kinds `psfFlags` names: merged planes tagged with
+    * their doPsf flag, one per (doPsf, img_chan, pol), from one scan and
+    * one shuffle of the visibilities.
+    */
+  private def mergedPlanes(spark: SparkSession, vis: DataFrame, p: GridParams,
+                           psfFlags: Seq[Boolean]): Dataset[(Boolean, PartialPlane)] = {
+    import spark.implicits._
+    vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
+        col("u").cast("double"), col("v").cast("double"),
+        col("re").cast("double"), col("im").cast("double"),
+        col("weight").cast("double"), col("freq").cast("double"))
+      .as[GridVis]
+      .mapPartitions(rows => gridPartition(rows, p, psfFlags))
+      .groupByKey { case (psf, pl) => (psf, pl.img_chan, pl.pol) }
+      .reduceGroups((a, b) => (a._1, mergePlanes(a._2, b._2)))
+      .map(_._2)
+  }
+
   /** Grid visibilities into merged uv planes (one row per
     * (img_chan, pol)). The two-stage partial/merge shape described in
     * the object doc.
@@ -188,15 +253,7 @@ object GridOps {
   def gridPlanes(spark: SparkSession, vis: DataFrame, p: GridParams,
                  doPsf: Boolean = false): Dataset[PartialPlane] = {
     import spark.implicits._
-    vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("u").cast("double"), col("v").cast("double"),
-        col("re").cast("double"), col("im").cast("double"),
-        col("weight").cast("double"), col("freq").cast("double"))
-      .as[GridVis]
-      .mapPartitions(rows => gridPartition(rows, p, doPsf))
-      .groupByKey(pl => (pl.img_chan, pl.pol))
-      .reduceGroups(mergePlanes _)
-      .map(_._2)
+    mergedPlanes(spark, vis, p, Seq(doPsf)).map(_._2)
   }
 
   /** make_grid (ngcasa/imaging/make_grid.py:27-143): the raw uv grid in
@@ -516,9 +573,53 @@ object GridOps {
     vis.withColumn("model_re", re).withColumn("model_im", im)
   }
 
-  /** ifftshift -> unnormalized inverse FFT -> fftshift -> crop ->
-    * divide by sum_weight and the PSWF correcting image: one uv plane
-    * (interleaved [re,im]) to cropped image pixels.
+  /** ifftshift -> unnormalized inverse FFT -> fftshift of one uv plane
+    * (interleaved [re, im]): the real part of the padded nU x nV image,
+    * row-major. Every image normalizer crops and corrects this itself.
+    */
+  private[operators] def planeIfft(grid: Array[Double], p: GridParams): Array[Double] = {
+    val (nU, nV) = (p.nU, p.nV)
+    var re = new Array[Double](nU * nV)
+    var im = new Array[Double](nU * nV)
+    var i = 0
+    while (i < nU * nV) { re(i) = grid(2 * i); im(i) = grid(2 * i + 1); i += 1 }
+    re = Fft.fftshift2(re, nU, nV); im = Fft.fftshift2(im, nU, nV)
+    Fft.fft2(re, im, nU, nV, invert = true)
+    Fft.fftshift2(re, nU, nV)
+  }
+
+  /** The one gather from long-form planes to dense ones: frames of
+    * (img_chan, pol, l_idx, m_idx, value) rows, each with its own
+    * (rows, cols) plane size, become one group per (img_chan, pol) that
+    * any frame holds, with one row-major array per frame, in frame
+    * order. A frame without rows for the group leaves its array zero; a
+    * repeated (l_idx, m_idx) keeps the last row written. `perPlane`
+    * turns (img_chan, pol, arrays) into output rows, one plane at a
+    * time; the shuffle carries plane bytes.
+    */
+  private[operators] def densePlanes[T: Encoder](
+      frames: Seq[(DataFrame, Column, (Int, Int))])(
+      perPlane: (Int, Int, Array[Array[Double]]) => Iterator[T]): Dataset[T] = {
+    val spark = frames.head._1.sparkSession
+    import spark.implicits._
+    val cols = frames.map(_._3._2).toArray
+    val sizes = frames.map { case (_, _, (n, m)) => n * m }.toArray
+    frames.zipWithIndex.map { case ((df, value, _), kind) =>
+        df.select(col("img_chan").cast("int"), col("pol").cast("int"),
+          col("l_idx").cast("int"), col("m_idx").cast("int"),
+          value.cast("double"), lit(kind).as("kind"))
+      }.reduce(_ union _)
+      .as[(Int, Int, Int, Int, Double, Int)]
+      .groupByKey(r => (r._1, r._2))
+      .flatMapGroups { (key: (Int, Int), rows: Iterator[(Int, Int, Int, Int, Double, Int)]) =>
+        val planes = sizes.map(n => new Array[Double](n))
+        for ((_, _, l, m, v, kind) <- rows) planes(kind)(l * cols(kind) + m) = v
+        perPlane(key._1, key._2, planes)
+      }
+  }
+
+  /** [[planeIfft]] -> crop -> divide by sum_weight and the PSWF
+    * correcting image: one uv plane to cropped image pixels.
     */
   private[operators] def planePixels(imgChan: Int, pol: Int,
                                      grid: Array[Double], sumWeight: Double,
@@ -529,13 +630,7 @@ object GridOps {
     val corrU = correcting1D(nU)
     val corrV = correcting1D(nV)
     val (offL, offM) = (nU / 2 - nL / 2, nV / 2 - nM / 2)
-    var re = new Array[Double](nU * nV)
-    var im = new Array[Double](nU * nV)
-    var i = 0
-    while (i < nU * nV) { re(i) = grid(2 * i); im(i) = grid(2 * i + 1); i += 1 }
-    re = Fft.fftshift2(re, nU, nV); im = Fft.fftshift2(im, nU, nV)
-    Fft.fft2(re, im, nU, nV, invert = true)
-    re = Fft.fftshift2(re, nU, nV); im = Fft.fftshift2(im, nU, nV)
+    val re = planeIfft(grid, p)
     val sw = if (sumWeight == 0.0) 1.0 else sumWeight
     for (l <- 0 until nL; m <- 0 until nM) yield {
       val pix = re((l + offL) * nV + (m + offM))
@@ -563,107 +658,28 @@ object GridOps {
   def makePsf(spark: SparkSession, vis: DataFrame, p: GridParams): DataFrame =
     makeImage(spark, vis, p, doPsf = true)
 
-  // ------------------------------------- single-pass image + psf grids
-
-  /** Data grid + psf grid accumulated in ONE pass over the
-    * visibilities. The synthesis pipeline needs both; gridding them
-    * together halves the input scans and shuffles (the reference
+  /** make_image + make_psf from ONE scan + ONE shuffle of the input:
+    * the one gridder grids both plane kinds together (the reference
     * builds two separate dask graphs that each re-read the vis —
-    * make_image.py + make_psf.py).
-    */
-  final case class DualPlane(img_chan: Int, pol: Int, grid: Array[Double],
-                             psf: Array[Double], sum_weight: Double,
-                             sum_weight_psf: Double)
-
-  private def gridPartitionDual(rows: Iterator[GridVis],
-                                p: GridParams): Iterator[DualPlane] = {
-    val cgk = cgk1D(p.oversampling, p.support)
-    val sc = p.support / 2
-    val (nU, nV) = (p.nU, p.nV)
-    val (cU, cV) = (nU / 2, nV / 2)
-    val planes = mutable.LinkedHashMap.empty[(Int, Int), DualPlane]
-    for (r <- rows) {
-      val u = r.u * (-(r.freq * p.deltaLM._1 * nU) / SpeedOfLight)
-      val v = r.v * (-(r.freq * p.deltaLM._2 * nV) / SpeedOfLight)
-      if (!u.isNaN && !v.isNaN) {
-        val uPos = u + cU; val vPos = v + cV
-        val uc = (uPos + 0.5).toInt; val vc = (vPos + 0.5).toInt
-        if (uc + sc < nU && vc + sc < nV && uc - sc >= 0 && vc - sc >= 0) {
-          val uFrac = math.floor((uc - uPos) * p.oversampling + 0.5).toInt
-          val vFrac = math.floor((vc - vPos) * p.oversampling + 0.5).toInt
-          val (wRe, wIm) = (r.re * r.weight, r.im * r.weight)
-          val dataGate = !(wRe.isNaN || wIm.isNaN) && (wRe != 0.0 || wIm != 0.0)
-          val psfGate = !r.weight.isNaN && r.weight != 0.0
-          if (dataGate || psfGate) {
-            val plane = planes.getOrElseUpdate((r.img_chan, r.pol),
-              DualPlane(r.img_chan, r.pol, new Array[Double](2 * nU * nV),
-                new Array[Double](2 * nU * nV), 0.0, 0.0))
-            var norm = 0.0
-            var iv = -sc
-            while (iv < p.support - sc) {
-              val convV = cgk(math.abs(p.oversampling * iv + vFrac))
-              var iu = -sc
-              while (iu < p.support - sc) {
-                val conv = cgk(math.abs(p.oversampling * iu + uFrac)) * convV
-                if (conv != 0.0) {
-                  val cell = (uc + iu) * nV + (vc + iv)
-                  if (dataGate) {
-                    plane.grid(2 * cell) += conv * wRe
-                    plane.grid(2 * cell + 1) += conv * wIm
-                  }
-                  if (psfGate) plane.psf(2 * cell) += conv * r.weight
-                }
-                norm += conv
-                iu += 1
-              }
-              iv += 1
-            }
-            planes((r.img_chan, r.pol)) = plane.copy(
-              sum_weight = plane.sum_weight +
-                (if (dataGate) r.weight * norm else 0.0),
-              sum_weight_psf = plane.sum_weight_psf +
-                (if (psfGate) r.weight * norm else 0.0))
-          }
-        }
-      }
-    }
-    planes.valuesIterator
-  }
-
-  private def mergeDual(a: DualPlane, b: DualPlane): DualPlane = {
-    var i = 0
-    while (i < a.grid.length) {
-      a.grid(i) += b.grid(i); a.psf(i) += b.psf(i); i += 1
-    }
-    a.copy(sum_weight = a.sum_weight + b.sum_weight,
-      sum_weight_psf = a.sum_weight_psf + b.sum_weight_psf)
-  }
-
-  /** make_image + make_psf from ONE scan + ONE shuffle of the input.
-    * The merged dual planes are cached so the two returned frames
-    * share the gridding work; numerics are identical to calling
-    * makeImage and makePsf separately.
+    * make_image.py + make_psf.py). The pixels of both kinds are cached
+    * (one FFT per merged plane), so the two returned frames share the
+    * gridding and FFT work and read plain columns; numerics are
+    * identical to calling makeImage and makePsf separately, except that
+    * the image also holds an all-zero plane wherever only the psf gate
+    * passed (see gridPartition).
     */
   def makeImageAndPsf(spark: SparkSession, vis: DataFrame,
                       p: GridParams): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val planes = vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("u").cast("double"), col("v").cast("double"),
-        col("re").cast("double"), col("im").cast("double"),
-        col("weight").cast("double"), col("freq").cast("double"))
-      .as[GridVis]
-      .mapPartitions(rows => gridPartitionDual(rows, p))
-      .groupByKey(pl => (pl.img_chan, pl.pol))
-      .reduceGroups(mergeDual _)
-      .map(_._2)
+    val pixels = mergedPlanes(spark, vis, p, Seq(false, true))
+      .flatMap { case (psf, pl) =>
+        planePixels(pl.img_chan, pl.pol, pl.grid, pl.sum_weight, p)
+          .map { case (c, pol, l, m, v, sw) => (psf, c, pol, l, m, v, sw) }
+      }
+      .toDF("psf", "img_chan", "pol", "l_idx", "m_idx", "image", "sum_weight")
       .cache()
-    val img = planes
-      .flatMap(pl => planePixels(pl.img_chan, pl.pol, pl.grid, pl.sum_weight, p))
-      .toDF("img_chan", "pol", "l_idx", "m_idx", "image", "sum_weight")
-    val psf = planes
-      .flatMap(pl => planePixels(pl.img_chan, pl.pol, pl.psf, pl.sum_weight_psf, p))
-      .toDF("img_chan", "pol", "l_idx", "m_idx", "image", "sum_weight")
-    (img, psf)
+    def image(psf: Boolean): DataFrame = pixels.where(col("psf") === psf).drop("psf")
+    (image(psf = false), image(psf = true))
   }
 
   /** calc_image_cell_size (ngcasa/imaging/calc_image_cell_size.py:20-75):
@@ -700,7 +716,7 @@ object GridOps {
   // ------------------------------------------- imaging weights (briggs)
 
   /** Per-partition weight planes, the support-1 sibling of
-    * [[gridPartitionDual]]: each row adds its natural weight to its own
+    * [[gridPartition]]: each row adds its natural weight to its own
     * cell and to its Hermitian-conjugate cell (skipped when that falls
     * outside the grid). A plane is nU x nV cells, row-major, plus one
     * trailing slot summing the natural weights it took, so partials

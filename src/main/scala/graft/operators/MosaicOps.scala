@@ -78,6 +78,35 @@ object MosaicOps {
                              re: Double, im: Double, weight: Double,
                              freq: Double, cf_type: Int, field_id: Int)
 
+  /** Per-field kernel-coordinate phase slopes (pix0, pix1). */
+  private def fieldPix(p: GridParams, gcf: Map[Int, Gcf],
+                       fieldOffsets: Map[Int, (Double, Double)])
+      : Map[Int, (Double, Double)] =
+    fieldOffsets.map { case (f, (dl, dm)) =>
+      val os = gcf.head._2.oversampling
+      f -> ((phaseGradientPix(dl, p.deltaLM._1, p.nU, os),
+        phaseGradientPix(dm, p.deltaLM._2, p.nV, os)))
+    }
+
+  /** Runs a mosaic kernel over each input partition and merges its
+    * partial planes per (img_chan, pol) — the standard gridder's
+    * partial/merge shape and merge.
+    */
+  private def mosaicPlanes(spark: SparkSession, vis: DataFrame)(
+      kernel: Iterator[MosaicVis] => Iterator[PartialPlane]): Dataset[PartialPlane] = {
+    import spark.implicits._
+    vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
+        col("u").cast("double"), col("v").cast("double"),
+        col("re").cast("double"), col("im").cast("double"),
+        col("weight").cast("double"), col("freq").cast("double"),
+        col("cf_type").cast("int"), col("field_id").cast("int"))
+      .as[MosaicVis]
+      .mapPartitions(kernel)
+      .groupByKey(pl => (pl.img_chan, pl.pol))
+      .reduceGroups(GridOps.mergePlanes _)
+      .map(_._2)
+  }
+
   private def gridPartitionMosaic(rows: Iterator[MosaicVis], p: GridParams,
                                   gcf: Map[Int, Gcf],
                                   fieldOffsets: Map[Int, (Double, Double)],
@@ -85,12 +114,7 @@ object MosaicOps {
       : Iterator[PartialPlane] = {
     val (nU, nV) = (p.nU, p.nV)
     val (cU, cV) = (nU / 2, nV / 2)
-    // per-field kernel-coordinate phase slopes
-    val pix = fieldOffsets.map { case (f, (dl, dm)) =>
-      val os = gcf.head._2.oversampling
-      f -> ((phaseGradientPix(dl, p.deltaLM._1, nU, os),
-        phaseGradientPix(dm, p.deltaLM._2, nV, os)))
-    }
+    val pix = fieldPix(p, gcf, fieldOffsets)
     val planes = mutable.LinkedHashMap.empty[(Int, Int), PartialPlane]
     for (r <- rows) {
       val kern = gcf.getOrElse(r.cf_type, null)
@@ -154,20 +178,14 @@ object MosaicOps {
                        gcf: Map[Int, Gcf],
                        fieldOffsets: Map[Int, (Double, Double)],
                        doPsf: Boolean = false)
-      : Dataset[PartialPlane] = {
-    import spark.implicits._
-    vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("u").cast("double"), col("v").cast("double"),
-        col("re").cast("double"), col("im").cast("double"),
-        col("weight").cast("double"), col("freq").cast("double"),
-        col("cf_type").cast("int"), col("field_id").cast("int"))
-      .as[MosaicVis]
-      .mapPartitions(rows => gridPartitionMosaic(rows, p, gcf, fieldOffsets, doPsf))
-      .groupByKey(pl => (pl.img_chan, pl.pol))
-      .reduceGroups(GridOps.mergePlanes _)
-      .map(_._2)
-  }
+      : Dataset[PartialPlane] =
+    mosaicPlanes(spark, vis)(rows => gridPartitionMosaic(rows, p, gcf, fieldOffsets, doPsf))
 
+  /** Mosaic image normalizer: the one shifted inverse FFT
+    * ([[GridOps.planeIfft]]) -> crop -> divide by sum_weight and the
+    * sinc oversampling x PSWF corrections (its own divide, kept apart
+    * from GridOps.planePixels so each path keeps its bits).
+    */
   private def fftNormalize(spark: SparkSession,
                            planes: Dataset[PartialPlane],
                            p: GridParams, os: Int): DataFrame = {
@@ -180,14 +198,7 @@ object MosaicOps {
     val sincV = sincCorr1D(nV, os)
     val (offL, offM) = (nU / 2 - nL / 2, nV / 2 - nM / 2)
     planes.flatMap { pl =>
-      var re = new Array[Double](nU * nV)
-      var im = new Array[Double](nU * nV)
-      var i = 0
-      while (i < nU * nV) { re(i) = pl.grid(2 * i); im(i) = pl.grid(2 * i + 1); i += 1 }
-      re = graft.functions.Fft.fftshift2(re, nU, nV)
-      im = graft.functions.Fft.fftshift2(im, nU, nV)
-      graft.functions.Fft.fft2(re, im, nU, nV, invert = true)
-      re = graft.functions.Fft.fftshift2(re, nU, nV)
+      val re = GridOps.planeIfft(pl.grid, p)
       val sw = if (pl.sum_weight == 0.0) 1.0 else pl.sum_weight
       for (l <- 0 until nL; m <- 0 until nM) yield {
         val (pl2, pm2) = (l + offL, m + offM)
@@ -228,76 +239,65 @@ object MosaicOps {
     val (nU, nV) = (p.nU, p.nV)
     val (nL, nM) = p.imgSize
     val (offL, offM) = (nU / 2 - nL / 2, nV / 2 - nM / 2)
-    val planes = vis.select(col("img_chan").cast("int"), col("pol").cast("int"),
-        col("u").cast("double"), col("v").cast("double"),
-        col("re").cast("double"), col("im").cast("double"),
-        col("weight").cast("double"), col("freq").cast("double"),
-        col("cf_type").cast("int"), col("field_id").cast("int"))
-      .as[MosaicVis]
-      .mapPartitions { rows =>
-        val (cU, cV) = (nU / 2, nV / 2)
-        val pix = fieldOffsets.map { case (f, (dl, dm)) =>
-          val os = gcf.head._2.oversampling
-          f -> ((phaseGradientPix(dl, p.deltaLM._1, nU, os),
-            phaseGradientPix(dm, p.deltaLM._2, nV, os)))
+    mosaicPlanes(spark, vis)(rows => pbPartition(rows, p, gcf, fieldOffsets))
+      .flatMap { pl =>
+        val re = GridOps.planeIfft(pl.grid, p)
+        val sw = if (pl.sum_weight == 0.0) 1.0 else pl.sum_weight
+        for (l <- 0 until nL; m <- 0 until nM) yield {
+          val w = re((l + offL) * nV + (m + offM)) / sw
+          (pl.img_chan, pl.pol, l, m, w, math.sqrt(math.abs(w)), pl.sum_weight)
         }
-        val planes = mutable.LinkedHashMap.empty[(Int, Int), PartialPlane]
-        for (r <- rows) {
-          val kern = gcf.getOrElse(r.cf_type, null)
-          if (kern != null && !r.u.isNaN && !r.v.isNaN &&
-            !r.weight.isNaN && r.weight != 0.0) {
-            val sc = kern.support / 2
-            val os = kern.oversampling
-            val (pix0, pix1) = pix.getOrElse(r.field_id, (0.0, 0.0))
-            val plane = planes.getOrElseUpdate((r.img_chan, r.pol),
-              PartialPlane(r.img_chan, r.pol, new Array[Double](2 * nU * nV),
-                new Array[Boolean](nU * nV), 0.0))
-            var normRe = 0.0
-            var iv = -sc
-            while (iv < kern.support - sc) {
-              val cfV = os * iv
-              val kv = kern.cgk(math.abs(cfV))
-              var iu = -sc
-              while (iu < kern.support - sc) {
-                val cfU = os * iu
-                val k = kern.cgk(math.abs(cfU)) * kv
-                val th = cfU * pix0 + cfV * pix1
-                val cRe = k * math.cos(th); val cIm = k * math.sin(th)
-                if (k != 0.0) {
-                  val cell = (cU + iu) * nV + (cV + iv)
-                  plane.grid(2 * cell) += cRe * r.weight
-                  plane.grid(2 * cell + 1) += cIm * r.weight
-                  plane.touched(cell) = true
-                }
-                normRe += cRe
-                iu += 1
-              }
-              iv += 1
+      }.toDF("img_chan", "pol", "l_idx", "m_idx", "weight_pb", "pb", "sum_weight")
+  }
+
+  /** The make_mosaic_pb kernel over one input partition: each row's
+    * weight through its complex gcf kernel, stamped at the grid centre.
+    */
+  private def pbPartition(rows: Iterator[MosaicVis], p: GridParams,
+                          gcf: Map[Int, Gcf],
+                          fieldOffsets: Map[Int, (Double, Double)])
+      : Iterator[PartialPlane] = {
+    val (nU, nV) = (p.nU, p.nV)
+    val (cU, cV) = (nU / 2, nV / 2)
+    val pix = fieldPix(p, gcf, fieldOffsets)
+    val planes = mutable.LinkedHashMap.empty[(Int, Int), PartialPlane]
+    for (r <- rows) {
+      val kern = gcf.getOrElse(r.cf_type, null)
+      if (kern != null && !r.u.isNaN && !r.v.isNaN &&
+        !r.weight.isNaN && r.weight != 0.0) {
+        val sc = kern.support / 2
+        val os = kern.oversampling
+        val (pix0, pix1) = pix.getOrElse(r.field_id, (0.0, 0.0))
+        val plane = planes.getOrElseUpdate((r.img_chan, r.pol),
+          PartialPlane(r.img_chan, r.pol, new Array[Double](2 * nU * nV),
+            new Array[Boolean](nU * nV), 0.0))
+        var normRe = 0.0
+        var iv = -sc
+        while (iv < kern.support - sc) {
+          val cfV = os * iv
+          val kv = kern.cgk(math.abs(cfV))
+          var iu = -sc
+          while (iu < kern.support - sc) {
+            val cfU = os * iu
+            val k = kern.cgk(math.abs(cfU)) * kv
+            val th = cfU * pix0 + cfV * pix1
+            val cRe = k * math.cos(th); val cIm = k * math.sin(th)
+            if (k != 0.0) {
+              val cell = (cU + iu) * nV + (cV + iv)
+              plane.grid(2 * cell) += cRe * r.weight
+              plane.grid(2 * cell + 1) += cIm * r.weight
+              plane.touched(cell) = true
             }
-            planes((r.img_chan, r.pol)) =
-              plane.copy(sum_weight = plane.sum_weight + r.weight * normRe)
+            normRe += cRe
+            iu += 1
           }
+          iv += 1
         }
-        planes.valuesIterator
+        planes((r.img_chan, r.pol)) =
+          plane.copy(sum_weight = plane.sum_weight + r.weight * normRe)
       }
-      .groupByKey(pl => (pl.img_chan, pl.pol))
-      .reduceGroups(GridOps.mergePlanes _)
-      .map(_._2)
-    planes.flatMap { pl =>
-      var re = new Array[Double](nU * nV)
-      var im = new Array[Double](nU * nV)
-      var i = 0
-      while (i < nU * nV) { re(i) = pl.grid(2 * i); im(i) = pl.grid(2 * i + 1); i += 1 }
-      re = graft.functions.Fft.fftshift2(re, nU, nV)
-      im = graft.functions.Fft.fftshift2(im, nU, nV)
-      graft.functions.Fft.fft2(re, im, nU, nV, invert = true)
-      re = graft.functions.Fft.fftshift2(re, nU, nV)
-      val sw = if (pl.sum_weight == 0.0) 1.0 else pl.sum_weight
-      for (l <- 0 until nL; m <- 0 until nM) yield {
-        val w = re((l + offL) * nV + (m + offM)) / sw
-        (pl.img_chan, pl.pol, l, m, w, math.sqrt(math.abs(w)), pl.sum_weight)
-      }
-    }.toDF("img_chan", "pol", "l_idx", "m_idx", "weight_pb", "pb", "sum_weight")
+    }
+    planes.valuesIterator
   }
 
   /** make_psf_with_gcf (ngcasa/imaging/make_psf_with_gcf.py): the

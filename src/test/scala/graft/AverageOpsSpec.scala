@@ -41,6 +41,32 @@ class AverageOpsSpec extends SparkSpec {
     assert(approx(bin1.getAs[Double]("v"), 2.0)) // only chan 2 present
   }
 
+  test("trimmed chanAverage scans its parquet source once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ca").toString + "/cube"
+    cube.write.parquet(dir)
+    val in = spark.read.parquet(dir)
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // 6 chans of width 4: bin 1 (chans 4, 5) is incomplete and trimmed
+      val avg = AverageOps.chanAverage(in, "chan", 4, Seq("key"),
+        Seq(Weighted("v", "w")))
+      assert(avg.columns.toSeq === Seq("key", "chan", "v", "w"))
+      val out = avg.collect()
+      assert(out.map(_.getAs[Int]("chan")).toSet === Set(0))
+      assert(out.length === 2)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(scans.get === 1, s"${scans.get} stages scanned the parquet source")
+  }
+
   test("timeAverage resample groups into tumbling windows") {
     val df = Seq(
       ("2024-01-01 00:00:00", 0, 1.0, 1.0),

@@ -136,6 +136,22 @@ class GridOpsSpec extends SparkSpec {
     assert(diff(psf, GridOps.makePsf(spark, vis, p32)) === 0L)
   }
 
+  test("makeImageAndPsf keeps an all-zero image plane where only the psf gate passes") {
+    // plane (0, 1): re = im = 0 with weight 1 — no data contribution,
+    // a full psf contribution
+    val zeroData = pointSourceVis(1.0).withColumn("pol", lit(1))
+      .withColumn("re", lit(0.0))
+    val vis = pointSourceVis(1.0).unionByName(zeroData)
+    val (img, psf) = GridOps.makeImageAndPsf(spark, vis, p32)
+    def plane(df: org.apache.spark.sql.DataFrame, pol: Int) =
+      df.where(col("pol") === pol).collect()
+    assert(plane(img, 1).length === 32 * 32)
+    assert(plane(img, 1).forall(r => r.getAs[Double]("image") == 0.0 &&
+      r.getAs[Double]("sum_weight") == 0.0))
+    assert(plane(psf, 1).length === 32 * 32)
+    assert(plane(GridOps.makeImage(spark, vis, p32), 1).isEmpty)
+  }
+
   test("degridVis of a constant grid returns the constant at any uv") {
     // sum(conv * c) / sum(conv) = c exactly, independent of position
     val cells = for (u <- 0 until 32; v <- 0 until 32)

@@ -101,6 +101,51 @@ class KernelOpsSpec extends SparkSpec {
     assert(math.abs(peak.getAs[Double]("residual")) < 1e-4)
   }
 
+  // Long-form 8x8 planes: value(l, m) per (img_chan, pol) plane.
+  private def planes8(name: String, keys: Seq[(Int, Int)])(
+      value: (Int, Int) => Double) =
+    (for ((c, p) <- keys; l <- 0 until 8; m <- 0 until 8)
+      yield (c, p, l, m, value(l, m)))
+      .toDF("img_chan", "pol", "l_idx", "m_idx", name)
+
+  private def byPlane(df: org.apache.spark.sql.DataFrame, value: String) =
+    df.collect().groupBy(r => (r.getAs[Int]("img_chan"), r.getAs[Int]("pol")))
+      .map { case (k, rows) =>
+        val a = new Array[Double](64)
+        rows.foreach(r => a(r.getAs[Int]("l_idx") * 8 + r.getAs[Int]("m_idx")) =
+          r.getAs[Double](value))
+        k -> a.toSeq
+      }
+
+  test("cleanPlanes: a plane one frame lacks is cleaned against zeros") {
+    val img = planes8("image", Seq((0, 0), (0, 1)))((l, m) => (l * 8 + m) % 5 - 2.0)
+    val psf = planes8("image", Seq((0, 0), (1, 0)))((l, m) =>
+      if (l == 4 && m == 4) 1.0 else 0.0)
+    val out = CleanOps.cleanPlanes(spark, img, psf, 8, 8, 8, 8,
+      gain = 0.5, threshold = 1e-6, niter = 7)
+    val model = byPlane(out, "model"); val resid = byPlane(out, "residual")
+    assert(model.keySet === Set((0, 0), (0, 1), (1, 0)))
+    // (0, 1) has no psf rows: hogbom over a zero psf
+    val res01 = Array.tabulate(64)(i => i % 5 - 2.0)
+    val model01 = CleanOps.hogbom(res01, new Array[Double](64), 8, 8, 8, 8,
+      0.5, 1e-6, 7)
+    assert(model((0, 1)) === model01.toSeq)
+    assert(resid((0, 1)) === res01.toSeq)
+    // (1, 0) has no image rows: nothing to clean
+    assert(model((1, 0)).forall(_ == 0.0) && resid((1, 0)).forall(_ == 0.0))
+  }
+
+  test("cleanPlanes: a repeated (l_idx, m_idx) keeps the last row written") {
+    val img = Seq((0, 0, 2, 3, 1.0), (0, 0, 5, 5, 0.5), (0, 0, 2, 3, 7.0))
+      .toDF("img_chan", "pol", "l_idx", "m_idx", "image").coalesce(1)
+    val psf = planes8("image", Seq((0, 0)))((l, m) =>
+      if (l == 4 && m == 4) 1.0 else 0.0)
+    val resid = byPlane(CleanOps.cleanPlanes(spark, img, psf, 8, 8, 8, 8,
+      niter = 0), "residual")((0, 0))
+    assert(resid(2 * 8 + 3) === 7.0)
+    assert(resid(5 * 8 + 5) === 0.5)
+  }
+
   // -------------------------------------------------------------- beams
 
   test("besselJ1 matches known values") {
@@ -144,6 +189,19 @@ class KernelOpsSpec extends SparkSpec {
       (r.getInt(2), r.getInt(3)) -> r.getDouble(4)).toMap
     for (l <- 0 until 8; m <- 0 until 8)
       assert(approx(got((l, m)),
+        math.abs(math.sin(l * 0.5) + math.cos(m * 0.7)), 1e-9))
+  }
+
+  test("smooth: an image plane the kernel frame lacks smooths to zero") {
+    val img = planes8("image", Seq((0, 0), (0, 1)))((l, m) =>
+      math.sin(l * 0.5) + math.cos(m * 0.7))
+    val ker = planes8("beam", Seq((0, 0)))((l, m) =>
+      if (l == 4 && m == 4) 1.0 else 0.0)
+    val out = byPlane(BeamOps.smooth(spark, img, ker, 8, 8), "smoothed")
+    assert(out.keySet === Set((0, 0), (0, 1)))
+    assert(out((0, 1)).forall(_ == 0.0))
+    for (l <- 0 until 8; m <- 0 until 8)
+      assert(approx(out((0, 0))(l * 8 + m),
         math.abs(math.sin(l * 0.5) + math.cos(m * 0.7)), 1e-9))
   }
 
