@@ -597,7 +597,7 @@ object SimilarityOps {
     * — the build parameters plus the (n_vectors, id checksum) census
     * of the staleness check.
     */
-  private val AnnStore = IS.Layout(id = "vec_id",
+  private[graft] val AnnStore = IS.Layout(id = "vec_id",
     kinds = Seq("vectors" -> "list_id"),
     meta = Seq("k" -> "int", "iters" -> "int", "m" -> "int",
       "dsub" -> "int", "ksub" -> "int", "qdec" -> "int",
@@ -620,8 +620,8 @@ object SimilarityOps {
     *     smaller than raw vectors), laid out so a probe's nProbe lists
     *     are PARTITION PRUNING at the scan — search I/O rides probed-
     *     list volume, never corpus size
-    *   root/applog/vectors  (vec_id, list_id, codes) the append log:
-    *     flat segments sorted by list_id ([[indexAppend]]), registered
+    *   the append log  (vec_id, list_id, codes): flat segments
+    *     sorted by list_id ([[indexAppend]]), registered
     *     under the kind `vectors` with no part id; searches and the
     *     dup arbitration read them behind the same list filter, and
     *     [[indexFlush]] / [[indexCompact]] fold them into the
@@ -677,25 +677,20 @@ object SimilarityOps {
         }
       })
     // ONE corpus scan: coarse list + PQ codes off the same projection;
-    // the list_id partitioning IS the inverted-list structure on disk.
-    // Repartition ON the partition column first: every inverted list
-    // lands as ONE file instead of one-per-writing-task — at K=1600
-    // lists x 32 tasks that is 51k files whose driver-side listing
-    // would dominate every subsequent search/append (measured 4x on
-    // the 100x rehearsal). Per-list volume is bounded by design (K
-    // scales with the corpus), so the single-task-per-list write
-    // cannot skew. The census rides the SAME write job as observed
-    // metrics — no second corpus pass (guide §1.2: fewer passes).
+    // the list_id partitioning IS the inverted-list structure on disk,
+    // one file per list (IndexStore.writeParts). Per-list volume is
+    // bounded by design (K scales with the corpus), so the
+    // single-task-per-list write cannot skew. The census rides the
+    // SAME write job as observed metrics — no second corpus pass
+    // (guide §1.2: fewer passes).
     val obs = new org.apache.spark.sql.Observation()
-    IS.observeCensus(corpus
+    IS.writeParts(IS.observeCensus(corpus
         .select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("_v")),
         obs, AnnStore, col("vec_id"))
       .select(col("vec_id"),
         graft.functions.NearestCentroidId(col("_v"), cents).as("list_id"),
-        graft.functions.PqCodes(col("_v"), cb).as("codes"))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$root/vectors")
+        graft.functions.PqCodes(col("_v"), cb).as("codes")),
+      root, AnnStore, "vectors")
     IS.buildBloom(root, corpus.select(col(idCol)), idCol)
     IS.writeMeta(spark, root, AnnStore, IS.observed(obs) ++ Map(
       "k" -> k, "iters" -> iters, "m" -> m, "dsub" -> dsub,
@@ -727,9 +722,9 @@ object SimilarityOps {
     * under B-trained quantizers — per-row assignment is independent,
     * so append order and batching never matter.
     *
-    * @param buffered Both paths land the delta as SEGMENT file(s) in
-    *   `root/applog/vectors` with list_id as a plain column, sorted by
-    *   it and registered under the kind `vectors` with no part id
+    * @param buffered Both paths land the delta as SEGMENT file(s) of
+    *   the append log with list_id as a plain column, sorted by it
+    *   and registered under the kind `vectors` with no part id
     *   (the log format of the BM25 store too; round-19 opt,
     *   guide §6 — snapshot-addressed flat segments): a direct append
     *   previously wrote into up-to-K `list_id=` partition directories,
@@ -796,16 +791,16 @@ object SimilarityOps {
           .limit(1).collect())
         .getOrElse(Array.empty)
     } {
-      (if (buffered)
-         coded.coalesce(1) // one segment file per buffered append
-       else
-         // batched deltas can be large: spread on list_id (AQE
-         // coalesces a small delta back to one partition/file) and sort
-         // within files, so a bulk segment's row-group stats can prune
-         // the probe filter
-         coded.repartition(col("list_id"))
-           .sortWithinPartitions("list_id"))
-        .write.mode("append").parquet(s"$root/applog/vectors")
+      IS.writeLog((if (buffered)
+           coded.coalesce(1) // one segment file per buffered append
+         else
+           // batched deltas can be large: spread on list_id (AQE
+           // coalesces a small delta back to one partition/file)
+           coded.repartition(col("list_id")))
+          // sorted within files, so a segment's row-group stats can
+          // prune the probe filter
+          .sortWithinPartitions("list_id"),
+        root, AnnStore, "vectors")
       IS.observed(obs)
     }
     if (IS.logFull(next, AnnStore, autoFlushSegments)) indexFlush(spark, root)
@@ -1006,11 +1001,12 @@ object SimilarityOps {
     // flush cadence — never corpus-sized by design
     val coded0 = IS.readRouted(spark, root, snap, AnnStore, "vectors",
         probed.toSet)
-      .getOrElse(IS.readKind(spark, root, "vectors", Nil))
+      .getOrElse(IS.read(spark, root, snap, "vectors")(_ => false))
       .select(col("vec_id").as("neighbor_id"),
         col("list_id").cast("long").as("list_id"), col("codes"))
     // serve base minus deletes — the index's merge-on-read
-    val coded = IS.withoutDeleted(coded0, snap, AnnStore, "neighbor_id")
+    val coded = IS.withoutDeleted(coded0, root, snap, AnnStore,
+      "neighbor_id")
     ivfPqScore(queries, coded, qId, vecCol, k, cents, cb, nProbe, qdec)
   }
 

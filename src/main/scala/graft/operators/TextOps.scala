@@ -1616,21 +1616,20 @@ object TextOps {
   private def docBucket(id: Column, n: Int): Column =
     pmod(hash(id), lit(n))
 
-  private val Zstd = Map("compression" -> "zstd")
   /** The BM25 store's layout (graft.sources.IndexStore): its
     * partitioned kinds and their route keys — an append lands one log
-    * segment of each (root/applog/<kind>), the fold and compaction
-    * move them into the `key=` partitions, zstd-compressed — and its
-    * meta row: the corpus census (n_docs, sum_dl of the doc lengths,
-    * doc checksum) plus the bucket counts the layout routes by.
+    * segment of each, the fold and compaction move them into the
+    * `key=` partitions, every data file compressed — and its meta
+    * row: the corpus census (n_docs, sum_dl of the doc lengths, doc
+    * checksum) plus the bucket counts the layout routes by.
     */
-  private val BmStore = IS.Layout(id = "doc_id",
+  private[graft] val BmStore = IS.Layout(id = "doc_id",
     kinds = Seq("postings" -> "bucket", "doclens" -> "docbucket"),
     meta = Seq("n_docs" -> "long", "sum_dl" -> "long",
       "n_buckets" -> "int", "doc_checksum" -> "long",
       "n_docbuckets" -> "int"),
     count = "n_docs", checksum = "doc_checksum",
-    sums = Seq("sum_dl" -> "dl"), options = Zstd)
+    sums = Seq("sum_dl" -> "dl"), compressed = true)
 
   /** The postings (doc_id, term, tf, dl, bucket) of `df`: one row per
     * distinct (doc, term), routed to its term-hash bucket. dl is
@@ -1664,8 +1663,8 @@ object TextOps {
     *     pmod(hash(doc_id), n_docbuckets) — the census/maintenance
     *     table (delete census, exact dup arbitration, both pruned to
     *     the ids' docbuckets); not on the serving path
-    *   root/applog/postings, root/applog/doclens  the append log:
-    *     [[invertedIndexAppend]] lands ONE flat zstd segment per kind
+    *   the append log of postings and doclens:
+    *     [[invertedIndexAppend]] lands ONE flat segment per kind
     *     (one file, except a bulk delta's postings: one per shuffle
     *     partition), the route key (bucket / docbucket) a plain column
     *     each file is sorted by, registered under the kind with no
@@ -1710,26 +1709,19 @@ object TextOps {
     // a split+size projection with no explode/shuffle; its cost is the
     // text re-read, which page cache absorbs at any scale this sandbox
     // can measure.
-    // one file per touched bucket, not one per writing task:
-    // term-hash buckets are ~uniform by construction, and a probed
-    // search pays file-listing + footer reads per file in the pruned
-    // dirs
-    postingsOf(df, idCol, textCol, nBuckets)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").options(Zstd)
-      .partitionBy("bucket").parquet(s"$root/postings")
+    // one file per touched bucket (IndexStore.writeParts): term-hash
+    // buckets are ~uniform by construction
+    IS.writeParts(postingsOf(df, idCol, textCol, nBuckets), root, BmStore,
+      "postings")
     // doclens bucketed by doc-id hash: the maintenance table's reads
     // (dup arbitration, delete census) prune to the relevant buckets.
     // The meta census (n_docs, sum_dl, checksum) rides this write as
     // observed metrics — no separate tokenizing pass over the corpus.
     val obs = new org.apache.spark.sql.Observation()
-    IS.observeCensus(df.select(col(idCol).as("doc_id"),
+    IS.writeParts(IS.observeCensus(df.select(col(idCol).as("doc_id"),
         size(words(col(textCol))).as("dl"),
         docBucket(col(idCol), DocLenBuckets).as("docbucket")),
-        obs, BmStore, col("doc_id"))
-      .repartition(col("docbucket"))
-      .write.mode("overwrite").options(Zstd)
-      .partitionBy("docbucket").parquet(s"$root/doclens")
+        obs, BmStore, col("doc_id")), root, BmStore, "doclens")
     IS.writeMeta(spark, root, BmStore, IS.observed(obs) ++
       Map("n_buckets" -> nBuckets, "n_docbuckets" -> DocLenBuckets))
     // Commit the initial snapshot (IndexCommits): from here on every
@@ -1747,7 +1739,7 @@ object TextOps {
     * (sorted by (bucket, term)) and ONE doclens segment (sorted by
     * docbucket) in the append log and one commit, never a write into
     * the `bucket=` / `docbucket=` directories; the census updates
-    * additively. A segment is one flat zstd file, except that the
+    * additively. A segment is one flat file, except that the
     * postings of a bulk delta keep one file per shuffle partition of
     * their route-key shuffle (AQE coalesces an append-sized delta's to
     * one), so bulk appends keep their write parallelism. Searches
@@ -1804,21 +1796,19 @@ object TextOps {
       // shuffles on its route key and sorts every file by it: AQE
       // coalesces an append-sized delta to ONE file, and a bulk delta
       // keeps its partitions, written in parallel
-      postingsOf(df, idCol, textCol, nBuckets)
-        .repartition(col("bucket")).sortWithinPartitions("bucket", "term")
-        .write.mode("append").options(Zstd)
-        .parquet(s"$root/applog/postings")
+      IS.writeLog(postingsOf(df, idCol, textCol, nBuckets)
+          .repartition(col("bucket")).sortWithinPartitions("bucket", "term"),
+        root, BmStore, "postings")
       // the delta census rides the doclens write as observed metrics —
       // no separate tokenizing pass over the delta. One row per doc:
       // ONE file with no shuffle (a shuffle costs a job per append)
       val obs = new org.apache.spark.sql.Observation()
-      IS.observeCensus(df.select(
+      IS.writeLog(IS.observeCensus(df.select(
           col(idCol).as("doc_id"), size(words(col(textCol))).as("dl")),
           obs, BmStore, col("doc_id"))
         .withColumn("docbucket", docBucket(col("doc_id"), nDocBuckets))
-        .coalesce(1).sortWithinPartitions("docbucket")
-        .write.mode("append").options(Zstd)
-        .parquet(s"$root/applog/doclens")
+        .coalesce(1).sortWithinPartitions("docbucket"),
+        root, BmStore, "doclens")
       IS.observed(obs)
     }
     if (IS.logFull(next, BmStore)) IS.fold(spark, root, BmStore)
@@ -1954,9 +1944,9 @@ object TextOps {
       java.lang.Math.floorMod(polyHashFn(t), nBuckets.toLong)).distinct
     val post = IS.withoutDeleted(
       IS.readRouted(spark, root, snap, BmStore, "postings", buckets.toSet)
-        .getOrElse(IS.readKind(spark, root, "postings", Nil))
+        .getOrElse(IS.read(spark, root, snap, "postings")(_ => false))
         .where(col("term").isin(unionTerms: _*)),
-      snap, BmStore, "doc_id")
+      root, snap, BmStore, "doc_id")
     val dfMap = post.groupBy("term").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val pivots = unionTerms.zipWithIndex.map { case (t, i) =>

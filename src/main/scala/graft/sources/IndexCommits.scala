@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 
 /** Versioned commit protocol for the persisted retrieval indexes —
   * the same snapshot-pointer discipline the lakehouse ops already
@@ -15,10 +14,9 @@ import org.apache.spark.sql.functions.col
   *     rows (kind, part_id, file) naming EVERY live data file of the
   *     served kinds ("vectors"/"deletes" for ANN;
   *     "postings"/"doclens"/"deletes" for BM25) — the `key=value`
-  *     partition files under root/<kind> and the append-log segments
-  *     of both stores under root/applog/<kind>. The CURRENT snapshot
-  *     is the max committed N; readers plan their file lists from it
-  *     and never trust directory listings.
+  *     partition files and the append-log segments IndexStore lays
+  *     out. The CURRENT snapshot is the max committed N; readers plan
+  *     their file lists from it and never trust directory listings.
   *
   * Mutation protocol (append / flush / compact / delete):
   *   1. write NEW files only — nothing referenced by the current
@@ -35,15 +33,17 @@ import org.apache.spark.sql.functions.col
   *
   * The snapshot is the ONLY store layout: a root without a committed
   * version fails by name ([[readEntries]]) and must be rebuilt. The
-  * protocol steps both stores share live here — [[commitWritten]]
-  * (append / delete), [[maintain]] (fold / compact), [[rewriteParts]]
-  * (fold and compaction staging), [[pendingDeletes]] (maintain
-  * policies); the log, delete, fold, compaction and maintain policy
-  * over them live in [[IndexStore]], and the operator files keep
-  * training, encoding and scoring. One bounded snapshot read (#files
-  * rows — the same manifest-sized planning collect every lakehouse
-  * reader does) replaces per-partition existence probes at serve
-  * time.
+  * protocol steps both stores share live here — the entries and their
+  * filters, the listing a write is diffed by ([[list]]),
+  * [[commitWritten]] (append / delete), [[maintain]] (fold / compact),
+  * [[pendingDeletes]] (maintain policies) and [[vacuum]]. This object
+  * reads no data rows: the data files' paths, their one reader and
+  * their one writer, and the log, delete, fold, compaction and
+  * maintain policy live in [[IndexStore]], and the operator files
+  * keep training, encoding and scoring. One bounded snapshot read
+  * (#files rows — the same manifest-sized planning collect every
+  * lakehouse reader does) replaces per-partition existence probes at
+  * serve time.
   *
   * Single-writer by design (one maintenance job per index store, the
   * standard lakehouse assumption); readers are never blocked. The
@@ -155,34 +155,17 @@ object IndexCommits {
   def partFilesOf(entries: Seq[Entry], kind: String): Seq[String] =
     entries.filter(e => e.kind == kind && e.partId.isDefined).map(_.file)
 
-  /** Data files of `kind` under root/<kind>, partId parsed from its
-    * `partKey=value` dirs — the listing a mutation diffs around its
-    * write ([[written]]).
+  /** Recursively list the DATA files (part-*) under `dir` as entries
+    * of `kind`, parsing partId from a `partKey=value` path segment when
+    * given: what a write just produced (diffed against a
+    * before-listing, [[written]]), a fresh build's snapshot, or the
+    * staged files of a fold.
     */
-  private[graft] def listKind(spark: SparkSession, root: String,
-                               kind: String,
-                               partKey: Option[String] = None)
-    : Seq[Entry] =
-    listDataFiles(spark, root, kind, kind, partKey)
-
-  /** The log segments of `kind` under root/applog/<kind> (no part
-    * id) — the listing a segment append diffs around its write.
-    */
-  private[graft] def listLog(spark: SparkSession, root: String,
-                              kind: String): Seq[Entry] =
-    listDataFiles(spark, root, kind, s"applog/$kind", None)
-
-  /** Recursively list the DATA files (part-*) under root/<sub>,
-    * parsing partId from a `partKey=value` path segment when given.
-    * Used to discover what a write just produced (diffed against a
-    * before-listing) and to snapshot a fresh build.
-    */
-  private def listDataFiles(spark: SparkSession, root: String,
-                            kind: String, sub: String,
-                            partKey: Option[String]): Seq[Entry] = {
-    val fs = hfs(spark, root)
-    val dir = new Path(s"$root/$sub")
-    if (!fs.exists(dir)) return Seq.empty
+  private[graft] def list(spark: SparkSession, kind: String, dir: String,
+                          partKey: Option[String] = None): Seq[Entry] = {
+    val fs = hfs(spark, dir)
+    val top = new Path(dir)
+    if (!fs.exists(top)) return Seq.empty
     def walk(p: Path, part: Option[Long]): Seq[Entry] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val name = st.getPath.getName
@@ -198,7 +181,7 @@ object IndexCommits {
           Seq(Entry(kind, part, st.getPath.toUri.getPath))
         else Seq.empty
       }
-    walk(dir, None)
+    walk(top, None)
   }
 
   /** The files `write` adds to `listing`: list before, write, list
@@ -242,60 +225,6 @@ object IndexCommits {
       commit(spark, root, next)
       vacuumConf(spark, root, subs)
     }
-  }
-
-  /** Surgical partition rewrite, the staging half of the compaction
-    * and the log fold (IndexStore.prepareCompact): read ONLY the live
-    * files of `kind`'s `touched` parts plus the `log` segments of
-    * `kind` (their rows carry `partKey` as a plain column), let `keep`
-    * drop the doomed rows, write the survivors under
-    * root/.compact/<kind> (one file per part) and move them into the
-    * live `partKey=value` dirs under their job-unique names — nothing
-    * referenced is overwritten.
-    * Returns `entries` with the touched parts' files and the `log`
-    * segments replaced by the moved ones; a touched part whose every
-    * row was dropped gets no file and leaves the snapshot, and an
-    * untouched part a segment routes to gains one file beside its
-    * own. The moved files stay invisible to reads until the caller
-    * commits.
-    */
-  private[graft] def rewriteParts(spark: SparkSession, root: String,
-                                   entries: Seq[Entry], kind: String,
-                                   partKey: String, touched: Set[Long],
-                                   writeOptions: Map[String, String] =
-                                     Map.empty,
-                                   log: Seq[String] = Nil)
-                                  (keep: DataFrame => DataFrame)
-    : Seq[Entry] = {
-    if (touched.isEmpty && log.isEmpty) return entries
-    val fs = hfs(spark, root)
-    val stage = new Path(s"$root/.compact")
-    fs.delete(stage, true) // a crashed attempt's leftovers
-    val files = filesOfParts(entries, kind, touched)
-    val parts =
-      if (files.isEmpty) None
-      else Some(spark.read.option("basePath", s"$root/$kind")
-        .parquet(files: _*))
-    val segments =
-      if (log.isEmpty) None else Some(spark.read.parquet(log: _*))
-    (parts ++ segments).reduceOption(_ unionByName _).foreach(rows =>
-      keep(rows)
-        .repartition(col(partKey)) // one file per rewritten part
-        .write.mode("overwrite").options(writeOptions)
-        .partitionBy(partKey).parquet(s"$stage/$kind"))
-    val moved = listDataFiles(spark, root, kind, s".compact/$kind",
-        Some(partKey)).map { e =>
-      val dstDir = new Path(s"$root/$kind/$partKey=${e.partId.get}")
-      if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
-      val dst = new Path(dstDir, new Path(e.file).getName)
-      require(fs.rename(new Path(e.file), dst),
-        s"compact: staging move failed for ${e.file} under $root")
-      e.copy(file = dst.toUri.getPath)
-    }
-    fs.delete(stage, true)
-    val folded = log.toSet
-    entries.filterNot(e => e.kind == kind &&
-      (e.partId.exists(touched.contains) || folded(e.file))) ++ moved
   }
 
   /** Rows recorded in the snapshot's delete sidecar files, from their

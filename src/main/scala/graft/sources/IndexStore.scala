@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import IndexCommits.Entry
@@ -33,12 +34,17 @@ import IndexCommits.Entry
   *     ([[compactDue]]).
   *
   * Every entry point reads the snapshot through [[readEntries]], which
-  * fails by name on a kind the layout does not own. meta and bloomidx
-  * are kilobyte-bounded and read and written on the driver
+  * fails by name on a kind the layout does not own. The data files of
+  * both stores have one reader ([[read]]: each group's schema from one
+  * file's footer, read on the driver, so no read runs a Spark job
+  * before its scan) and one writer ([[writeParts]], [[writeLog]]):
+  * they alone form a data-file path or write option. meta and
+  * bloomidx are kilobyte-bounded and read and written on the driver
   * ([[TinyParquet]]); the delete sidecar is small append-mode parquet
   * registered in the snapshot. [[IndexCommits]] stays the snapshot /
-  * commit protocol underneath; the operator files keep training,
-  * encoding, scoring, route-key computation and arbitration.
+  * commit protocol underneath and reads no data rows; the operator
+  * files keep training, encoding, scoring, route-key computation and
+  * arbitration.
   */
 private[graft] object IndexStore {
   /** What one store's files and sidecars hold.
@@ -52,13 +58,14 @@ private[graft] object IndexStore {
     * @param count    the meta field holding the corpus count
     * @param checksum the meta field holding the id checksum
     * @param sums     additive meta fields -> the column a census sums
-    * @param options  parquet write options of the fold and compaction
+    * @param compressed its data files take the zstd codec (else
+    *                 Spark's default); the delete sidecar never does
     */
   final case class Layout(id: String, kinds: Seq[(String, String)],
                           meta: Seq[(String, String)], count: String,
                           checksum: String,
                           sums: Seq[(String, String)] = Nil,
-                          options: Map[String, String] = Map.empty) {
+                          compressed: Boolean = false) {
     /** The subdirectories its snapshot manages: the vacuum set,
       * compact staging included.
       */
@@ -307,14 +314,14 @@ private[graft] object IndexStore {
     readRouted(spark, root, snap, layout, kind, parts).foreach { stored =>
       val fresh = withoutDeleted(stored.join(
           broadcast(ids.select(col(idCol).as(layout.id))), Seq(layout.id),
-          "left_semi"), snap, layout, layout.id)
+          "left_semi"), root, snap, layout, layout.id)
       val obs = new Observation()
       val rows = observeCensus(fresh, obs, layout, col(layout.id))
         .select(col(layout.id), col(key).cast("long").as(key))
       val recorded = rows.collect()
       if (recorded.nonEmpty)
         IndexCommits.commitWritten(spark, root, snap,
-            IndexCommits.listKind(spark, root, "deletes")) {
+            IndexCommits.list(spark, "deletes", s"$root/deletes")) {
           spark.createDataFrame(java.util.Arrays.asList(recorded: _*),
               rows.schema)
             .coalesce(1).write.mode("append").parquet(s"$root/deletes")
@@ -328,15 +335,13 @@ private[graft] object IndexStore {
     * records, by ONE anti-join on `idCol` the small sidecar broadcasts
     * through; `df` itself when nothing is recorded.
     */
-  def withoutDeleted(df: DataFrame, snap: Seq[Entry], layout: Layout,
-                     idCol: String): DataFrame = {
-    val files = IndexCommits.filesOf(snap, "deletes")
-    if (files.isEmpty) df
+  def withoutDeleted(df: DataFrame, root: String, snap: Seq[Entry],
+                     layout: Layout, idCol: String): DataFrame =
+    if (IndexCommits.filesOf(snap, "deletes").isEmpty) df
     else df.join(
-      broadcast(df.sparkSession.read.parquet(files: _*)
+      broadcast(read(df.sparkSession, root, snap, "deletes")(_ => true)
         .select(col(layout.id).as(idCol))),
       Seq(idCol), "left_anti")
-  }
 
   /** The compact policy of both maintain paths: recorded deletes reach
     * `fraction` of the pre-delete corpus. Meta's count is the
@@ -383,7 +388,7 @@ private[graft] object IndexStore {
     */
   def commitBuild(spark: SparkSession, root: String, layout: Layout): Unit = {
     IndexCommits.commit(spark, root, layout.kinds.flatMap { case (kind, key) =>
-      IndexCommits.listKind(spark, root, kind, Some(key)) })
+      IndexCommits.list(spark, kind, partDir(root, kind), Some(key)) })
     IndexCommits.vacuumConf(spark, root, layout.subs)
   }
 
@@ -392,7 +397,7 @@ private[graft] object IndexStore {
     */
   def listLog(spark: SparkSession, root: String, layout: Layout): Seq[Entry] =
     layout.kinds.flatMap { case (kind, _) =>
-      IndexCommits.listLog(spark, root, kind) }
+      IndexCommits.list(spark, kind, logDir(root, kind)) }
 
   /** Has the append log reached `bound` segment files of any one kind?
     * Never for `bound` <= 0.
@@ -428,11 +433,11 @@ private[graft] object IndexStore {
     * it and return the snapshot that would serve it: the crash window
     * the lifecycle spec pins, staged files invisible to every read
     * until the pointer swap. Per kind of the layout, one
-    * [[IndexCommits.rewriteParts]]: the parts holding a recorded
-    * doomed row ([[doomedParts]]) rewrite minus the doomed ids, and
-    * the log's rows, minus the doomed ids too, move in beside the part
-    * files they route to; every other part's files stay byte-untouched.
-    * The served snapshot has no log entry, and no delete entry after a
+    * [[rewriteParts]]: the parts holding a recorded doomed row
+    * ([[doomedParts]]) rewrite minus the doomed ids, and the log's
+    * rows, minus the doomed ids too, move in beside the part files
+    * they route to; every other part's files stay byte-untouched. The
+    * served snapshot has no log entry, and no delete entry after a
     * compaction. None when there is nothing to do: no log, and no
     * deletes to apply.
     */
@@ -443,17 +448,62 @@ private[graft] object IndexStore {
       if (!applyDeletes) Nil else IndexCommits.filesOf(snap, "deletes")
     if (dels.isEmpty && !logFull(snap, layout, bound = 1)) return None
     val sidecar =
-      if (dels.isEmpty) None else Some(spark.read.parquet(dels: _*))
+      if (dels.isEmpty) None
+      else Some(read(spark, root, snap, "deletes")(_ => true))
     def keep(df: DataFrame) = sidecar.fold(df)(rows =>
       df.join(broadcast(rows.select(layout.id).distinct()), Seq(layout.id),
         "left_anti"))
     Some(layout.kinds.foldLeft(snap.filterNot(e => dels.contains(e.file))) {
-      case (es, (kind, key)) =>
+      case (es, (kind, _)) =>
         val touched = sidecar.fold(Set.empty[Long])(
           doomedParts(spark, root, snap, layout, kind, _))
-        IndexCommits.rewriteParts(spark, root, es, kind, key, touched,
-          layout.options, IndexCommits.logOf(snap, kind))(keep)
+        rewriteParts(spark, root, es, layout, kind, touched)(keep)
     })
+  }
+
+  /** The rows a fold or compaction stages for `kind`: the live files of
+    * its `touched` parts plus its whole log ([[read]]).
+    */
+  private[graft] def stagedRows(spark: SparkSession, root: String,
+                                entries: Seq[Entry], kind: String,
+                                touched: Set[Long]): DataFrame =
+    read(spark, root, entries, kind)(_.partId.forall(touched))
+
+  /** Surgical partition rewrite, the staging half of the compaction
+    * and the log fold: `keep` drops the doomed rows of
+    * [[stagedRows]], the survivors are written under root/.compact
+    * (one file per part, [[writeParts]]'s shape) and moved into the
+    * live `key=value` dirs under their job-unique names — nothing
+    * referenced is overwritten. Returns `entries` with the staged
+    * files replaced by the moved ones; a touched part whose every row
+    * was dropped gets no file and leaves the snapshot, and an
+    * untouched part a segment routes to gains one file beside its
+    * own. The moved files stay invisible to reads until the caller
+    * commits. `entries` itself when no file is staged.
+    */
+  private def rewriteParts(spark: SparkSession, root: String,
+                           entries: Seq[Entry], layout: Layout, kind: String,
+                           touched: Set[Long])
+                          (keep: DataFrame => DataFrame): Seq[Entry] = {
+    val staged = (e: Entry) => e.kind == kind && e.partId.forall(touched)
+    if (!entries.exists(staged)) return entries
+    val key = layout.kinds.toMap.apply(kind)
+    val stage = new Path(s"$root/.compact")
+    val fs = stage.getFileSystem(hconf(spark))
+    fs.delete(stage, true) // a crashed attempt's leftovers
+    partitioned(keep(stagedRows(spark, root, entries, kind, touched)),
+      s"$stage/$kind", key, layout)
+    val moved = IndexCommits.list(spark, kind, s"$stage/$kind", Some(key))
+      .map { e =>
+        val dstDir = new Path(s"${partDir(root, kind)}/$key=${e.partId.get}")
+        if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
+        val dst = new Path(dstDir, new Path(e.file).getName)
+        require(fs.rename(new Path(e.file), dst),
+          s"compact: staging move failed for ${e.file} under $root")
+        e.copy(file = dst.toUri.getPath)
+      }
+    fs.delete(stage, true)
+    entries.filterNot(staged) ++ moved
   }
 
   /** The parts of `kind` holding a recorded doomed row (a K-bounded
@@ -475,11 +525,10 @@ private[graft] object IndexStore {
         if (keys.exists(_.isNullAt(0))) None
         else Some(keys.map(_.getLong(0)).toSet)
       }
-    recorded.getOrElse(readFiles(spark, root, kind,
-        IndexCommits.partFilesOf(snap, kind))
-      .map(f => routeKeys(f.join(broadcast(rows.select(layout.id)),
-        Seq(layout.id)), col(key)))
-      .getOrElse(Set.empty))
+    recorded.getOrElse(
+      if (IndexCommits.partFilesOf(snap, kind).isEmpty) Set.empty
+      else routeKeys(read(spark, root, snap, kind)(_.partId.isDefined)
+        .join(broadcast(rows.select(layout.id)), Seq(layout.id)), col(key)))
   }
 
   /** The maintain policy of both stores: [[compact]] (which folds the
@@ -506,38 +555,97 @@ private[graft] object IndexStore {
   def routeKeys(df: DataFrame, key: Column): Set[Long] =
     df.select(key.cast("long")).distinct().collect().map(_.getLong(0)).toSet
 
-  /** The snapshot files `files` of `kind`, read with root/<kind> as the
-    * partition base path; None when there are none.
-    */
-  def readFiles(spark: SparkSession, root: String, kind: String,
-                files: Seq[String]): Option[DataFrame] =
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", s"$root/$kind")
-      .parquet(files: _*))
-
-  /** [[readFiles]], or an empty frame of the kind's schema. */
-  def readKind(spark: SparkSession, root: String, kind: String,
-               files: Seq[String]): DataFrame =
-    readFiles(spark, root, kind, files).getOrElse(
-      spark.read.parquet(s"$root/$kind").where(lit(false)))
-
   /** The rows of `kind` that route to `parts` on its key: those parts'
     * `key=` files plus the unfolded log segments under the same key
-    * filter, each read as its own frame and unioned by name. The
-    * filter drops the segments' other rows but prunes no log file: an
-    * append-sized segment is one file of one row group, so it is
-    * scanned whole (fewer than [[FlushSegments]] log files per kind,
-    * the log bound). None when no file qualifies.
+    * filter, one [[read]]. The filter drops the segments' other rows
+    * but prunes no log file: an append-sized segment is one file of
+    * one row group, so it is scanned whole (fewer than
+    * [[FlushSegments]] log files per kind, the log bound). None when
+    * no file qualifies.
     */
   def readRouted(spark: SparkSession, root: String, snap: Seq[Entry],
                  layout: Layout, kind: String,
                  parts: Set[Long]): Option[DataFrame] = {
-    val log = IndexCommits.logOf(snap, kind)
-    (readFiles(spark, root, kind,
-        IndexCommits.filesOfParts(snap, kind, parts)) ++
-      (if (log.isEmpty) None else Some(spark.read.parquet(log: _*))))
-      .map(_.where(col(layout.kinds.toMap.apply(kind))
-        .isin(parts.toSeq: _*)))
-      .reduceOption(_ unionByName _)
+    val routed = (e: Entry) => e.partId.forall(parts.contains)
+    if (!snap.exists(e => e.kind == kind && routed(e))) None
+    else Some(read(spark, root, snap, kind)(routed)
+      .where(col(layout.kinds.toMap.apply(kind)).isin(parts.toSeq: _*)))
   }
+
+  // ------------------------------------------------------------------
+  // Data files: their paths, one reader, one writer
+  // ------------------------------------------------------------------
+
+  /** The `key=value` partition directories of `kind`. */
+  private def partDir(root: String, kind: String): String = s"$root/$kind"
+
+  /** The flat log segments of `kind`. */
+  private def logDir(root: String, kind: String): String =
+    s"$root/applog/$kind"
+
+  /** The one reader of index data files: the snapshot entries of
+    * `kind` that `pick` selects, as one frame. Part files are read
+    * under base path root/<kind>, so their route key comes from the
+    * `key=value` path (an int); log segments and the delete sidecar
+    * are read flat; the two groups union by name, parts first. Each
+    * group's schema is its first file's footer, read on the driver
+    * ([[TinyParquet.sparkSchema]]), so no read submits Spark's
+    * schema-inference job before its scan. When `pick` selects
+    * nothing: an empty frame of the schema of one entry of the kind (a
+    * part file if there is one), with no directory listed. Fails
+    * naming the root and the kind when the snapshot holds no file of
+    * the kind.
+    */
+  def read(spark: SparkSession, root: String, snap: Seq[Entry], kind: String)
+          (pick: Entry => Boolean): DataFrame = {
+    val all = snap.filter(_.kind == kind)
+    val picked = all.filter(pick)
+    val files =
+      if (picked.nonEmpty) picked else all.sortBy(_.partId.isEmpty).take(1)
+    if (files.isEmpty)
+      throw new IllegalStateException(
+        s"the snapshot of $root holds no file of kind '$kind' to read")
+    val (parts, flat) = files.partition(_.partId.isDefined)
+    val df = Seq(parts -> Some(partDir(root, kind)), flat -> None)
+      .collect { case (es, base) if es.nonEmpty =>
+        val r = spark.read.schema(
+          TinyParquet.sparkSchema(hconf(spark), es.head.file))
+        base.fold(r)(r.option("basePath", _)).parquet(es.map(_.file): _*)
+      }
+      .reduce(_ unionByName _)
+    if (picked.isEmpty) df.where(lit(false)) else df
+  }
+
+  /** `df` written as partition files of `key` under `dir`, one file
+    * per key value: a build's and the fold's shape.
+    */
+  private def partitioned(df: DataFrame, dir: String, key: String,
+                          layout: Layout): Unit =
+    df.repartition(col(key)).write.mode("overwrite")
+      .options(options(layout)).partitionBy(key).parquet(dir)
+
+  private def options(layout: Layout): Map[String, String] =
+    if (layout.compressed) Map("compression" -> "zstd") else Map.empty
+
+  /** The one writer of a build's data: `df` as the partition files of
+    * `kind`, one file per route key value. Repartitioned on the key,
+    * so a list or bucket is one file, not one per writing task: at
+    * K=1600 lists x 32 tasks that is 51k files, whose listing and
+    * footer reads would dominate every later search and append
+    * (measured 4x on the 100x rehearsal).
+    */
+  def writeParts(df: DataFrame, root: String, layout: Layout,
+                 kind: String): Unit =
+    partitioned(df, partDir(root, kind), layout.kinds.toMap.apply(kind),
+      layout)
+
+  /** The one writer of the append log: `df` appended as flat segment
+    * file(s) of `kind`, in the caller's partitioning and sort (each
+    * segment sorted by the kind's route key). [[listLog]] finds them
+    * for the commit.
+    */
+  def writeLog(df: DataFrame, root: String, layout: Layout,
+               kind: String): Unit =
+    df.write.mode("append").options(options(layout))
+      .parquet(logDir(root, kind))
 }

@@ -3,10 +3,13 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side parquet IO for the KILOBYTE-SIZED index sidecars (meta
   * census, packed dup-guard bloom, quantizer tables, commit
@@ -26,6 +29,10 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * The on-disk format is plain parquet (same column names, same
   * physical types Spark writes: int32/int64/double/binary-UTF8), so
   * Spark reads of these files — tests, tools — keep working.
+  *
+  * It also reads the schema Spark stored in the footer of an index
+  * data file ([[sparkSchema]]), so the reads of those files plan with
+  * no schema-inference job (IndexStore.read).
   */
 object TinyParquet {
   /** Field kinds: "int" (int32), "long" (int64), "double",
@@ -178,12 +185,28 @@ object TinyParquet {
       val p = new Path(s)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) 0L
-      else liveParts(fs, p).map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
+      else liveParts(fs, p).map(f => footer(conf, f)(_.getRecordCount)).sum
     }.sum
+
+  private def footer[T](conf: Configuration, f: Path)
+                       (get: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try get(r) finally r.close()
+  }
+
+  /** The Spark schema in the footer of one Spark-written parquet file:
+    * Spark stores it under its row-metadata key in every file it
+    * writes (the data columns; a `key=value` partition column lives in
+    * the path). One footer read on the driver, no Spark job. Fails
+    * naming the file when the footer holds none.
+    */
+  def sparkSchema(conf: Configuration, file: String): StructType = {
+    val json = footer(conf, new Path(file))(_.getFooter.getFileMetaData
+      .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+    require(json != null,
+      s"TinyParquet: $file holds no Spark schema in its footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 
   private def readFile(conf: Configuration, file: Path): Seq[TRow] = {
     val reader = ParquetReader

@@ -111,11 +111,11 @@ class IndexLifecycleSpec extends SparkSpec {
       if (legacy) {
         val IC = graft.sources.IndexCommits
         val snap = IC.readEntries(spark, root)
-        val old = IC.listKind(spark, root, "deletes").toSet
+        val old = IC.list(spark, "deletes", s"$root/deletes").toSet
         recorded.select(col("vec_id"), lit(null).cast("long").as("list_id"))
           .coalesce(1).write.mode("append").parquet(s"$root/deletes")
         IC.commit(spark, root, snap.filterNot(_.kind == "deletes") ++
-          IC.listKind(spark, root, "deletes").filterNot(old))
+          IC.list(spark, "deletes", s"$root/deletes").filterNot(old))
         assert(spark.read.parquet(IC.filesOf(IC.readEntries(spark, root),
           "deletes"): _*).where(col("list_id").isNotNull).count() === 0)
       }
